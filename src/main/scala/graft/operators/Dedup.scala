@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.{SortedIntersectSize, TextOps}
+import graft.functions.{MinHashBands, SortedIntersectSize, TextOps}
 
 /** Deduplication operators for the LLM-data-pipeline layer (SURVEY.md §2b):
   * exact (hash-groupBy), MinHash+LSH near-dup, SimHash near-dup, and
@@ -25,6 +25,11 @@ import graft.functions.{SortedIntersectSize, TextOps}
   * 94.7% for a pair at jaccard exactly 0.8 and >99% above 0.85. The
   * ScalaTest recall gate (DedupSpec) holds this against the brute-force
   * ground truth.
+  *
+  * Band hashes come from the fused [[MinHashBands]] kernel, which signs
+  * each document once: a signature sliced inside a `transform` lambda is
+  * re-evaluated per band, and `CollapseProject` inlines a separately
+  * projected signature back into the lambda.
   */
 object Dedup {
 
@@ -36,33 +41,14 @@ object Dedup {
       .groupBy(col("text_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** MinHash signature over an array<long> element-set column:
-    * `numHashes` independent min-hashes via the fused codegen'd
-    * MinHashSig expression (the HOF formulation is CodegenFallback and
-    * ~25x slower — see MinHashSig scaladoc). Empty arrays get
-    * Long.MaxValue mins (only collide with other empty docs, which are
-    * exact dupes of each other anyway). */
-  def minhashSignature(elems: Column, numHashes: Int, seed: Int): Column =
-    graft.functions.MinHashSig(elems, numHashes, seed.toLong)
-
-  /** LSH banding: signature of b bands × r rows; a pair is a candidate if
-    * any band of r consecutive min-hashes matches exactly.
-    * Emits (id, band, band_hash) — one row per band per doc. */
-  def lshBands(df: DataFrame, idCol: String, sigCol: Column,
-               bands: Int, rows: Int): DataFrame =
-    df.select(col(idCol),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(sigCol, b * rows + 1, lit(rows)), b)))
-          .as(Seq("band", "band_hash")))
-
   /** Candidate pairs from band buckets: self-join on (band, band_hash),
     * id1 < id2, distinct. `maxBucket` is a safety valve against a
     * quadratic blowup from one degenerate bucket, NOT a tuning knob: at
     * the default it never fires on deduplicated input (run exactKeepFirst
     * first). When it does fire the drop is SILENT here (a driver-side
-    * count inside the operator would force an extra action); callers who
-    * need to audit it run [[droppedBuckets]] with the same inputs — the
-    * exact (band, band_hash, n) keys this filter removed. */
+    * count inside the operator would force an extra action); the
+    * portable pipelines audit it on request: with `graft.dedup.capAudit`
+    * set they refuse when any band bucket exceeds the cap. */
   def candidatePairs(banded: DataFrame, idCol: String, maxBucket: Int): DataFrame = {
     val sized = banded
       .withColumn("_bucket_n",
@@ -76,14 +62,6 @@ object Dedup {
       .select(col("id1"), col("id2"))
       .distinct()
   }
-
-  /** Band-hash ARRAY per doc (length `bands`): element b =
-    * xxhash64(rows consecutive min-hashes, band index). The same hashes
-    * [[lshBands]] explodes to rows, kept assembled so a candidate join
-    * can compare whole signatures per pair ([[candidatePairsFirstBand]]). */
-  def bandHashes(sigCol: Column, bands: Int, rows: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(slice(sigCol, b * rows + 1, lit(rows)), b))
 
   /** Distinct-free candidate pairs: input (idCol, bhCol: array<long> of
     * band hashes). A pair colliding in k bands would surface k times
@@ -101,7 +79,7 @@ object Dedup {
     * was capped still surfaces once, from its first surviving agreeing
     * band. Only pairs with NO surviving agreeing band are dropped (the
     * same set [[candidatePairs]]' post-filter distinct would drop);
-    * audit with [[droppedBuckets]]. */
+    * audit with `graft.dedup.capAudit`, as for [[candidatePairs]]. */
   def candidatePairsFirstBand(withBh: DataFrame, idCol: String,
                               maxBucket: Int): DataFrame = {
     val sized = maskedSurvivingBands(withBh, idCol, maxBucket)
@@ -134,7 +112,12 @@ object Dedup {
     * would OOM the driver — exactly the input the valve exists for. */
   private[operators] def maskedSurvivingBands(withBh: DataFrame, idCol: String,
                                               maxBucket: Int): DataFrame = {
-    val exploded = withBh.select(col(idCol), col("_bh"),
+    // lazily checkpointed band arrays: both branches below (column
+    // pruning gives each its own exchange) and the explode's inferred
+    // size(_bh) > 0 filter would each run the kernel again (r19, at sf1:
+    // two ~10 s signature jobs for a ~1 s band join)
+    val exploded = withBh.localCheckpoint(eager = false)
+      .select(col(idCol), col("_bh"),
         posexplode(col("_bh")).as(Seq("band", "band_hash")))
       .withColumn("_bucket_n",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
@@ -150,34 +133,8 @@ object Dedup {
       .select(col(idCol), col("_bh"), col("band"), col("band_hash"))
   }
 
-  /** The audit twin of [[candidatePairs]]: the band buckets its
-    * maxBucket valve filtered out, as (band, band_hash, n). Empty on
-    * healthy (exact-deduplicated) input; rows here mean near-dup pairs
-    * were skipped and the input needs an exact-dedup pre-pass or
-    * within-bucket clustering. */
-  def droppedBuckets(banded: DataFrame, maxBucket: Int): DataFrame =
-    banded.groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > maxBucket)
-
   /** Exact token-set Jaccard for a pair table against a precomputed
-    * (id, tokens) table — tokens are computed ONCE upstream and shuffled
-    * by id here, never re-derived from the raw text. */
-  def jaccardVerifyToks(pairs: DataFrame, toks: DataFrame,
-                        idCol: String, toksCol: String): DataFrame = {
-    val t = toks.select(col(idCol).as("_jid"), col(toksCol).as("_toks"))
-    pairs
-      .join(t.withColumnRenamed("_jid", "id1").withColumnRenamed("_toks", "_t1"), "id1")
-      .join(t.withColumnRenamed("_jid", "id2").withColumnRenamed("_toks", "_t2"), "id2")
-      // one intersect + the size identity |x∪y| = |x|+|y|-|x∩y| — halves
-      // the per-pair array work vs computing array_union too
-      .withColumn("_inter", size(array_intersect(col("_t1"), col("_t2"))))
-      .withColumn("jaccard", col("_inter").cast("double") /
-        (size(col("_t1")) + size(col("_t2")) - col("_inter")))
-      .drop("_t1", "_t2", "_inter")
-  }
-
-  /** jaccardVerifyToks for SORTED array<long> token sets: the intersect
+    * (id, SORTED array<long> token set) table: the intersect
     * is the codegen'd two-pointer SortedIntersectSize instead of
     * array_intersect's per-pair hash set — the fast path for verifying
     * millions of candidate pairs. */
@@ -223,14 +180,6 @@ object Dedup {
   def hashedTokenSet(text: Column): Column =
     graft.functions.ShingleHashSet(text, 1)
 
-  /** Exact token-set Jaccard for a pair table, tokenizing from the docs
-    * table (convenience wrapper over jaccardVerifyToks). */
-  def jaccardVerify(pairs: DataFrame, docs: DataFrame, idCol: String,
-                    textCol: String, tokensOf: Column => Column): DataFrame =
-    jaccardVerifyToks(pairs,
-      docs.select(col(idCol), array_distinct(tokensOf(col(textCol))).as("_tk")),
-      idCol, "_tk")
-
   /** Full MinHash-LSH near-dup pipeline: returns (id1, id2, jaccard) for
     * candidate pairs with verified token Jaccard >= threshold. */
   def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
@@ -238,7 +187,6 @@ object Dedup {
                       threshold: Double = 0.8, maxBucket: Int = 100000,
                       seed: Int = 42): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
     // Hashed sorted token sets computed once; reused for the signature
     // AND the fast-path verification (Jaccard over the hashed sets ==
     // Jaccard over the tokens barring a 64-bit collision). Eager
@@ -252,7 +200,7 @@ object Dedup {
     val toks = docs.select(col(idCol), hashedTokenSet(col(textCol)).as("_toks"))
       .localCheckpoint()
     val withBh = toks.select(col(idCol),
-      bandHashes(minhashSignature(col("_toks"), numHashes, seed), bands, rows).as("_bh"))
+      MinHashBands(col("_toks"), numHashes, bands, seed).as("_bh"))
     val cands = candidatePairsFirstBand(withBh, idCol, maxBucket)
     jaccardVerifySorted(cands, toks, idCol, "_toks")
       .filter(col("jaccard") >= threshold)
@@ -310,7 +258,6 @@ object Dedup {
                               threshold: Double = 0.8,
                               maxBucket: Int = 100000): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
     // Dedup-first (r19 — the SetSimJoin.jaccardSelfJoin r3 prescription,
     // never applied here): identical token sets have identical
     // signatures, identical bands, and score 1.0 against each other, so
@@ -332,14 +279,6 @@ object Dedup {
       .agg(min(col(idCol)).as("_rep"), collect_list(col(idCol)).as("_ids"))
       .localCheckpoint()
     val reps = groups.select(col("_rep").as(idCol), col("_toks"))
-    // checkpoint the SIGNATURES (r19): _bh is referenced by both sides
-    // of the band self-join and both sides of the cap-masking join, and
-    // collapsed projections additionally inline the expression into the
-    // explode's size()>0 guard — without a materialization the 128-hash
-    // MinHash signature is recomputed per reference (measured at sf1:
-    // two ~10 s signature jobs for a ~1 s band join). Lazy: the first
-    // consumer materializes the blocks.
-    //
     // Join strategy at sf1 is the planner's broadcast of the rep-level
     // band/token tables (their post-aggregate estimates sit under the
     // threshold): A/B-measured AGAINST forced SHUFFLE_MERGE hints and
@@ -348,9 +287,7 @@ object Dedup {
     // broadcast would truly be unsafe the estimates are proportionally
     // larger and the planner reverts to sort-merge on its own.
     val withBh = reps.select(col(idCol),
-      bandHashes(graft.functions.MinHashSig.lcg(col("_toks"), numHashes),
-        bands, rows).as("_bh"))
-      .localCheckpoint(eager = false)
+      MinHashBands.lcg(col("_toks"), numHashes, bands).as("_bh"))
     auditPortableCap(withBh, maxBucket, "Dedup.minhashNearDupsPortable")
     val cands = candidatePairsFirstBand(withBh, idCol, maxBucket)
     val repPairs = jaccardVerifySorted(cands, reps, idCol, "_toks")
@@ -419,39 +356,9 @@ object Dedup {
                              numHashes: Int = 128, bands: Int = 16,
                              threshold: Double = 0.8, maxBucket: Int = 100000,
                              seed: Int = 42): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
-    def prep(df: DataFrame): DataFrame =
-      df.select(col(idCol), hashedTokenSet(col(textCol)).as("_toks"))
-        .localCheckpoint() // reused by the band join AND verification
-    def banded(toks: DataFrame): DataFrame = maskedSurvivingBands(
-      toks.select(col(idCol),
-        bandHashes(minhashSignature(col("_toks"), numHashes, seed), bands, rows)
-          .as("_bh")),
-      idCol, maxBucket)
-    val refToks = prep(ref)
-    val incToks = prep(incoming)
-    val r = banded(refToks).select(col("band"), col("band_hash"),
-      col(idCol).as("ref_id"), col("_bh").as("_bh1"))
-    val i = banded(incToks).select(col("band"), col("band_hash"),
-      col(idCol).as("inc_id"), col("_bh").as("_bh2"))
-    val cands = r.join(i, Seq("band", "band_hash"))
-      .filter(graft.functions.FirstBandMatch(col("_bh1"), col("_bh2")) === col("band"))
-      .select(col("inc_id"), col("ref_id"))
-    val verified = cands
-      .join(incToks.select(col(idCol).as("inc_id"), col("_toks").as("_ti")), "inc_id")
-      .join(refToks.select(col(idCol).as("ref_id"), col("_toks").as("_tr")), "ref_id")
-      .withColumn("_inter",
-        graft.functions.SortedIntersectSize(col("_ti"), col("_tr")))
-      .withColumn("jaccard", col("_inter").cast("double") /
-        (size(col("_ti")) + size(col("_tr")) - col("_inter")))
-      .filter(col("jaccard") >= threshold)
-    verified
-      .withColumn("_rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("inc_id"))
-          .orderBy(col("jaccard").desc, col("ref_id"))))
-      .filter(col("_rn") === 1)
-      .select(col("inc_id"), col("ref_id"), round(col("jaccard"), 3).as("jaccard"))
+    nearDupsAgainst(ref, incoming, idCol, hashedTokenSet(col(textCol)),
+      MinHashBands(col("_toks"), numHashes, bands, seed), threshold, maxBucket,
+      auditAs = None)
   }
 
   /** [[minhashNearDupsAgainst]] with the engine-neutral hash family
@@ -465,17 +372,24 @@ object Dedup {
                                      numHashes: Int = 128, bands: Int = 16,
                                      threshold: Double = 0.8,
                                      maxBucket: Int = 100000): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
+    nearDupsAgainst(ref, incoming, idCol, portableHashedTokenSet(col(textCol)),
+      MinHashBands.lcg(col("_toks"), numHashes, bands), threshold, maxBucket,
+      auditAs = Some("Dedup.minhashNearDupsAgainstPortable"))
+  }
+
+  /** The body both asymmetric pipelines share: `toks` is the sorted
+    * token set of a text row, `bandHashes` the band hashes of its
+    * `_toks`; `auditAs` names a portable caller, whose bands are
+    * cap-audited ([[auditPortableCap]]). */
+  private def nearDupsAgainst(ref: DataFrame, incoming: DataFrame, idCol: String,
+                              toks: Column, bandHashes: Column, threshold: Double,
+                              maxBucket: Int, auditAs: Option[String]): DataFrame = {
     def prep(df: DataFrame): DataFrame =
-      df.select(col(idCol), portableHashedTokenSet(col(textCol)).as("_toks"))
+      df.select(col(idCol), toks.as("_toks"))
         .localCheckpoint() // reused by the band join AND verification
-    def banded(toks: DataFrame): DataFrame = {
-      val withBh = toks.select(col(idCol),
-        bandHashes(graft.functions.MinHashSig.lcg(col("_toks"), numHashes),
-          bands, rows).as("_bh"))
-      auditPortableCap(withBh, maxBucket,
-        "Dedup.minhashNearDupsAgainstPortable")
+    def banded(t: DataFrame): DataFrame = {
+      val withBh = t.select(col(idCol), bandHashes.as("_bh"))
+      auditAs.foreach(auditPortableCap(withBh, maxBucket, _))
       maskedSurvivingBands(withBh, idCol, maxBucket)
     }
     val refToks = prep(ref)
@@ -487,21 +401,26 @@ object Dedup {
     val cands = r.join(i, Seq("band", "band_hash"))
       .filter(graft.functions.FirstBandMatch(col("_bh1"), col("_bh2")) === col("band"))
       .select(col("inc_id"), col("ref_id"))
-    val verified = cands
-      .join(incToks.select(col(idCol).as("inc_id"), col("_toks").as("_ti")), "inc_id")
-      .join(refToks.select(col(idCol).as("ref_id"), col("_toks").as("_tr")), "ref_id")
-      .withColumn("_inter",
-        graft.functions.SortedIntersectSize(col("_ti"), col("_tr")))
+    bestMatches(cands,
+      incToks.select(col(idCol).as("inc_id"), col("_toks").as("_ti")),
+      refToks.select(col(idCol).as("ref_id"), col("_toks").as("_tr")), threshold)
+  }
+
+  /** Verify (inc_id, ref_id) candidates against the sorted token sets
+    * (inc_id, _ti) and (ref_id, _tr), and keep each incoming doc's best
+    * match: highest Jaccard >= threshold, lowest ref id on a tie. */
+  private[operators] def bestMatches(cands: DataFrame, incToks: DataFrame,
+                                     refToks: DataFrame, threshold: Double): DataFrame =
+    cands.join(incToks, "inc_id").join(refToks, "ref_id")
+      .withColumn("_inter", SortedIntersectSize(col("_ti"), col("_tr")))
       .withColumn("jaccard", col("_inter").cast("double") /
         (size(col("_ti")) + size(col("_tr")) - col("_inter")))
       .filter(col("jaccard") >= threshold)
-    verified
       .withColumn("_rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("inc_id"))
           .orderBy(col("jaccard").desc, col("ref_id"))))
       .filter(col("_rn") === 1)
       .select(col("inc_id"), col("ref_id"), round(col("jaccard"), 3).as("jaccard"))
-  }
 
   /** SimHash near-dup: docs whose 64-bit simhash differs by <= maxHamming
     * bits. Candidate generation buckets on 4 × 16-bit simhash bands

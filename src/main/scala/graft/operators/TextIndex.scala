@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persistent near-dup index over a TEXT corpus — the standing-corpus
@@ -34,16 +33,16 @@ import org.apache.spark.sql.functions._
 object TextIndex {
 
   // private[graft]: IndexCheck re-derives band rows from the stored
-  // token sets to audit the persisted table against the frozen params
+  // token sets to audit the persisted table against the frozen params.
+  // posexplode_outer: the band array is never null or empty, and a plain
+  // posexplode's inferred size(_bh) > 0 filter runs the kernel twice
   private[graft] def bandRows(toks: DataFrame, idCol: String, numHashes: Int,
                               bands: Int, nBuckets: Int, seed: Int): DataFrame =
     toks
       .select(col(idCol),
-        Dedup.bandHashes(
-          Dedup.minhashSignature(col("_toks"), numHashes, seed),
-          bands, numHashes / bands).as("_bh"))
+        graft.functions.MinHashBands(col("_toks"), numHashes, bands, seed).as("_bh"))
       .select(col(idCol), col("_bh"),
-        posexplode(col("_bh")).as(Seq("band", "band_hash")))
+        posexplode_outer(col("_bh")).as(Seq("band", "band_hash")))
       .withColumn("hb", pmod(col("band_hash"), lit(nBuckets.toLong)))
 
   private def tokRows(toks: DataFrame, idCol: String, nBuckets: Int): DataFrame =
@@ -605,17 +604,7 @@ object TextIndex {
     val refToks = s.read.parquet(s"$root/toks")
       .filter(col("idb").isin(touchedIdb: _*))
       .select(col(idCol).as("ref_id"), col("_toks").as("_tr"))
-    cands
-      .join(incToks.select(col(idCol).as("inc_id"), col("_toks").as("_ti")), "inc_id")
-      .join(refToks, "ref_id")
-      .withColumn("_inter",
-        graft.functions.SortedIntersectSize(col("_ti"), col("_tr")))
-      .withColumn("jaccard", col("_inter").cast("double") /
-        (size(col("_ti")) + size(col("_tr")) - col("_inter")))
-      .filter(col("jaccard") >= threshold)
-      .withColumn("_rn", row_number().over(Window.partitionBy(col("inc_id"))
-        .orderBy(col("jaccard").desc, col("ref_id"))))
-      .filter(col("_rn") === 1)
-      .select(col("inc_id"), col("ref_id"), round(col("jaccard"), 3).as("jaccard"))
+    Dedup.bestMatches(cands,
+      incToks.select(col(idCol).as("inc_id"), col("_toks").as("_ti")), refToks, threshold)
   }
 }

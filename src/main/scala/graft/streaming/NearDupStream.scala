@@ -13,7 +13,7 @@ import graft.operators.Dedup
   * answered incrementally, not by re-joining the corpus).
   *
   * Shape: per doc, the SAME seeded deterministic signature machinery as
-  * the batch path (hashed token set → fused MinHashSig → band hashes),
+  * the batch path (hashed token set → fused MinHashBands kernel),
   * exploded to one row per band; state lives per (band, band_hash)
   * BUCKET and holds one long — the first doc id that claimed the
   * bucket. A doc collides if ANY of its band buckets was already
@@ -46,19 +46,16 @@ object NearDupStream {
                 horizonMs: Long, numHashes: Int = 32, bands: Int = 8)
       : Dataset[BandFlag] = {
     import docs.sparkSession.implicits._
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must divide into bands ($bands)")
-    val rows = numHashes / bands
     // watermark AFTER the rename/cast so the event-time tag sits on the
-    // column that survives into the stateful operator
+    // column that survives into the stateful operator; _outer because a
+    // plain posexplode's inferred size > 0 filter would sign twice
     val banded = docs
       .select(col("doc_id").cast("long"),
         col(tsCol).cast("timestamp").as("_ts"), col("text"))
       .withWatermark("_ts", watermark)
       .select(col("doc_id"), col("_ts"),
-        posexplode(Dedup.bandHashes(
-          Dedup.minhashSignature(Dedup.hashedTokenSet(col("text")), numHashes, Seed),
-          bands, rows)).as(Seq("band", "bh")))
+        posexplode_outer(graft.functions.MinHashBands(
+          Dedup.hashedTokenSet(col("text")), numHashes, bands, Seed)).as(Seq("band", "bh")))
       .as[(Long, java.sql.Timestamp, Int, Long)]
     banded
       .groupByKey(r => (r._3, r._4))

@@ -530,8 +530,8 @@ object S4Stream {
     val mergeSig = udaf(new graft.functions.MinHashMerge(numHashes))
     docs
       .select(col(keyCol),
-        graft.operators.Dedup.minhashSignature(
-          graft.functions.ShingleHashSet(col("text"), 3), numHashes, seed = 42)
+        graft.functions.MinHashSig(
+          graft.functions.ShingleHashSet(col("text"), 3), numHashes, seed = 42L)
           .as("sig"))
       .groupBy(col(keyCol)).agg(mergeSig(col("sig")).as("sig"))
   }

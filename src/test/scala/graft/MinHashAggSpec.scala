@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.MinHashMerge
+import graft.functions.{MinHashMerge, MinHashSig}
 import graft.operators.Dedup
 
 /** The typed sketch aggregator must satisfy MinHash's union property:
@@ -14,14 +14,14 @@ class MinHashAggSpec extends SparkSpec {
     val n = 64
     val docs = Tables.documents(spark, sf0001)
       .select(col("doc_id"), col("lang"), Dedup.hashedTokenSet(col("text")).as("toks"))
-      .withColumn("sig", Dedup.minhashSignature(col("toks"), n, seed = 7))
+      .withColumn("sig", MinHashSig(col("toks"), n, seed = 7L))
 
     val merge = udaf(new MinHashMerge(n))
     val merged = docs.groupBy(col("lang")).agg(merge(col("sig")).as("group_sig"))
 
     val unions = docs.groupBy(col("lang"))
       .agg(array_sort(array_distinct(flatten(collect_list(col("toks"))))).as("u"))
-      .select(col("lang"), Dedup.minhashSignature(col("u"), n, seed = 7).as("union_sig"))
+      .select(col("lang"), MinHashSig(col("u"), n, seed = 7L).as("union_sig"))
 
     val bad = merged.join(unions, "lang")
       .filter(col("group_sig") =!= col("union_sig"))

@@ -120,8 +120,7 @@ object ProfileMain {
         t(s"rep$rep mh tokenize")(ptoks)
         val cached = ptoks.localCheckpoint()
         val withBh = cached.select(col("doc_id"),
-          Dedup.bandHashes(
-            graft.functions.MinHashSig.lcg(col("_toks"), 128), 16, 8).as("_bh"))
+          graft.functions.MinHashBands.lcg(col("_toks"), 128, 16).as("_bh"))
         t(s"rep$rep mh signatures")(withBh)
         val bhCached = withBh.localCheckpoint()
         t(s"rep$rep mh candidates")(
