@@ -105,10 +105,6 @@ private[operators] object ClusterRemoval {
     import s.implicits._
     val conf = s.sparkContext.hadoopConfiguration
     val normDir = IndexMaintenance.normalize(indexDir)
-    // removes record replay state under their own namespace: an append
-    // and a remove of the SAME delta under the same tag are different
-    // operations — sharing a record would make the remove read as a
-    // replay and skip its fingerprint subtraction forever
     val rmTag = s"rm.$tag"
     val vfp = Fingerprint.of(victims, Seq(idCol, textCol))
     val stateDir = Fingerprint.removeStatePath(normDir, rmTag)
@@ -138,9 +134,7 @@ private[operators] object ClusterRemoval {
     var completedReplay = false
     var stagedPath = false
     resetWindows(normDir)
-    // polite pre-lease wait for healthy in-flight halves (ADVICE r17:
-    // waiting INSIDE window A's lease starves a staged half that needs
-    // to re-acquire write/remove for its windows B/C)
+    // pre-lease wait, IndexMaintenance.removal's step 1
     Fingerprint.awaitInflightQuiesce(conf, normDir, rmTag)
     timedWindow(normDir, "rm_validate")(IndexMaintenance.withLease(conf, indexDir, "remove") {
       root = IndexMaintenance.liveRoot(conf, indexDir)
@@ -151,17 +145,11 @@ private[operators] object ClusterRemoval {
         if (m.schema.fieldNames.contains("n_rows"))
           Some((m.getAs[Long]("n_rows"), m.getAs[Long]("content_hash")))
         else None
-      replay = Fingerprint.wasApplied(conf, indexDir, rmTag, vfp)
-      if (!replay && Fingerprint.tagUsed(conf, indexDir, rmTag)) Fingerprint.refuse(
-        s"ClusterIndex.remove: tag '$tag' was already used by a different " +
-          "removal batch — pass a batch-unique tag (the same (tag, victims) " +
-          "pair is the legitimate crash-replay and is re-admitted)")
-      // a DIFFERENT removal's surviving state means half-rewritten tables:
-      // discovery would violate the pristine premise and the crashed
-      // legs would never replay — refuse until that removal completes
-      Fingerprint.requireNoOtherPendingRemoval(
-        conf, normDir, rmTag, "ClusterIndex.remove",
-        callerHoldsLease = true)
+      // the envelope's in-lease checks (IndexMaintenance.removal): this
+      // verb spreads its work over three lease windows, so it cannot
+      // run inside one envelope
+      replay = IndexMaintenance.admitRemoval(conf, normDir, tag, vfp,
+        "ClusterIndex.remove")
       // pending LOGICAL deletions would read as survivors in the re-split
       // discovery — reclaim them first. Our OWN barrier batch (a replay
       // re-entering after A committed it) is exempt: its ids ARE the
@@ -197,11 +185,9 @@ private[operators] object ClusterRemoval {
         vIdb = vids.select(idb(col(idCol), nBuckets).as("idb"))
           .distinct().collect().map(_.getLong(0)).toSeq
         if (!replay && !planReady) {
-          // content-set known-check (r14) — see TextIndex.remove:
-          // per victim id, stored token-set hashes must equal the victim
-          // rows' (one row per id in this family — but a duplicated or
-          // conflicting victim feed still mismatches and refuses).
-          // Pristine reads: rewrites only ever start after PLAN_READY.
+          // content known-check (one row per id in this family — but a
+          // duplicated or conflicting victim feed still mismatches and
+          // refuses). Pristine reads: rewrites only start after PLAN_READY.
           // The known-check count and the provenance guard read two
           // DIFFERENT tables and share no state — run them concurrently
           // (r18 opt, guide §2.6; runLegs rethrows the known-check's
@@ -211,23 +197,12 @@ private[operators] object ClusterRemoval {
             .join(bVids(vids), Seq(idCol), "leftsemi")
             .select(col(idCol), col("_toks"))
             .localCheckpoint(eager = false))
-          val vAgg = TargetedDelete.contentSet(victims, idCol,
-            xxhash64(Dedup.hashedTokenSet(col(textCol))))
-            .withColumnRenamed("_chs", "_vchs")
           IndexMaintenance.runLegs(Seq(
-            "rm.known" -> (() => {
-              val known = rleg("known-check")(
-                TargetedDelete.contentSet(vToksA, idCol,
-                  xxhash64(col("_toks")))
-                .join(bVids(vAgg), Seq(idCol))
-                .filter(col("_chs") === col("_vchs"))
-                .count())
-              if (known != nV) Fingerprint.refuse(
-                s"ClusterIndex.remove: only $known of $nV victim ids are " +
-                  "indexed with matching content; the fingerprint subtraction " +
-                  "needs exactly the ingested rows — pass the (id, text) rows " +
-                  "as they entered the index")
-            }),
+            "rm.known" -> (() => rleg("known-check")(
+              TargetedDelete.requireKnownContent(
+                victims, xxhash64(Dedup.hashedTokenSet(col(textCol))),
+                vToksA, xxhash64(col("_toks")), idCol, nV,
+                "ClusterIndex.remove"))),
             // mid-append crash guard (see TextIndex.remove): a victim from
             // an append whose fingerprint merge never recorded must not
             // subtract — its delta was never added. Pruned provenance read,
@@ -264,9 +239,7 @@ private[operators] object ClusterRemoval {
         // provenance (legacy pre-fingerprint meta records no merges, so
         // window C could not detect an interleaved append)
         stagedPath = !planReady && oldFp.isDefined
-        if (stagedPath && !LogicalDelete.pendingBatches(conf, indexDir)
-            .contains(barrierBatch))
-          LogicalDelete.write(vids, idCol, normDir, rmTag)
+        if (stagedPath) LogicalDelete.write(vids, idCol, normDir, rmTag)
       }
     })
     if (nV > 0L && !completedReplay) {
@@ -767,16 +740,12 @@ private[operators] object ClusterRemoval {
                     indexDir: String, tag: String = "remove"): Unit = {
     val s = victims.sparkSession
     import s.implicits._
-    val conf = s.sparkContext.hadoopConfiguration
-    // set inside the lease when the mutating half ran; consumed by the
-    // LEASE-FREE overlay half below (r16 — see the comment there)
-    var overlayArgs: Option[(String, Int, DataFrame, Long, Seq[Long],
-      Option[(Long, Long)], String)] = None
-    // polite pre-lease wait for healthy in-flight halves (ADVICE r17)
-    Fingerprint.awaitInflightQuiesce(
-      conf, IndexMaintenance.normalize(indexDir), s"rm.$tag")
-    IndexMaintenance.withLease(conf, indexDir, "remove") {
-    val root = IndexMaintenance.liveRoot(conf, indexDir)
+    // the lease-free overlay half's arguments, returned by the envelope
+    // when the mutating half ran (r16 — see the comment below)
+    val overlayArgs = IndexMaintenance.removal(victims, indexDir, tag,
+        Seq(idCol, textCol), "ClusterIndex.logicalRemove") { ctx =>
+    val (conf, normDir, root) = (ctx.conf, ctx.indexDir, ctx.root)
+    val (rmTag, vfp, replay) = (ctx.rmTag, ctx.vfp, ctx.replay)
     val m = s.read.parquet(s"$root/meta").head()
     val thr = m.getAs[Double]("threshold")
     val nBuckets = m.getAs[Int]("n_buckets")
@@ -784,28 +753,11 @@ private[operators] object ClusterRemoval {
       if (m.schema.fieldNames.contains("n_rows"))
         Some((m.getAs[Long]("n_rows"), m.getAs[Long]("content_hash")))
       else None
-    val rmTag = s"rm.$tag" // shared namespace with remove(), on purpose
-    val vfp = Fingerprint.of(victims, Seq(idCol, textCol))
-    val replay = Fingerprint.wasApplied(conf, indexDir, rmTag, vfp)
-    if (!replay && Fingerprint.tagUsed(conf, indexDir, rmTag)) Fingerprint.refuse(
-      s"ClusterIndex.logicalRemove: tag '$tag' was already used by a " +
-        "different removal batch — pass a batch-unique tag")
-    val normDir = IndexMaintenance.normalize(indexDir)
-    Fingerprint.requireNoOtherPendingRemoval(
-      conf, normDir, rmTag, "ClusterIndex.logicalRemove",
-      callerHoldsLease = true)
     val vids = victims.select(col(idCol)).distinct().localCheckpoint()
     val nV = vids.count()
     def bVids(df: DataFrame) = TargetedDelete.maybeBroadcast(df, nV)
-    // Replay of a COMPLETED run: the applied record exists but no removal
-    // state pends — the prior invocation ran through its state cleanup
-    // (the last step), so meta, record, and tombstone all landed and a
-    // later compact() may already have reclaimed the batch. Re-writing
-    // the tombstone here would re-hide ids legitimately re-ingested
-    // after that reclaim (ADVICE r13) — the replay is a no-op.
-    val completedReplay = replay &&
-      Fingerprint.readRemoveState(conf, normDir, rmTag).isEmpty
-    if (nV > 0L && !completedReplay) {
+    if (nV == 0L || ctx.completedReplay) None
+    else {
       // a pre-r11 index has no adjacency log: compact's reclaim re-split
       // reads it, so refusing HERE — nothing mutated yet — beats a
       // tombstone that bricks every later compact (review-caught r13;
@@ -821,32 +773,19 @@ private[operators] object ClusterRemoval {
         .distinct().collect().map(_.getLong(0)).toSeq
       if (!replay) {
         // a second logical delete of the same id would double-subtract
-        LogicalDelete.requireNotTombstoned(s, indexDir, vids, idCol,
+        LogicalDelete.requireNotTombstoned(s, normDir, vids, idCol,
           "ClusterIndex.logicalRemove")
-        // victims indexed WITH matching content set (the
-        // fingerprint subtraction needs exactly the ingested rows) —
-        // same pruned read as remove()'s known-check (r14); known-check
-        // and provenance guard run concurrently like remove()'s (r18)
-        val vAgg = TargetedDelete.contentSet(victims, idCol,
-          xxhash64(Dedup.hashedTokenSet(col(textCol))))
-          .withColumnRenamed("_chs", "_vchs")
+        // known-check and provenance guard run concurrently like
+        // remove()'s (r18)
         IndexMaintenance.runLegs(Seq(
-          "lrm.known" -> (() => {
-            val known = rleg("known-check")(
-              TargetedDelete.contentSet(
-                s.read.parquet(s"$root/toks")
-                  .filter(col("idb").isin(vIdb: _*))
-                  .join(bVids(vids), Seq(idCol), "leftsemi"),
-                idCol, xxhash64(col("_toks")))
-              .join(bVids(vAgg), Seq(idCol))
-              .filter(col("_chs") === col("_vchs"))
-              .count())
-            if (known != nV) Fingerprint.refuse(
-              s"ClusterIndex.logicalRemove: only $known of $nV victim ids " +
-                "are indexed with matching content; the fingerprint " +
-                "subtraction needs exactly the ingested rows — pass the " +
-                "(id, text) rows as they entered the index")
-          }),
+          "lrm.known" -> (() => rleg("known-check")(
+            TargetedDelete.requireKnownContent(
+              victims, xxhash64(Dedup.hashedTokenSet(col(textCol))),
+              s.read.parquet(s"$root/toks")
+                .filter(col("idb").isin(vIdb: _*))
+                .join(bVids(vids), Seq(idCol), "leftsemi"),
+              xxhash64(col("_toks")), idCol, nV,
+              "ClusterIndex.logicalRemove"))),
           // mid-append crash guard, same as remove()
           "lrm.guard" -> (() => if (oldFp.isDefined) {
             val vSrcs = rleg("guard")(s.read.parquet(s"$root/assign")
@@ -854,7 +793,7 @@ private[operators] object ClusterRemoval {
               .join(bVids(vids), Seq(idCol), "leftsemi")
               .select(col("_src")).filter(col("_src").isNotNull)
               .distinct().collect().map(_.getString(0)).toSet)
-            Fingerprint.requireRecordedProvenance(conf, indexDir, vSrcs,
+            Fingerprint.requireRecordedProvenance(conf, normDir, vSrcs,
               "ClusterIndex.logicalRemove")
           })))
       }
@@ -874,18 +813,13 @@ private[operators] object ClusterRemoval {
           .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
       }
       FaultInjection.maybeCrash("cluster.logical.meta")
-      if (!replay) Fingerprint.recordMerge(conf, indexDir, rmTag, vfp)
+      if (!replay) Fingerprint.recordMerge(conf, normDir, rmTag, vfp)
       FaultInjection.maybeCrash("cluster.logical.record")
       // the one correctness-bearing "leg": the tombstone batch
-      // (idempotent overwrite) — probes are blind from here
+      // (idempotent) — probes are blind from here
       LogicalDelete.write(vids, idCol, normDir, rmTag)
-      overlayArgs = Some((root, nBuckets, vids, nV, vIdb, resolvedFp, normDir))
-    }
-    require(IndexMaintenance.liveRoot(conf, indexDir) == root,
-      s"ClusterIndex.logicalRemove on $indexDir: the index was compacted " +
-        "during the removal — re-run it after verifying no maintenance " +
-        "is racing")
-    }
+      Some((root, nBuckets, vids, nV, vIdb, resolvedFp, normDir))
+    }}
     // ---- LEASE-FREE overlay half (r16): the serve-overlay write is
     // the expensive leg of the logical takedown (the victims\' component
     // re-split over the edge log — ~19 s of a ~24 s call at sf1 when a
@@ -908,6 +842,7 @@ private[operators] object ClusterRemoval {
     // concurrent append merely invalidates the artifact it raced.
     overlayArgs.foreach { case (root, nBuckets, vids, nV, vIdb,
         resolvedFp, normDir) =>
+      val conf = s.sparkContext.hadoopConfiguration
       val rmTag = s"rm.$tag"
       // in-flight heartbeat (r17, ADVICE r16): rmstate legitimately
       // pends for this half's whole wall on every HEALTHY call — the
@@ -928,7 +863,7 @@ private[operators] object ClusterRemoval {
             System.err.println("[ClusterIndex.logicalRemove] serve-overlay " +
               s"write failed — serves fall back to the live re-split: $e")
         }
-        Fingerprint.clearSourceStatus(conf, indexDir)
+        Fingerprint.clearSourceStatus(conf, normDir)
         // state cleanup LAST — every step above replays from the record
         Fingerprint.clearRemoveState(conf, normDir, rmTag)
       }

@@ -2,13 +2,14 @@ package graft.operators
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared lifecycle mechanics of the persisted indexes ([[ClusterIndex]],
-  * [[TextIndex]], [[VectorIndex]]): generation-pointer layout, compaction
-  * cutover, and the write/compact lease that makes racing maintenance
-  * fail loudly instead of silently losing rows.
+  * [[TextIndex]], [[TermIndex]], [[VectorIndex]]): generation-pointer
+  * layout, compaction cutover ([[foldCompact]]), the removal envelope
+  * ([[removal]]), and the write/compact lease that makes racing
+  * maintenance fail loudly instead of silently losing rows.
   *
   * == Generation layout ==
   *
@@ -382,29 +383,39 @@ private[graft] object IndexMaintenance {
     * Spark jobs racing the caller's next move (a replaying remove, a
     * test assertion). Each leg carries its [[FaultInjection]] step id,
     * fired after the leg's work; the replay contract is the caller's:
-    * every leg must converge from any completed subset. Shared by
-    * ClusterIndex.remove (4 legs) and TextIndex.remove (2 legs). */
+    * every leg must converge from any completed subset. */
   private[operators] def runLegs(legs: Seq[(String, () => Unit)]): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(legs.size)
-    val outcomes =
-      try legs.map { case (step, run) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            // label the leg's jobs (guide §1.5; thread-local, so each
-            // concurrent leg names its own jobs in the UI / profilers)
-            SparkSession.active.sparkContext.setJobDescription(step)
-            run(); FaultInjection.maybeCrash(step)
-          }
-        })
-      }.map(f => scala.util.Try(f.get()))
-      finally pool.shutdown()
-    outcomes.collectFirst { case scala.util.Failure(t) =>
-      throw (t match {
-        case e: java.util.concurrent.ExecutionException => e.getCause
-        case e => e
+    try settleAll(legs.map { case (step, run) =>
+      pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = {
+          // label the leg's jobs (guide §1.5; thread-local, so each
+          // concurrent leg names its own jobs in the UI / profilers)
+          SparkSession.active.sparkContext.setJobDescription(step)
+          run(); FaultInjection.maybeCrash(step)
+        }
       })
-    }
+    })
+    finally pool.shutdown()
     ()
+  }
+
+  /** Wait for EVERY future, then return their values in order — or
+    * rethrow the first failure (in `fs` order) with the later ones
+    * added as suppressed. A failure surfaces as the task's own
+    * exception, not the [[java.util.concurrent.ExecutionException]]
+    * wrapping it; a wrapper without a cause surfaces as itself. No
+    * sibling is left running unobserved when the caller moves on. */
+  private[graft] def settleAll[T](fs: Seq[java.util.concurrent.Future[_ <: T]]): Seq[T] = {
+    val settled = fs.map(f => scala.util.Try[T](f.get()).recoverWith {
+      case e: java.util.concurrent.ExecutionException =>
+        scala.util.Failure(Option(e.getCause).getOrElse(e))
+    })
+    settled.collectFirst { case scala.util.Failure(t) => t }.foreach { first =>
+      settled.foreach(_.failed.foreach(o => if (o ne first) first.addSuppressed(o)))
+      throw first
+    }
+    settled.map(_.get)
   }
 
   /** Operator escape hatch: clear ALL leases after independently
@@ -436,6 +447,92 @@ private[graft] object IndexMaintenance {
       beat.stop()
       releaseLease(conf, lease)
     }
+  }
+
+  // ---- removal envelope --------------------------------------------------
+
+  /** What a removal verb's body works with: the normalized index dir,
+    * the data root resolved under the lease, the removal's own tag
+    * namespace (`rm.<tag>`), the victims' fingerprint, and whether this
+    * (tag, victims) pair was already applied (a crash replay). */
+  final class RemovalCtx private[IndexMaintenance] (
+      val conf: Configuration, val indexDir: String, val root: String,
+      val rmTag: String, val vfp: (Long, Long), val replay: Boolean) {
+    /** The removal-commit record of this tag, read on first use. */
+    lazy val removeState: Option[((Long, Long), Option[(Long, Long)])] =
+      Fingerprint.readRemoveState(conf, indexDir, rmTag)
+    /** Applied record and no pending removal state: the prior run of
+      * this pair ran through its state cleanup (its last step), so meta,
+      * record and rows all landed — and a compact() may since have
+      * reclaimed its tombstone and re-admitted the ids. Re-running it
+      * would re-hide or re-erase a legitimately re-ingested id (ADVICE
+      * r13); the verbs no-op it. */
+    lazy val completedReplay: Boolean = replay && removeState.isEmpty
+  }
+
+  /** The removal preamble and closing check every index family's
+    * remove()/logicalRemove() shares, in this fixed order:
+    *
+    *  1. [[Fingerprint.awaitInflightQuiesce]] — a polite wait for a
+    *     healthy in-flight lease-free removal half. It runs BEFORE the
+    *     lease (ADVICE r17): such a half re-acquires write/remove leases
+    *     for its later windows, so waiting while holding one starves it
+    *     into a false crashed verdict.
+    *  2. the exclusive `remove` lease ([[withLease]]) — a removal
+    *     rewrites other generations' partitions, so it races nothing.
+    *  3. [[liveRoot]], resolved under the lease.
+    *  4. the victims' fingerprint over `fpCols`.
+    *  5.–6. [[admitRemoval]]: the replay check, the refusal of a reused
+    *     tag, and the refusal while another removal's state pends.
+    *  7. `ctx.completedReplay`, lazily, for the verbs that no-op it.
+    *  8. after `body`: the generation recheck. Behind the lease a
+    *     compact cannot cut over, but a lease that expired under a
+    *     stalled holder (or one broken by hand) can let one in; the
+    *     recheck fails the call loudly instead of reporting a removal
+    *     whose writes landed in a retired tree.
+    *
+    * Checks that belong to one verb only (the physical verbs'
+    * [[LogicalDelete.requireNonePending]]) stay in its `body`. */
+  def removal[T](victims: DataFrame, indexDir0: String, tag: String,
+                 fpCols: Seq[String], opName: String)
+                (body: RemovalCtx => T): T = {
+    val conf = victims.sparkSession.sparkContext.hadoopConfiguration
+    val indexDir = normalize(indexDir0)
+    val rmTag = s"rm.$tag"
+    Fingerprint.awaitInflightQuiesce(conf, indexDir, rmTag)
+    withLease(conf, indexDir, "remove") {
+      val root = liveRoot(conf, indexDir)
+      val vfp = Fingerprint.of(victims, fpCols)
+      val replay = admitRemoval(conf, indexDir, tag, vfp, opName)
+      val r = body(new RemovalCtx(conf, indexDir, root, rmTag, vfp, replay))
+      require(liveRoot(conf, indexDir) == root,
+        s"$opName on $indexDir: index compacted during the removal — " +
+          "re-run it after verifying no maintenance is racing")
+      r
+    }
+  }
+
+  /** The in-lease admission checks of a removal ([[removal]] steps 5–6;
+    * ClusterIndex.remove's window A calls them directly). Returns
+    * whether this (tag, victims) pair was already applied. Removals keep
+    * their records under their own `rm.` namespace: an append and a
+    * remove of the same delta under one tag are different operations,
+    * and a shared record would make the remove read as a replay and
+    * skip its fingerprint subtraction forever. */
+  private[operators] def admitRemoval(conf: Configuration, indexDir: String,
+                                      tag: String, vfp: (Long, Long),
+                                      opName: String): Boolean = {
+    val rmTag = s"rm.$tag"
+    val replay = Fingerprint.wasApplied(conf, indexDir, rmTag, vfp)
+    if (!replay && Fingerprint.tagUsed(conf, indexDir, rmTag)) Fingerprint.refuse(
+      s"$opName: tag '$tag' was already used by a " +
+        "different removal batch — pass a batch-unique tag (the same " +
+        "(tag, victims) pair is the legitimate crash-replay and is re-admitted)")
+    // a DIFFERENT removal's surviving state means half-rewritten tables
+    // whose crashed legs would never replay — refuse until it completes
+    Fingerprint.requireNoOtherPendingRemoval(conf, indexDir, rmTag, opName,
+      callerHoldsLease = true)
+    replay
   }
 
   // ---- compaction cutover ------------------------------------------------
@@ -528,6 +625,50 @@ private[graft] object IndexMaintenance {
   def abortCompact(conf: Configuration, ctx: CompactCtx): Unit = {
     ctx.beat.stop()
     releaseLease(conf, ctx.lease)
+  }
+
+  /** The compact() of the text, term and vector families: rewrite each
+    * `folds` table (with its partition columns) as one file per
+    * partition dir with pure I/O, and copy each small `copies` table.
+    * Ingest-provenance `_src` is a data or partition column and carries
+    * over verbatim; replay state lives at the index top level, outside
+    * the data generations. Tombstoned rows (the families'
+    * logicalRemove) are RECLAIMED here: they ride out on the rewrite the
+    * fold was doing anyway, retired generations purge (RTBF beats reader
+    * grace), and the reclaimed batches clear after the cutover. The
+    * staged-table writes run concurrently as legs `compact.<table>`;
+    * the cutover is the generation-pointer flip under the compact lease.
+    * ClusterIndex.compact keeps its own body (its reclaim re-splits
+    * components). */
+  def foldCompact(s: SparkSession, indexDir0: String,
+                  folds: Seq[(String, Seq[String])], copies: Seq[String]): Unit = {
+    val conf = s.sparkContext.hadoopConfiguration
+    val indexDir = normalize(indexDir0)
+    val tables = folds.map(_._1) ++ copies
+    val ctx = beginCompact(conf, indexDir)
+    // lease-time snapshot; the trailing cleanup clears exactly these
+    // batches, never one a post-flip logicalRemove adds (r13 review)
+    val reclaimBatches = LogicalDelete.pendingBatches(conf, indexDir)
+    try {
+      val tomb = LogicalDelete.idsOf(s, indexDir, reclaimBatches)
+      def dropVictims(df: DataFrame): DataFrame = tomb.fold(df) { t =>
+        // the id column name rides in the tombstone frame itself
+        df.join(t, Seq(LogicalDelete.idColOf(t)), "left_anti")
+      }
+      runLegs(
+        folds.map { case (t, partCols) => s"compact.$t" -> (() =>
+          foldTable(s, ctx.fromRoot, ctx.stagingRoot, t, partCols,
+            transform = dropVictims)) } ++
+        copies.map(t => s"compact.$t" -> (() =>
+          copyTable(s, ctx.fromRoot, ctx.stagingRoot, t))))
+    } catch {
+      case t: Throwable => abortCompact(conf, ctx); throw t
+    }
+    finishCompact(conf, ctx, legacyTables = tables)
+    if (reclaimBatches.nonEmpty) {
+      purgeRetired(conf, indexDir, tables)
+      LogicalDelete.clearBatches(conf, indexDir, reclaimBatches)
+    }
   }
 
   /** Delete every RETIRED data generation — the GC-grace copies

@@ -117,14 +117,33 @@ private[graft] object LogicalDelete {
     tomb.columns.filterNot(_ == "batch").head
 
   /** Persist one removal batch's victim ids — the logical remove's only
-    * mutation. Idempotent per batch (mode=overwrite into the tag's own
-    * dir), so the crash-replay protocol can re-run it freely. */
+    * mutation. Readers list and read `batch=<tag>` dirs without a lease,
+    * so the batch is written under `_tmp.batch=<tag>` (hidden from
+    * [[pendingBatches]] by its `batch=` prefix filter, and from Spark by
+    * its `_` prefix) and then PUBLISHED by one directory rename: a
+    * reader never lists a batch whose files have not committed. A
+    * leftover temp dir from a crashed write is overwritten by the next
+    * one. Idempotent per batch: a batch already published is complete
+    * and identical (tag reuse is refused, so the same tag always
+    * carries the same victims), and the write is skipped. The rename is
+    * atomic on HDFS and local filesystems; object stores do not rename
+    * atomically (a copy then delete), so there a reader can still see a
+    * partly copied batch. */
   def write(vids: DataFrame, idCol: String, indexDir: String,
-            rmTag: String): Unit =
-    vids.select(col(idCol)).distinct()
-      .coalesce(1) // a deletion batch is driver-small by nature
-      .write.mode("overwrite")
-      .parquet(s"${dir(indexDir)}/batch=${Fingerprint.sanitizeTag(rmTag)}")
+            rmTag: String): Unit = {
+    val batch = s"batch=${Fingerprint.sanitizeTag(rmTag)}"
+    val dest = new org.apache.hadoop.fs.Path(dirPath(indexDir), batch)
+    val tmp = new org.apache.hadoop.fs.Path(dirPath(indexDir), s"_tmp.$batch")
+    val fs = dest.getFileSystem(vids.sparkSession.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dest)) {
+      vids.select(col(idCol)).distinct()
+        .coalesce(1) // a deletion batch is driver-small by nature
+        .write.mode("overwrite").parquet(tmp.toString)
+      if (!fs.rename(tmp, dest))
+        throw new java.io.IOException(
+          s"tombstone batch could not be published: rename $tmp -> $dest refused")
+    }
+  }
 
   /** Hide tombstoned rows at read: anti-join `df` against the pending
     * set on `idCol`. No broadcast hint on purpose — the tombstone side

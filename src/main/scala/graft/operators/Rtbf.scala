@@ -227,23 +227,11 @@ object Rtbf {
         Some((v, v.count()))
       } else None
     }
-    // settle BOTH before rethrowing (ADVICE r18): a raw f.get() on the
-    // first future would surface a java.util.concurrent
-    // .ExecutionException (changing the error type callers/specs see)
-    // and leave the sibling's Spark job running unobserved
-    def settle[T](f: java.util.concurrent.Future[T]): scala.util.Try[T] =
-      scala.util.Try(f.get()).recoverWith {
-        case e: java.util.concurrent.ExecutionException =>
-          scala.util.Failure(e.getCause)
-      }
-    val (vicT, vecT) = (settle(vicF), settle(vecF))
-    vicT.failed.toOption.orElse(vecT.failed.toOption).foreach { t =>
-      Seq(vicT, vecT).foreach(_.failed.foreach(o =>
-        if (o ne t) t.addSuppressed(o)))
-      throw t
-    }
-    val (vic, nV) = vicT.get
-    val vecPair = vecT.get
+    // settle BOTH before rethrowing (ADVICE r18): callers see the
+    // task's own exception, and no sibling job is left running
+    IndexMaintenance.settleAll(Seq(vicF, vecF))
+    val (vic, nV) = vicF.get()
+    val vecPair = vecF.get()
     val vecVic = vecPair.map(_._1)
     val nVec = vecPair.fold(0L)(_._2)
 
@@ -277,26 +265,11 @@ object Rtbf {
       if (idxStores.size <= 1) idxStores.map(execStore)
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(idxStores.size)
-        try {
-          val futures = idxStores.map(st =>
-            st -> pool.submit(new java.util.concurrent.Callable[RtbfStoreResult] {
-              def call(): RtbfStoreResult = execStore(st)
-            }))
-          val settled = futures.map { case (st, f) =>
-            st -> (try Right(f.get())
-            catch {
-              case e: java.util.concurrent.ExecutionException =>
-                Left(e.getCause)
-            })
-          }
-          val failures = settled.collect { case (st, Left(t)) => (st, t) }
-          failures.headOption.foreach { case (_, first) =>
-            failures.drop(1).foreach { case (_, t) =>
-              if (t ne first) first.addSuppressed(t) }
-            throw first
-          }
-          settled.collect { case (_, Right(r)) => r }
-        } finally pool.shutdown()
+        try IndexMaintenance.settleAll(idxStores.map(st =>
+          pool.submit(new java.util.concurrent.Callable[RtbfStoreResult] {
+            def call(): RtbfStoreResult = execStore(st)
+          })))
+        finally pool.shutdown()
       }
     // the LAKES stay sequential and doc-last ON PURPOSE (an r18
     // concurrency attempt was reverted): the doc lake is the system of

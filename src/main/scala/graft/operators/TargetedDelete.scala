@@ -70,11 +70,34 @@ object TargetedDelete {
     * joined frames carry ids + small hash arrays, never token sets or
     * embeddings, so the victim-side broadcast stays id-scale bytes at
     * any document size. */
-  private[graft] def contentSet(rows: DataFrame, idCol: String,
-                                contentHash: Column): DataFrame =
+  private def contentSet(rows: DataFrame, idCol: String,
+                         contentHash: Column): DataFrame =
     rows.select(col(idCol), contentHash.as("_ch"))
       .groupBy(col(idCol))
       .agg(sort_array(collect_set(col("_ch"))).as("_chs"))
+
+  /** The removal verbs' content known-check, one `count()` job: every
+    * one of the `nV` distinct victim ids must be stored (`stored`, the
+    * victims' pruned slice of the index) with a [[contentSet]] EQUAL to
+    * the victims' own — content hashed by `victimHash` over the victim
+    * rows and `storedHash` over the stored rows. Refuses before
+    * anything mutates otherwise. */
+  private[graft] def requireKnownContent(victims: DataFrame, victimHash: Column,
+                                         stored: DataFrame, storedHash: Column,
+                                         idCol: String, nV: Long,
+                                         opName: String): Unit = {
+    val vAgg = contentSet(victims, idCol, victimHash)
+      .withColumnRenamed("_chs", "_vchs")
+    val known = contentSet(stored, idCol, storedHash)
+      .join(maybeBroadcast(vAgg, nV), Seq(idCol))
+      .filter(col("_chs") === col("_vchs"))
+      .count()
+    if (known != nV) Fingerprint.refuse(
+      s"$opName: only $known of $nV victim ids are indexed with matching " +
+        "content (ALL stored versions of each id — the delete is " +
+        "id-keyed); the fingerprint subtraction needs exactly the " +
+        "ingested rows — pass them as they entered the index")
+  }
 
   /** Broadcast only below the key-count threshold — shared by every
     * victim-keyed join in the delete/remove family. */
@@ -325,11 +348,22 @@ object TargetedDelete {
         s"staged-rewrite manifest could not rename $tmp -> $dest")
   }
 
-  /** (live, stagedOrNull, digest) rows of a staged rewrite's manifest. */
+  /** (live, stagedOrNull, digest) rows of a staged rewrite's manifest.
+    * A manifest DIRECTORY is the pre-r19 parquet layout, left by an
+    * older version's staged removal that crashed mid-flip. This version
+    * cannot read it, and a replay without it could lose the rows of a
+    * partition cut between its delete and its rename, so it is refused
+    * with a clear message instead of an opaque "is a directory". */
   private[graft] def readManifest(spark: SparkSession, stageDir: String)
       : Seq[(String, String, String)] = {
     val p = new org.apache.hadoop.fs.Path(stageDir + ".manifest")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.getFileStatus(p).isDirectory) throw new IllegalStateException(
+      s"staged-rewrite manifest $p is a pre-r19 parquet manifest " +
+        "directory, left by an older version's crashed removal; this " +
+        "version cannot read it — finish the replay with the version " +
+        "that staged it, or rebuild the index and re-run the removal " +
+        "from scratch")
     val in = fs.open(p)
     val txt = try new String(in.readAllBytes(),
       java.nio.charset.StandardCharsets.UTF_8) finally in.close()

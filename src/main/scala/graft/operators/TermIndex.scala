@@ -516,36 +516,20 @@ object TermIndex {
     * pristine tables, and the tombstone it wrote would now fail
     * requireNotTombstoned. */
   def logicalRemove(victims: DataFrame, idCol: String, textCol: String,
-                    indexDir: String, tag: String = "remove"): Unit = {
-    val s = victims.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    // polite pre-lease wait for healthy in-flight halves (ADVICE r17)
-    Fingerprint.awaitInflightQuiesce(
-      conf, IndexMaintenance.normalize(indexDir), s"rm.$tag")
-    IndexMaintenance.withLease(conf, indexDir, "remove") {
-      val root = IndexMaintenance.liveRoot(conf, indexDir)
+                    indexDir: String, tag: String = "remove"): Unit =
+    IndexMaintenance.removal(victims, indexDir, tag, Seq(idCol, textCol),
+        "TermIndex.logicalRemove") { ctx =>
+      val s = victims.sparkSession
+      val (conf, normDir, root) = (ctx.conf, ctx.indexDir, ctx.root)
+      val (rmTag, vfp, replay) = (ctx.rmTag, ctx.vfp, ctx.replay)
       val (nBuckets, oldFp, oldSumDl) = readMeta(s, root)
-      val rmTag = s"rm.$tag"
-      val vfp = Fingerprint.of(victims, Seq(idCol, textCol))
-      val replay = Fingerprint.wasApplied(conf, indexDir, rmTag, vfp)
-      if (!replay && Fingerprint.tagUsed(conf, indexDir, rmTag)) Fingerprint.refuse(
-        s"TermIndex.logicalRemove: tag '$tag' was already used by a " +
-          "different removal batch — pass a batch-unique tag")
-      val normDir = IndexMaintenance.normalize(indexDir)
-      Fingerprint.requireNoOtherPendingRemoval(
-        conf, normDir, rmTag, "TermIndex.logicalRemove",
-        callerHoldsLease = true)
       val vids = victims.select(col(idCol)).distinct().localCheckpoint()
       val nV = vids.count()
-      // completed-replay no-op (ADVICE r13): the tombstone must not be
-      // rewritten after a reclaim legitimately re-admitted the id
-      val state0 = Fingerprint.readRemoveState(conf, normDir, rmTag)
-      val completedReplay = replay && state0.isEmpty
       // crash-resumed first attempt: state pends for THESE victims but
       // recordMerge never ran (a crash before the record point); the
       // tombstone may already be written, so validation must not re-run
-      val resumed = state0.exists(_._1 == vfp)
-      if (nV > 0L && !completedReplay) {
+      val resumed = ctx.removeState.exists(_._1 == vfp)
+      if (nV > 0L && !ctx.completedReplay) {
         val (vtf, vdl, vTb, vIdb) =
           victimStats(victims, idCol, textCol, vids, nBuckets)
         if (!replay && !resumed) {
@@ -578,14 +562,10 @@ object TermIndex {
         FaultInjection.maybeCrash("term.logical.meta")
         if (!replay) Fingerprint.recordMerge(conf, indexDir, rmTag, vfp)
         FaultInjection.maybeCrash("term.logical.record")
-        Fingerprint.clearSourceStatus(conf, indexDir)
+        Fingerprint.clearSourceStatus(conf, normDir)
         Fingerprint.clearRemoveState(conf, normDir, rmTag)
       }
-      require(IndexMaintenance.liveRoot(conf, indexDir) == root,
-        s"TermIndex.logicalRemove on $indexDir: index compacted during " +
-          "the removal — re-run it after verifying no maintenance is racing")
     }
-  }
 
   /** PHYSICAL targeted delete (VERDICT r16 item 1 — the family's last
     * verb asymmetry): the victims' rows leave `postings` and `dl` ON
@@ -615,32 +595,20 @@ object TermIndex {
     * build on the survivors value-exact, victim rows absent from disk,
     * IndexCheck clean. */
   def remove(victims: DataFrame, idCol: String, textCol: String,
-             indexDir: String, tag: String = "remove"): Unit = {
-    val s = victims.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    Fingerprint.awaitInflightQuiesce(
-      conf, IndexMaintenance.normalize(indexDir), s"rm.$tag")
-    IndexMaintenance.withLease(conf, indexDir, "remove") {
-      val root = IndexMaintenance.liveRoot(conf, indexDir)
+             indexDir: String, tag: String = "remove"): Unit =
+    IndexMaintenance.removal(victims, indexDir, tag, Seq(idCol, textCol),
+        "TermIndex.remove") { ctx =>
+      val s = victims.sparkSession
+      val (conf, normDir, root) = (ctx.conf, ctx.indexDir, ctx.root)
+      val (rmTag, vfp, replay) = (ctx.rmTag, ctx.vfp, ctx.replay)
       val (nBuckets, oldFp, oldSumDl) = readMeta(s, root)
-      val rmTag = s"rm.$tag"
-      val vfp = Fingerprint.of(victims, Seq(idCol, textCol))
-      val replay = Fingerprint.wasApplied(conf, indexDir, rmTag, vfp)
-      if (!replay && Fingerprint.tagUsed(conf, indexDir, rmTag)) Fingerprint.refuse(
-        s"TermIndex.remove: tag '$tag' was already used by a different " +
-          "removal batch — pass a batch-unique tag")
-      val normDir = IndexMaintenance.normalize(indexDir)
-      Fingerprint.requireNoOtherPendingRemoval(
-        conf, normDir, rmTag, "TermIndex.remove",
-        callerHoldsLease = true)
       val barrierBatch = Fingerprint.sanitizeTag(rmTag)
-      LogicalDelete.requireNonePending(conf, indexDir, "TermIndex.remove",
+      LogicalDelete.requireNonePending(conf, normDir, "TermIndex.remove",
         exceptBatch = Some(barrierBatch))
       val vids = victims.select(col(idCol)).distinct().localCheckpoint()
       val nV = vids.count()
-      val state0 = Fingerprint.readRemoveState(conf, normDir, rmTag)
-      val completedReplay = replay && state0.isEmpty
-      val resumed = state0.exists(_._1 == vfp)
+      val resumed = ctx.removeState.exists(_._1 == vfp)
+      val completedReplay = ctx.completedReplay
       if (nV > 0L && !completedReplay) {
         val (vtf, vdl, vTb, vIdb) =
           victimStats(victims, idCol, textCol, vids, nBuckets)
@@ -660,9 +628,7 @@ object TermIndex {
         // removal's duration (requireNotTombstoned refuses their
         // re-ingest; topK goes blind to them right here, even before
         // the deletes land) and is cleared with the state at the end.
-        if (!LogicalDelete.pendingBatches(conf, indexDir)
-            .contains(barrierBatch))
-          LogicalDelete.write(vids, idCol, normDir, rmTag)
+        LogicalDelete.write(vids, idCol, normDir, rmTag)
         FaultInjection.maybeCrash("term.remove.barrier")
         // ROWS FIRST: both deletes are idempotent pruned dynamic
         // overwrites driven by replay-stable bucket lists — parallel,
@@ -709,45 +675,16 @@ object TermIndex {
       // (record exists, state cleaned) clears its own leftover barrier —
       // tag reuse is refused, so the batch can only be this removal's
       if (completedReplay &&
-          LogicalDelete.pendingBatches(conf, indexDir).contains(barrierBatch))
+          LogicalDelete.pendingBatches(conf, normDir).contains(barrierBatch))
         LogicalDelete.clearBatches(conf, normDir, Seq(barrierBatch))
-      require(IndexMaintenance.liveRoot(conf, indexDir) == root,
-        s"TermIndex.remove on $indexDir: index compacted during the " +
-          "removal — re-run it after verifying no maintenance is racing")
     }
-  }
 
   /** Fold the accreted append partitions to one file each (pure I/O,
     * `_src`/`tb` structure preserved — provenance keeps working) and
     * RECLAIM tombstoned rows on the rewrite the fold was doing anyway;
     * generation-pointer cutover like every family. */
-  def compact(s: SparkSession, indexDir0: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val indexDir = IndexMaintenance.normalize(indexDir0)
-    val ctx = IndexMaintenance.beginCompact(conf, indexDir)
-    val reclaimBatches = LogicalDelete.pendingBatches(conf, indexDir)
-    try {
-      val tomb = LogicalDelete.idsOf(s, indexDir, reclaimBatches)
-      def dropVictims(df: DataFrame): DataFrame = tomb.fold(df) { t =>
-        df.join(t, Seq(LogicalDelete.idColOf(t)), "left_anti")
-      }
-      IndexMaintenance.runLegs(Seq(
-        "compact.postings" -> (() =>
-          IndexMaintenance.foldTable(s, ctx.fromRoot, ctx.stagingRoot,
-            "postings", Seq("_src", "tb"), transform = dropVictims)),
-        "compact.dl" -> (() =>
-          IndexMaintenance.foldTable(s, ctx.fromRoot, ctx.stagingRoot,
-            "dl", Seq("_src", "idb"), transform = dropVictims)),
-        "compact.meta" -> (() =>
-          IndexMaintenance.copyTable(s, ctx.fromRoot, ctx.stagingRoot, "meta"))))
-    } catch {
-      case t: Throwable => IndexMaintenance.abortCompact(conf, ctx); throw t
-    }
-    IndexMaintenance.finishCompact(conf, ctx,
-      legacyTables = Seq("postings", "dl", "meta"))
-    if (reclaimBatches.nonEmpty) {
-      IndexMaintenance.purgeRetired(conf, indexDir, Seq("postings", "dl", "meta"))
-      LogicalDelete.clearBatches(conf, indexDir, reclaimBatches)
-    }
-  }
+  def compact(s: SparkSession, indexDir: String): Unit =
+    IndexMaintenance.foldCompact(s, indexDir,
+      folds = Seq("postings" -> Seq("_src", "tb"), "dl" -> Seq("_src", "idb")),
+      copies = Seq("meta"))
 }

@@ -206,29 +206,17 @@ object TextIndex {
     * duplicate rows from crashed append replays too — removal is by id,
     * not by row. */
   def remove(victims: DataFrame, idCol: String, textCol: String,
-             indexDir: String, tag: String = "remove"): Unit = {
+             indexDir: String, tag: String = "remove"): Unit =
+    IndexMaintenance.removal(victims, indexDir, tag, Seq(idCol, textCol),
+        "TextIndex.remove") { ctx =>
     val s = victims.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    // polite pre-lease wait for healthy in-flight halves (ADVICE r17)
-    Fingerprint.awaitInflightQuiesce(
-      conf, IndexMaintenance.normalize(indexDir), s"rm.$tag")
-    IndexMaintenance.withLease(conf, indexDir, "remove") {
-    val root = IndexMaintenance.liveRoot(conf, indexDir)
+    val conf = ctx.conf
+    val root = ctx.root
     val (numHashes, bandCount, nBuckets, seed) = readMeta(s, root)
     val oldFp = readFingerprint(s, root)
-    val rmTag = s"rm.$tag" // own namespace, see ClusterIndex.remove
-    val vfp = Fingerprint.of(victims, Seq(idCol, textCol))
-    val replay = Fingerprint.wasApplied(conf, indexDir, rmTag, vfp)
-    if (!replay && Fingerprint.tagUsed(conf, indexDir, rmTag)) Fingerprint.refuse(
-      s"TextIndex.remove: tag '$tag' was already used by a different " +
-        "removal batch — pass a batch-unique tag")
-    // cross-tag leftover state refusal, see ClusterIndex.remove
-    Fingerprint.requireNoOtherPendingRemoval(
-      conf, IndexMaintenance.normalize(indexDir), rmTag, "TextIndex.remove",
-      callerHoldsLease = true)
     // pending logical deletions must reclaim first (their victims would
     // read as indexed rows here) — see [[LogicalDelete]]
-    LogicalDelete.requireNonePending(conf, indexDir, "TextIndex.remove")
+    LogicalDelete.requireNonePending(conf, ctx.indexDir, "TextIndex.remove")
     val vids = victims.select(col(idCol)).distinct().localCheckpoint()
     val nV = vids.count()
     if (nV > 0L) {
@@ -251,28 +239,14 @@ object TextIndex {
       var vHb: Seq[Long] = Seq.empty
       val bands = s.read.parquet(s"$root/bands") // ONE relation resolution
       IndexMaintenance.runLegs(Seq(
-        "text.validate.known" -> (() => if (!replay) {
-          // CONTENT-MULTISET known-check (r14, see
-          // [[TargetedDelete.contentSet]]): per victim id, the stored
-          // rows' token-set hashes must EQUAL the victim rows' — the
-          // delete is id-keyed (every stored version goes), so the caller
-          // must pass ALL of an id's ingested versions, or a wrong/partial
-          // victim set would subtract a fingerprint that diverges from the
-          // rows actually removed, silently poisoning isFresh forever
-          val vAgg = TargetedDelete.contentSet(victims, idCol,
-            xxhash64(Dedup.hashedTokenSet(col(textCol))))
-            .withColumnRenamed("_chs", "_vchs")
-          val known = TargetedDelete.contentSet(vToks, idCol,
-              xxhash64(col("_toks")))
-            .join(TargetedDelete.maybeBroadcast(vAgg, nV), Seq(idCol))
-            .filter(col("_chs") === col("_vchs"))
-            .count()
-          if (known != nV) Fingerprint.refuse(
-            s"TextIndex.remove: only $known of $nV victim ids are indexed " +
-              "with matching content (ALL stored versions of each id — the " +
-              "delete is id-keyed); the fingerprint subtraction needs " +
-              "exactly the ingested (id, text) rows")
-        }),
+        "text.validate.known" -> (() => if (!ctx.replay)
+          // per victim id, the stored token-set hashes must EQUAL the
+          // victim rows' (r14): the delete is id-keyed, so a partial
+          // victim set would subtract a fingerprint that diverges from
+          // the rows actually removed, poisoning isFresh forever
+          TargetedDelete.requireKnownContent(
+            victims, xxhash64(Dedup.hashedTokenSet(col(textCol))),
+            vToks, xxhash64(col("_toks")), idCol, nV, "TextIndex.remove")),
         "text.validate.bands" -> (() => {
           vHb = bandRows(vToks, idCol, numHashes, bandCount, nBuckets, seed)
             .select(col("hb")).distinct().collect().map(_.getLong(0)).toSeq
@@ -281,14 +255,14 @@ object TextIndex {
           // added. One pruned read of the victims' band rows' provenance,
           // bounded by |tags|; only meaningful on fingerprinted indexes with
           // provenance columns. Same sanitized namespace as tagfp/ names.
-          if (!replay && oldFp.isDefined &&
+          if (!ctx.replay && oldFp.isDefined &&
               bands.schema.fieldNames.contains("_src")) {
             val vSrcs = bands
               .filter(col("hb").isin(vHb: _*))
               .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "leftsemi")
               .select(col("_src")).filter(col("_src").isNotNull) // pre-provenance rows = build-era
               .distinct().collect().map(_.getString(0)).toSet
-            Fingerprint.requireRecordedProvenance(conf, indexDir, vSrcs,
+            Fingerprint.requireRecordedProvenance(conf, ctx.indexDir, vSrcs,
               "TextIndex.remove")
           }
         })))
@@ -296,10 +270,9 @@ object TextIndex {
       // resolveRemovalMeta, so appends interleaved across a crash
       // window replay exactly instead of having their merges wiped by
       // an absolute-target overwrite)
-      val normDir = IndexMaintenance.normalize(indexDir)
-      Fingerprint.ensureRemoveState(conf, normDir, rmTag, vfp, replay,
-        oldFp, "TextIndex.remove")
-      val stateDir = Fingerprint.removeStatePath(normDir, rmTag)
+      Fingerprint.ensureRemoveState(conf, ctx.indexDir, ctx.rmTag, ctx.vfp,
+        ctx.replay, oldFp, "TextIndex.remove")
+      val stateDir = Fingerprint.removeStatePath(ctx.indexDir, ctx.rmTag)
       // the victims' band buckets join the commit record as plan state
       // (computed from the toks table, pristine on any first attempt):
       // the bands prune no longer depends on another rewrite's table,
@@ -333,7 +306,7 @@ object TextIndex {
       }
       if (!vhbFs.exists(vhbMarker)) vhbFs.create(vhbMarker, true).close()
       FaultInjection.maybeCrash("text.state")
-      Fingerprint.resolveRemovalMeta(conf, normDir, rmTag, oldFp,
+      Fingerprint.resolveRemovalMeta(conf, ctx.indexDir, ctx.rmTag, oldFp,
         "TextIndex.remove").foreach { fp =>
         import s.implicits._
         Seq((numHashes, bandCount, nBuckets, seed, fp._1, fp._2))
@@ -341,7 +314,7 @@ object TextIndex {
           .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
       }
       FaultInjection.maybeCrash("text.meta")
-      if (!replay) Fingerprint.recordMerge(conf, indexDir, rmTag, vfp)
+      if (!ctx.replay) Fingerprint.recordMerge(conf, ctx.indexDir, ctx.rmTag, ctx.vfp)
       FaultInjection.maybeCrash("text.record")
       // both rewrites plan-driven and idempotent: run concurrently,
       // surface the first failure only after both settle (a mid-leg
@@ -364,17 +337,13 @@ object TextIndex {
             col("idb").isin(vIdb: _*))
           (): Unit
         })))
-      Fingerprint.clearSourceStatus(conf, indexDir)
+      Fingerprint.clearSourceStatus(conf, ctx.indexDir)
       // retired GC-grace generations hold the victims' rows too —
       // right-to-be-forgotten beats reader grace (see
       // IndexMaintenance.purgeRetired)
-      IndexMaintenance.purgeRetired(conf, indexDir, Seq("bands", "toks", "meta"))
+      IndexMaintenance.purgeRetired(conf, ctx.indexDir, Seq("bands", "toks", "meta"))
       // state cleanup LAST — every step above replays from the record
-      Fingerprint.clearRemoveState(conf, normDir, rmTag)
-    }
-    require(IndexMaintenance.liveRoot(conf, indexDir) == root,
-      s"TextIndex.remove on $indexDir: index compacted during the removal " +
-        "— re-run it after verifying no maintenance is racing")
+      Fingerprint.clearRemoveState(conf, ctx.indexDir, ctx.rmTag)
     }
   }
 
@@ -388,58 +357,30 @@ object TextIndex {
     * then). `victims` must carry the EXACT `(id, text)` rows as
     * ingested; tags share the remove namespace. */
   def logicalRemove(victims: DataFrame, idCol: String, textCol: String,
-                    indexDir: String, tag: String = "remove"): Unit = {
+                    indexDir: String, tag: String = "remove"): Unit =
+    IndexMaintenance.removal(victims, indexDir, tag, Seq(idCol, textCol),
+        "TextIndex.logicalRemove") { ctx =>
     val s = victims.sparkSession
     import s.implicits._
-    val conf = s.sparkContext.hadoopConfiguration
-    Fingerprint.awaitInflightQuiesce(
-      conf, IndexMaintenance.normalize(indexDir), s"rm.$tag")
-    IndexMaintenance.withLease(conf, indexDir, "remove") {
-    val root = IndexMaintenance.liveRoot(conf, indexDir)
+    val conf = ctx.conf
+    val root = ctx.root
     val (numHashes, bandCount, nBuckets, seed) = readMeta(s, root)
     val oldFp = readFingerprint(s, root)
-    val rmTag = s"rm.$tag"
-    val vfp = Fingerprint.of(victims, Seq(idCol, textCol))
-    val replay = Fingerprint.wasApplied(conf, indexDir, rmTag, vfp)
-    if (!replay && Fingerprint.tagUsed(conf, indexDir, rmTag)) Fingerprint.refuse(
-      s"TextIndex.logicalRemove: tag '$tag' was already used by a " +
-        "different removal batch — pass a batch-unique tag")
-    val normDir = IndexMaintenance.normalize(indexDir)
-    Fingerprint.requireNoOtherPendingRemoval(
-      conf, normDir, rmTag, "TextIndex.logicalRemove",
-      callerHoldsLease = true)
     val vids = victims.select(col(idCol)).distinct().localCheckpoint()
     val nV = vids.count()
-    // applied record + no pending removal state ⟺ the prior run fully
-    // completed; re-writing the tombstone would re-hide ids re-ingested
-    // after a compact() reclaim (ADVICE r13) — no-op the replay
-    val completedReplay = replay &&
-      Fingerprint.readRemoveState(conf, normDir, rmTag).isEmpty
-    if (nV > 0L && !completedReplay) {
+    if (nV > 0L && !ctx.completedReplay) {
       val vIdb = vids
         .select(pmod(xxhash64(col(idCol)), lit(nBuckets.toLong)).as("idb"))
         .distinct().collect().map(_.getLong(0)).toSeq
-      if (!replay) {
-        LogicalDelete.requireNotTombstoned(s, indexDir, vids, idCol,
+      if (!ctx.replay) {
+        LogicalDelete.requireNotTombstoned(s, ctx.indexDir, vids, idCol,
           "TextIndex.logicalRemove")
-        // content-set, like remove() — see the r14 note there
-        val vAgg = TargetedDelete.contentSet(victims, idCol,
-          xxhash64(Dedup.hashedTokenSet(col(textCol))))
-          .withColumnRenamed("_chs", "_vchs")
-        val known = TargetedDelete.contentSet(
-            s.read.parquet(s"$root/toks")
-              .filter(col("idb").isin(vIdb: _*))
-              .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol),
-                "leftsemi"),
-            idCol, xxhash64(col("_toks")))
-          .join(TargetedDelete.maybeBroadcast(vAgg, nV), Seq(idCol))
-          .filter(col("_chs") === col("_vchs"))
-          .count()
-        if (known != nV) Fingerprint.refuse(
-          s"TextIndex.logicalRemove: only $known of $nV victim ids are " +
-            "indexed with matching content (ALL stored versions of each " +
-            "id); the fingerprint subtraction needs exactly the ingested " +
-            "(id, text) rows")
+        TargetedDelete.requireKnownContent(
+          victims, xxhash64(Dedup.hashedTokenSet(col(textCol))),
+          s.read.parquet(s"$root/toks")
+            .filter(col("idb").isin(vIdb: _*))
+            .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "leftsemi"),
+          xxhash64(col("_toks")), idCol, nV, "TextIndex.logicalRemove")
         // mid-append crash guard, same pruned provenance read as remove()
         if (oldFp.isDefined &&
             s.read.parquet(s"$root/bands").schema.fieldNames.contains("_src")) {
@@ -454,82 +395,39 @@ object TextIndex {
             .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "leftsemi")
             .select(col("_src")).filter(col("_src").isNotNull)
             .distinct().collect().map(_.getString(0)).toSet
-          Fingerprint.requireRecordedProvenance(conf, indexDir, vSrcs,
+          Fingerprint.requireRecordedProvenance(conf, ctx.indexDir, vSrcs,
             "TextIndex.logicalRemove")
         }
       }
       // idempotent fingerprint commit — remove()'s protocol shape (r15:
       // metabase-first + interleaving-exact replay resolution)
-      Fingerprint.ensureRemoveState(conf, normDir, rmTag, vfp, replay,
-        oldFp, "TextIndex.logicalRemove")
+      Fingerprint.ensureRemoveState(conf, ctx.indexDir, ctx.rmTag, ctx.vfp,
+        ctx.replay, oldFp, "TextIndex.logicalRemove")
       FaultInjection.maybeCrash("text.logical.state")
-      Fingerprint.resolveRemovalMeta(conf, normDir, rmTag, oldFp,
+      Fingerprint.resolveRemovalMeta(conf, ctx.indexDir, ctx.rmTag, oldFp,
         "TextIndex.logicalRemove").foreach { fp =>
         Seq((numHashes, bandCount, nBuckets, seed, fp._1, fp._2))
           .toDF("num_hashes", "bands", "n_buckets", "seed", "n_rows", "content_hash")
           .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
       }
       FaultInjection.maybeCrash("text.logical.meta")
-      if (!replay) Fingerprint.recordMerge(conf, indexDir, rmTag, vfp)
+      if (!ctx.replay) Fingerprint.recordMerge(conf, ctx.indexDir, ctx.rmTag, ctx.vfp)
       FaultInjection.maybeCrash("text.logical.record")
       // the one "leg": the tombstone batch — probes blind from here
-      LogicalDelete.write(vids, idCol, normDir, rmTag)
-      Fingerprint.clearSourceStatus(conf, indexDir)
-      Fingerprint.clearRemoveState(conf, normDir, rmTag)
-    }
-    require(IndexMaintenance.liveRoot(conf, indexDir) == root,
-      s"TextIndex.logicalRemove on $indexDir: index compacted during the " +
-        "removal — re-run it after verifying no maintenance is racing")
+      LogicalDelete.write(vids, idCol, ctx.indexDir, ctx.rmTag)
+      Fingerprint.clearSourceStatus(conf, ctx.indexDir)
+      Fingerprint.clearRemoveState(conf, ctx.indexDir, ctx.rmTag)
     }
   }
 
   /** Fold the accreted append files: rewrite `bands`/`toks` as one file
     * per partition directory with pure I/O (no re-tokenize, no
-    * re-sign). Ingest-provenance `_src` values are a DATA column here
-    * and are preserved verbatim, so probe's excludeTag replay guard
-    * keeps working; meta carries over unchanged and the
-    * replay-protection state lives at the index top level, outside the
-    * data generations. Tombstoned rows ([[logicalRemove]]) are
-    * RECLAIMED here: they ride out on the rewrite the fold was doing
-    * anyway, retired generations purge (RTBF beats reader grace), and
-    * the tombstone set clears after the cutover. Cutover is a
-    * generation-pointer flip (object-store safe, no renames) under the
-    * compact lease — see [[IndexMaintenance]]. */
-  def compact(s: SparkSession, indexDir0: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val indexDir = IndexMaintenance.normalize(indexDir0)
-    val ctx = IndexMaintenance.beginCompact(conf, indexDir)
-    // lease-time snapshot; the trailing cleanup clears exactly these
-    // batches, never one a post-flip logicalRemove adds (r13 review)
-    val reclaimBatches = LogicalDelete.pendingBatches(conf, indexDir)
-    try {
-      val tomb =
-        LogicalDelete.idsOf(s, indexDir, reclaimBatches)
-      def dropVictims(df: DataFrame): DataFrame = tomb.fold(df) { t =>
-        // the id column name rides in the tombstone frame itself
-        df.join(t, Seq(LogicalDelete.idColOf(t)), "left_anti")
-      }
-      // independent staged-table writes run concurrently (r13 — the
-      // remove()-legs shape; see ClusterIndex.compact)
-      IndexMaintenance.runLegs(Seq(
-        "compact.bands" -> (() =>
-          IndexMaintenance.foldTable(s, ctx.fromRoot, ctx.stagingRoot, "bands",
-            Seq("hb"), transform = dropVictims)),
-        "compact.toks" -> (() =>
-          IndexMaintenance.foldTable(s, ctx.fromRoot, ctx.stagingRoot, "toks",
-            Seq("idb"), transform = dropVictims)),
-        "compact.meta" -> (() =>
-          IndexMaintenance.copyTable(s, ctx.fromRoot, ctx.stagingRoot, "meta"))))
-    } catch {
-      case t: Throwable => IndexMaintenance.abortCompact(conf, ctx); throw t
-    }
-    IndexMaintenance.finishCompact(conf, ctx,
-      legacyTables = Seq("bands", "toks", "meta"))
-    if (reclaimBatches.nonEmpty) {
-      IndexMaintenance.purgeRetired(conf, indexDir, Seq("bands", "toks", "meta"))
-      LogicalDelete.clearBatches(conf, indexDir, reclaimBatches)
-    }
-  }
+    * re-sign), reclaiming tombstoned rows ([[logicalRemove]]) — see
+    * [[IndexMaintenance.foldCompact]]. */
+  def compact(s: SparkSession, indexDir: String): Unit =
+    IndexMaintenance.foldCompact(s, indexDir,
+      folds = Seq("bands" -> Seq("hb"), "toks" -> Seq("idb")),
+      copies = Seq("meta"))
 
   /** Flag incoming docs that near-duplicate the INDEXED corpus: the
     * [[Dedup.minhashNearDupsAgainst]] contract (one row per flagged

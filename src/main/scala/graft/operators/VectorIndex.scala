@@ -413,29 +413,15 @@ object VectorIndex {
     * unchanged by removals. */
   def remove(victims: DataFrame, indexDir: String,
              corpusId: String = "vec_id", corpusVec: String = "embedding",
-             tag: String = "remove"): Unit = {
+             tag: String = "remove"): Unit =
+    IndexMaintenance.removal(victims, indexDir, tag, Seq(corpusId, corpusVec),
+        "VectorIndex.remove") { ctx =>
     val s = victims.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    // polite pre-lease wait for healthy in-flight halves (ADVICE r17:
-    // waiting INSIDE the lease can starve the half that needs it)
-    Fingerprint.awaitInflightQuiesce(
-      conf, IndexMaintenance.normalize(indexDir), s"rm.$tag")
-    IndexMaintenance.withLease(conf, indexDir, "remove") {
-    val root = IndexMaintenance.liveRoot(conf, indexDir)
+    val (conf, normDir, root) = (ctx.conf, ctx.indexDir, ctx.root)
     val centroids = loadCentroidsFromRoot(s, root)
     val oldFp = readMeta(s, root)
-    val rmTag = s"rm.$tag" // own namespace, see ClusterIndex.remove
-    val vfp = Fingerprint.of(victims, Seq(corpusId, corpusVec))
-    val replay = Fingerprint.wasApplied(conf, indexDir, rmTag, vfp)
-    if (!replay && Fingerprint.tagUsed(conf, indexDir, rmTag)) Fingerprint.refuse(
-      s"VectorIndex.remove: tag '$tag' was already used by a different " +
-        "removal batch — pass a batch-unique tag")
-    // cross-tag leftover state refusal, see ClusterIndex.remove
-    Fingerprint.requireNoOtherPendingRemoval(
-      conf, IndexMaintenance.normalize(indexDir), rmTag, "VectorIndex.remove",
-      callerHoldsLease = true)
     // pending logical deletions must reclaim first — see [[LogicalDelete]]
-    LogicalDelete.requireNonePending(conf, indexDir, "VectorIndex.remove")
+    LogicalDelete.requireNonePending(conf, normDir, "VectorIndex.remove")
     val pinned = victims
       .withColumn("cell", Similarity.nearestCentroid(col(corpusVec), centroids))
       .select(col(corpusId), col("cell")).distinct().localCheckpoint()
@@ -444,7 +430,7 @@ object VectorIndex {
       val vCells = pinned.select(col("cell")).distinct()
         .collect().map(_.getInt(0)).toSeq // bounded by nlist
       val vids = pinned.select(col(corpusId)).distinct()
-      if (!replay) {
+      if (!ctx.replay) {
         // ONE cells relation for both checks (r18 opt: repeated
         // spark.read.parquet re-resolves the file index), and the
         // known-check runs concurrently with the provenance guard
@@ -455,23 +441,13 @@ object VectorIndex {
             "leftsemi")
           .localCheckpoint(eager = false) // shared by both legs
         IndexMaintenance.runLegs(Seq(
-          "vector.validate.known" -> (() => {
-            // content-set known-check (r14) — see TextIndex.remove;
-            // this family stores the ingested embedding itself, so the
-            // hashed equality is over EXACT float arrays, not token sets
-            val vAgg = TargetedDelete.contentSet(victims, corpusId,
-              xxhash64(col(corpusVec))).withColumnRenamed("_chs", "_vchs")
-            val known = TargetedDelete.contentSet(cellsPruned,
-                corpusId, xxhash64(col(corpusVec)))
-              .join(TargetedDelete.maybeBroadcast(vAgg, nV), Seq(corpusId))
-              .filter(col("_chs") === col("_vchs"))
-              .count()
-            if (known != nV) Fingerprint.refuse(
-              s"VectorIndex.remove: only $known of $nV victim ids are " +
-                "indexed with matching content (ALL stored versions of each " +
-                "id); the fingerprint subtraction needs exactly the ingested " +
-                "(id, embedding) rows")
-          }),
+          // this family stores the ingested embedding itself, so the
+          // content equality is over EXACT float arrays, not token sets
+          "vector.validate.known" -> (() =>
+            TargetedDelete.requireKnownContent(
+              victims, xxhash64(col(corpusVec)),
+              cellsPruned, xxhash64(col(corpusVec)), corpusId, nV,
+              "VectorIndex.remove")),
           // mid-append crash guard (see TextIndex.remove): a victim row
           // from an append whose merge never recorded must not subtract
           "vector.validate.guard" -> (() =>
@@ -480,34 +456,29 @@ object VectorIndex {
               val vSrcs = cellsPruned
                 .select(col("_src")).filter(col("_src").isNotNull) // pre-provenance rows = build-era
                 .distinct().collect().map(_.getString(0)).toSet
-              Fingerprint.requireRecordedProvenance(conf, indexDir, vSrcs,
+              Fingerprint.requireRecordedProvenance(conf, normDir, vSrcs,
                 "VectorIndex.remove")
             })))
       }
       // idempotent fingerprint commit (ADVICE r11; r15: metabase-first +
       // interleaving-exact replay resolution — see Fingerprint
       // .resolveRemovalMeta)
-      val normDir = IndexMaintenance.normalize(indexDir)
-      Fingerprint.ensureRemoveState(conf, normDir, rmTag, vfp, replay,
-        oldFp, "VectorIndex.remove")
-      Fingerprint.resolveRemovalMeta(conf, normDir, rmTag, oldFp,
+      Fingerprint.ensureRemoveState(conf, normDir, ctx.rmTag, ctx.vfp,
+        ctx.replay, oldFp, "VectorIndex.remove")
+      Fingerprint.resolveRemovalMeta(conf, normDir, ctx.rmTag, oldFp,
         "VectorIndex.remove").foreach(fp => writeMeta(s, root, fp))
       FaultInjection.maybeCrash("vector.meta")
-      if (!replay) Fingerprint.recordMerge(conf, indexDir, rmTag, vfp)
+      if (!ctx.replay) Fingerprint.recordMerge(conf, normDir, ctx.rmTag, ctx.vfp)
       FaultInjection.maybeCrash("vector.record")
       TargetedDelete.delete(s, s"$root/cells", Seq("cell"), corpusId, vids,
         col("cell").isInCollection(vCells))
-      Fingerprint.clearSourceStatus(conf, indexDir)
+      Fingerprint.clearSourceStatus(conf, normDir)
       // retired GC-grace generations hold the victims' rows too —
       // right-to-be-forgotten beats reader grace (see
       // IndexMaintenance.purgeRetired)
-      IndexMaintenance.purgeRetired(conf, indexDir, Seq("cells", "centroids", "meta"))
+      IndexMaintenance.purgeRetired(conf, normDir, Seq("cells", "centroids", "meta"))
       // state cleanup LAST — every step above replays from the record
-      Fingerprint.clearRemoveState(conf, normDir, rmTag)
-    }
-    require(IndexMaintenance.liveRoot(conf, indexDir) == root,
-      s"VectorIndex.remove on $indexDir: index compacted during the " +
-        "removal — re-run it after verifying no maintenance is racing")
+      Fingerprint.clearRemoveState(conf, normDir, ctx.rmTag)
     }
   }
 
@@ -524,58 +495,31 @@ object VectorIndex {
   def logicalRemove(victims: DataFrame, indexDir: String,
                     corpusId: String = "vec_id",
                     corpusVec: String = "embedding",
-                    tag: String = "remove"): Unit = {
+                    tag: String = "remove"): Unit =
+    IndexMaintenance.removal(victims, indexDir, tag, Seq(corpusId, corpusVec),
+        "VectorIndex.logicalRemove") { ctx =>
     val s = victims.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    Fingerprint.awaitInflightQuiesce(
-      conf, IndexMaintenance.normalize(indexDir), s"rm.$tag")
-    IndexMaintenance.withLease(conf, indexDir, "remove") {
-    val root = IndexMaintenance.liveRoot(conf, indexDir)
+    val (conf, normDir, root) = (ctx.conf, ctx.indexDir, ctx.root)
     val centroids = loadCentroidsFromRoot(s, root)
     val oldFp = readMeta(s, root)
-    val rmTag = s"rm.$tag"
-    val vfp = Fingerprint.of(victims, Seq(corpusId, corpusVec))
-    val replay = Fingerprint.wasApplied(conf, indexDir, rmTag, vfp)
-    if (!replay && Fingerprint.tagUsed(conf, indexDir, rmTag)) Fingerprint.refuse(
-      s"VectorIndex.logicalRemove: tag '$tag' was already used by a " +
-        "different removal batch — pass a batch-unique tag")
-    val normDir = IndexMaintenance.normalize(indexDir)
-    Fingerprint.requireNoOtherPendingRemoval(
-      conf, normDir, rmTag, "VectorIndex.logicalRemove",
-      callerHoldsLease = true)
     val pinned = victims
       .withColumn("cell", Similarity.nearestCentroid(col(corpusVec), centroids))
       .select(col(corpusId), col("cell")).distinct().localCheckpoint()
     val vids = pinned.select(col(corpusId)).distinct()
     val nV = vids.count()
-    // applied record + no pending removal state ⟺ the prior run fully
-    // completed; re-writing the tombstone would re-hide ids re-ingested
-    // after a compact() reclaim (ADVICE r13) — no-op the replay
-    val completedReplay = replay &&
-      Fingerprint.readRemoveState(conf, normDir, rmTag).isEmpty
-    if (nV > 0L && !completedReplay) {
-      if (!replay) {
-        LogicalDelete.requireNotTombstoned(s, indexDir, vids, corpusId,
+    if (nV > 0L && !ctx.completedReplay) {
+      if (!ctx.replay) {
+        LogicalDelete.requireNotTombstoned(s, normDir, vids, corpusId,
           "VectorIndex.logicalRemove")
         val vCells = pinned.select(col("cell")).distinct()
           .collect().map(_.getInt(0)).toSeq // bounded by nlist
-        // content-set (r14) — exact float arrays, see remove()
-        val vAgg = TargetedDelete.contentSet(victims, corpusId,
-          xxhash64(col(corpusVec))).withColumnRenamed("_chs", "_vchs")
-        val known = TargetedDelete.contentSet(
-            s.read.parquet(s"$root/cells")
-              .filter(col("cell").isInCollection(vCells))
-              .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(corpusId),
-                "leftsemi"),
-            corpusId, xxhash64(col(corpusVec)))
-          .join(TargetedDelete.maybeBroadcast(vAgg, nV), Seq(corpusId))
-          .filter(col("_chs") === col("_vchs"))
-          .count()
-        if (known != nV) Fingerprint.refuse(
-          s"VectorIndex.logicalRemove: only $known of $nV victim ids are " +
-            "indexed with matching content (ALL stored versions of each " +
-            "id); the fingerprint subtraction needs exactly the ingested " +
-            "(id, embedding) rows")
+        TargetedDelete.requireKnownContent(
+          victims, xxhash64(col(corpusVec)),
+          s.read.parquet(s"$root/cells")
+            .filter(col("cell").isInCollection(vCells))
+            .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(corpusId),
+              "leftsemi"),
+          xxhash64(col(corpusVec)), corpusId, nV, "VectorIndex.logicalRemove")
         // mid-append crash guard, same pruned provenance read as remove()
         if (oldFp.isDefined &&
             s.read.parquet(s"$root/cells").schema.fieldNames.contains("_src")) {
@@ -584,28 +528,24 @@ object VectorIndex {
             .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(corpusId), "leftsemi")
             .select(col("_src")).filter(col("_src").isNotNull)
             .distinct().collect().map(_.getString(0)).toSet
-          Fingerprint.requireRecordedProvenance(conf, indexDir, vSrcs,
+          Fingerprint.requireRecordedProvenance(conf, normDir, vSrcs,
             "VectorIndex.logicalRemove")
         }
       }
       // idempotent fingerprint commit — remove()'s protocol shape (r15:
       // metabase-first + interleaving-exact replay resolution)
-      Fingerprint.ensureRemoveState(conf, normDir, rmTag, vfp, replay,
-        oldFp, "VectorIndex.logicalRemove")
+      Fingerprint.ensureRemoveState(conf, normDir, ctx.rmTag, ctx.vfp,
+        ctx.replay, oldFp, "VectorIndex.logicalRemove")
       FaultInjection.maybeCrash("vector.logical.state")
-      Fingerprint.resolveRemovalMeta(conf, normDir, rmTag, oldFp,
+      Fingerprint.resolveRemovalMeta(conf, normDir, ctx.rmTag, oldFp,
         "VectorIndex.logicalRemove").foreach(fp => writeMeta(s, root, fp))
       FaultInjection.maybeCrash("vector.logical.meta")
-      if (!replay) Fingerprint.recordMerge(conf, indexDir, rmTag, vfp)
+      if (!ctx.replay) Fingerprint.recordMerge(conf, normDir, ctx.rmTag, ctx.vfp)
       FaultInjection.maybeCrash("vector.logical.record")
       // the one "leg": the tombstone batch — reads blind from here
-      LogicalDelete.write(vids, corpusId, normDir, rmTag)
-      Fingerprint.clearSourceStatus(conf, indexDir)
-      Fingerprint.clearRemoveState(conf, normDir, rmTag)
-    }
-    require(IndexMaintenance.liveRoot(conf, indexDir) == root,
-      s"VectorIndex.logicalRemove on $indexDir: index compacted during " +
-        "the removal — re-run it after verifying no maintenance is racing")
+      LogicalDelete.write(vids, corpusId, normDir, ctx.rmTag)
+      Fingerprint.clearSourceStatus(conf, normDir)
+      Fingerprint.clearRemoveState(conf, normDir, ctx.rmTag)
     }
   }
 
@@ -692,52 +632,12 @@ object VectorIndex {
 
   /** Fold the accreted append files: rewrite `cells` as one file per
     * cell partition with pure I/O (no re-training, no re-assignment —
-    * the quantizer and every vector's cell are unchanged). The
-    * ingest-provenance `_src` values are a DATA column and carry over
-    * verbatim, so probeDups' excludeTag replay guard keeps working;
-    * centroids and meta copy unchanged; the replay-protection state
-    * lives at the index top level, outside the data generations.
-    * Tombstoned rows ([[logicalRemove]]) are RECLAIMED here: they ride
-    * out on the rewrite the fold was doing anyway, retired generations
-    * purge (RTBF beats reader grace), and the tombstone set clears
-    * after the cutover. Cutover is a generation-pointer flip
-    * (object-store safe, no renames) under the compact lease — see
-    * [[IndexMaintenance]]. */
-  def compact(s: SparkSession, indexDir0: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val indexDir = IndexMaintenance.normalize(indexDir0)
-    val ctx = IndexMaintenance.beginCompact(conf, indexDir)
-    // lease-time snapshot; the trailing cleanup clears exactly these
-    // batches, never one a post-flip logicalRemove adds (r13 review)
-    val reclaimBatches = LogicalDelete.pendingBatches(conf, indexDir)
-    try {
-      val tomb =
-        LogicalDelete.idsOf(s, indexDir, reclaimBatches)
-      val dropVictims: DataFrame => DataFrame = df => tomb.fold(df) { t =>
-        // the id column name rides in the tombstone frame itself
-        df.join(t, Seq(LogicalDelete.idColOf(t)), "left_anti")
-      }
-      // independent staged-table writes run concurrently (r13 — the
-      // remove()-legs shape; see ClusterIndex.compact)
-      IndexMaintenance.runLegs(Seq(
-        "compact.cells" -> (() =>
-          IndexMaintenance.foldTable(s, ctx.fromRoot, ctx.stagingRoot, "cells",
-            Seq("cell"), transform = dropVictims)),
-        "compact.centroids" -> (() =>
-          IndexMaintenance.copyTable(s, ctx.fromRoot, ctx.stagingRoot, "centroids")),
-        "compact.meta" -> (() =>
-          IndexMaintenance.copyTable(s, ctx.fromRoot, ctx.stagingRoot, "meta"))))
-    } catch {
-      case t: Throwable => IndexMaintenance.abortCompact(conf, ctx); throw t
-    }
-    IndexMaintenance.finishCompact(conf, ctx,
-      legacyTables = Seq("cells", "centroids", "meta"))
-    if (reclaimBatches.nonEmpty) {
-      IndexMaintenance.purgeRetired(conf, indexDir,
-        Seq("cells", "centroids", "meta"))
-      LogicalDelete.clearBatches(conf, indexDir, reclaimBatches)
-    }
-  }
+    * the quantizer and every vector's cell are unchanged; centroids and
+    * meta copy unchanged), reclaiming tombstoned rows
+    * ([[logicalRemove]]) — see [[IndexMaintenance.foldCompact]]. */
+  def compact(s: SparkSession, indexDir: String): Unit =
+    IndexMaintenance.foldCompact(s, indexDir,
+      folds = Seq("cells" -> Seq("cell")), copies = Seq("centroids", "meta"))
 
   /** ANN top-k against the PERSISTED index: identical semantics to
     * [[Similarity.ivfTopK]] at the same (nlist, iters, seed), but the

@@ -73,23 +73,6 @@ object RtbfE2e {
   private val probeIds = Seq(5L, 10L, 45L, 95L) // survivors at every sf
   private val vecSeed = 7L
 
-  /** Settle every future, then rethrow the FIRST failure's unwrapped
-    * cause with the rest suppressed (ADVICE r18 — mirrors
-    * IndexMaintenance.runLegs: callers see the leg's own exception, not
-    * ExecutionException, and no sibling job is left running
-    * unobserved). */
-  private def awaitAll(fs: Seq[java.util.concurrent.Future[_]]): Unit = {
-    val settled = fs.map(f => scala.util.Try(f.get()).recoverWith {
-      case e: java.util.concurrent.ExecutionException =>
-        scala.util.Failure(e.getCause)
-    })
-    settled.collectFirst { case scala.util.Failure(t) =>
-      settled.foreach(_.failed.foreach(o => if (o ne t) t.addSuppressed(o)))
-      throw t
-    }
-    ()
-  }
-
   def purgeE2e(s: SparkSession, dir: String): DataFrame =
     purgeImpl(s, dir, logical = false)
 
@@ -159,7 +142,7 @@ object RtbfE2e {
       // settle ALL copies before rethrowing the first unwrapped cause
       // (ADVICE r18: a raw get() on the first future surfaces
       // ExecutionException and leaves the siblings running unobserved)
-      try awaitAll(Seq("textidx", "clusteridx", "termidx", "vecidx").map { ix =>
+      try IndexMaintenance.settleAll(Seq("textidx", "clusteridx", "termidx", "vecidx").map { ix =>
           // bind OUTSIDE the anonymous class: inside it, $run in an
           // interpolation would resolve to its own run() method
           val (from, to) = (s"$base/$ix", s"$run/$ix")
@@ -252,7 +235,7 @@ object RtbfE2e {
              else bandsRaw)
               .select(col("doc_id")).distinct())
         }
-        awaitAll(Seq(lakeF, termF, clusterF, vectorF, textF)) // ADVICE r18
+        IndexMaintenance.settleAll(Seq(lakeF, termF, clusterF, vectorF, textF)) // ADVICE r18
         (lakeF.get(), termF.get(), clusterF.get(), vectorF.get(),
           textF.get())
       } finally pool.shutdown()

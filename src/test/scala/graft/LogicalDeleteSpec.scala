@@ -396,6 +396,27 @@ class LogicalDeleteSpec extends SparkSpec {
     assert(LogicalDelete.ids(spark, dir).isEmpty)
   }
 
+  test("a half-written tombstone batch is never listed or read; the next write replaces it") {
+    val dir = java.nio.file.Files.createTempDirectory("ld_tmp").toString + "/idx"
+    val conf = spark.sparkContext.hadoopConfiguration
+    LogicalDelete.write(Seq(9L).toDF("doc_id"), "doc_id", dir, "rm.b")
+    // a write of rm.a that crashed before its publishing rename
+    val leftover = s"${LogicalDelete.dir(dir)}/_tmp.batch=rm.a"
+    Seq(1L, 2L).toDF("doc_id").write.parquet(leftover)
+    assert(LogicalDelete.pendingBatches(conf, dir) === Seq("rm.b"))
+    assert(LogicalDelete.ids(spark, dir).get.collect().map(_.getLong(0)).toSet
+      === Set(9L), "the unpublished batch must not be read")
+    LogicalDelete.write(Seq(7L).toDF("doc_id"), "doc_id", dir, "rm.a")
+    assert(LogicalDelete.pendingBatches(conf, dir) === Seq("rm.a", "rm.b"))
+    assert(LogicalDelete.ids(spark, dir).get.collect().map(_.getLong(0)).toSet
+      === Set(7L, 9L), "the rewrite replaces the leftover's rows")
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(leftover)))
+    // a published batch is complete: a replayed write leaves it as is
+    LogicalDelete.write(Seq(7L).toDF("doc_id"), "doc_id", dir, "rm.a")
+    assert(LogicalDelete.ids(spark, dir).get.count() === 2L)
+  }
+
   test("tombstone probe: ONE FS metadata call on the no-pending path") {
     // ADVICE r13: exists() + listStatus() was two LIST round-trips per
     // index read on an object store; the fast path must cost exactly one

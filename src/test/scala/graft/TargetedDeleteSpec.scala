@@ -227,6 +227,20 @@ class TargetedDeleteSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() === 37L)
   }
 
+  test("a pre-r19 parquet manifest directory is refused with a clear message") {
+    val stage = Files.createTempDirectory("stgold").toString + "/s"
+    Seq(("live", "staged", "")).toDF("live", "staged", "digest")
+      .write.parquet(stage + ".manifest") // the pre-r19 layout
+    Seq[() => Unit](
+      () => TargetedDelete.readManifest(spark, stage),
+      () => TargetedDelete.restoreStaged(spark, stage + "_table", stage)
+    ).foreach { read =>
+      val ex = intercept[IllegalStateException](read())
+      assert(ex.getMessage.contains("pre-r19 parquet manifest") &&
+        ex.getMessage.contains("re-run the removal from scratch"), ex.getMessage)
+    }
+  }
+
   test("stageRewrite value-match fallback survives partition type-inference drift (ADVICE r18)") {
     // live table with a NON-CANONICAL partition dir name (k=01 — the
     // day=01 class) plus a Long-forcing sibling (k=3000000000): the live
