@@ -24,11 +24,14 @@ import org.apache.hadoop.fs.permission.FsPermission
   */
 class NoForkRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit =
-    try {
+    // NIO's POSIX view cannot express the setuid/setgid/sticky bits, so a
+    // request carrying any of them takes the stock (forking) path
+    if ((permission.toShort & ~0x1ff) != 0) super.setPermission(p, permission)
+    else try {
       val perms = java.util.EnumSet.noneOf(
         classOf[java.nio.file.attribute.PosixFilePermission])
       import java.nio.file.attribute.PosixFilePermission._
-      val m: Int = permission.toShort & 0x1ff // drop sticky/setuid bits NIO can't express
+      val m: Int = permission.toShort
       if ((m & 0x100) != 0) perms.add(OWNER_READ)
       if ((m & 0x080) != 0) perms.add(OWNER_WRITE)
       if ((m & 0x040) != 0) perms.add(OWNER_EXECUTE)
@@ -40,8 +43,7 @@ class NoForkRawLocalFileSystem extends RawLocalFileSystem {
       if ((m & 0x001) != 0) perms.add(OTHERS_EXECUTE)
       java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath, perms)
     } catch {
-      // non-POSIX store (or a sticky-bit-bearing request a caller truly
-      // needs applied): the stock fork path still works, it is just slow
+      // non-POSIX store: the stock fork path still works, it is just slow
       case _: UnsupportedOperationException => super.setPermission(p, permission)
     }
 }

@@ -309,36 +309,6 @@ object ClusterIndex {
       idCol, LogicalDelete.ids(s, indexDir))
   }
 
-  /** The victim rows that ARE this index's rows of record — id known
-    * AND the text token-matches the ingested version (r14, the
-    * streaming takedown's staging filter). Ids never ingested, already
-    * taken down, or rows whose text does not match the indexed document
-    * simply drop out — the same "does not match, nothing to forget"
-    * semantic the lake-snapshot takedown siblings get from their lake
-    * join — so the removal protocols' content-set refusal stays
-    * unreachable from the staged set by construction. Same bounded
-    * shape as [[knownIds]]: bucket-pruned toks scan, ≤ |victims| out. */
-  def matchingRows(s: SparkSession, indexDir: String, victims: DataFrame,
-                   idCol: String, textCol: String): DataFrame = {
-    val root = IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir)
-    val (_, nBuckets) = readMeta(s, root)
-    val pinned = victims.select(col(idCol), col(textCol))
-      .distinct().localCheckpoint()
-    val touched = pinned.select(idb(col(idCol), nBuckets).as("idb"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val stored = LogicalDelete.hide(
-        s.read.parquet(s"$root/toks").filter(col("idb").isin(touched: _*)),
-        idCol, LogicalDelete.ids(s, indexDir))
-      .select(col(idCol).as("_mid"), xxhash64(col("_toks")).as("_sh"))
-    pinned
-      .withColumn("_vh", xxhash64(Dedup.hashedTokenSet(col(textCol))))
-      .join(stored,
-        col(idCol) === col("_mid") && col("_vh") === col("_sh"),
-        "leftsemi")
-      .drop("_vh")
-  }
-
-
   /** Fold marker-COMMITTED append generations back into the `build`
     * generation — the small-files lifecycle valve for a long-running
     * ingest stream. Each streaming batch appends its own `_src=<tag>`

@@ -597,8 +597,8 @@ private[operators] object ClusterRemoval {
     // remove/logicalRemove/compact gets the RETRYABLE
     // LeaseConflictException at its own acquire instead of reading this
     // healthy in-flight removal's rmstate as "crashed ... never
-    // completed" (review-caught r15: the takedown streams retry the
-    // former and die on the latter) ----
+    // completed" (review-caught r15: a takedown stream retries the
+    // former and dies on the latter) ----
     timedWindow(normDir, "rm_stage")(IndexMaintenance.withLease(conf, normDir, "write") {
       import s.implicits._
       // the postings bucket prune, derived UP FRONT (pristine toks read

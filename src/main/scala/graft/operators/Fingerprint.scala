@@ -414,9 +414,9 @@ object Fingerprint {
 
   /** A remove() family's PRE-MUTATION refusal: nothing has been
     * written when this is thrown, so compensating state a caller
-    * staged for the removal (the takedown loops' tombstones) is safe
+    * staged for the removal (rtbfPurgeStream's tombstones) is safe
     * to roll back. Post-mutation failures deliberately do NOT use this
-    * type — see S4Stream.takedownBatchImpl's rollback catch. */
+    * type — see S4Stream.runPurge's rollback catch. */
   final class RemovalRefused(msg: String) extends IllegalArgumentException(msg)
 
   private[operators] def refuse(msg: String): Nothing =

@@ -237,7 +237,7 @@ private[graft] object IndexMaintenance {
   }
 
   /** Refused at ACQUIRE — nothing ran yet; a caller that staged
-    * compensating state for the operation (the takedown loops'
+    * compensating state for the operation (rtbfPurgeStream's
     * tombstones) can safely roll it back on this type, unlike the
     * post-body fencing failure which shares the IllegalStateException
     * parent. */

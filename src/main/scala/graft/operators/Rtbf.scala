@@ -332,11 +332,28 @@ object Rtbf {
     // delete is the actual RTBF obligation (and partition-pruned cheap);
     // logical only buys cheap index-side leases
     case LakeVec =>
-      TargetedDelete.delete(s, t.vecLakeDir.get, t.vecLakePartitionCols,
-        t.vecIdCol, vecVic.get.select(col(t.vecIdCol)))
+      if (hasData(s.sparkContext.hadoopConfiguration, t.vecLakeDir.get))
+        TargetedDelete.delete(s, t.vecLakeDir.get, t.vecLakePartitionCols,
+          t.vecIdCol, vecVic.get.select(col(t.vecIdCol)))
     case LakeDoc =>
-      TargetedDelete.delete(s, t.lakeDir, t.lakePartitionCols, t.idCol,
-        vic.select(col(t.idCol)))
+      if (hasData(s.sparkContext.hadoopConfiguration, t.lakeDir))
+        TargetedDelete.delete(s, t.lakeDir, t.lakePartitionCols, t.idCol,
+          vic.select(col(t.idCol)))
+  }
+
+  /** Whether a lake holds any rows: absent, or holding only hidden
+    * entries (this purge state under `_rtbf/`; the scrub drops emptied
+    * partitions), it has nothing to delete or certify, and nothing
+    * Spark could infer a schema from. A lake may be both the document
+    * and the embedding lake, so the second scrub can find it empty. */
+  private[graft] def hasData(conf: org.apache.hadoop.conf.Configuration,
+                             dir: String): Boolean = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf)
+    fs.exists(p) && fs.listStatus(p).exists { st =>
+      val name = st.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".")
+    }
   }
 
   /** Victim rows still visible in one store, read from what is ON
@@ -367,6 +384,8 @@ object Rtbf {
     def served(df: DataFrame, c: String, dir: String) =
       if (!logical) df
       else LogicalDelete.hide(df, c, LogicalDelete.ids(s, dir))
+    def lake(dir: String, keys: DataFrame) =
+      if (hasData(conf, dir)) s.read.parquet(dir) else keys.limit(0)
     store match {
       case IdxText =>
         in(served(s.read.parquet(s"${root(t.textIndex.get)}/bands"),
@@ -381,9 +400,9 @@ object Rtbf {
         in(served(s.read.parquet(s"${root(t.vectorIndex.get)}/cells"),
           t.vecIdCol, t.vectorIndex.get), t.vecIdCol, vecIds.get, nVec)
       case LakeVec =>
-        in(s.read.parquet(t.vecLakeDir.get), t.vecIdCol, vecIds.get, nVec)
+        in(lake(t.vecLakeDir.get, vecIds.get), t.vecIdCol, vecIds.get, nVec)
       case LakeDoc =>
-        in(s.read.parquet(t.lakeDir), t.idCol, vids, nV)
+        in(lake(t.lakeDir, vids), t.idCol, vids, nV)
     }
   }
 

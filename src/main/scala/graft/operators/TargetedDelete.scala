@@ -51,7 +51,7 @@ object TargetedDelete {
     *    delete both but subtract one, drifting meta silently (this was
     *    reachable pre-r14);
     *  - a FULL multi-version takedown (all of an id's ingested rows —
-    *    exactly what the lake-snapshot takedown streams stage) passes
+    *    exactly what rtbfPurgeStream resolves from a lake) passes
     *    and subtracts every version;
     *  - a victim whose ingest crashed between the lake write and the
     *    index append refuses loudly (stored side lacks the new version)
@@ -65,8 +65,8 @@ object TargetedDelete {
     * not the merged multiplicity and must not be matched against.
     * Residual trust (unchanged from the pre-r14 contract): a direct
     * caller who duplicates a victim ROW beyond the record subtracts it
-    * per copy — the streams cannot produce this (their staged sets are
-    * exactly-once by construction). Hash-level compare on purpose: the
+    * per copy — rtbfPurgeStream cannot produce this (it passes the
+    * lake's rows of record). Hash-level compare on purpose: the
     * joined frames carry ids + small hash arrays, never token sets or
     * embeddings, so the victim-side broadcast stays id-scale bytes at
     * any document size. */

@@ -375,22 +375,23 @@ object TextIndex {
       if (!ctx.replay) {
         LogicalDelete.requireNotTombstoned(s, ctx.indexDir, vids, idCol,
           "TextIndex.logicalRemove")
+        // the victims' indexed token sets, read ONCE for both checks: the
+        // content check's job materializes the lazy checkpoint and the
+        // provenance guard's band recompute reuses it
+        val vToks = s.read.parquet(s"$root/toks")
+          .filter(col("idb").isin(vIdb: _*))
+          .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "leftsemi")
+          .select(col(idCol), col("_toks"))
+          .localCheckpoint(eager = false)
         TargetedDelete.requireKnownContent(
           victims, xxhash64(Dedup.hashedTokenSet(col(textCol))),
-          s.read.parquet(s"$root/toks")
-            .filter(col("idb").isin(vIdb: _*))
-            .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "leftsemi"),
-          xxhash64(col("_toks")), idCol, nV, "TextIndex.logicalRemove")
+          vToks, xxhash64(col("_toks")), idCol, nV, "TextIndex.logicalRemove")
         // mid-append crash guard, same pruned provenance read as remove()
-        if (oldFp.isDefined &&
-            s.read.parquet(s"$root/bands").schema.fieldNames.contains("_src")) {
-          val vToks = s.read.parquet(s"$root/toks")
-            .filter(col("idb").isin(vIdb: _*))
-            .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "leftsemi")
-            .select(col(idCol), col("_toks"))
+        val bands = s.read.parquet(s"$root/bands") // ONE relation resolution
+        if (oldFp.isDefined && bands.schema.fieldNames.contains("_src")) {
           val vHb = bandRows(vToks, idCol, numHashes, bandCount, nBuckets, seed)
             .select(col("hb")).distinct().collect().map(_.getLong(0)).toSeq
-          val vSrcs = s.read.parquet(s"$root/bands")
+          val vSrcs = bands
             .filter(col("hb").isin(vHb: _*))
             .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "leftsemi")
             .select(col("_src")).filter(col("_src").isNotNull)

@@ -513,19 +513,21 @@ object VectorIndex {
           "VectorIndex.logicalRemove")
         val vCells = pinned.select(col("cell")).distinct()
           .collect().map(_.getInt(0)).toSeq // bounded by nlist
+        // the victims' pruned cells slice, read ONCE for both checks: the
+        // content check's job materializes the lazy checkpoint and the
+        // provenance guard reuses it
+        val cellsPruned = s.read.parquet(s"$root/cells")
+          .filter(col("cell").isInCollection(vCells))
+          .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(corpusId),
+            "leftsemi")
+          .localCheckpoint(eager = false)
         TargetedDelete.requireKnownContent(
           victims, xxhash64(col(corpusVec)),
-          s.read.parquet(s"$root/cells")
-            .filter(col("cell").isInCollection(vCells))
-            .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(corpusId),
-              "leftsemi"),
-          xxhash64(col(corpusVec)), corpusId, nV, "VectorIndex.logicalRemove")
+          cellsPruned, xxhash64(col(corpusVec)), corpusId, nV,
+          "VectorIndex.logicalRemove")
         // mid-append crash guard, same pruned provenance read as remove()
-        if (oldFp.isDefined &&
-            s.read.parquet(s"$root/cells").schema.fieldNames.contains("_src")) {
-          val vSrcs = s.read.parquet(s"$root/cells")
-            .filter(col("cell").isInCollection(vCells))
-            .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(corpusId), "leftsemi")
+        if (oldFp.isDefined && cellsPruned.schema.fieldNames.contains("_src")) {
+          val vSrcs = cellsPruned
             .select(col("_src")).filter(col("_src").isNotNull)
             .distinct().collect().map(_.getString(0)).toSet
           Fingerprint.requireRecordedProvenance(conf, normDir, vSrcs,

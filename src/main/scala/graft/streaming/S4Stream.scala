@@ -857,147 +857,19 @@ object S4Stream {
     }
   }
 
-  /** One micro-batch of [[indexedTakedownStream]], exposed for direct
-    * replay testing. Crash safety hinges on the STAGED victim snapshot:
-    * the index remove subtracts the victims' exact (id, text)
-    * fingerprint, so a replay must present the SAME rows — but the lake
-    * leg deletes them. Staging under `<lakeDir>/.takedown/batch=<id>`
-    * (written once; a replay whose staging exists reuses it verbatim)
-    * makes every replay boundary converge:
-    *
-    *  - crash after staging / after the index remove: replay re-reads
-    *    the staged rows, the remove's (tag, fingerprint) record makes
-    *    the re-remove a no-op, the lake delete proceeds;
-    *  - crash after the lake delete: staged rows still drive the same
-    *    no-op remove; lake delete is idempotent;
-    *  - crash after the staging cleanup: the lake holds none of the
-    *    ids, so the replay stages an empty set and no-ops through to
-    *    the marker.
-    *
-    * Without the staging, a crash mid-lake-delete would replay with a
-    * SUBSET of the victims — a different fingerprint under the used
-    * removal tag, which remove() rightly refuses, and the loop would
-    * crash forever. */
-  private[graft] def processTakedownBatch(batch: DataFrame, batchId: Long,
-      idCol: String, textCol: String, indexDir: String, lakeDir: String,
-      runKey: String, logical: Boolean = false): Unit =
-    takedownBatchImpl(batch, batchId, idCol, textCol, indexDir, lakeDir,
-      runKey) { (victims, tag) =>
-      if (logical)
-        graft.operators.TextIndex.logicalRemove(victims, idCol, textCol,
-          indexDir, tag)
-      else
-        graft.operators.TextIndex.remove(victims, idCol, textCol, indexDir, tag)
-    }
-
-  /** The staged-snapshot takedown protocol shared by the text and
-    * vector loops (one implementation so the crash-boundary contract
-    * above can never diverge between the siblings): snapshot the
-    * victims' rows of record once, TOMBSTONE them, run the family's
-    * index remove, scrub the lake, clean the staging — in exactly that
-    * order. The tombstone (ADVICE r11) closes the silent resurrection
-    * window: an ingest batch that crashed AFTER its index append but
-    * BEFORE its applied/ marker replays after the takedown, finds its
-    * victim no longer indexed (so "novel"), and would re-write the
-    * supposedly-forgotten rows into both lake and index. Tombstones are
-    * (id, content-hash) pairs under `<indexDir>/removed/` — the ingest
-    * loops anti-join every batch against them, which blocks exactly the
-    * replayed (identical) content while a legitimately NEW version of
-    * the same id (changed text — a later re-crawl) still ingests. */
-  private def takedownBatchImpl(batch: DataFrame, batchId: Long,
-      idCol: String, valueCol: String, indexDir: String, lakeDir: String,
-      runKey: String, tombstoneAll: Boolean = false)(
-      removeFn: (DataFrame, String) => Unit): Unit = {
-    val s = batch.sparkSession
-    val tag = s"ck${runKey}_b$batchId"
-    appliedOnce(s, indexDir, runKey, batchId) {
-      if (!batch.isEmpty) {
-        val conf = s.sparkContext.hadoopConfiguration
-        val staging = s"$lakeDir/.takedown/batch=$batchId"
-        val stagingSuccess = new org.apache.hadoop.fs.Path(s"$staging/_SUCCESS")
-        val fs = stagingSuccess.getFileSystem(conf)
-        if (!fs.exists(stagingSuccess)) {
-          // first attempt: snapshot the victims' rows OF RECORD out of
-          // the lake (ids never ingested, or already taken down, simply
-          // do not match). A takedown that arrives before ANY ingest
-          // batch landed a subtree must stage an empty set, not throw
-          // on the unreadable lake (the cluster loop's hasFeed guard).
-          val lakePath = new org.apache.hadoop.fs.Path(lakeDir)
-          val hasFeed = fs.exists(lakePath) && fs.listStatus(lakePath)
-            .exists(_.getPath.getName.startsWith("batch="))
-          val ids = batch.select(col(idCol)).distinct().localCheckpoint()
-          (if (hasFeed)
-            s.read.parquet(lakeDir)
-              .select(col(idCol), col(valueCol))
-              // broadcast only below the mass-victim threshold — a bulk
-              // purge batch shuffles instead (VERDICT r11 item 1)
-              .join(graft.operators.TargetedDelete.maybeBroadcast(ids, ids.count()),
-                Seq(idCol), "leftsemi")
-          else batch.select(col(idCol), col(valueCol)).limit(0))
-            .write.mode("overwrite").parquet(staging)
-        }
-        val victims = s.read.parquet(staging).localCheckpoint()
-        // content tombstones for ALL requested victims (the cluster r14
-        // contract, opt-in per family): never-ingested and
-        // crashed-before-append rows still tombstone, so a late ingest
-        // replay of the forgotten content converges without operator
-        // action. Batch-tag-keyed overwrite => replay-idempotent.
-        if (tombstoneAll) recordTombstones(batch, idCol, valueCol, indexDir, tag)
-        if (!victims.isEmpty) {
-          // tombstone BEFORE the index remove: from the moment the
-          // victim leaves the index, a replaying ingest batch would
-          // re-admit it as novel — the tombstone must already be
-          // visible. Batch-tag-keyed overwrite => replay-idempotent.
-          if (!tombstoneAll)
-            recordTombstones(victims, idCol, valueCol, indexDir, tag)
-          // INDEX FIRST (see the crash-boundary walkthrough above).
-          // A PRE-MUTATION refusal (victims not indexed — their ingest
-          // batch crashed before/inside its append — or leftover
-          // removal state) must ROLL the tombstones BACK before
-          // surfacing: leaving them would poison the crashed ingest
-          // batch's replay — it would drop the victim, record its tag
-          // WITHOUT the victim's fingerprint while the crashed
-          // append's physical rows linger, and the takedown retry
-          // would then subtract a fingerprint that was never added.
-          // Rolled back, the ingest replay completes the append
-          // verbatim and the takedown retry runs clean. (Residual
-          // window: a crash right here, between the tombstone write
-          // and the refusal rollback, with the ingest replay landing
-          // before the takedown stream restarts — a double-crash
-          // interleave; the takedown replay rewrites and re-refuses
-          // loudly, so the condition is surfaced, not silent.)
-          // rollback ONLY on the typed pre-mutation refusals: a
-          // RemovalRefused (unknown victims, unrecorded provenance,
-          // leftover state) or a lease conflict at acquire. Any other
-          // failure — including the post-body fencing
-          // IllegalStateException and the end-of-op generation
-          // recheck — may follow real mutation, where the tombstones
-          // must stay (conservative:
-          // they only ever block matching content).
-          try removeFn(victims, tag)
-          catch {
-            case e @ (_: graft.operators.Fingerprint.RemovalRefused |
-                      _: graft.operators.IndexMaintenance.LeaseConflictException) =>
-              clearTombstones(s, indexDir, tag)
-              throw e
-          }
-          graft.operators.TargetedDelete.delete(s, lakeDir, Seq("batch"),
-            idCol, victims.select(col(idCol)))
-        }
-        fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-      }
-    }
-  }
-
   /** Persist RTBF tombstones: one `(id, content-hash)` row per removed
-    * (id, value) under `<indexDir>/removed/batch=<tag>`. Written by the
-    * takedown loops before their index remove; batch RTBF flows that
-    * call the index removes directly against a lake with a LIVE ingest
-    * checkpoint should call this with the same victim rows, or the
-    * ingest replay of a crashed-unmarkered batch can resurrect the
-    * removed content (see [[indexedTakedownStream]]). Tombstones are
-    * content-scoped on purpose: a future re-crawl of the same id with
-    * CHANGED content is a new document and still ingests. */
+    * (id, value) under `<indexDir>/removed/batch=<tag>` (overwrite, so
+    * one call per tag carries the whole batch). Written by
+    * [[rtbfPurgeStream]] before its purge mutates anything. They close
+    * the silent resurrection window: an ingest batch that crashed AFTER
+    * its index append but BEFORE its applied/ marker replays after the
+    * takedown, finds its victim no longer indexed (so "novel"), and
+    * would re-write the forgotten rows into lake and index; the ingest
+    * loops anti-join every batch against these rows first. Batch RTBF
+    * flows that call the index removes directly against a lake with a
+    * LIVE ingest checkpoint should call this with the same victim rows.
+    * Tombstones are content-scoped on purpose: a future re-crawl of the
+    * same id with CHANGED content is a new document and still ingests. */
   def recordTombstones(victims: DataFrame, idCol: String, valueCol: String,
                        indexDir: String, tag: String): Unit = {
     val safe = graft.operators.Fingerprint.sanitizeTag(tag)
@@ -1100,215 +972,6 @@ object S4Stream {
     graft.operators.LogicalDelete.hide(batch, idCol,
       graft.operators.LogicalDelete.ids(batch.sparkSession, indexDir))
 
-  /** STREAMING right-to-be-forgotten against the text ingest loop — the
-    * continuous takedown queue a production curation lake runs beside
-    * [[indexedDedupStream]]: per micro-batch of victim DOC IDS, snapshot
-    * their rows out of the batchId-keyed lake, remove them from the
-    * persisted near-dup text index ([[graft.operators.TextIndex.remove]]
-    * — probes go blind, the meta fingerprint subtracts exactly), and
-    * scrub the lake partitions that held them
-    * ([[graft.operators.TargetedDelete]]). Replay idempotence is the
-    * family marker contract plus a staged victim snapshot (see
-    * [[processTakedownBatch]]). Note two loud-failure edges: (a) ids
-    * from an ingest batch that crashed BEFORE its index append replays
-    * cannot be taken down until that ingest replay completes — remove()
-    * refuses victims the index does not hold, rather than silently
-    * under-subtracting; (b) the index remove holds the EXCLUSIVE
-    * `remove` lease (it rewrites other generations' partitions), so a
-    * takedown batch that overlaps an ingest batch on the SAME index
-    * fails loudly — schedule the two loops non-overlapping (trigger
-    * offsets or AvailableNow turns), exactly as compaction requires.
-    * Under CONTINUOUS ingest pass `logical = true` (r13): the index leg
-    * becomes [[graft.operators.TextIndex.logicalRemove]] — probes are
-    * blind just the same and the lake still scrubs physically, but the
-    * exclusive lease is held ~2 s instead of the full rewrite wall
-    * (SCALING.md r13), with the index bytes reclaimed by the next
-    * compact().
-    * The third edge is SILENT without the tombstones and closed by
-    * them: an ingest batch that crashed after its index append but
-    * before its applied/ marker replays AFTER a takedown already
-    * removed some of its rows — the replay's re-probe no longer flags
-    * them (not indexed), so absent the `removed/` anti-join it would
-    * re-write forgotten rows into lake and index. */
-  def indexedTakedownStream(victimIds: DataFrame, idCol: String,
-                            textCol: String, indexDir: String,
-                            lakeDir: String, checkpointDir: String,
-                            availableNow: Boolean = false,
-                            logical: Boolean = false): StreamingQuery = {
-    lazy val runKey = checkpointRunKey(victimIds.sparkSession, checkpointDir)
-    startIndexedLoop(victimIds, checkpointDir, availableNow) { (batch, batchId) =>
-      processTakedownBatch(batch, batchId, idCol, textCol,
-        indexDir, lakeDir, runKey, logical)
-    }
-  }
-
-  /** Vector-side sibling of [[processTakedownBatch]]: same staged
-    * victim snapshot and crash-boundary contract, with
-    * [[graft.operators.VectorIndex.remove]] as the index leg (the
-    * semantic ingest loop's lake stores `(id, embedding)`). */
-  private[graft] def processVectorTakedownBatch(batch: DataFrame, batchId: Long,
-      idCol: String, vecCol: String, indexDir: String, lakeDir: String,
-      runKey: String, logical: Boolean = false): Unit =
-    takedownBatchImpl(batch, batchId, idCol, vecCol, indexDir, lakeDir,
-      runKey) { (victims, tag) =>
-      if (logical)
-        graft.operators.VectorIndex.logicalRemove(victims, indexDir,
-          corpusId = idCol, corpusVec = vecCol, tag = tag)
-      else
-        graft.operators.VectorIndex.remove(victims, indexDir,
-          corpusId = idCol, corpusVec = vecCol, tag = tag)
-    }
-
-  /** STREAMING right-to-be-forgotten against the SEMANTIC ingest loop
-    * ([[indexedSemanticDedupStream]]'s lake + the persisted IVF index):
-    * victims stop matching [[graft.operators.VectorIndex.probeDups]] /
-    * `topK` and leave the lake, with the staged-snapshot replay contract
-    * of the text sibling ([[indexedTakedownStream]]). */
-  def indexedVectorTakedownStream(victimIds: DataFrame, idCol: String,
-                                  vecCol: String, indexDir: String,
-                                  lakeDir: String, checkpointDir: String,
-                                  availableNow: Boolean = false,
-                                  logical: Boolean = false): StreamingQuery = {
-    lazy val runKey = checkpointRunKey(victimIds.sparkSession, checkpointDir)
-    startIndexedLoop(victimIds, checkpointDir, availableNow) { (batch, batchId) =>
-      processVectorTakedownBatch(batch, batchId, idCol, vecCol,
-        indexDir, lakeDir, runKey, logical)
-    }
-  }
-
-  /** Cluster-family takedown micro-batch (VERDICT r13 item 4 — the third
-    * index family's continuous RTBF leg, so all three of text, vector,
-    * and cluster are now maintainable by stream). Unlike the text/vector
-    * loops, [[indexedClusterStream]]'s lake is an ASSIGNMENTS audit feed
-    * — it holds no text — so the victim stream itself must carry the
-    * exact `(id, text)` rows as ingested (the ClusterIndex removal
-    * contract; the batch query doc_cluster_index_logical_remove reads
-    * them out of the corpus the same way). Protocol per batch, in the
-    * sibling order:
-    *
-    *  1. STAGE the effective victim set once: the batch's ROWS OF
-    *     RECORD via [[graft.operators.ClusterIndex.matchingRows]] —
-    *     ids never ingested, already taken down, or rows whose text
-    *     does not token-match the indexed document simply do not match
-    *     (r14: the filter is content-level, so a wrong-text request
-    *     cannot reach the index leg's content-multiset refusal and
-    *     crash-loop the stream on its own staged set); a replay reuses
-    *     the staged set verbatim, so the removal fingerprint can never
-    *     shift between attempts;
-    *  2. TOMBSTONE every requested victim's content (id, hash) — also
-    *     the ones not staged: an ingest batch sitting in the
-    *     crashed-before-append window replays AFTER this takedown, hits
-    *     the content anti-join, and the forgotten rows never land — the
-    *     same end state as a completed remove, without the loud refusal
-    *     the lake-snapshot siblings surface for that window (their
-    *     snapshot can name victims the index doesn't hold; ours is
-    *     match-filtered, so the refusal path is unreachable by
-    *     construction and the tombstone carries the guarantee instead);
-    *  3. the INDEX leg — [[graft.operators.ClusterIndex.logicalRemove]]
-    *     (`logical = true`: O(victims) tombstone write, ~2 s lease hold,
-    *     bridge-splits reconciled by the next compact()) or the physical
-    *     [[graft.operators.ClusterIndex.remove]] — with the sibling
-    *     rollback contract on typed pre-mutation refusals;
-    *  4. SCRUB the assignments feed for the victim ids
-    *     ([[graft.operators.TargetedDelete]] over the batch= subtrees);
-    *  5. clean the staging; the applied/ marker commits last.
-    *
-    * Crash-boundary convergence mirrors [[takedownBatchImpl]]: a replay
-    * after the index leg finds the staged set and no-ops through the
-    * applied removal record (a COMPLETED replay is a pure no-op since
-    * r14); a replay after the staging cleanup re-stages an empty set —
-    * the ids are no longer known — and falls through to the marker. */
-  private[graft] def processClusterTakedownBatch(batch: DataFrame,
-      batchId: Long, idCol: String, textCol: String, indexDir: String,
-      lakeDir: String, runKey: String, logical: Boolean = false): Unit = {
-    val s = batch.sparkSession
-    val tag = s"ck${runKey}_b$batchId"
-    appliedOnce(s, indexDir, runKey, batchId) {
-      if (!batch.isEmpty) {
-        val conf = s.sparkContext.hadoopConfiguration
-        val staging = s"$lakeDir/.takedown/batch=$batchId"
-        val stagingSuccess = new org.apache.hadoop.fs.Path(s"$staging/_SUCCESS")
-        val fs = stagingSuccess.getFileSystem(conf)
-        if (!fs.exists(stagingSuccess)) {
-          // stage the ROWS OF RECORD (r14): matchingRows keeps exactly
-          // the victim rows whose (id, token-set) matches an indexed
-          // document — never-ingested ids, already-taken-down ids, and
-          // wrong-text rows all drop out (their content tombstones below
-          // still block a late ingest), and at-least-once duplicate
-          // deliveries collapse in its distinct. The staged set is
-          // therefore match-complete by construction, so the index
-          // leg's content-multiset refusal is unreachable from this
-          // loop. Conflicting texts that BOTH token-match one id (only
-          // possible for reordered-token twins) remain ambiguous and
-          // refuse loudly before anything is written.
-          val rows = graft.operators.ClusterIndex.matchingRows(
-              s, indexDir, batch.select(col(idCol), col(textCol)),
-              idCol, textCol)
-            .localCheckpoint()
-          val conflicted = rows.groupBy(col(idCol))
-            .agg(count(lit(1)).as("_n")).filter(col("_n") > 1L).count()
-          require(conflicted == 0L,
-            s"cluster takedown batch $batchId: $conflicted victim id(s) " +
-              "arrive with multiple token-matching texts — the removal " +
-              "fingerprint needs exactly the (id, text) row as ingested; " +
-              "fix the victim feed and restart the stream")
-          rows.write.mode("overwrite").parquet(staging)
-        }
-        val victims = s.read.parquet(staging).localCheckpoint()
-        // content tombstones for ALL requested victims (step 2 above) —
-        // batch-tag-keyed overwrite, replay-idempotent
-        recordTombstones(batch, idCol, textCol, indexDir, tag)
-        if (!victims.isEmpty) {
-          try {
-            if (logical)
-              graft.operators.ClusterIndex.logicalRemove(victims, idCol,
-                textCol, indexDir, tag)
-            else
-              graft.operators.ClusterIndex.remove(victims, idCol, textCol,
-                indexDir, tag)
-          } catch {
-            case e @ (_: graft.operators.Fingerprint.RemovalRefused |
-                      _: graft.operators.IndexMaintenance.LeaseConflictException) =>
-              clearTombstones(s, indexDir, tag)
-              throw e
-          }
-          // the feed may legitimately be empty (takedown before any
-          // ingest landed a batch subtree) — reading it would throw
-          val lakePath = new org.apache.hadoop.fs.Path(lakeDir)
-          val hasFeed = fs.exists(lakePath) && fs.listStatus(lakePath)
-            .exists(_.getPath.getName.startsWith("batch="))
-          if (hasFeed)
-            graft.operators.TargetedDelete.delete(s, lakeDir, Seq("batch"),
-              idCol, victims.select(col(idCol)))
-        }
-        fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-      }
-    }
-  }
-
-  /** STREAMING right-to-be-forgotten against the CLUSTER ingest loop
-    * ([[indexedClusterStream]]'s assignments feed + the persisted
-    * cluster index) — victims stop matching probes/assignments the
-    * moment their batch commits its index leg and leave the audit feed,
-    * with the staged-snapshot replay contract of the text/vector
-    * siblings (see [[processClusterTakedownBatch]]). The victim stream
-    * carries `(id, text)` rows as ingested. Under continuous ingest pass
-    * `logical = true`: the index leg holds the exclusive lease for the
-    * tombstone write only (~2 s), and the next
-    * [[graft.operators.ClusterIndex.compact]] reclaims rows and
-    * reconciles bridge-splits. */
-  def indexedClusterTakedownStream(victims: DataFrame, idCol: String,
-                                   textCol: String, indexDir: String,
-                                   lakeDir: String, checkpointDir: String,
-                                   availableNow: Boolean = false,
-                                   logical: Boolean = false): StreamingQuery = {
-    lazy val runKey = checkpointRunKey(victims.sparkSession, checkpointDir)
-    startIndexedLoop(victims, checkpointDir, availableNow) { (batch, batchId) =>
-      processClusterTakedownBatch(batch, batchId, idCol, textCol,
-        indexDir, lakeDir, runKey, logical)
-    }
-  }
-
   def indexedDedupStream(docs: DataFrame, idCol: String, textCol: String,
                          indexDir: String, lakeDir: String,
                          checkpointDir: String,
@@ -1351,16 +1014,17 @@ object S4Stream {
         val fresh = pinned
           .join(broadcast(known), Seq(idCol), "left_anti")
           .localCheckpoint()
-        // batchId-keyed overwrite: the per-batch assignment FEED is
-        // exactly-once under replay, like the dedup loops' lakes. The
-        // feed carries first-ingest assignments only; re-crawled ids
-        // were assigned when first seen.
-        if (!graft.operators.Fingerprint.tagUsed(
-            s.sparkContext.hadoopConfiguration, indexDir, tag)) {
-          val assigned = graft.operators.ClusterIndex
-            .append(fresh, idCol, textCol, indexDir, tag)
-          assigned.write.mode("overwrite").parquet(s"$lakeDir/batch=$batchId")
-        } else {
+        // batchId-keyed overwrite: the per-batch FEED is exactly-once
+        // under replay, like the dedup loops' lakes. It carries each
+        // first-ingest `(id, text, component)` row — re-crawled ids were
+        // assigned when first seen — so it is the lake of record
+        // rtbfPurgeStream resolves cluster victims from.
+        val rows = fresh.select(col(idCol), col(textCol))
+        val assigned =
+          if (!graft.operators.Fingerprint.tagUsed(
+              s.sparkContext.hadoopConfiguration, indexDir, tag))
+            graft.operators.ClusterIndex
+              .append(fresh, idCol, textCol, indexDir, tag)
           // replay of a fully-committed append (recorded tag): the rows
           // are in the index, and append() would rightly REFUSE a
           // tombstone-shrunk delta under the used tag. Rewrite the
@@ -1368,11 +1032,10 @@ object S4Stream {
           // taken down since simply aren't in it, which is the point;
           // consumers wanting current components read assignments()
           // anyway (the feed is an audit trail).
-          fresh.select(col(idCol))
-            .join(graft.operators.ClusterIndex.assignments(s, indexDir, idCol),
-              Seq(idCol))
-            .write.mode("overwrite").parquet(s"$lakeDir/batch=$batchId")
-        }
+          else graft.operators.ClusterIndex.assignments(s, indexDir, idCol)
+        rows.join(assigned, Seq(idCol))
+          .select(col(idCol), col(textCol), col("component"))
+          .write.mode("overwrite").parquet(s"$lakeDir/batch=$batchId")
       }
     }
   }
@@ -1475,61 +1138,42 @@ object S4Stream {
     }
   }
 
-  /** Term-family sibling of [[processTakedownBatch]]: the same staged
-    * victim snapshot and crash-boundary contract, with
-    * [[graft.operators.TermIndex.logicalRemove]] as the default index
-    * leg — queries are blind AND survivor-exact in df/N/avgdl the
-    * moment the batch commits; compact() reclaims physically on its own
-    * cadence. `logical = false` (r17) swaps in the physical
-    * [[graft.operators.TermIndex.remove]] for strict "data must be GONE
-    * now" SLAs — the victims' postings/dl rows leave disk inside the
-    * batch instead of at the next compaction. */
-  private[graft] def processTermTakedownBatch(batch: DataFrame, batchId: Long,
-      idCol: String, textCol: String, indexDir: String, lakeDir: String,
-      runKey: String, logical: Boolean = true): Unit =
-    takedownBatchImpl(batch, batchId, idCol, textCol, indexDir, lakeDir,
-      runKey, tombstoneAll = true) { (victims, tag) =>
-      if (logical)
-        graft.operators.TermIndex.logicalRemove(victims, idCol, textCol,
-          indexDir, tag)
-      else
-        graft.operators.TermIndex.remove(victims, idCol, textCol,
-          indexDir, tag)
-    }
-
-  /** Continuous RTBF for the BM25 family — all FOUR persisted index
-    * families are now streaming-takedown-maintainable.
+  /** STREAMING right-to-be-forgotten — the continuous face of
+    * [[graft.operators.Rtbf.purge]] and the one takedown loop for every
+    * index family: per micro-batch of victim IDS, resolve the rows of
+    * record from the document lake (and the embedding lake when a
+    * vector surface is targeted), record content tombstones in every
+    * targeted index family, and drive ONE purge across ALL targeted
+    * stores under a batch-derived tag — "purge id X from EVERYTHING",
+    * continuously, with the orchestrator's victim manifest, per-store
+    * done markers and cross-store agreement certificate refusing silent
+    * partial success every batch.
     *
-    * `victims` must carry full `(idCol, textCol)` rows AS INGESTED —
-    * the same content contract as [[indexedClusterTakedownStream]]: the
-    * batch's text is hashed into the resurrection tombstones and
-    * staged beside the lake scrub, so an id-only stream fails at
-    * runtime inside the micro-batch (ADVICE r15). */
-  def indexedTermTakedownStream(victims: DataFrame, idCol: String,
-                                textCol: String, indexDir: String,
-                                lakeDir: String, checkpointDir: String,
-                                availableNow: Boolean = false,
-                                logical: Boolean = true): StreamingQuery = {
-    lazy val runKey = checkpointRunKey(victims.sparkSession, checkpointDir)
-    startIndexedLoop(victims, checkpointDir, availableNow) { (batch, batchId) =>
-      processTermTakedownBatch(batch, batchId, idCol, textCol,
-        indexDir, lakeDir, runKey, logical)
-    }
-  }
-
-  /** STREAMING single-call right-to-be-forgotten — the continuous face
-    * of [[graft.operators.Rtbf.purge]] (r18): per micro-batch of victim
-    * IDS, resolve the rows of record from the document lake (and the
-    * embedding lake when a vector surface is targeted), record content
-    * tombstones in every targeted index family, and drive ONE purge
-    * across ALL targeted stores under a batch-derived tag. Where the
-    * four per-family takedown loops each scrub one index + its lake,
-    * this loop owns a takedown request's full blast radius — "purge id
-    * X from EVERYTHING", continuously, with the orchestrator's
-    * cross-store agreement certificate refusing silent partial success
-    * every batch.
+    * Each ingest loop's deployment is one `RtbfTargets` over its
+    * batchId-keyed lake (`lakePartitionCols = Seq("batch")`):
+    *  - text: the [[indexedDedupStream]] lake with `textIndex`;
+    *  - term: the [[termIngestStream]] lake with `termIndex` (pass
+    *    `logical = true` for BM25 statistics that are blind and
+    *    survivor-exact at once, without a rewrite);
+    *  - cluster: the [[indexedClusterStream]] feed, whose rows are
+    *    `(id, text, component)`, with `clusterIndex`;
+    *  - vector: the [[indexedSemanticDedupStream]] lake as both
+    *    `lakeDir` and `vecLakeDir`, `idCol`/`vecIdCol` naming its id
+    *    column and `textCol`/`vecCol` its embedding column.
+    * A lake that lacks the column a victim resolves from (a cluster feed
+    * written before the feed carried text) is refused with an
+    * IllegalStateException before anything is written.
     *
-    * Replay contract: the tag is `ck<queryId>_b<batchId>` (the family
+    * Content tombstones: every resolved victim row is tombstoned in each
+    * family (the vector family from the embedding rows). A feed that
+    * also CARRIES a family's content column (`textCol`; `vecCol` for the
+    * vector family) tombstones its own rows there too, even when no id
+    * resolves: content never ingested, or whose ingest crashed before
+    * its index append, still never lands later. An ids-only feed cannot
+    * content-hash text it never saw, so it tombstones only what
+    * resolves, and a batch that resolves nothing leaves no tag state.
+    *
+    * Replay contract: the tag is `ck<queryId>_b<batchId>` (the ingest
     * loops' convention). A replayed batch whose purge already COMMITTED
     * its victim manifest routes to [[graft.operators.Rtbf.resume]] —
     * the victim rows come from the manifest snapshot, NEVER re-resolved
@@ -1538,34 +1182,31 @@ object S4Stream {
     * overwrite, so the replay is idempotent and a rolled-back refusal
     * retries through the full tombstone-first cycle). A replay that
     * crashed pre-manifest re-resolves from the (unmutated) lakes and
-    * re-runs purge(). Ids never ingested, or already taken down, simply
-    * do not match (the family loops' contract); a batch whose ids
-    * resolve in NO store of record skips without leaving tag state.
-    * Content tombstones cover only resolvable victims by construction —
-    * an ids-only feed cannot content-hash text it never saw (the
-    * cluster loop's tombstoneAll variant needs the request to CARRY the
-    * content).
+    * re-runs purge(). Once the purge reports complete, every targeted
+    * index gets the ingest loops' commit marker `applied/<tag>`, so
+    * [[graft.IndexAdmin]] pairs the verbs' recorded `rm.<tag>` with it
+    * and lists only crashed batches as unmarkered.
     *
     * Tombstone rollback: if the purge fails with every failure a typed
     * PRE-mutation refusal (RemovalRefused / LeaseConflictException —
-    * [[takedownBatchImpl]]'s rollback contract), the batch's tombstones
-    * roll back for exactly the index families WITHOUT a done marker, so
-    * a crashed-unmarkered ingest append's replay converges verbatim;
+    * e.g. a victim in the lake whose ingest crashed before its index
+    * append), the batch's tombstones roll back for exactly the index
+    * families WITHOUT a done marker, so the crashed ingest's replay
+    * completes its append verbatim and the retried batch converges;
     * they stay for any family whose verb completed and on any
     * post-mutation failure (conservative: they only ever block matching
     * content).
     *
-    * Same scheduling edge as the family loops: the PHYSICAL index verbs
-    * hold exclusive remove leases for the rewrite wall, so run this
-    * loop non-overlapping with ingest loops on the same indexes
-    * (trigger offsets or AvailableNow turns). Under CONTINUOUS ingest
-    * pass `logical = true` (the r13 per-family trade, orchestrated):
-    * every index verb becomes the family's tombstone-overlay
-    * logicalRemove — serve surfaces go blind just the same, the lakes
-    * still scrub physically, the exclusive lease is held ~2 s instead
-    * of the rewrite wall, and the agreement certificate shifts to
-    * serve-surface blindness (see [[graft.operators.Rtbf.purge]]); the
-    * physical bytes reclaim at each family's next compact(). */
+    * Scheduling: the PHYSICAL index verbs hold exclusive remove leases
+    * for the rewrite wall, so run this loop non-overlapping with ingest
+    * loops on the same indexes (trigger offsets or AvailableNow turns).
+    * Under CONTINUOUS ingest pass `logical = true`: every index verb
+    * becomes the family's tombstone-overlay logicalRemove — serve
+    * surfaces go blind just the same, the lakes still scrub physically,
+    * the exclusive lease is held ~2 s instead of the rewrite wall, and
+    * the agreement certificate shifts to serve-surface blindness (see
+    * [[graft.operators.Rtbf.purge]]); the physical bytes reclaim at each
+    * family's next compact(), after which a victim id ingests again. */
   def rtbfPurgeStream(victimIds: DataFrame,
                       targets: graft.operators.RtbfTargets,
                       checkpointDir: String,
@@ -1582,65 +1223,87 @@ object S4Stream {
   }
 
   /** One micro-batch of [[rtbfPurgeStream]], exposed for direct replay
-    * testing (the family loops' pattern). */
+    * testing (the ingest loops' pattern). */
   private[graft] def processRtbfPurgeBatch(batch: DataFrame, batchId: Long,
       t: graft.operators.RtbfTargets, runKey: String,
       logical: Boolean = false): Unit = {
     val s = batch.sparkSession
     val conf = s.sparkContext.hadoopConfiguration
     val tag = s"ck${runKey}_b$batchId"
-    val idxFamilies: Seq[(String, Boolean)] = // (dir, usesVecVictims)
-      t.textIndex.map(_ -> false).toSeq ++
-        t.clusterIndex.map(_ -> false) ++ t.termIndex.map(_ -> false) ++
-        t.vectorIndex.map(_ -> true)
-    def tombstone(vic: DataFrame, vecVic: Option[DataFrame]): Unit =
-      idxFamilies.foreach {
-        case (dir, false) => recordTombstones(vic, t.idCol, t.textCol, dir, tag)
-        case (dir, true) => vecVic.foreach(
-          recordTombstones(_, t.vecIdCol, t.vecCol, dir, tag))
+    // ONE tombstone batch per family per tag (recordTombstones
+    // overwrites it): the feed's own rows when it carries the family's
+    // content column, plus the resolved victims. The feed column is cast
+    // to the lake's type so the union never re-types (and re-hashes) the
+    // rows of record.
+    def tombstone(vic: Option[DataFrame], vecVic: Option[DataFrame]): Unit =
+      indexStores(t).foreach { case (dir, store) =>
+        val (idC, valC, resolved) =
+          if (store == "idx.vector") (t.vecIdCol, t.vecCol, vecVic)
+          else (t.idCol, t.textCol, vic)
+        val feed =
+          if (!batch.columns.contains(valC)) None
+          else Some(batch.select(col(t.idCol).as(idC),
+            resolved.fold(col(valC))(r =>
+              col(valC).cast(r.schema(valC).dataType)).as(valC)))
+        (feed ++ resolved.map(_.select(col(idC), col(valC))))
+          .reduceOption(_ unionByName _)
+          .foreach(recordTombstones(_, idC, valC, dir, tag))
       }
     if (graft.operators.Rtbf.manifestCommitted(conf, t.lakeDir, tag)) {
       // crash AFTER the snapshot committed: the manifest owns the
       // victim set — re-tombstone from it (idempotent overwrite; also
       // restores a refusal's rollback for the retry), then resume
       val (vic, vecVic) = graft.operators.Rtbf.manifestVictims(s, t.lakeDir, tag)
-      tombstone(vic, vecVic)
+      tombstone(Some(vic), vecVic)
       runPurge(s, t, tag, vic = None, vecVic = None)
     } else if (!batch.isEmpty) {
       val ids = batch.select(col(t.idCol)).distinct().localCheckpoint()
       val n = ids.count()
-      def resolve(dir: String, idC: String, valC: String): Option[DataFrame] = {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        if (!p.getFileSystem(conf).exists(p)) None // takedown before any ingest
-        else Some(s.read.parquet(dir).select(col(idC), col(valC))
-          .join(graft.operators.TargetedDelete.maybeBroadcast(
-            ids.withColumnRenamed(t.idCol, idC), n), Seq(idC), "leftsemi")
-          .localCheckpoint())
-      }
+      def resolve(dir: String, idC: String, valC: String): Option[DataFrame] =
+        // takedown before any ingest batch landed a subtree: nothing resolves
+        if (!graft.operators.Rtbf.hasData(conf, dir)) None
+        else {
+          val lake = s.read.parquet(dir)
+          val missing = Seq(idC, valC).filterNot(lake.columns.contains)
+          if (missing.nonEmpty) throw new IllegalStateException(
+            s"rtbfPurgeStream: the lake $dir has no ${missing.mkString(", ")} " +
+              "column, so victims cannot resolve their rows of record from " +
+              "it (a cluster feed written before the feed carried text is " +
+              "one such lake) — re-ingest it, or purge its victims with " +
+              "Rtbf.purge and their exact rows as ingested")
+          Some(lake.select(col(idC), col(valC))
+            .join(graft.operators.TargetedDelete.maybeBroadcast(
+              ids.withColumnRenamed(t.idCol, idC), n), Seq(idC), "leftsemi")
+            .localCheckpoint())
+        }
       val vic = resolve(t.lakeDir, t.idCol, t.textCol)
-      val vecVic =
-        if (t.vectorIndex.nonEmpty || t.vecLakeDir.nonEmpty)
-          t.vecLakeDir.flatMap(resolve(_, t.vecIdCol, t.vecCol))
-        else None
-      val any = vic.exists(!_.isEmpty) || vecVic.exists(!_.isEmpty)
-      if (any) {
+      val vecVic = t.vecLakeDir.flatMap(resolve(_, t.vecIdCol, t.vecCol))
+      if (vic.exists(!_.isEmpty) || vecVic.exists(!_.isEmpty)) {
         // tombstone BEFORE the purge mutates anything: from the moment
         // a victim leaves an index, a replaying crashed-unmarkered
         // ingest batch would re-admit it as novel
+        tombstone(vic, vecVic)
         val vicOrEmpty = vic.getOrElse(
           batch.select(col(t.idCol)).limit(0)
             .withColumn(t.textCol, lit(null).cast("string")))
-        tombstone(vicOrEmpty, vecVic)
         runPurge(s, t, tag, vic = Some(vicOrEmpty), vecVic = vecVic,
           logical = logical)
-      }
+      } else tombstone(None, None) // a content-carrying feed's own rows
     }
   }
 
-  /** The purge/resume call + the typed-refusal tombstone rollback (see
-    * [[rtbfPurgeStream]]). `vic = None` means resume from the manifest
-    * (which carries the purge's recorded mode, so `logical` is only
-    * meaningful on the first attempt). */
+  /** (index dir, [[graft.operators.Rtbf]] store name) of every targeted
+    * index family. */
+  private def indexStores(t: graft.operators.RtbfTargets): Seq[(String, String)] =
+    t.textIndex.map(_ -> "idx.text").toSeq ++
+      t.clusterIndex.map(_ -> "idx.cluster") ++
+      t.termIndex.map(_ -> "idx.term") ++
+      t.vectorIndex.map(_ -> "idx.vector")
+
+  /** The purge/resume call, the typed-refusal tombstone rollback and
+    * the completion markers (see [[rtbfPurgeStream]]). `vic = None`
+    * means resume from the manifest (which carries the purge's recorded
+    * mode, so `logical` is only meaningful on the first attempt). */
   private def runPurge(s: org.apache.spark.sql.SparkSession,
       t: graft.operators.RtbfTargets, tag: String,
       vic: Option[DataFrame], vecVic: Option[DataFrame],
@@ -1651,7 +1314,6 @@ object S4Stream {
         case Some(v) => graft.operators.Rtbf.purge(v, vecVic, t, tag, logical)
         case None => graft.operators.Rtbf.resume(s, t, tag)
       }
-      ()
     } catch {
       case e: Throwable
           if (e +: e.getSuppressed.toSeq).forall(x =>
@@ -1666,13 +1328,15 @@ object S4Stream {
           .status(conf, t.lakeDir)
           .find(_.tag == graft.operators.Fingerprint.sanitizeTag(tag))
           .fold(Set.empty[String])(_.done)
-        (t.textIndex.map(_ -> "idx.text").toSeq ++
-          t.clusterIndex.map(_ -> "idx.cluster") ++
-          t.termIndex.map(_ -> "idx.term") ++
-          t.vectorIndex.map(_ -> "idx.vector"))
-          .collect { case (dir, store) if !done(store) => dir }
+        indexStores(t).collect { case (dir, store) if !done(store) => dir }
           .foreach(clearTombstones(s, _, tag))
         throw e
+    }
+    // purge() and resume() return only once the purge is COMPLETE
+    indexStores(t).foreach { case (dir, _) =>
+      val marker = new org.apache.hadoop.fs.Path(
+        s"$dir/applied/${graft.operators.Fingerprint.sanitizeTag(tag)}")
+      marker.getFileSystem(conf).create(marker, true).close()
     }
   }
 

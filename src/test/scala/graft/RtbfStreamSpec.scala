@@ -83,6 +83,18 @@ class RtbfStreamSpec extends SparkSpec {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** Whether IndexAdmin lists `tag` as a recorded-but-unmarkered
+    * stream batch in every index family: true while a purge is short
+    * of COMPLETE, false once its applied/ markers landed. */
+  private def assertUnmarkered(t: RtbfTargets, tag: String,
+                               expected: Boolean): Unit =
+    tombstoneDirs(t).foreach { d =>
+      val listed = IndexAdmin.report(spark.sparkContext.hadoopConfiguration, d)
+        .unmarkeredRecordedTags
+      assert(listed.exists(_.stripPrefix("rm.") == tag) == expected,
+        s"IndexAdmin under $d lists $listed; expected $tag listed = $expected")
+    }
+
   private def writeLines(dir: java.nio.file.Path, name: String,
                          lines: Seq[String]): Unit = {
     val f = dir.resolve(name)
@@ -112,6 +124,7 @@ class RtbfStreamSpec extends SparkSpec {
     val tag = st.head.tag
     tombstoneDirs(t).foreach(d =>
       assert(hasTombstones(d, tag), s"missing tombstones under $d"))
+    assertUnmarkered(t, tag, expected = false)
     // survivors intact
     assert(spark.read.parquet(t.lakeDir).count() == 6L)
     // replaying the committed batch directly resumes as a no-op
@@ -139,12 +152,14 @@ class RtbfStreamSpec extends SparkSpec {
     assert(spark.read.parquet(t.lakeDir)
       .filter(col("doc_id") === 6L).count() == 1L,
       "the doc lake must still hold the victim at the crash point")
+    assertUnmarkered(t, "ckrunRt_b0", expected = true)
     // the stream restart replays batch 0: manifest committed => resume
     S4Stream.processRtbfPurgeBatch(batch, 0L, t, "runRt")
     assert(victimsEverywhere(t, Seq(6L)).isEmpty)
     assert(Rtbf.status(conf, t.lakeDir).head.complete)
     tombstoneDirs(t).foreach(d =>
       assert(hasTombstones(d, "ckrunRt_b0"), s"missing tombstones under $d"))
+    assertUnmarkered(t, "ckrunRt_b0", expected = false)
   }
 
   test("a lease conflict on one family rolls back ONLY that family's tombstones; the replay re-records and converges") {

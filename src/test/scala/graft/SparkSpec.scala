@@ -28,6 +28,10 @@ object SparkSpec {
       // cheaper as a side effect.
       .config("spark.hadoop.fs.file.impl",
         classOf[graft.NoForkLocalFileSystem].getName)
+      // the production listing threshold (Bench, Verify, RunQuery): at
+      // Spark's default of 32, every read of a 64-bucket index table
+      // schedules a distributed file-listing job
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .config("spark.ui.enabled", "false")

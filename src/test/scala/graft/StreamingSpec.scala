@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.operators.{Rtbf, RtbfTargets}
 import graft.streaming.S4Stream
 import graft.streaming.S4Stream.S4Config
 
@@ -26,6 +27,24 @@ class StreamingSpec extends SparkSpec {
       .filterNot(f => lake.relativize(f).iterator().asScala.exists { seg =>
         val s = seg.toString; s.startsWith("_") || s.startsWith(".")
       }).toSeq
+
+  /** The takedown loop's deployment over one ingest loop's lake. */
+  private def rtbfTargets(family: String, idx: String, lake: Path): RtbfTargets = {
+    val t = RtbfTargets(lake.toString, Seq("batch"))
+    family match {
+      case "text" => t.copy(textIndex = Some(idx))
+      case "term" => t.copy(termIndex = Some(idx))
+      case "cluster" => t.copy(clusterIndex = Some(idx))
+      case "vector" => t.copy(idCol = "vec_id", textCol = "embedding",
+        vectorIndex = Some(idx), vecLakeDir = Some(lake.toString),
+        vecLakePartitionCols = Seq("batch"))
+    }
+  }
+
+  /** The run key of the one purge recorded under `lake` (its batch 0). */
+  private def purgeRunKey(lake: Path): String = Rtbf
+    .status(spark.sparkContext.hadoopConfiguration, lake.toString)
+    .head.tag.stripPrefix("ck").stripSuffix("_b0")
 
   test("line mode: AvailableNow round trip to gzip'd date-partitioned lake") {
     val in = tmp("s4in"); val lake = tmp("s4lake"); val ck = tmp("s4ck")
@@ -511,55 +530,38 @@ class StreamingSpec extends SparkSpec {
     // the takedown QUEUE, driven through the real streaming wiring
     writeLines(in, "t1.json", Seq("""{"doc_id": 101}""", """{"doc_id": 103}"""))
     val src = spark.readStream.schema("doc_id LONG").json(in.toString)
-    S4Stream.indexedTakedownStream(src, "doc_id", "text", idx,
-      lake.toString, ck.toString, availableNow = true).awaitTermination()
-    assert(lakeIds === Set(102L), "victims must leave the lake")
-    assert(probeHits(2) == 0L && probeHits(4) == 0L,
-      "probes must go blind to taken-down docs")
-    assert(probeHits(3) == 1L, "survivors must still flag")
-    // the index fingerprint tracks the surviving corpus of record
+    val t = rtbfTargets("text", idx, lake)
+    S4Stream.rtbfPurgeStream(src, t, ck.toString, availableNow = true)
+      .awaitTermination()
     val survivors = Seq((1L, txt(1)), (102L, txt(3))).toDF("doc_id", "text")
-    assert(graft.operators.TextIndex.isFresh(spark, idx, survivors,
-      "doc_id", "text"), "fingerprint must subtract the victims exactly")
-    // crash window 1: marker lost AFTER full completion — the replay
-    // finds no victim rows in the lake, stages an empty set, and no-ops
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    // the applied/ namespace holds the INGEST loop's markers too
-    // (ckrunIn_b*): pick the takedown stream's, keyed by its query id
-    val marker = fs.listStatus(new org.apache.hadoop.fs.Path(s"$idx/applied"))
-      .map(_.getPath)
-      .find(p => p.getName.endsWith("_b0") && !p.getName.contains("runIn")).get
-    assert(fs.delete(marker, false))
-    S4Stream.processTakedownBatch(Seq(101L, 103L).toDF("doc_id"), 0L,
-      "doc_id", "text", idx, lake.toString,
-      marker.getName.stripPrefix("ck").split("_b0").head)
-    assert(lakeIds === Set(102L) && probeHits(3) == 1L)
-    assert(graft.operators.TextIndex.isFresh(spark, idx, survivors,
-      "doc_id", "text"), "empty replay must not drift the fingerprint")
-    // crash window 2: staging survived (crash after the lake delete,
-    // before cleanup) — the replay re-presents the ORIGINAL victim rows;
-    // the (tag, fingerprint) record makes the re-remove a no-op
-    assert(fs.delete(marker, false))
-    Seq((101L, txt(2)), (103L, txt(4))).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$lake/.takedown/batch=0")
-    S4Stream.processTakedownBatch(Seq(101L, 103L).toDF("doc_id"), 0L,
-      "doc_id", "text", idx, lake.toString,
-      marker.getName.stripPrefix("ck").split("_b0").head)
-    assert(lakeIds === Set(102L) && probeHits(2) == 0L && probeHits(3) == 1L)
-    assert(graft.operators.TextIndex.isFresh(spark, idx, survivors,
-      "doc_id", "text"),
-      "staged replay must hit the replay record, not double-subtract")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$lake/.takedown/batch=0")),
-      "replay must clean its staging")
+    def converged(): Unit = {
+      assert(lakeIds === Set(102L), "victims must leave the lake")
+      assert(probeHits(2) == 0L && probeHits(4) == 0L,
+        "probes must go blind to taken-down docs")
+      assert(probeHits(3) == 1L, "survivors must still flag")
+      assert(graft.operators.TextIndex.isFresh(spark, idx, survivors,
+        "doc_id", "text"), "fingerprint must subtract the victims exactly")
+    }
+    converged()
+    // the completed batch replays (its checkpoint commit lost): it
+    // resumes from the manifest, never re-resolving the scrubbed lake
+    S4Stream.processRtbfPurgeBatch(Seq(101L, 103L).toDF("doc_id"), 0L, t,
+      purgeRunKey(lake))
+    converged()
+    // operator retention: pruning every tombstone unblocks even a
+    // byte-identical re-ingest of the once-forgotten content
+    assert(S4Stream.pruneTombstones(spark, idx, olderThanMs = 0L) >= 1)
+    S4Stream.processIndexedDedupBatch(Seq((101L, txt(2))).toDF("doc_id", "text"),
+      2L, "doc_id", "text", idx, lake.toString, "runIn")
+    assert(lakeIds.contains(101L), "after the prune, matching content must ingest again")
   }
 
   test("LOGICAL takedown loop: blind + scrubbed with the ~2s lease, reclaimed at compact") {
-    // r13: the continuous-ingest RTBF route — same staged-snapshot
-    // protocol, but the index leg is TextIndex.logicalRemove (tombstone
-    // write, no table rewrite). Probes must be blind and the lake
-    // scrubbed the moment the batch commits; replay converges; the next
-    // compact() physically reclaims and frees the id.
+    // the continuous-ingest route: the index leg is
+    // TextIndex.logicalRemove (tombstone write, no table rewrite).
+    // Probes must be blind and the lake scrubbed the moment the batch
+    // commits; replay converges; the next compact() physically reclaims
+    // and frees the id.
     import spark.implicits._
     val lake = tmp("ltklake"); val idx = tmp("ltkidx").toString
     def txt(seed: Int) = (0 until 20).map(i => s"ltok${seed}_$i").mkString(" ")
@@ -568,8 +570,10 @@ class StreamingSpec extends SparkSpec {
     S4Stream.processIndexedDedupBatch(
       Seq((101L, txt(2)), (102L, txt(3))).toDF("doc_id", "text"),
       0L, "doc_id", "text", idx, lake.toString, "runIn")
-    S4Stream.processTakedownBatch(Seq(101L).toDF("doc_id"), 0L,
-      "doc_id", "text", idx, lake.toString, "runTk", logical = true)
+    def takedown(): Unit = S4Stream.processRtbfPurgeBatch(
+      Seq(101L).toDF("doc_id"), 0L, rtbfTargets("text", idx, lake), "runTk",
+      logical = true)
+    takedown()
     def lakeIds = spark.read.parquet(lake.toString)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     def probeHits(seed: Int) = graft.operators.TextIndex.probe(spark, idx,
@@ -577,18 +581,11 @@ class StreamingSpec extends SparkSpec {
     assert(lakeIds === Set(102L), "lake must scrub physically")
     assert(probeHits(2) == 0L, "probe must be blind after the logical leg")
     assert(probeHits(3) == 1L, "survivors still match")
-    assert(graft.operators.TextIndex.isFresh(spark, idx,
-      Seq((1L, txt(1)), (102L, txt(3))).toDF("doc_id", "text"),
+    val survivors = Seq((1L, txt(1)), (102L, txt(3))).toDF("doc_id", "text")
+    assert(graft.operators.TextIndex.isFresh(spark, idx, survivors,
       "doc_id", "text"), "fingerprint tracks survivors immediately")
-    // replay (marker lost) converges without double subtraction
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(
-      s"$idx/applied/ckrunTk_b0"), false))
-    S4Stream.processTakedownBatch(Seq(101L).toDF("doc_id"), 0L,
-      "doc_id", "text", idx, lake.toString, "runTk", logical = true)
-    assert(graft.operators.TextIndex.isFresh(spark, idx,
-      Seq((1L, txt(1)), (102L, txt(3))).toDF("doc_id", "text"),
+    takedown() // replay converges without double subtraction
+    assert(graft.operators.TextIndex.isFresh(spark, idx, survivors,
       "doc_id", "text"), "replay must not double-subtract")
     // reclaim: rows leave disk, tombstones clear, the id is free again
     graft.operators.TextIndex.compact(spark, idx)
@@ -605,61 +602,76 @@ class StreamingSpec extends SparkSpec {
       "a reclaimed id must re-ingest as a fresh document")
   }
 
-  test("takedown tombstones: a crashed-unmarkered ingest replay cannot resurrect victims") {
-    // ADVICE r11 (S4Stream silent window): ingest batch appends, crashes
-    // BEFORE its applied/ marker; a takedown removes one of its docs;
-    // the ingest replay re-probes — the victim is no longer indexed, so
-    // without the tombstone anti-join it would re-enter lake AND index.
+  test("takedown over each family: victim leaves lake and serve surface, no resurrection, re-crawl ingests") {
+    // per family: ingest a batch through the family's loop and lose its
+    // applied/ marker (crashed-unmarkered), take one doc down, replay
+    // the ingest batch — the content tombstones must keep the victim
+    // out — then ingest a CHANGED version of the victim, which is a new
+    // document and must land. The fingerprint tracks the corpus of
+    // record throughout.
     import spark.implicits._
-    val lake = tmp("rstlake"); val idx = tmp("rstidx").toString
-    def txt(seed: Int) = (0 until 20).map(i => s"rtok${seed}_$i").mkString(" ")
-    graft.operators.TextIndex.build(
-      Seq((1L, txt(1))).toDF("doc_id", "text"), "doc_id", "text", idx)
-    val b0 = Seq((101L, txt(2)), (102L, txt(3))).toDF("doc_id", "text")
-    S4Stream.processIndexedDedupBatch(b0, 0L, "doc_id", "text",
-      idx, lake.toString, "runIn")
-    // simulate the crash window: batch fully applied, marker lost
+    import graft.operators._
+    import org.apache.spark.sql.DataFrame
+    def txt(seed: Int) = (0 until 20).map(i => s"ftok${seed}_$i").mkString(" ")
+    val vec = Map(1 -> Seq(1f, 0f, 0f, 0f), 2 -> Seq(0.1f, 0.95f, 0.2f, 0f),
+      3 -> Seq(0.9f, 0.1f, 0.1f, 0f), 4 -> Seq(0f, 1f, 0f, 0f),
+      9 -> Seq(0.05f, 0f, 0.99f, 0f))
+    def docs(rows: Seq[(Long, Int)]) =
+      rows.map { case (i, k) => (i, txt(k)) }.toDF("doc_id", "text")
+    def vecs(rows: Seq[(Long, Int)]) =
+      rows.map { case (i, k) => (i, vec(k)) }.toDF("vec_id", "embedding")
+    case class Family(name: String, rows: Seq[(Long, Int)] => DataFrame,
+        build: (DataFrame, String) => Unit,
+        ingest: (DataFrame, Long, String, String) => Unit,
+        victimServed: String => Boolean, fresh: (String, DataFrame) => Boolean)
+    val families = Seq(
+      Family("text", docs, TextIndex.build(_, "doc_id", "text", _),
+        S4Stream.processIndexedDedupBatch(_, _, "doc_id", "text", _, _, "in"),
+        i => TextIndex.probe(spark, i, docs(Seq(900L -> 2)), "doc_id", "text")
+          .count() > 0L,
+        TextIndex.isFresh(spark, _, _, "doc_id", "text")),
+      Family("term", docs, TermIndex.build(_, "doc_id", "text", _),
+        S4Stream.processTermIngestBatch(_, _, "doc_id", "text", _, _, "in"),
+        i => !TermIndex.knownIds(spark, i, Seq(101L).toDF("doc_id"), "doc_id").isEmpty,
+        TermIndex.isFresh(spark, _, _, "doc_id", "text")),
+      Family("cluster", docs, ClusterIndex.build(_, "doc_id", "text", _),
+        S4Stream.processIndexedClusterBatch(_, _, "doc_id", "text", _, _, "in"),
+        i => !ClusterIndex.knownIds(spark, i, Seq(101L).toDF("doc_id"), "doc_id").isEmpty,
+        ClusterIndex.isFresh(spark, _, _, "doc_id", "text")),
+      Family("vector", vecs, (d, i) => VectorIndex.build(d, i, nlist = 2),
+        S4Stream.processIndexedSemanticBatch(_, _, "vec_id", "embedding", _, _,
+          0.99, "in"),
+        i => VectorIndex.probeDups(spark, i, vecs(Seq(900L -> 2)), tau = 0.999)
+          .count() > 0L,
+        VectorIndex.isFresh(spark, _, _)))
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(
-      s"$idx/applied/ckrunIn_b0"), false))
-    // takedown doc 101 through the production batch body
-    S4Stream.processTakedownBatch(Seq(101L).toDF("doc_id"), 0L,
-      "doc_id", "text", idx, lake.toString, "runTk")
-    def lakeIds = spark.read.parquet(lake.toString)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    def probeHits(seed: Int) = graft.operators.TextIndex.probe(spark, idx,
-      Seq((900L, txt(seed))).toDF("doc_id", "text"), "doc_id", "text").count()
-    assert(lakeIds === Set(102L) && probeHits(2) == 0L)
-    // the ingest REPLAY (same batch, same lineage) must not resurrect
-    S4Stream.processIndexedDedupBatch(b0, 0L, "doc_id", "text",
-      idx, lake.toString, "runIn")
-    assert(lakeIds === Set(102L),
-      "replayed ingest resurrected a taken-down doc in the lake")
-    assert(probeHits(2) == 0L,
-      "replayed ingest resurrected a taken-down doc in the index")
-    assert(probeHits(3) == 1L, "the replay must keep its surviving rows")
-    // a legitimately NEW version of the forgotten id (changed content)
-    // is a different document and still ingests
-    S4Stream.processIndexedDedupBatch(
-      Seq((101L, txt(9))).toDF("doc_id", "text"), 1L, "doc_id", "text",
-      idx, lake.toString, "runIn")
-    assert(lakeIds === Set(102L, 101L),
-      "content-scoped tombstones must admit a changed re-crawl")
-    // the fingerprint still tracks the corpus of record exactly
-    val corpus = Seq((1L, txt(1)), (102L, txt(3)), (101L, txt(9)))
-      .toDF("doc_id", "text")
-    assert(graft.operators.TextIndex.isFresh(spark, idx, corpus,
-      "doc_id", "text"))
-    // operator retention: pruning every tombstone unblocks even a
-    // byte-identical re-ingest of the once-forgotten content (the
-    // operator asserts no unmarkered batch predates the prune)
-    assert(S4Stream.pruneTombstones(spark, idx, olderThanMs = 0L) >= 1)
-    S4Stream.processIndexedDedupBatch(
-      Seq((201L, txt(2))).toDF("doc_id", "text"), 2L, "doc_id", "text",
-      idx, lake.toString, "runIn")
-    assert(lakeIds.contains(201L),
-      "after the prune, matching content must ingest again")
+    // the families share no lake or index: run them concurrently
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    Await.result(Future.traverse(families)(f => Future {
+      val lake = tmp(s"tk_${f.name}_lake"); val idx = tmp(s"tk_${f.name}_idx").toString
+      val t = rtbfTargets(f.name, idx, lake)
+      f.build(f.rows(Seq(1L -> 1, 2L -> 4)), idx)
+      val b0 = f.rows(Seq(101L -> 2, 102L -> 3))
+      f.ingest(b0, 0L, idx, lake.toString)
+      assert(fs.delete(new org.apache.hadoop.fs.Path(s"$idx/applied/ckin_b0"), false))
+      S4Stream.processRtbfPurgeBatch(Seq(101L).toDF(t.idCol), 0L, t, "tk")
+      def holds(rows: Seq[(Long, Int)], why: String): Unit = {
+        val lakeIds = spark.read.parquet(lake.toString).select(t.idCol)
+          .collect().map(_.getLong(0)).toSet
+        assert(lakeIds === rows.map(_._1).filter(_ > 100L).toSet, s"${f.name}: $why")
+        assert(f.fresh(idx, f.rows(rows)), s"${f.name}: $why (fingerprint)")
+      }
+      val survivors = Seq(1L -> 1, 2L -> 4, 102L -> 3)
+      holds(survivors, "the victim must leave the lake")
+      assert(!f.victimServed(idx), s"${f.name}: the victim must leave the serve surface")
+      f.ingest(b0, 0L, idx, lake.toString) // the crashed batch's replay
+      holds(survivors, "the ingest replay resurrected the victim")
+      assert(!f.victimServed(idx), s"${f.name}: the ingest replay re-served the victim")
+      f.ingest(f.rows(Seq(101L -> 9)), 1L, idx, lake.toString)
+      holds(survivors :+ (101L -> 9), "content-scoped tombstones must admit a changed re-crawl")
+    }), scala.concurrent.duration.Duration.Inf)
   }
 
   test("pruneTombstones ages batches by their files, not the directory") {
@@ -693,6 +705,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("vector takedown: victims leave the lake and the IVF index; compact GCs edges") {
+    // the vector-only deployment, LOGICAL, through the real stream
+    // wiring: the semantic loop's lake is both the document lake and
+    // the embedding lake, and compact() reclaims the victim's cell rows
     import spark.implicits._
     val in = tmp("vtkin"); val lake = tmp("vtklake"); val ck = tmp("vtkck")
     val idx = tmp("vtkidx").toString
@@ -709,31 +724,34 @@ class StreamingSpec extends SparkSpec {
     assert(lakeIds === Set(101L, 102L))
     val clone101 = Seq((900L, Seq(0.1f, 0.95f, 0.2f, 0f)))
       .toDF("vec_id", "embedding").localCheckpoint()
-    assert(graft.operators.VectorIndex
-      .probeDups(spark, idx, clone101, tau = 0.999).count() == 1L)
-    // the takedown queue through the real stream wiring
+    def probe101 = graft.operators.VectorIndex
+      .probeDups(spark, idx, clone101, tau = 0.999).count()
+    assert(probe101 == 1L)
     writeLines(in, "v1.json", Seq("""{"vec_id": 101}"""))
     val src = spark.readStream.schema("vec_id LONG").json(in.toString)
-    S4Stream.indexedVectorTakedownStream(src, "vec_id", "embedding", idx,
-      lake.toString, ck.toString, availableNow = true).awaitTermination()
-    assert(lakeIds === Set(102L), "victim must leave the lake")
-    assert(graft.operators.VectorIndex
-      .probeDups(spark, idx, clone101, tau = 0.999).count() == 0L,
-      "dup-probe must go blind to the taken-down vector")
+    S4Stream.rtbfPurgeStream(src, rtbfTargets("vector", idx, lake),
+      ck.toString, availableNow = true, logical = true).awaitTermination()
     val survivors = Seq((1L, Seq(1f, 0f, 0f, 0f)), (2L, Seq(0f, 1f, 0f, 0f)),
       (102L, Seq(0.9f, 0.1f, 0.1f, 0f))).toDF("vec_id", "embedding")
+    assert(lakeIds === Set(102L), "victim must leave the lake")
+    assert(probe101 == 0L, "dup-probe must go blind to the taken-down vector")
     assert(graft.operators.VectorIndex.isFresh(spark, idx, survivors),
       "fingerprint must subtract the victim exactly")
+    graft.operators.VectorIndex.compact(spark, idx)
+    val root = graft.operators.IndexMaintenance.liveRoot(
+      spark.sparkContext.hadoopConfiguration, idx)
+    assert(spark.read.parquet(s"$root/cells")
+      .filter(col("vec_id") === 101L).count() == 0L,
+      "compact must reclaim the victim's cell rows")
   }
 
   test("refused takedown rolls its tombstones back; the pending ingest then completes") {
-    // review-caught poison: a takedown for a victim whose ingest batch
-    // crashed BEFORE its index append (edge (a)) writes tombstones and
-    // then remove() rightly refuses — if the tombstones survived, the
-    // ingest replay would drop the victim while recording its tag, and
-    // the takedown retry would subtract a fingerprint never added.
-    // With rollback, the ingest replay completes the append verbatim
-    // and the takedown retry runs clean.
+    // a takedown for a victim whose ingest batch crashed BEFORE its
+    // index append writes tombstones and then remove() rightly refuses
+    // — if the tombstones survived, the ingest replay would drop the
+    // victim while recording its tag, and the takedown retry would
+    // subtract a fingerprint never added. With rollback, the ingest
+    // replay completes the append verbatim and the retry runs clean.
     import spark.implicits._
     val lake = tmp("rblake"); val idx = tmp("rbidx").toString
     def txt(seed: Int) = (0 until 20).map(i => s"rbtok${seed}_$i").mkString(" ")
@@ -743,10 +761,9 @@ class StreamingSpec extends SparkSpec {
     // not run (crash before append)
     Seq((101L, txt(2)), (102L, txt(3))).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$lake/batch=0")
-    val ex = intercept[IllegalArgumentException] {
-      S4Stream.processTakedownBatch(Seq(101L).toDF("doc_id"), 0L,
-        "doc_id", "text", idx, lake.toString, "rbtk")
-    }
+    def takedown(): Unit = S4Stream.processRtbfPurgeBatch(
+      Seq(101L).toDF("doc_id"), 0L, rtbfTargets("text", idx, lake), "rbtk")
+    val ex = intercept[IllegalArgumentException](takedown())
     assert(ex.getMessage.contains("indexed"), ex.getMessage)
     val removedDir = new org.apache.hadoop.fs.Path(s"$idx/removed")
     val fs = removedDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -760,9 +777,7 @@ class StreamingSpec extends SparkSpec {
     def probeHits(seed: Int) = graft.operators.TextIndex.probe(spark, idx,
       Seq((900L, txt(seed))).toDF("doc_id", "text"), "doc_id", "text").count()
     assert(probeHits(2) == 1L, "the completed ingest must index the doc")
-    // the takedown retry (same batch, staged snapshot reused) succeeds
-    S4Stream.processTakedownBatch(Seq(101L).toDF("doc_id"), 0L,
-      "doc_id", "text", idx, lake.toString, "rbtk")
+    takedown() // the retry resumes from the batch's manifest and succeeds
     assert(spark.read.parquet(lake.toString)
       .select("doc_id").collect().map(_.getLong(0)).toSet === Set(102L))
     assert(probeHits(2) == 0L, "retried takedown must blind the probe")
@@ -771,48 +786,6 @@ class StreamingSpec extends SparkSpec {
       Seq((1L, txt(1)), (102L, txt(3))).toDF("doc_id", "text"),
       "doc_id", "text"),
       "fingerprint must land exactly on the surviving corpus")
-  }
-
-  test("vector tombstones: crashed-unmarkered semantic ingest replay cannot resurrect") {
-    // the text-loop resurrection scenario on the VECTOR family — gates
-    // the content-hash tombstone over an array<float> column (xxhash64
-    // on arrays) and the tagUsed append skip in the semantic loop
-    import spark.implicits._
-    val lake = tmp("rsvlake"); val idx = tmp("rsvidx").toString
-    graft.operators.VectorIndex.build(
-      Seq((1L, Seq(1f, 0f, 0f, 0f)), (2L, Seq(0f, 1f, 0f, 0f)))
-        .toDF("vec_id", "embedding"), idx, nlist = 2)
-    val vA = Seq(0.1f, 0.95f, 0.2f, 0f); val vB = Seq(0.9f, 0.1f, 0.1f, 0f)
-    val b0 = Seq((101L, vA), (102L, vB)).toDF("vec_id", "embedding")
-    S4Stream.processIndexedSemanticBatch(b0, 0L, "vec_id", "embedding",
-      idx, lake.toString, 0.99, "rvin")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(
-      s"$idx/applied/ckrvin_b0"), false))
-    S4Stream.processVectorTakedownBatch(Seq(101L).toDF("vec_id"), 0L,
-      "vec_id", "embedding", idx, lake.toString, "rvtk")
-    def lakeIds = spark.read.parquet(lake.toString)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    def probeA = graft.operators.VectorIndex.probeDups(spark, idx,
-      Seq((900L, vA)).toDF("vec_id", "embedding"), tau = 0.999).count()
-    assert(lakeIds === Set(102L) && probeA == 0L)
-    // the semantic ingest REPLAY must not resurrect the victim
-    S4Stream.processIndexedSemanticBatch(b0, 0L, "vec_id", "embedding",
-      idx, lake.toString, 0.99, "rvin")
-    assert(lakeIds === Set(102L), "replay resurrected the victim in the lake")
-    assert(probeA == 0L, "replay resurrected the victim in the IVF index")
-    // a CHANGED embedding under the same id is a new vector and ingests
-    val vC = Seq(0.05f, 0f, 0.99f, 0f)
-    S4Stream.processIndexedSemanticBatch(
-      Seq((101L, vC)).toDF("vec_id", "embedding"), 1L, "vec_id", "embedding",
-      idx, lake.toString, 0.99, "rvin")
-    assert(lakeIds === Set(102L, 101L),
-      "content-scoped tombstones must admit a changed re-ingest")
-    val corpus = Seq((1L, Seq(1f, 0f, 0f, 0f)), (2L, Seq(0f, 1f, 0f, 0f)),
-      (102L, vB), (101L, vC)).toDF("vec_id", "embedding")
-    assert(graft.operators.VectorIndex.isFresh(spark, idx, corpus),
-      "fingerprint must track the corpus of record across the replay")
   }
 
   test("cluster tombstones: batch RTBF + recordTombstones blocks the cluster replay") {
@@ -847,7 +820,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(assigns === Map(1L -> 1L, 3L -> 3L),
       s"replay resurrected the victim in the cluster index: $assigns")
-    val feed = spark.read.parquet(s"$lake/batch=0")
+    val feed = spark.read.parquet(s"$lake/batch=0").select("doc_id", "component")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(feed === Map(3L -> 3L),
       s"replayed feed must rebuild from live assignments: $feed")
@@ -1783,10 +1756,10 @@ class StreamingSpec extends SparkSpec {
     // the audit feed is per-batch assignment-at-ingest: batch 0 predates
     // the bridge, so it still shows 40 -> 40 / 30 -> 10; batch 1 shows
     // the merged component
-    val b0 = spark.read.parquet(s"$lake/batch=0")
+    val b0 = spark.read.parquet(s"$lake/batch=0").select("doc_id", "component")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(b0 === Map(30L -> 10L, 40L -> 40L), s"batch-0 feed: $b0")
-    val b1 = spark.read.parquet(s"$lake/batch=1")
+    val b1 = spark.read.parquet(s"$lake/batch=1").select("doc_id", "component")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(b1 === Map(15L -> 10L), s"batch-1 feed: $b1")
     // fingerprint tracks the full corpus of record across stream appends
@@ -1809,7 +1782,7 @@ class StreamingSpec extends SparkSpec {
       graft.operators.ClusterIndex.assignments(spark, idx, "doc_id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
       graft.operators.ClusterIndex.assignments(spark, idx, "doc_id").count(),
-      spark.read.parquet(s"$lake/batch=0")
+      spark.read.parquet(s"$lake/batch=0").select("doc_id", "component")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     val s1 = state()
     assert(s1._1 === Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
@@ -1852,7 +1825,7 @@ class StreamingSpec extends SparkSpec {
     assert(rows === Seq(1L -> 1L, 2L -> 2L, 4L -> 4L),
       s"re-crawl must not duplicate ids or merge clusters: ${rows.toSeq}")
     // the batch-1 feed admits only the first-seen id
-    val b1 = spark.read.parquet(s"$lake/batch=1")
+    val b1 = spark.read.parquet(s"$lake/batch=1").select("doc_id", "component")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(b1 === Map(4L -> 4L), s"batch-1 feed: $b1")
     // fingerprint tracks the FIRST-WRITE corpus of record
@@ -1862,13 +1835,12 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("cluster takedown stream: blind + feed-scrubbed + bridge-split immediately, replay converges") {
-    // VERDICT r13 item 4: the third index family's continuous RTBF leg.
     // Bridge fixture: docs 10/20 are separate clusters (J ≈ 0.67), the
     // stream-ingested doc 15 carries the unmodified base text (J ≈ 0.82
     // with both) and merges them — then a streaming LOGICAL takedown of
-    // 15 must blind probes/assignments at once, scrub the audit feed,
-    // tombstone a never-ingested victim's content, and leave the
-    // bridge-split to compact()'s reclaim.
+    // 15 over the cluster feed must blind probes/assignments at once,
+    // scrub the feed, tombstone a never-ingested victim's content, and
+    // leave the physical bridge-split to compact()'s reclaim.
     import spark.implicits._
     val in = tmp("cktin"); val lake = tmp("cktlake"); val ck = tmp("cktck")
     val idx = tmp("cktidx").toString
@@ -1890,127 +1862,74 @@ class StreamingSpec extends SparkSpec {
       graft.operators.ClusterIndex.assignments(spark, idx, "doc_id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(assign() === Map(10L -> 10L, 15L -> 10L, 20L -> 10L))
-    // the takedown QUEUE through the real streaming wiring: the victim
-    // stream carries (id, text) as ingested; id 99 was never ingested
+    // the takedown QUEUE through the real streaming wiring: the feed
+    // carries (id, text); 15 arrives twice (an at-least-once upstream)
+    // and id 99 was never ingested
     writeLines(in, "t1.json", Seq(
+      s"""{"doc_id": 15, "text": "$bridge"}""",
       s"""{"doc_id": 15, "text": "$bridge"}""",
       s"""{"doc_id": 99, "text": "$never"}"""))
     val src = spark.readStream.schema("doc_id LONG, text STRING").json(in.toString)
-    S4Stream.indexedClusterTakedownStream(src, "doc_id", "text", idx,
-      lake.toString, ck.toString, availableNow = true, logical = true)
-      .awaitTermination()
-    // blind immediately: 15 leaves assignments/knownIds — and since r15
-    // the SERVED map already carries the bridge-split (assignments()
-    // re-splits the victims' components read-only from the edge log),
-    // so consumers never observe the merged interim state
+    val t = rtbfTargets("cluster", idx, lake)
+    S4Stream.rtbfPurgeStream(src, t, ck.toString, availableNow = true,
+      logical = true).awaitTermination()
+    // blind immediately: 15 leaves assignments/knownIds, and the SERVED
+    // map already carries the bridge-split (assignments() re-splits the
+    // victims' components read-only from the edge log)
     assert(assign() === Map(10L -> 10L, 20L -> 20L),
       s"victim blind AND bridge-split served immediately: ${assign()}")
     val known = graft.operators.ClusterIndex.knownIds(spark, idx,
       Seq(10L, 15L, 99L).toDF("doc_id"), "doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(known === Set(10L), s"tombstoned id must not be known: $known")
-    // audit feed scrubbed (the victim was the partition's only row, so
-    // the scrub may have dropped the emptied batch=0 dir outright)
+    // feed scrubbed (the victim was the partition's only row, so the
+    // scrub may have dropped the emptied batch=0 dir outright)
     val feedDir = new java.io.File(s"$lake/batch=0")
     val feed =
       if (!feedDir.isDirectory) Set.empty[Long]
       else spark.read.parquet(s"$lake/batch=0")
         .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(feed === Set.empty[Long], s"victim must leave the audit feed: $feed")
+    assert(feed === Set.empty[Long], s"victim must leave the feed: $feed")
     // the never-ingested victim's CONTENT is tombstoned: a late ingest
-    // of the same (id, text) — e.g. an unmarkered batch replaying after
-    // the takedown — is dropped, converging to the forgotten state
+    // of the same (id, text) is dropped
     S4Stream.processIndexedClusterBatch(
       Seq((99L, never)).toDF("doc_id", "text"), 1L, "doc_id", "text",
       idx, lake.toString, runKey = "cin")
     assert(!assign().contains(99L),
       "tombstoned content must not ingest after the takedown")
-    // reclaim: compact splits the bridged component and the index equals
-    // a fresh build on the survivors
+    // reclaim: compact splits the bridged component, and the index
+    // equals a fresh build on the survivors (the twice-delivered victim
+    // subtracted once)
     graft.operators.ClusterIndex.compact(spark, idx)
-    assert(assign() === Map(10L -> 10L, 20L -> 20L),
-      s"compact must reconcile the bridge-split: ${assign()}")
     val survivors = Seq((10L, txt10), (20L, txt20)).toDF("doc_id", "text")
-    assert(graft.operators.ClusterIndex.isFresh(spark, idx, survivors,
-      "doc_id", "text"), "fingerprint must track the survivors exactly")
-    // crash window 1: marker lost after full completion — the replay
-    // re-stages an EMPTY set (ids no longer known) and no-ops through
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val marker = fs.listStatus(new org.apache.hadoop.fs.Path(s"$idx/applied"))
-      .map(_.getPath)
-      .find(p => p.getName.endsWith("_b0") && !p.getName.contains("cin")).get
-    val runKey = marker.getName.stripPrefix("ck").split("_b0").head
-    assert(fs.delete(marker, false))
-    S4Stream.processClusterTakedownBatch(
-      Seq((15L, bridge), (99L, never)).toDF("doc_id", "text"), 0L,
-      "doc_id", "text", idx, lake.toString, runKey, logical = true)
-    assert(assign() === Map(10L -> 10L, 20L -> 20L))
-    // crash window 2: staging survived (crash between the index leg and
-    // cleanup, with a compact() reclaim in between) — the replay
-    // re-presents the ORIGINAL victim rows and must be a COMPLETED-run
-    // no-op (r14: no tombstone rewrite, or the reclaim-freed id would be
-    // re-hidden) — the streaming face of the ADVICE r13 medium fix
-    assert(fs.delete(marker, false))
-    Seq((15L, bridge)).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$lake/.takedown/batch=0")
-    S4Stream.processClusterTakedownBatch(
-      Seq((15L, bridge), (99L, never)).toDF("doc_id", "text"), 0L,
-      "doc_id", "text", idx, lake.toString, runKey, logical = true)
-    assert(assign() === Map(10L -> 10L, 20L -> 20L),
-      "staged replay of a completed takedown must not mutate the index")
+    def converged(): Unit = {
+      assert(assign() === Map(10L -> 10L, 20L -> 20L))
+      assert(graft.operators.ClusterIndex.isFresh(spark, idx, survivors,
+        "doc_id", "text"), "fingerprint must track the survivors exactly")
+    }
+    converged()
+    // the completed batch replays after the reclaim: a manifest resume
+    // that must not rewrite the logical tombstones (the freed id would
+    // be re-hidden)
+    S4Stream.processRtbfPurgeBatch(
+      Seq((15L, bridge), (99L, never)).toDF("doc_id", "text"), 0L, t,
+      purgeRunKey(lake), logical = true)
+    converged()
     assert(graft.operators.LogicalDelete.pendingBatches(
       spark.sparkContext.hadoopConfiguration, idx).isEmpty,
       "completed replay must not rewrite the logical tombstone batch")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$lake/.takedown/batch=0")),
-      "replay must clean its staging")
-    assert(graft.operators.ClusterIndex.isFresh(spark, idx, survivors,
-      "doc_id", "text"), "replay must not drift the fingerprint")
   }
 
-  test("cluster takedown: duplicates dedupe, wrong-text drops, token-twins refuse") {
-    // r14: the staging keeps exactly the ROWS OF RECORD. An
-    // at-least-once upstream delivering the same request twice collapses
-    // to one subtraction; a wrong-text row for a known id drops out
-    // (nothing of record matches — its content is still tombstoned
-    // against late ingest) instead of crash-looping the stream on the
-    // index leg's refusal; only reordered-token twins — two texts that
-    // BOTH token-match one id — are genuinely ambiguous and refuse.
+  test("cluster takedown: an old feed without text is refused before anything is written") {
     import spark.implicits._
-    val lake = tmp("cktd"); val idx = tmp("cktdidx").toString
-    def t(seed: Int) = (0 until 20).map(i => s"tdtok${seed}_$i").mkString(" ")
-    graft.operators.ClusterIndex.build(
-      Seq((1L, t(1)), (2L, t(2)), (3L, t(3)), (5L, t(5)))
-        .toDF("doc_id", "text"),
-      "doc_id", "text", idx)
-    // the same victim row delivered twice: fingerprint subtracts ONCE
-    S4Stream.processClusterTakedownBatch(
-      Seq((2L, t(2)), (2L, t(2))).toDF("doc_id", "text"), 0L,
-      "doc_id", "text", idx, lake.toString, runKey = "td", logical = true)
-    graft.operators.ClusterIndex.compact(spark, idx)
-    assert(graft.operators.ClusterIndex.isFresh(spark, idx,
-      Seq((1L, t(1)), (3L, t(3)), (5L, t(5))).toDF("doc_id", "text"),
-      "doc_id", "text"),
-      "a duplicated victim row must subtract the fingerprint exactly once")
-    // a wrong-text row beside the right one: the record removes, the
-    // wrong row drops at staging — no refusal, no wedged stream
-    S4Stream.processClusterTakedownBatch(
-      Seq((3L, t(3)), (3L, t(9))).toDF("doc_id", "text"), 1L,
-      "doc_id", "text", idx, lake.toString, runKey = "td", logical = true)
-    assert(graft.operators.ClusterIndex.knownIds(spark, idx,
-      Seq(3L).toDF("doc_id"), "doc_id").count() == 0L,
-      "the row of record must be taken down despite the wrong-text twin")
-    // reordered-token twins: both token-match the stored doc — ambiguous
-    val twin = t(5).split(" ").reverse.mkString(" ")
-    val ex = intercept[IllegalArgumentException] {
-      S4Stream.processClusterTakedownBatch(
-        Seq((5L, t(5)), (5L, twin)).toDF("doc_id", "text"), 2L,
-        "doc_id", "text", idx, lake.toString, runKey = "td", logical = true)
-    }
-    assert(ex.getMessage.contains("token-matching"), ex.getMessage)
-    assert(graft.operators.ClusterIndex.knownIds(spark, idx,
-      Seq(5L).toDF("doc_id"), "doc_id").count() == 1L,
-      "a refused batch must not have tombstoned or removed the victim")
+    val lake = tmp("ckold"); val idx = tmp("ckoldidx").toString
+    Seq((15L, 10L)).toDF("doc_id", "component").write.parquet(s"$lake/batch=0")
+    val ex = intercept[IllegalStateException](S4Stream.processRtbfPurgeBatch(
+      Seq(15L).toDF("doc_id"), 0L, rtbfTargets("cluster", idx, lake), "old"))
+    assert(ex.getMessage.contains(lake.toString) &&
+      ex.getMessage.contains("no text column"), ex.getMessage)
+    Seq(s"$idx/removed", s"$lake/_rtbf").foreach(d =>
+      assert(!Files.exists(java.nio.file.Paths.get(d)), s"$d was written"))
   }
 
   test("cluster takedown: PHYSICAL mode splits the bridge without waiting for compact") {
@@ -2035,9 +1954,8 @@ class StreamingSpec extends SparkSpec {
       graft.operators.ClusterIndex.assignments(spark, idx, "doc_id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(assign() === Map(10L -> 10L, 15L -> 10L, 20L -> 10L))
-    S4Stream.processClusterTakedownBatch(
-      Seq((15L, bridge)).toDF("doc_id", "text"), 0L, "doc_id", "text",
-      idx, lake.toString, runKey = "cptk", logical = false)
+    S4Stream.processRtbfPurgeBatch(Seq(15L).toDF("doc_id"), 0L,
+      rtbfTargets("cluster", idx, lake), "cptk")
     assert(assign() === Map(10L -> 10L, 20L -> 20L),
       s"physical takedown must split the bridge in-batch: ${assign()}")
     assert(graft.operators.LogicalDelete.pendingBatches(
@@ -2050,17 +1968,17 @@ class StreamingSpec extends SparkSpec {
 
   test("takedown before the first ingest: stages empty, still tombstones, late ingest converges") {
     // a takedown stream can legitimately start before any ingest batch
-    // landed a lake subtree — it must stage an empty victim set (not
-    // throw on the unreadable lake) and, for a tombstoneAll family,
-    // still content-tombstone the request so the content never lands
+    // landed a lake subtree — nothing resolves (no throw on the
+    // unreadable lake), and a feed that carries the content still
+    // tombstones it, so the content never lands
     import spark.implicits._
     import graft.operators.TermIndex
     val lake = tmp("tpre_lake"); val idx = tmp("tpre_idx").toString
     TermIndex.build(Seq((1L, "seed corpus words")).toDF("doc_id", "text"),
       "doc_id", "text", idx)
-    S4Stream.processTermTakedownBatch(
+    S4Stream.processRtbfPurgeBatch(
       Seq((7L, "forget this content")).toDF("doc_id", "text"), 0L,
-      "doc_id", "text", idx, lake.toString, runKey = "tpd")
+      rtbfTargets("term", idx, lake), "tpd")
     // a late ingest of the forgotten content is dropped
     S4Stream.processTermIngestBatch(
       Seq((7L, "forget this content")).toDF("doc_id", "text"), 0L,
@@ -2072,12 +1990,12 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("term family streams: first-write-wins ingest, takedown blind + survivor-exact, replays converge") {
-    // the FOURTH family's streaming legs: ingest appends tf/dl
+    // the term family's streaming legs: ingest appends tf/dl
     // statistics per micro-batch (unique-id contract — a stable-id
     // re-crawl would double its BM25 mass, so first write wins), the
-    // takedown stream runs the staged-snapshot protocol with
-    // TermIndex.logicalRemove as the index leg, and both replay windows
-    // converge without touching committed index state.
+    // takedown stream runs a LOGICAL purge (TermIndex.logicalRemove as
+    // the index leg), and both replay windows converge without touching
+    // committed index state.
     import spark.implicits._
     import graft.operators.TermIndex
     val in = tmp("tmin"); val lake = tmp("tmlake"); val ck = tmp("tmck")
@@ -2114,9 +2032,9 @@ class StreamingSpec extends SparkSpec {
       s"""{"doc_id": 3, "text": "$tc"}""",
       s"""{"doc_id": 99, "text": "$never"}"""))
     val src = spark.readStream.schema("doc_id LONG, text STRING").json(in.toString)
-    S4Stream.indexedTermTakedownStream(src, "doc_id", "text", idx,
-      lake.toString, ck.toString, availableNow = true)
-      .awaitTermination()
+    val t = rtbfTargets("term", idx, lake)
+    S4Stream.rtbfPurgeStream(src, t, ck.toString, availableNow = true,
+      logical = true).awaitTermination()
     val survivors = Seq((1L, ta), (2L, tb), (4L, td))
     val survivorTop = fresh(survivors)
     assert(top(idx) === survivorTop,
@@ -2135,18 +2053,11 @@ class StreamingSpec extends SparkSpec {
     assert(top(idx) === survivorTop)
     assert(TermIndex.isFresh(spark, idx, survivors.toDF("doc_id", "text"),
       "doc_id", "text"), "fingerprint must track the survivors")
-    // ---- crash window A: takedown marker lost after full completion —
-    // the replay stages an empty set and no-ops through to the marker
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val marker = fs.listStatus(new org.apache.hadoop.fs.Path(s"$idx/applied"))
-      .map(_.getPath)
-      .find(p => p.getName.endsWith("_b0") && !p.getName.contains("tin")).get
-    val runKey = marker.getName.stripPrefix("ck").split("_b0").head
-    assert(fs.delete(marker, false))
-    S4Stream.processTermTakedownBatch(
-      Seq((3L, tc), (99L, never)).toDF("doc_id", "text"), 0L,
-      "doc_id", "text", idx, lake.toString, runKey)
+    // ---- crash window A: the completed takedown batch replays (its
+    // checkpoint commit lost) — it resumes from the manifest and no-ops
+    S4Stream.processRtbfPurgeBatch(
+      Seq((3L, tc), (99L, never)).toDF("doc_id", "text"), 0L, t,
+      purgeRunKey(lake), logical = true)
     assert(top(idx) === survivorTop)
     assert(graft.operators.LogicalDelete.pendingBatches(
       spark.sparkContext.hadoopConfiguration, idx).isEmpty,
@@ -2154,6 +2065,8 @@ class StreamingSpec extends SparkSpec {
     // ---- crash window B: committed INGEST batch replays after the
     // takedown (marker lost) — the index must stay untouched and the
     // lake feed rebuild to the ids the index still serves
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
     assert(fs.delete(new org.apache.hadoop.fs.Path(
       s"$idx/applied/cktin_b0"), false))
     S4Stream.processTermIngestBatch(
@@ -2168,7 +2081,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("term takedown stream: the physical path erases rows in-batch and leaves no tombstone debt (r17)") {
-    // logical=false routes the staged-snapshot protocol through the r17
+    // a physical purge routes the index leg through the r17
     // TermIndex.remove — the strict-SLA variant: the victims' postings/
     // dl rows leave DISK inside the batch (no compact needed), scores
     // equal a fresh survivor build, and no logical-deletion debt pends
@@ -2188,9 +2101,9 @@ class StreamingSpec extends SparkSpec {
     S4Stream.processTermIngestBatch(
       Seq((3L, tc)).toDF("doc_id", "text"), 0L, "doc_id", "text",
       idx, lake.toString, runKey = "tpi")
-    S4Stream.processTermTakedownBatch(
-      Seq((3L, tc)).toDF("doc_id", "text"), 0L, "doc_id", "text",
-      idx, lake.toString, runKey = "tpt", logical = false)
+    S4Stream.processRtbfPurgeBatch(
+      Seq((3L, tc)).toDF("doc_id", "text"), 0L,
+      rtbfTargets("term", idx, lake), "tpt")
     val fresh = tmp("tphys_f").toString
     TermIndex.build(Seq((1L, ta), (2L, tb)).toDF("doc_id", "text"),
       "doc_id", "text", fresh)

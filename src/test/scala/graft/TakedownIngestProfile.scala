@@ -77,14 +77,17 @@ object TakedownIngestProfile {
       println(f"baseline,$w%.2f,$r")
     }
     // takedown-under-ingest: physical vs logical operator calls, plus
-    // the r14 STREAMING cluster loop's full micro-batch (staging +
-    // content tombstones + logicalRemove + feed scrub + marker) — what
-    // a production takedown queue actually costs the ingest side
+    // the STREAMING takedown loop's full micro-batch over the cluster
+    // feed (victim resolve + content tombstones + manifest +
+    // logicalRemove + feed scrub + agreement check + marker) — what a
+    // production takedown queue actually costs the ingest side
+    val lake = s"$tmp/graft_tkingest/lake_stream"
     for (mode <- Seq("physical", "logical", "streaming")) {
       val idx = snapshot(mode)
-      if (mode == "streaming") { // stale staging would replay old victims
-        val lp = new org.apache.hadoop.fs.Path(s"$tmp/graft_tkingest/lake_stream")
+      if (mode == "streaming") { // stale purge state would replay old victims
+        val lp = new org.apache.hadoop.fs.Path(lake)
         lp.getFileSystem(conf).delete(lp, true)
+        victims.write.parquet(s"$lake/batch=0") // the feed's rows of record
       }
       val started = new java.util.concurrent.CountDownLatch(1)
       val tk = new Thread(() => {
@@ -95,17 +98,18 @@ object TakedownIngestProfile {
           case "logical" =>
             graft.operators.ClusterIndex.logicalRemove(victims, "doc_id", "text", idx, tag = "tk")
           case _ =>
-            // the loop's index leg does pre-lease work (staging, known
-            // filter, tombstones), so a hammering ingest can win the
+            // the loop's index leg does pre-lease work (victim resolve,
+            // tombstones, manifest), so a hammering ingest can win the
             // lease first — the batch then fails with the TYPED refusal
             // (tombstones rolled back) and the stream replays it, which
             // is exactly what this retry models
+            val t = graft.operators.RtbfTargets(lakeDir = lake,
+              lakePartitionCols = Seq("batch"), clusterIndex = Some(idx))
             var done = false
             while (!done) {
               try {
-                graft.streaming.S4Stream.processClusterTakedownBatch(
-                  victims, 0L, "doc_id", "text", idx,
-                  s"$tmp/graft_tkingest/lake_stream", runKey = "prof",
+                graft.streaming.S4Stream.processRtbfPurgeBatch(
+                  victims.select(col("doc_id")), 0L, t, runKey = "prof",
                   logical = true)
                 done = true
               } catch {
