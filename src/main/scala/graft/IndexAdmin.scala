@@ -224,9 +224,10 @@ object IndexAdmin {
       }
     }
     if (r.pendingRemovals.nonEmpty) {
-      // rmstate dirs carry the rm. namespace — and, since r16, `ap.`
-      // entries for crashed APPEND commits (the term family's
-      // idempotent meta protocol). The tag the operator must pass back
+      // rmstate dirs carry the rm. namespace — and `ap.` entries for
+      // crashed APPEND commits (every family's idempotent meta commit;
+      // one whose merge is recorded is done and not listed, see
+      // Fingerprint.pendingRemovals). The tag the operator must pass back
       // is the BARE one — printing rm.t9 with "re-run with this tag"
       // would have them call remove(tag="rm.t9"), a new removal the
       // pending guard refuses — and the replay verb differs by kind.

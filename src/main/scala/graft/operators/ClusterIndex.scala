@@ -56,8 +56,8 @@ import org.apache.spark.sql.functions._
   * and new-vocabulary tokens default to df 0 = rarest = chosen first.
   *
   * [[append]] = probe + tag-scoped writes + targeted re-assignment of
-  * the (rare) components the delta bridged, + an idempotent-per-batch
-  * fingerprint merge ([[Fingerprint.shouldMerge]]). After append,
+  * the (rare) components the delta bridged, + the idempotent-per-batch
+  * fingerprint merge ([[IndexMaintenance.append]]). After append,
   * `<dir>/assign` equals a fresh CC over the union corpus —
   * ClusterIndexSpec holds that equivalence including bridge-merge,
   * rep-change, and delta-internal-chain cases.
@@ -168,10 +168,7 @@ object ClusterIndex {
       .withColumn("_src", lit("build")).withColumn("eb", idb(col("u"), nBuckets))
       .write.mode("overwrite").partitionBy("_src", "eb")
       .parquet(s"$root/edges")
-    val fp = Fingerprint.of(docs, Seq(idCol, textCol))
-    Seq((threshold, nBuckets, fp._1, fp._2))
-      .toDF("threshold", "n_buckets", "n_rows", "content_hash")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
+    writeMeta(s, root, threshold, nBuckets, Fingerprint.of(docs, Seq(idCol, textCol)))
     Fingerprint.clearReplayState(conf0, indexDir)
     // a rebuild wiped the corpus the tombstones were hiding rows of —
     // surviving entries would wrongly hide the rebuilt corpus' rows
@@ -188,41 +185,25 @@ object ClusterIndex {
     (m.getAs[Double]("threshold"), m.getAs[Int]("n_buckets"))
   }
 
-  private[operators] def readFingerprint(s: SparkSession, root: String): Option[(Long, Long)] =
-    try {
-      val m = s.read.parquet(s"$root/meta").head()
-      Some((m.getAs[Long]("n_rows"), m.getAs[Long]("content_hash")))
-    } catch { case _: Exception => None } // absent/legacy meta => stale
-
-  /** Does the persisted cluster map still describe THIS corpus? The
-    * unchanged-corpus answer is O(files) FS metadata calls
-    * ([[Fingerprint.statusFresh]] — no Spark job); drift or a non-file
-    * corpus falls back to the content-hash authority: one column-pruned
-    * agg scan (see [[Fingerprint]]) — cheap next to the PPJoin+CC pass
-    * it guards. */
+  /** Does the persisted cluster map still describe THIS corpus
+    * ([[IndexMaintenance.isFresh]])? Cheap next to the PPJoin+CC pass it
+    * guards. */
   def isFresh(s: SparkSession, indexDir: String, corpus: DataFrame,
               idCol: String, textCol: String): Boolean =
-    Fingerprint.statusFresh(indexDir, corpus) ||
-      readFingerprint(s,
-          IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir))
-        .contains(Fingerprint.of(corpus, Seq(idCol, textCol)))
+    IndexMaintenance.isFresh(s, indexDir, corpus, Seq(idCol, textCol))
 
-  /** Build-once/consume-many entry: (re)build only when absent or stale. */
+  /** Build-once/consume-many entry: (re)build only when absent or stale.
+    * A pre-r11 index has no adjacency log — remove() depends on it, so
+    * it counts as stale rather than leaving a tree that refuses
+    * takedowns. */
   def ensure(docs: DataFrame, idCol: String, textCol: String, indexDir: String,
              threshold: Double = 0.8, nBuckets: Int = 64): Unit = {
-    val s = docs.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val root = IndexMaintenance.liveRoot(conf, indexDir)
-    val success = new org.apache.hadoop.fs.Path(s"$root/assign/_SUCCESS")
-    val fs = success.getFileSystem(conf)
-    // a pre-r11 index has no adjacency log — remove() depends on it, so
-    // treat the index as stale and rebuild rather than leaving a tree
-    // that refuses takedowns
-    val edgesOk = fs.exists(
-      new org.apache.hadoop.fs.Path(s"$root/edges/_SUCCESS"))
-    if (!fs.exists(success) || !edgesOk ||
-        !isFresh(s, indexDir, docs, idCol, textCol))
+    val conf = docs.sparkSession.sparkContext.hadoopConfiguration
+    IndexMaintenance.ensureFresh(docs, indexDir, Seq(idCol, textCol), "assign",
+      root => { val p = new org.apache.hadoop.fs.Path(s"$root/edges/_SUCCESS")
+                !p.getFileSystem(conf).exists(p) }) {
       build(docs, idCol, textCol, indexDir, threshold, nBuckets)
+    }
   }
 
   /** The persisted `(id, component)` map — what every consumer reads
@@ -578,69 +559,34 @@ object ClusterIndex {
   /** O(|delta|) maintenance — `tag` must be BATCH-UNIQUE (the streaming
     * loops use ck<runKey>_b<batchId>): writes are tag-scoped dynamic
     * overwrites, so a DIFFERENT batch under a used tag would destroy the
-    * earlier batch's rows; append() detects reuse via the applied
-    * fingerprint record and refuses loudly, re-admitting only the exact
-    * same (tag, delta) pair — the crash-replay.
+    * earlier batch's rows; append() refuses that loudly
+    * ([[IndexMaintenance.admitOverwriteTag]]), re-admitting only the
+    * exact same (tag, delta) pair — the crash-replay.
     *
     * Probe (excluding this batch's own tag, so a
     * crash-replay behaves like the first run), write the delta's rows
     * tag-scoped (dynamic overwrite — replay rewrites the same partitions,
     * exactly-once), re-assign the members of any bridged components, and
-    * merge the fingerprint once per (tag, delta) pair. Post-condition
-    * (ClusterIndexSpec): `assign` == fresh CC over the union corpus. */
+    * merge the fingerprint once per (tag, delta) pair
+    * ([[IndexMaintenance.append]]). Post-condition (ClusterIndexSpec):
+    * `assign` == fresh CC over the union corpus. */
   def append(delta: DataFrame, idCol: String, textCol: String,
-             indexDir: String, tag: String = "append"): DataFrame = {
+             indexDir: String, tag: String = "append"): DataFrame =
+    IndexMaintenance.append(delta, indexDir, tag, "write",
+        Seq(idCol, textCol), "cluster") { ctx =>
     val s = delta.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    // write lease for the whole append: a racing compact() (which would
-    // retire this generation and strand these writes) fails loudly at
-    // its own acquire instead
-    IndexMaintenance.withLease(conf, indexDir, "write") {
-    val root = IndexMaintenance.liveRoot(conf, indexDir)
-    // ONE meta read serves threshold, bucket count, and the fingerprint
-    // (three separate reads could observe different generations under a
-    // concurrent rebuild)
-    val m = s.read.parquet(s"$root/meta").head()
-    val thr = m.getAs[Double]("threshold")
-    val nBuckets = m.getAs[Int]("n_buckets")
-    val oldFp =
-      if (m.schema.fieldNames.contains("n_rows"))
-        Some((m.getAs[Long]("n_rows"), m.getAs[Long]("content_hash")))
-      else None // legacy meta: no fingerprint to maintain
-    // "build" is the build generation's own _src value: a tag sanitizing
-    // to it would dynamic-overwrite build partitions wherever the hash
-    // buckets collide, and excludeTag=Some("build") would exclude the
-    // whole build corpus from the probe — near-dups of indexed docs
-    // would silently go unflagged (ADVICE r10). compact() folds
-    // committed generations into _src=build, widening the exposure, so
-    // refuse the name outright rather than trusting callers.
-    require(sanitize(tag) != "build",
-      s"ClusterIndex.append: tag '$tag' sanitizes to the reserved build " +
-        "generation name 'build'; its tag-scoped overwrite would destroy " +
-        "build rows and its probe would exclude the build corpus — pass a " +
-        "batch-unique tag that does not collide with 'build'")
-    val dfp = Fingerprint.of(delta, Seq(idCol, textCol))
-    // Tag reuse guard: unlike the append-mode indexes, these writes are
-    // tag-scoped dynamic OVERWRITES — a different batch under a used tag
-    // would silently destroy the earlier batch's rows wherever their
-    // hash buckets collide (and the excludeTag probe would skip them).
-    // The exact same (tag, delta) pair is the legitimate crash-replay.
-    val replay = Fingerprint.wasApplied(conf, indexDir, tag, dfp)
-    require(replay || !Fingerprint.tagUsed(conf, indexDir, tag),
-      s"ClusterIndex.append: tag '$tag' was already used by a different " +
-        "batch; appends are tag-scoped dynamic overwrites, so reusing a " +
-        "tag would destroy the earlier batch's rows — pass a batch-unique " +
-        "tag (the streaming loops use ck<runKey>_b<batchId>)")
+    val root = ctx.root
+    val thr = ctx.meta.getAs[Double]("threshold")
+    val nBuckets = ctx.meta.getAs[Int]("n_buckets")
+    // "build" is the build generation's own _src value: excludeTag =
+    // Some("build") would also exclude the whole build corpus from the
+    // probe — near-dups of indexed docs would silently go unflagged
+    // (ADVICE r10), and compact() folds committed generations into
+    // _src=build, widening the exposure
+    IndexMaintenance.admitOverwriteTag(ctx, tag, "ClusterIndex.append")
     val tagS = sanitize(tag)
-    // a tombstoned id is dead until compact() reclaims it: re-ingesting
-    // it here would hide the new rows behind the id-scoped tombstone
-    // and then wrongly drop them in the reclaim filter (no-op fast path
-    // when the index never saw a logical delete)
-    val tomb = LogicalDelete.ids(s, indexDir)
-    LogicalDelete.requireNotTombstoned(s, indexDir,
-      delta.select(col(idCol)), idCol, "ClusterIndex.append", tomb)
     val (assignInc, merges, toksD, matchPairs) = ClusterServe.probeParts(s, root, delta,
-      idCol, textCol, excludeTag = Some(tag), tomb)
+      idCol, textCol, excludeTag = Some(tag), ctx.tomb)
     // id-sign guard BEFORE any write (review-caught twice: a post-write
     // check would leave a rejected delta's rows committed, and an EMPTY
     // delta — a re-crawl-only streaming batch — aggregates min to null,
@@ -708,32 +654,22 @@ object ClusterIndex {
         .localCheckpoint() // fully read before its source partitions are replaced
       dynOverwrite(rewritten, Seq("_src", "idb"), s"$root/assign")
     }
-    // fingerprint: merged once per (tag, delta) — replay-safe
-    if (!replay) oldFp.foreach { old =>
-      import s.implicits._
-      val fp = Fingerprint.merge(old, dfp)
-      Seq((thr, nBuckets, fp._1, fp._2))
-        .toDF("threshold", "n_buckets", "n_rows", "content_hash")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
-      Fingerprint.recordMerge(conf, indexDir, tag, dfp)
-    }
-    // build-time file statuses no longer describe the corpus of
-    // record: freshness reverts to the content-hash authority
-    Fingerprint.clearSourceStatus(conf, indexDir)
-    // belt-and-braces behind the lease: if the generation moved anyway
-    // (a compact that broke leases while this append was truly alive),
-    // the writes above landed in a retired tree — fail loudly rather
-    // than report success for rows no probe will ever see
-    require(IndexMaintenance.liveRoot(conf, indexDir) == root,
-      s"ClusterIndex.append on $indexDir: the index was compacted to a new " +
-        s"generation while this append was writing $root; its rows are in " +
-        "the retired tree — re-run the append (same tag + delta replays " +
-        "exactly-once) after verifying no maintenance is racing")
     // the delta's assignments AS OF THIS APPEND (already materialized —
     // safe to consume after the overwrites): the streaming loop's
     // per-batch output. The index's assign table stays authoritative;
     // a later batch that bridges can amend components there.
     assignD
+    } { (ctx, fp) =>
+      writeMeta(delta.sparkSession, ctx.root,
+        ctx.meta.getAs[Double]("threshold"), ctx.meta.getAs[Int]("n_buckets"), fp)
     }
+
+  private[operators] def writeMeta(s: SparkSession, root: String,
+                                   threshold: Double, nBuckets: Int,
+                                   fp: (Long, Long)): Unit = {
+    import s.implicits._
+    Seq((threshold, nBuckets, fp._1, fp._2))
+      .toDF("threshold", "n_buckets", "n_rows", "content_hash")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
   }
 }

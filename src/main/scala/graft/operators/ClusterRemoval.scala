@@ -141,10 +141,7 @@ private[operators] object ClusterRemoval {
       val m = s.read.parquet(s"$root/meta").head()
       thr = m.getAs[Double]("threshold")
       nBuckets = m.getAs[Int]("n_buckets")
-      val oldFp =
-        if (m.schema.fieldNames.contains("n_rows"))
-          Some((m.getAs[Long]("n_rows"), m.getAs[Long]("content_hash")))
-        else None
+      val oldFp = IndexMaintenance.fingerprintOf(m)
       // the envelope's in-lease checks (IndexMaintenance.removal): this
       // verb spreads its work over three lease windows, so it cannot
       // run inside one envelope
@@ -226,9 +223,7 @@ private[operators] object ClusterRemoval {
           oldFp, "ClusterIndex.remove")
         Fingerprint.resolveRemovalMeta(conf, normDir, rmTag, oldFp,
           "ClusterIndex.remove").foreach { fp =>
-          rleg("meta-commit")(Seq((thr, nBuckets, fp._1, fp._2))
-            .toDF("threshold", "n_buckets", "n_rows", "content_hash")
-            .coalesce(1).write.mode("overwrite").parquet(s"$root/meta"))
+          rleg("meta-commit")(ClusterIndex.writeMeta(s, root, thr, nBuckets, fp))
         }
         FaultInjection.maybeCrash("cluster.meta")
         if (!replay) Fingerprint.recordMerge(conf, indexDir, rmTag, vfp)
@@ -749,10 +744,7 @@ private[operators] object ClusterRemoval {
     val m = s.read.parquet(s"$root/meta").head()
     val thr = m.getAs[Double]("threshold")
     val nBuckets = m.getAs[Int]("n_buckets")
-    val oldFp =
-      if (m.schema.fieldNames.contains("n_rows"))
-        Some((m.getAs[Long]("n_rows"), m.getAs[Long]("content_hash")))
-      else None
+    val oldFp = IndexMaintenance.fingerprintOf(m)
     val vids = victims.select(col(idCol)).distinct().localCheckpoint()
     val nV = vids.count()
     def bVids(df: DataFrame) = TargetedDelete.maybeBroadcast(df, nV)
@@ -807,11 +799,7 @@ private[operators] object ClusterRemoval {
       FaultInjection.maybeCrash("cluster.logical.state")
       val resolvedFp = Fingerprint.resolveRemovalMeta(conf, normDir, rmTag,
         oldFp, "ClusterIndex.logicalRemove")
-      resolvedFp.foreach { fp =>
-        Seq((thr, nBuckets, fp._1, fp._2))
-          .toDF("threshold", "n_buckets", "n_rows", "content_hash")
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
-      }
+      resolvedFp.foreach(ClusterIndex.writeMeta(s, root, thr, nBuckets, _))
       FaultInjection.maybeCrash("cluster.logical.meta")
       if (!replay) Fingerprint.recordMerge(conf, normDir, rmTag, vfp)
       FaultInjection.maybeCrash("cluster.logical.record")

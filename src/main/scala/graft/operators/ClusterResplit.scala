@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   */
 private[operators] object ClusterResplit {
 
-  import ClusterIndex.{idb, rleg, readFingerprint}
+  import ClusterIndex.{idb, rleg}
+  import IndexMaintenance.metaFingerprint
 
   // ---- tombstone serve-overlay (r15, this round): the bridge-split as a
   // persisted artifact instead of a per-read recompute -------------------
@@ -67,7 +68,7 @@ private[operators] object ClusterResplit {
                            newFp: Option[(Long, Long)]): Unit = {
     import s.implicits._
     val conf = s.sparkContext.hadoopConfiguration
-    newFp.orElse(readFingerprint(s, root)).foreach { fp =>
+    newFp.orElse(metaFingerprint(s, root)).foreach { fp =>
       val batches = LogicalDelete.pendingBatches(conf, normDir)
       val union: Option[(DataFrame, Long, Seq[Long])] =
         if (batches == Seq(Fingerprint.sanitizeTag(curBatch))) Some(curVids)
@@ -126,7 +127,7 @@ private[operators] object ClusterResplit {
       val om = s.read.parquet(overlayMetaDir(indexDir)).head()
       val valid = om.getAs[String]("root") == root &&
         om.getAs[String]("batches") == batches.mkString(",") &&
-        readFingerprint(s, root).contains(
+        metaFingerprint(s, root).contains(
           (om.getAs[Long]("n_rows"), om.getAs[Long]("content_hash")))
       if (!valid) None
       else {
@@ -138,7 +139,7 @@ private[operators] object ClusterResplit {
           col("_ov_hash"), col("_ov_batches")).head()
         val embOk = emb.getString(0) == root &&
           emb.getString(3) == batches.mkString(",") &&
-          readFingerprint(s, root).contains((emb.getLong(1), emb.getLong(2)))
+          metaFingerprint(s, root).contains((emb.getLong(1), emb.getLong(2)))
         if (!embOk) None
         else Some(payload.select(col(src).as(idCol), col("_newcomp")))
       }

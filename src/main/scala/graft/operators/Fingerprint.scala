@@ -110,18 +110,10 @@ object Fingerprint {
     readTagSet(p.getFileSystem(conf), p).nonEmpty
   }
 
-  /** Should this (tag, delta-fingerprint) be merged into index meta?
-    * False exactly when the same pair was already recorded — the replay
-    * case. On true, the pair is recorded (after the caller's meta write
-    * ordering: record LAST so a crash mid-append degrades to a spurious
-    * rebuild, never a silently-stale index). */
-  def shouldMerge(conf: org.apache.hadoop.conf.Configuration,
-                  indexDir: String, tag: String, fp: (Long, Long)): Boolean =
-    !wasApplied(conf, indexDir, tag, fp)
-
-  /** Record that (tag, fp) has been merged into meta — see [[shouldMerge]].
-    * Appends to the tag's fingerprint set (read-modify-write: object
-    * stores lack append, and the file holds a handful of 40-byte lines). */
+  /** Record that (tag, fp) has been merged into meta — the append
+    * commit point ([[IndexMaintenance.append]]). Appends to the tag's
+    * fingerprint set (read-modify-write: object stores lack append, and
+    * the file holds a handful of 40-byte lines). */
   def recordMerge(conf: org.apache.hadoop.conf.Configuration,
                   indexDir: String, tag: String, fp: (Long, Long)): Unit = {
     val p = tagPath(indexDir, tag)
@@ -323,40 +315,29 @@ object Fingerprint {
       }
     }
 
-  /** First-pass APPEND-commit state (r16 review): the plain
-    * write-meta-then-record append ordering leaves a crash window
-    * where the replay (shouldMerge true again) merges the delta a
-    * SECOND time. For fingerprint-only metas that degrades to a
-    * spurious rebuild — the designed failure direction — but a family
-    * serving query-time statistics FROM meta (TermIndex's (n_rows,
-    * sum_dl) since r16) would silently mis-score until the next
-    * ensure(). Such appends commit through this state instead: under
+  /** First-pass APPEND-commit state, written by every family's append
+    * ([[IndexMaintenance.append]] step 7): the plain
+    * write-meta-then-record ordering left a crash window where the
+    * replay merged the delta a SECOND time — a spurious rebuild for a
+    * fingerprint-only meta, silent mis-scoring for TermIndex, which
+    * serves (n_rows, sum_dl) from meta. The state lives under
     * `rmstate/ap.<tag>` (the removal namespace on purpose — a crashed
     * append must block removals/rebuilds exactly like a crashed
     * removal, and [[requireNoOtherPendingRemoval]] already reads that
     * dir), metabase-first, with target = merge(pre, delta); the meta
     * write then goes through [[resolveRemovalMeta]]'s
     * interleaving-exact reconstruction, so every crash boundary — and
-    * appends interleaved across one — replays to the same value.
-    * Refuses a DIFFERENT delta under leftover state (the crashed
-    * append must replay with its original batch first). */
+    * appends interleaved across one — replays to the same value. The
+    * caller refuses leftover state for a DIFFERENT delta before any
+    * write; existing state is kept as is. */
   def ensureAppendState(conf: org.apache.hadoop.conf.Configuration,
                         indexDir: String, apTag: String, dfp: (Long, Long),
-                        pre: (Long, Long), opName: String): Unit = {
-    val state0 = readRemoveState(conf, indexDir, apTag)
-    state0.foreach { case (sdfp, _) =>
-      if (sdfp != dfp) refuse(
-        s"$opName: this tag has leftover append-commit state for a " +
-          "DIFFERENT batch (a crashed append under it never completed) — " +
-          "re-run that append with its original delta first, or clear " +
-          "its rmstate dir after verifying the index")
-    }
-    if (state0.isEmpty) {
+                        pre: (Long, Long)): Unit =
+    if (readRemoveState(conf, indexDir, apTag).isEmpty) {
       writeRemoveMetaBase(conf, indexDir, apTag, pre,
         recordedTags(conf, indexDir))
       writeRemoveState(conf, indexDir, apTag, dfp, Some(merge(pre, dfp)))
     }
-  }
 
   /** Read back the removal-commit record — None when no state survives
     * (fresh removal, or a prior one that ran to completion). */
@@ -405,12 +386,32 @@ object Fingerprint {
     * crashed legs — victims lingering physically while meta already
     * shows them subtracted. */
   def pendingRemovals(conf: org.apache.hadoop.conf.Configuration,
-                      indexDir: String): Set[String] = {
+                      indexDir: String): Set[String] =
+    stateTags(conf, indexDir).filterNot(committedAppend(conf, indexDir, _))
+
+  private def stateTags(conf: org.apache.hadoop.conf.Configuration,
+                        indexDir: String): Set[String] = {
     val d = new org.apache.hadoop.fs.Path(s"$indexDir/rmstate")
     val fs = d.getFileSystem(conf)
     if (!fs.exists(d)) Set.empty
     else fs.listStatus(d).map(_.getPath.getName).toSet
   }
+
+  /** An `ap.<tag>` state whose (tag, delta) merge is already recorded:
+    * the append passed its commit point ([[recordMerge]]) and crashed
+    * before clearing the state. A streaming replay skips such a batch
+    * (its tag is used), so the state would otherwise pend forever and
+    * block every later removal. It is done, not pending. */
+  private def committedAppend(conf: org.apache.hadoop.conf.Configuration,
+                              indexDir: String, state: String): Boolean =
+    state.startsWith("ap.") && readRemoveState(conf, indexDir, state)
+      .exists(st => wasApplied(conf, indexDir, state.stripPrefix("ap."), st._1))
+
+  /** Drop every committed append state (see [[committedAppend]]). */
+  private def clearCommittedAppends(conf: org.apache.hadoop.conf.Configuration,
+                                    indexDir: String): Unit =
+    stateTags(conf, indexDir).filter(committedAppend(conf, indexDir, _))
+      .foreach(clearRemoveState(conf, indexDir, _))
 
   /** A remove() family's PRE-MUTATION refusal: nothing has been
     * written when this is thrown, so compensating state a caller
@@ -556,6 +557,7 @@ object Fingerprint {
                                    indexDir: String, rmTag: String,
                                    opName: String,
                                    callerHoldsLease: Boolean = false): Unit = {
+    clearCommittedAppends(conf, indexDir)
     val own = sanitizeTag(rmTag)
     def others = pendingRemovals(conf, indexDir) - own
     var pending = others
@@ -766,10 +768,14 @@ object Fingerprint {
     * `tagfp/` merge records (stale pairs could suppress a legitimate
     * merge) must go with them. */
   def clearReplayState(conf: org.apache.hadoop.conf.Configuration,
-                       indexDir: String): Unit =
+                       indexDir: String): Unit = {
+    // before the records go: without them a committed append's leftover
+    // state would read as a crashed one
+    clearCommittedAppends(conf, indexDir)
     Seq(s"$indexDir/applied", s"$indexDir/tagfp").foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       val fs = p.getFileSystem(conf)
       if (fs.exists(p)) fs.delete(p, true)
     }
+  }
 }

@@ -2,13 +2,14 @@ package graft.operators
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared lifecycle mechanics of the persisted indexes ([[ClusterIndex]],
   * [[TextIndex]], [[TermIndex]], [[VectorIndex]]): generation-pointer
-  * layout, compaction cutover ([[foldCompact]]), the removal envelope
-  * ([[removal]]), and the write/compact lease that makes racing
+  * layout, compaction cutover ([[foldCompact]]), the append and removal
+  * envelopes ([[append]], [[removal]]), the freshness check
+  * ([[isFresh]]), and the write/compact lease that makes racing
   * maintenance fail loudly instead of silently losing rows.
   *
   * == Generation layout ==
@@ -534,6 +535,162 @@ private[graft] object IndexMaintenance {
       callerHoldsLease = true)
     replay
   }
+
+  // ---- append envelope ---------------------------------------------------
+
+  /** What an append body works with: the normalized index dir, the data
+    * root resolved under the lease, the ONE meta row read for this
+    * append, the pending tombstone set, and whether this (tag, delta)
+    * pair was already recorded (a replay). */
+  final class AppendCtx private[IndexMaintenance] (
+      val conf: Configuration, val indexDir: String, val root: String,
+      val meta: Row, val tomb: Option[DataFrame], val replay: Boolean)
+
+  /** The exactly-once append every index family's append() shares, in
+    * this fixed order:
+    *
+    *  1. the family's lease ([[withLease]]): `write` for text, vector
+    *     and cluster; `xwrite` for term, whose meta serves query stats.
+    *  2. [[liveRoot]], resolved under the lease.
+    *  3. ONE read of `meta` ([[AppendCtx.meta]]).
+    *  4. [[LogicalDelete.requireNotTombstoned]] on the delta's ids
+    *     (`fpCols.head`): a tombstoned id is dead until compact()
+    *     reclaims it.
+    *  5. the refusal of leftover `ap.<tag>` commit state for a DIFFERENT
+    *     delta, before any write: the crashed append must replay with
+    *     its original batch first.
+    *  6. `body` — the family's row writes.
+    *  7. ONE meta commit, idempotent at every crash boundary: the state
+    *     `rmstate/ap.<tag>` persists (pre-meta, target) before meta is
+    *     written ([[Fingerprint.ensureAppendState]]); the write derives
+    *     from that record under [[Fingerprint.resolveRemovalMeta]]'s
+    *     interleaved-append rule; [[Fingerprint.recordMerge]] is the
+    *     commit point; the state is cleared last. A replay of a recorded
+    *     pair only clears leftover state. `writeMeta` is the family's
+    *     meta row for a target fingerprint. A legacy meta without a
+    *     fingerprint has nothing to merge.
+    *  8. [[Fingerprint.clearSourceStatus]]: the build-time file statuses
+    *     no longer describe the corpus of record.
+    *  9. the generation recheck: behind the lease a compact cannot cut
+    *     over, but a lease that expired under a stalled holder (or one
+    *     broken by hand) can let one in, and rows written into a retired
+    *     tree must not report success.
+    *
+    * Crash steps `<family>.append.{state,meta,record}` follow the three
+    * writes of step 7. */
+  def append[T](delta: DataFrame, indexDir0: String, tag: String,
+                lease: String, fpCols: Seq[String], family: String)
+               (body: AppendCtx => T)
+               (writeMeta: (AppendCtx, (Long, Long)) => Unit): T = {
+    val s = delta.sparkSession
+    val conf = s.sparkContext.hadoopConfiguration
+    val indexDir = normalize(indexDir0)
+    val opName = s"${family.capitalize}Index.append"
+    withLease(conf, indexDir, lease) {
+      val root = liveRoot(conf, indexDir)
+      val meta = s.read.parquet(s"$root/meta").head()
+      val tomb = LogicalDelete.ids(s, indexDir)
+      LogicalDelete.requireNotTombstoned(s, indexDir,
+        delta.select(col(fpCols.head)), fpCols.head, opName, tomb)
+      val dfp = Fingerprint.of(delta, fpCols)
+      val apTag = s"ap.${Fingerprint.sanitizeTag(tag)}"
+      Fingerprint.readRemoveState(conf, indexDir, apTag).foreach {
+        case (sdfp, _) => if (sdfp != dfp) Fingerprint.refuse(
+          s"$opName: tag '$tag' has leftover append-commit state for a " +
+            "DIFFERENT batch (a crashed append under it never completed) — " +
+            "re-run that append with its original delta first")
+      }
+      val ctx = new AppendCtx(conf, indexDir, root, meta, tomb,
+        replay = Fingerprint.wasApplied(conf, indexDir, tag, dfp))
+      val r = body(ctx)
+      if (!ctx.replay) fingerprintOf(meta).foreach { pre =>
+        Fingerprint.ensureAppendState(conf, indexDir, apTag, dfp, pre)
+        FaultInjection.maybeCrash(s"$family.append.state")
+        Fingerprint.resolveRemovalMeta(conf, indexDir, apTag, Some(pre), opName)
+          .foreach(writeMeta(ctx, _))
+        FaultInjection.maybeCrash(s"$family.append.meta")
+        Fingerprint.recordMerge(conf, indexDir, tag, dfp)
+        FaultInjection.maybeCrash(s"$family.append.record")
+      }
+      Fingerprint.clearRemoveState(conf, indexDir, apTag)
+      Fingerprint.clearSourceStatus(conf, indexDir)
+      require(liveRoot(conf, indexDir) == root,
+        s"$opName on $indexDir: index compacted to a new generation during " +
+          s"the append; rows landed in the retired tree $root — re-run the " +
+          "append (the same tag and delta replay exactly-once) after " +
+          "verifying no maintenance is racing")
+      r
+    }
+  }
+
+  /** The tag admission of the families whose appends are tag-scoped
+    * dynamic OVERWRITES (term, cluster): a tag sanitizing to the build
+    * generation's own `_src` value would overwrite build partitions (and
+    * a cluster probe excluding it would skip the build corpus), and a
+    * DIFFERENT batch under a used tag would destroy the earlier batch's
+    * rows. The exact same (tag, delta) pair is the legitimate crash
+    * replay. The append-mode families (text, vector) accept a new delta
+    * under a reused tag. */
+  private[operators] def admitOverwriteTag(ctx: AppendCtx, tag: String,
+                                           opName: String): Unit = {
+    require(Fingerprint.sanitizeTag(tag) != "build",
+      s"$opName: tag '$tag' sanitizes to the reserved build generation " +
+        "name 'build' — its tag-scoped overwrite would destroy build rows; " +
+        "pass a batch-unique tag")
+    require(ctx.replay || !Fingerprint.tagUsed(ctx.conf, ctx.indexDir, tag),
+      s"$opName: tag '$tag' was already used by a different batch; " +
+        "appends are tag-scoped dynamic overwrites, so reusing a tag would " +
+        "destroy the earlier batch's rows — pass a batch-unique tag (the " +
+        "streaming loops use ck<runKey>_b<batchId>)")
+  }
+
+  // ---- freshness ---------------------------------------------------------
+
+  /** The corpus fingerprint `(n_rows, content_hash)` of a meta row; None
+    * for a legacy meta written before fingerprints. */
+  def fingerprintOf(meta: Row): Option[(Long, Long)] =
+    if (meta.schema.fieldNames.contains("n_rows"))
+      Some((meta.getAs[Long]("n_rows"), meta.getAs[Long]("content_hash")))
+    else None
+
+  /** The meta fingerprint under a data root; None when meta is absent or
+    * legacy, which reads as stale. */
+  def metaFingerprint(s: SparkSession, root: String): Option[(Long, Long)] =
+    try fingerprintOf(s.read.parquet(s"$root/meta").head())
+    catch { case _: Exception => None }
+
+  /** Does the persisted index still describe THIS corpus — the build
+    * corpus plus every appended delta, minus every removal? The
+    * unchanged-corpus answer is O(files) FS metadata calls
+    * ([[Fingerprint.statusFresh]], no Spark job); drift or a non-file
+    * corpus falls back to the content-hash authority, one column-pruned
+    * aggregate over `fpCols` compared with `meta.(n_rows, content_hash)`
+    * — cheap next to the rebuild it guards. */
+  def isFresh(s: SparkSession, indexDir: String, corpus: DataFrame,
+              fpCols: Seq[String]): Boolean =
+    Fingerprint.statusFresh(indexDir, corpus) ||
+      metaFingerprint(s, liveRoot(s.sparkContext.hadoopConfiguration, indexDir))
+        .contains(Fingerprint.of(corpus, fpCols))
+
+  /** Build-once/serve-many: run `build` when the index has no committed
+    * `table`, when `legacy(root)` says its layout predates a feature the
+    * family's verbs rely on, or when it is stale for `corpus`. */
+  def ensureFresh(corpus: DataFrame, indexDir: String, fpCols: Seq[String],
+                  table: String, legacy: String => Boolean)
+                 (build: => Unit): Unit = {
+    val s = corpus.sparkSession
+    val conf = s.sparkContext.hadoopConfiguration
+    val root = liveRoot(conf, indexDir)
+    val success = new Path(s"$root/$table/_SUCCESS")
+    if (!success.getFileSystem(conf).exists(success) || legacy(root) ||
+        !isFresh(s, indexDir, corpus, fpCols))
+      build
+  }
+
+  /** Whether the table at `path` has column `c`; false when unreadable. */
+  def hasColumn(s: SparkSession, path: String, c: String): Boolean =
+    try s.read.parquet(path).schema.fieldNames.contains(c)
+    catch { case _: Exception => false }
 
   // ---- compaction cutover ------------------------------------------------
 

@@ -29,11 +29,12 @@ import org.apache.spark.sql.functions._
   *    the fingerprint's own row count) and `sum_dl` give avgdl WITHOUT
   *    an O(corpus) dl aggregate per query batch — the last corpus-sized
   *    serve-path stage before r16. Both are additive, so they ride the
-  *    fingerprint's exactly-once machinery VERBATIM: every meta write
-  *    (append merge, removal subtraction) updates fingerprint and
-  *    sum_dl in the SAME parquet file, so the two can never desync —
-  *    any crash window that could drift sum_dl drifts the fingerprint
-  *    identically and is flagged by the existing freshness check.
+  *    fingerprint's exactly-once commit that every family's append and
+  *    removal shares ([[IndexMaintenance.append]],
+  *    [[IndexMaintenance.removal]]): every meta write (append merge,
+  *    removal subtraction) updates fingerprint and sum_dl in the SAME
+  *    parquet file, so the two can never desync. This family's meta row
+  *    adds only `sum_dl` to that commit.
   *    Defense in depth: `topK` under `graft.term.checkStats=true`
   *    (Verify sets it) re-derives both from the stored dl rows and
   *    refuses on mismatch, so drift fails loudly in the oracle gate
@@ -151,46 +152,36 @@ object TermIndex {
     }
   }
 
-  private def readMeta(s: SparkSession, root: String)
-      : (Int, Option[(Long, Long)], Option[Long]) = {
-    val m = s.read.parquet(s"$root/meta").head()
-    (m.getAs[Int]("n_buckets"),
-      if (m.schema.fieldNames.contains("n_rows"))
-        Some((m.getAs[Long]("n_rows"), m.getAs[Long]("content_hash")))
-      else None,
+  // (n_buckets, fingerprint, sum_dl) of one meta row
+  private def metaOf(m: org.apache.spark.sql.Row)
+      : (Int, Option[(Long, Long)], Option[Long]) =
+    (m.getAs[Int]("n_buckets"), IndexMaintenance.fingerprintOf(m),
       // pre-r16 index without the stats column: serve falls back to the
       // dl aggregate until the next rebuild refreshes meta
       if (m.schema.fieldNames.contains("sum_dl"))
         Some(m.getAs[Long]("sum_dl"))
       else None)
-  }
 
-  /** Fingerprint freshness, same contract as the siblings. */
+  private def readMeta(s: SparkSession, root: String)
+      : (Int, Option[(Long, Long)], Option[Long]) =
+    metaOf(s.read.parquet(s"$root/meta").head())
+
+  /** Fingerprint freshness, same contract as the siblings
+    * ([[IndexMaintenance.isFresh]]). */
   def isFresh(s: SparkSession, indexDir: String, corpus: DataFrame,
               idCol: String, textCol: String): Boolean =
-    Fingerprint.statusFresh(indexDir, corpus) ||
-      (try readMeta(s, IndexMaintenance
-          .liveRoot(s.sparkContext.hadoopConfiguration, indexDir))._2
-        catch { case _: Exception => None })
-        .contains(Fingerprint.of(corpus, Seq(idCol, textCol)))
+    IndexMaintenance.isFresh(s, indexDir, corpus, Seq(idCol, textCol))
 
-  /** Build-once/serve-many entry: (re)build only when absent or stale. */
+  /** Build-once/serve-many entry: (re)build only when absent or stale. A
+    * pre-r16 meta without `sum_dl` serves through the O(corpus)
+    * fallback, so it is schema-upgraded by rebuild even when
+    * content-fresh. */
   def ensure(docs: DataFrame, idCol: String, textCol: String, indexDir: String,
-             nBuckets: Int = 64): Unit = {
-    val s = docs.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    val root = IndexMaintenance.liveRoot(conf, indexDir)
-    val success = new org.apache.hadoop.fs.Path(s"$root/postings/_SUCCESS")
-    val fs = success.getFileSystem(conf)
-    // a pre-r16 meta without sum_dl serves through the O(corpus)
-    // fallback — schema-upgrade it by rebuild even when content-fresh
-    def statsLess = (try readMeta(s, root)._3 catch {
-      case _: Exception => None
-    }).isEmpty
-    if (!fs.exists(success) || statsLess ||
-        !isFresh(s, indexDir, docs, idCol, textCol))
+             nBuckets: Int = 64): Unit =
+    IndexMaintenance.ensureFresh(docs, indexDir, Seq(idCol, textCol), "postings",
+      root => !IndexMaintenance.hasColumn(docs.sparkSession, s"$root/meta", "sum_dl")) {
       build(docs, idCol, textCol, indexDir, nBuckets)
-  }
+    }
 
   /** Ranked retrieval against the persisted statistics: BM25 with the
     * positive-idf ln form, k1/b at query time (they tune, they don't
@@ -328,91 +319,32 @@ object TermIndex {
 
   /** O(|delta|) maintenance — `tag` must be BATCH-UNIQUE: writes are
     * tag-scoped dynamic overwrites (see the class doc for why this
-    * family cannot be append-mode), the fingerprint merges once per
-    * (tag, delta) pair, and a crash-replay rewrites its own partitions
-    * exactly-once. Post-condition (TermIndexSpec): topK == a fresh
-    * build over the union corpus. */
+    * family cannot be append-mode), so a crash-replay rewrites its own
+    * partitions exactly-once and [[IndexMaintenance.append]] merges the
+    * fingerprint and `sum_dl` once per (tag, delta) pair, in one meta
+    * write. Post-condition (TermIndexSpec): topK == a fresh build over
+    * the union corpus. */
   def append(delta: DataFrame, idCol: String, textCol: String,
-             indexDir: String, tag: String = "append"): Unit = {
-    val s = delta.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
+             indexDir: String, tag: String = "append"): Unit =
     // xwrite (ADVICE r16): same-index appends must serialize — see the
-    // class doc; the meta commit below reads (oldFp, oldSumDl) from the
-    // lease entry, which only stays current while no sibling writer runs
-    IndexMaintenance.withLease(conf, indexDir, "xwrite") {
-      val root = IndexMaintenance.liveRoot(conf, indexDir)
-      val (nBuckets, oldFp, oldSumDl) = readMeta(s, root)
-      require(sanitize(tag) != "build",
-        s"TermIndex.append: tag '$tag' sanitizes to the reserved build " +
-          "generation name 'build' — its tag-scoped overwrite would " +
-          "destroy build rows; pass a batch-unique tag")
-      val dfp = Fingerprint.of(delta, Seq(idCol, textCol))
-      val replay = Fingerprint.wasApplied(conf, indexDir, tag, dfp)
-      require(replay || !Fingerprint.tagUsed(conf, indexDir, tag),
-        s"TermIndex.append: tag '$tag' was already used by a different " +
-          "batch; appends are tag-scoped dynamic overwrites, so reusing " +
-          "a tag would destroy the earlier batch's rows — pass a " +
-          "batch-unique tag")
-      LogicalDelete.requireNotTombstoned(s, indexDir,
-        delta.select(col(idCol)), idCol, "TermIndex.append")
-      val apTag = s"ap.${sanitize(tag)}"
-      // rmstate paths resolve through the normalized dir, the same
-      // convention as logicalRemove's state calls
-      val normDir = IndexMaintenance.normalize(indexDir)
-      // leftover commit state for a DIFFERENT delta refuses BEFORE any
-      // write: the tag-scoped writeSlice below would overwrite the
-      // crashed batch's staged partitions with the wrong batch's rows
-      // (spec-caught — the in-block check alone ran one write too late)
-      Fingerprint.readRemoveState(conf, normDir, apTag).foreach {
-        case (sdfp, _) =>
-          if (sdfp != dfp)
-            Fingerprint.refuse(
-              s"TermIndex.append: tag '$tag' has leftover append-commit " +
-                "state for a DIFFERENT batch (a crashed append under it " +
-                "never completed) — re-run that append with its original " +
-                "delta first")
-      }
+    // class doc; the meta commit merges into the meta read at lease
+    // entry, which only stays current while no sibling writer runs
+    IndexMaintenance.append(delta, indexDir, tag, "xwrite",
+        Seq(idCol, textCol), "term") { ctx =>
+      IndexMaintenance.admitOverwriteTag(ctx, tag, "TermIndex.append")
       val (tf, dl) = stats(delta, idCol, textCol)
-      writeSlice(tf, dl, idCol, root, src = sanitize(tag), nBuckets,
-        dynamic = true)
-      oldFp.foreach { o =>
-        val statePends =
-          Fingerprint.readRemoveState(conf, normDir, apTag).isDefined
-        if (Fingerprint.shouldMerge(conf, indexDir, tag, dfp) || statePends) {
-          // IDEMPOTENT meta commit (r16 review): the plain
-          // write-then-record ordering left a crash window where the
-          // replay merged the delta twice — tolerable when meta carried
-          // only the fingerprint (drift => spurious rebuild at the next
-          // ensure), SILENT mis-scoring now that topK serves (n_rows,
-          // sum_dl) from meta. The removal-commit machinery is reused
-          // with merge as the target op: state persists BEFORE the
-          // write, the write derives from persisted state under the
-          // interleaved-append addend rule, record + cleanup follow —
-          // every crash boundary replays to the same meta. sum_dl rides
-          // the same atomic write, its delta read off the tag's OWN
-          // just-written `_src` partition (pruned, O(delta), replay-
-          // stable: the dynamic overwrite rewrites it byte-for-byte).
-          Fingerprint.ensureAppendState(conf, normDir, apTag, dfp, o,
-            "TermIndex.append")
-          FaultInjection.maybeCrash("term.append.state")
-          Fingerprint.resolveRemovalMeta(conf, normDir, apTag, oldFp,
-            "TermIndex.append").foreach { fp =>
-            writeMeta(s, root, nBuckets, fp, oldSumDl.map(_ + sumDlOf(
-              s.read.parquet(s"$root/dl")
-                .filter(col("_src") === lit(sanitize(tag))))))
-          }
-          FaultInjection.maybeCrash("term.append.meta")
-          Fingerprint.recordMerge(conf, indexDir, tag, dfp)
-          FaultInjection.maybeCrash("term.append.record")
-          Fingerprint.clearRemoveState(conf, normDir, apTag)
-        }
-      }
-      Fingerprint.clearSourceStatus(conf, indexDir)
-      require(IndexMaintenance.liveRoot(conf, indexDir) == root,
-        s"TermIndex.append on $indexDir: index compacted during the " +
-          "append — re-run it after verifying no maintenance is racing")
+      writeSlice(tf, dl, idCol, ctx.root, src = sanitize(tag),
+        metaOf(ctx.meta)._1, dynamic = true)
+    } { (ctx, fp) =>
+      val s = delta.sparkSession
+      val (nBuckets, _, oldSumDl) = metaOf(ctx.meta)
+      // sum_dl rides the same meta write, its delta read off the tag's
+      // OWN just-written `_src` partition (pruned, O(delta), replay-
+      // stable: the dynamic overwrite rewrites it byte-for-byte)
+      writeMeta(s, ctx.root, nBuckets, fp, oldSumDl.map(_ + sumDlOf(
+        s.read.parquet(s"${ctx.root}/dl")
+          .filter(col("_src") === lit(sanitize(tag))))))
     }
-  }
 
   /** The victims' recomputed (tf, dl) under the frozen tokenizer, plus
     * their term/id bucket lists — a PURE function of the victims

@@ -57,7 +57,6 @@ object TextIndex {
             seed: Int = 42): Unit = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val s = docs.sparkSession
-    import s.implicits._
     val conf = s.sparkContext.hadoopConfiguration
     // write lease + live-root resolution: tables land in the current
     // data generation, and a racing compact() fails loudly (see
@@ -72,10 +71,8 @@ object TextIndex {
     bandRows(toks, idCol, numHashes, bands, nBuckets, seed)
       .withColumn("_src", lit("build")) // ingest provenance, see probe
       .write.mode("overwrite").partitionBy("hb").parquet(s"$root/bands")
-    val fp = Fingerprint.of(docs, Seq(idCol, textCol))
-    Seq((numHashes, bands, nBuckets, seed, fp._1, fp._2))
-      .toDF("num_hashes", "bands", "n_buckets", "seed", "n_rows", "content_hash")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
+    writeMeta(s, root, Params(numHashes, bands, nBuckets, seed),
+      Fingerprint.of(docs, Seq(idCol, textCol)))
     // a rebuild wiped the indexed rows: batch markers / merge records
     // from the previous build generation must not survive it
     Fingerprint.clearReplayState(conf, indexDir)
@@ -88,109 +85,69 @@ object TextIndex {
     }
   }
 
-  // root = resolved data root (IndexMaintenance.liveRoot), not the index dir
-  private def readMeta(s: SparkSession, root: String): (Int, Int, Int, Int) = {
-    val m = s.read.parquet(s"$root/meta").head()
-    (m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"),
-      m.getAs[Int]("n_buckets"), m.getAs[Int]("seed"))
-  }
+  /** The frozen hash-family parameters of one meta row. */
+  private final case class Params(numHashes: Int, bands: Int, nBuckets: Int,
+                                  seed: Int)
 
-  private def readFingerprint(s: SparkSession, root: String): Option[(Long, Long)] =
-    try {
-      val m = s.read.parquet(s"$root/meta").head()
-      Some((m.getAs[Long]("n_rows"), m.getAs[Long]("content_hash")))
-    } catch { case _: Exception => None } // absent/legacy meta => stale
+  private def params(m: org.apache.spark.sql.Row): Params =
+    Params(m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"),
+      m.getAs[Int]("n_buckets"), m.getAs[Int]("seed"))
+
+  // root = resolved data root (IndexMaintenance.liveRoot), not the index dir
+  private def readParams(s: SparkSession, root: String): Params =
+    params(s.read.parquet(s"$root/meta").head())
+
+  private def writeMeta(s: SparkSession, root: String, p: Params,
+                        fp: (Long, Long)): Unit = {
+    import s.implicits._
+    Seq((p.numHashes, p.bands, p.nBuckets, p.seed, fp._1, fp._2))
+      .toDF("num_hashes", "bands", "n_buckets", "seed", "n_rows", "content_hash")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
+  }
 
   /** Does the persisted index still describe THIS corpus? False when meta
-    * is absent / pre-fingerprint or the corpus was regenerated in place.
-    * The unchanged-corpus answer is O(files) FS metadata calls
-    * ([[Fingerprint.statusFresh]] — no Spark job); drift or a non-file
-    * corpus falls back to the content-hash authority: one column-pruned
-    * agg scan — cheap next to the 128-hashes-per-doc pass it guards.
-    * The fingerprint tracks the corpus OF RECORD: build corpus plus
-    * every [[append]]ed delta (merged in O(1); appends drop the status
-    * record, so the fast path only ever serves the pure-build case). */
+    * is absent / pre-fingerprint or the corpus was regenerated in place
+    * ([[IndexMaintenance.isFresh]]). The fingerprint tracks the corpus
+    * OF RECORD: build corpus plus every [[append]]ed delta. */
   def isFresh(s: SparkSession, indexDir: String, corpus: DataFrame,
               idCol: String, textCol: String): Boolean =
-    Fingerprint.statusFresh(indexDir, corpus) ||
-      readFingerprint(s,
-          IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir))
-        .contains(Fingerprint.of(corpus, Seq(idCol, textCol)))
+    IndexMaintenance.isFresh(s, indexDir, corpus, Seq(idCol, textCol))
 
   /** Build-once/probe-many entry: (re)build only when the index is absent
-    * or stale w.r.t. `docs`. */
+    * or stale w.r.t. `docs`. A pre-provenance index (no `_src` column)
+    * can't honor probe's excludeTag replay guard, so it counts as stale. */
   def ensure(docs: DataFrame, idCol: String, textCol: String, indexDir: String,
              numHashes: Int = 128, bands: Int = 16, nBuckets: Int = 64,
-             seed: Int = 42): Unit = {
-    val s = docs.sparkSession
-    val root = IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir)
-    val success = new org.apache.hadoop.fs.Path(s"$root/bands/_SUCCESS")
-    val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // a pre-provenance index (no _src column anywhere) can't honor
-    // probe's excludeTag replay guard — treat it as stale, don't infer
-    val hasSrc =
-      try s.read.parquet(s"$root/bands").schema.fieldNames.contains("_src")
-      catch { case _: Exception => false }
-    if (!fs.exists(success) || !hasSrc ||
-        !isFresh(s, indexDir, docs, idCol, textCol))
+             seed: Int = 42): Unit =
+    IndexMaintenance.ensureFresh(docs, indexDir, Seq(idCol, textCol), "bands",
+      root => !IndexMaintenance.hasColumn(docs.sparkSession, s"$root/bands", "_src")) {
       build(docs, idCol, textCol, indexDir, numHashes, bands, nBuckets, seed)
-  }
+    }
 
   /** O(|delta|) maintenance: sign a new dump with the index's FROZEN
     * parameters and append its rows to both tables; the meta fingerprint
-    * absorbs the delta in O(1) so [[isFresh]] keeps working. `tag` is
+    * absorbs the delta once per (tag, delta) pair
+    * ([[IndexMaintenance.append]]) so [[isFresh]] keeps working. `tag` is
     * the ingest-provenance label stored on the band rows — pass a
     * batch-unique value to make a probe-then-append loop replayable
-    * (see [[probe]]'s excludeTag). */
+    * (see [[probe]]'s excludeTag); a replay re-appends its rows, which
+    * probe semantics tolerate. */
   def append(delta: DataFrame, idCol: String, textCol: String,
-             indexDir: String, tag: String = "append"): Unit = {
-    val s = delta.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    // write lease: a compact() racing this append fails loudly at its
-    // own acquire instead of retiring the generation mid-append
-    IndexMaintenance.withLease(conf, indexDir, "write") {
-    val root = IndexMaintenance.liveRoot(conf, indexDir)
-    val (numHashes, bands, nBuckets, seed) = readMeta(s, root)
-    val old = readFingerprint(s, root)
-    // a tombstoned id is dead until compact() reclaims: re-ingesting it
-    // would be hidden by the id-scoped anti-join and then wrongly
-    // dropped by the reclaim filter (see [[LogicalDelete]])
-    LogicalDelete.requireNotTombstoned(s, indexDir,
-      delta.select(col(idCol)), idCol, "TextIndex.append")
-    val toks = delta
-      .select(col(idCol), Dedup.hashedTokenSet(col(textCol)).as("_toks"))
-      .localCheckpoint()
-    tokRows(toks, idCol, nBuckets)
-      .write.mode("append").partitionBy("idb").parquet(s"$root/toks")
-    bandRows(toks, idCol, numHashes, bands, nBuckets, seed)
-      .withColumn("_src", lit(tag))
-      .write.mode("append").partitionBy("hb").parquet(s"$root/bands")
-    import s.implicits._
-    old.foreach { o =>
-      // idempotent per batch (ADVICE r9): a crash-replayed append presents
-      // the same (tag, delta fingerprint) pair — its rows re-append (probe
-      // semantics tolerate duplicates) but the fingerprint must merge ONCE
-      // or meta drifts from the corpus of record forever
-      val dfp = Fingerprint.of(delta, Seq(idCol, textCol))
-      if (Fingerprint.shouldMerge(conf, indexDir, tag, dfp)) {
-        val fp = Fingerprint.merge(o, dfp)
-        Seq((numHashes, bands, nBuckets, seed, fp._1, fp._2))
-          .toDF("num_hashes", "bands", "n_buckets", "seed", "n_rows", "content_hash")
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
-        Fingerprint.recordMerge(conf, indexDir, tag, dfp)
-      }
+             indexDir: String, tag: String = "append"): Unit =
+    IndexMaintenance.append(delta, indexDir, tag, "write",
+        Seq(idCol, textCol), "text") { ctx =>
+      val p = params(ctx.meta)
+      val toks = delta
+        .select(col(idCol), Dedup.hashedTokenSet(col(textCol)).as("_toks"))
+        .localCheckpoint()
+      tokRows(toks, idCol, p.nBuckets)
+        .write.mode("append").partitionBy("idb").parquet(s"${ctx.root}/toks")
+      bandRows(toks, idCol, p.numHashes, p.bands, p.nBuckets, p.seed)
+        .withColumn("_src", lit(tag))
+        .write.mode("append").partitionBy("hb").parquet(s"${ctx.root}/bands")
+    } { (ctx, fp) =>
+      writeMeta(delta.sparkSession, ctx.root, params(ctx.meta), fp)
     }
-    // build-time file statuses no longer describe the corpus of
-    // record: freshness reverts to the content-hash authority
-    Fingerprint.clearSourceStatus(conf, indexDir)
-    // behind the lease this cannot fire; it guards the broke-stale-leases
-    // case (see ClusterIndex.append)
-    require(IndexMaintenance.liveRoot(conf, indexDir) == root,
-      s"TextIndex.append on $indexDir: index compacted to a new generation " +
-        s"during the append; rows landed in the retired tree $root — re-run " +
-        "the append after verifying no maintenance is racing")
-    }
-  }
 
   /** Index-side targeted DELETE (VERDICT r10 item 1): drop `victims`
     * from both tables so probes stop matching right-to-be-forgotten
@@ -212,8 +169,9 @@ object TextIndex {
     val s = victims.sparkSession
     val conf = ctx.conf
     val root = ctx.root
-    val (numHashes, bandCount, nBuckets, seed) = readMeta(s, root)
-    val oldFp = readFingerprint(s, root)
+    val m = s.read.parquet(s"$root/meta").head()
+    val Params(numHashes, bandCount, nBuckets, seed) = params(m)
+    val oldFp = IndexMaintenance.fingerprintOf(m)
     // pending logical deletions must reclaim first (their victims would
     // read as indexed rows here) — see [[LogicalDelete]]
     LogicalDelete.requireNonePending(conf, ctx.indexDir, "TextIndex.remove")
@@ -307,12 +265,7 @@ object TextIndex {
       if (!vhbFs.exists(vhbMarker)) vhbFs.create(vhbMarker, true).close()
       FaultInjection.maybeCrash("text.state")
       Fingerprint.resolveRemovalMeta(conf, ctx.indexDir, ctx.rmTag, oldFp,
-        "TextIndex.remove").foreach { fp =>
-        import s.implicits._
-        Seq((numHashes, bandCount, nBuckets, seed, fp._1, fp._2))
-          .toDF("num_hashes", "bands", "n_buckets", "seed", "n_rows", "content_hash")
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
-      }
+        "TextIndex.remove").foreach(writeMeta(s, root, params(m), _))
       FaultInjection.maybeCrash("text.meta")
       if (!ctx.replay) Fingerprint.recordMerge(conf, ctx.indexDir, ctx.rmTag, ctx.vfp)
       FaultInjection.maybeCrash("text.record")
@@ -361,11 +314,11 @@ object TextIndex {
     IndexMaintenance.removal(victims, indexDir, tag, Seq(idCol, textCol),
         "TextIndex.logicalRemove") { ctx =>
     val s = victims.sparkSession
-    import s.implicits._
     val conf = ctx.conf
     val root = ctx.root
-    val (numHashes, bandCount, nBuckets, seed) = readMeta(s, root)
-    val oldFp = readFingerprint(s, root)
+    val m = s.read.parquet(s"$root/meta").head()
+    val Params(numHashes, bandCount, nBuckets, seed) = params(m)
+    val oldFp = IndexMaintenance.fingerprintOf(m)
     val vids = victims.select(col(idCol)).distinct().localCheckpoint()
     val nV = vids.count()
     if (nV > 0L && !ctx.completedReplay) {
@@ -406,11 +359,7 @@ object TextIndex {
         ctx.replay, oldFp, "TextIndex.logicalRemove")
       FaultInjection.maybeCrash("text.logical.state")
       Fingerprint.resolveRemovalMeta(conf, ctx.indexDir, ctx.rmTag, oldFp,
-        "TextIndex.logicalRemove").foreach { fp =>
-        Seq((numHashes, bandCount, nBuckets, seed, fp._1, fp._2))
-          .toDF("num_hashes", "bands", "n_buckets", "seed", "n_rows", "content_hash")
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
-      }
+        "TextIndex.logicalRemove").foreach(writeMeta(s, root, params(m), _))
       FaultInjection.maybeCrash("text.logical.meta")
       if (!ctx.replay) Fingerprint.recordMerge(conf, ctx.indexDir, ctx.rmTag, ctx.vfp)
       FaultInjection.maybeCrash("text.logical.record")
@@ -449,7 +398,7 @@ object TextIndex {
             threshold: Double = 0.8,
             excludeTag: Option[String] = None): DataFrame = {
     val root = IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir)
-    val (numHashes, bands, nBuckets, seed) = readMeta(s, root)
+    val Params(numHashes, bands, nBuckets, seed) = readParams(s, root)
     val incToks = incoming
       .select(col(idCol), Dedup.hashedTokenSet(col(textCol)).as("_toks"))
       .localCheckpoint()

@@ -84,47 +84,28 @@ object VectorIndex {
       .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
   }
 
-  private def readMeta(s: SparkSession, root: String): Option[(Long, Long)] =
-    try {
-      val m = s.read.parquet(s"$root/meta").head()
-      Some((m.getAs[Long]("n_rows"), m.getAs[Long]("content_hash")))
-    } catch { case _: Exception => None } // absent/legacy meta => stale
-
   /** Does the persisted index still describe THIS corpus? False when the
     * meta row is absent (pre-fingerprint index) or the corpus fingerprint
-    * drifted — e.g. the source parquet was regenerated in place. The
-    * unchanged-corpus answer is O(files) FS METADATA calls (build-time
-    * source statuses + plan hash, [[Fingerprint.statusFresh]] — no Spark
-    * job, no data bytes); any drift or a non-file corpus falls back to
-    * the content-hash authority: one column-pruned agg scan, still far
-    * cheaper than the quantizer training pass it guards. */
+    * drifted — e.g. the source parquet was regenerated in place
+    * ([[IndexMaintenance.isFresh]]); far cheaper than the quantizer
+    * training pass it guards. */
   def isFresh(s: SparkSession, indexDir: String, corpus: DataFrame,
               corpusId: String = "vec_id",
               corpusVec: String = "embedding"): Boolean =
-    Fingerprint.statusFresh(indexDir, corpus) ||
-      readMeta(s,
-          IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir))
-        .contains(Fingerprint.of(corpus, Seq(corpusId, corpusVec)))
+    IndexMaintenance.isFresh(s, indexDir, corpus, Seq(corpusId, corpusVec))
 
   /** Build-once/query-many entry: (re)build only when the index is
-    * absent or its fingerprint no longer matches the corpus. */
+    * absent or its fingerprint no longer matches the corpus. A
+    * pre-provenance index (no `_src` column) can't honor probeDups'
+    * excludeTag replay guard, so it counts as stale. */
   def ensure(corpus: DataFrame, indexDir: String,
              nlist: Int = Similarity.AutoNlist,
              iters: Int = 2, seed: Long = 42L,
-             corpusId: String = "vec_id", corpusVec: String = "embedding"): Unit = {
-    val s = corpus.sparkSession
-    val root = IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir)
-    val success = new org.apache.hadoop.fs.Path(s"$root/cells/_SUCCESS")
-    val fs = success.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // a pre-provenance index (no _src column anywhere) can't honor
-    // probeDups' excludeTag replay guard — treat it as stale
-    val hasSrc =
-      try s.read.parquet(s"$root/cells").schema.fieldNames.contains("_src")
-      catch { case _: Exception => false }
-    if (!fs.exists(success) || !hasSrc ||
-        !isFresh(s, indexDir, corpus, corpusId, corpusVec))
+             corpusId: String = "vec_id", corpusVec: String = "embedding"): Unit =
+    IndexMaintenance.ensureFresh(corpus, indexDir, Seq(corpusId, corpusVec), "cells",
+      root => !IndexMaintenance.hasColumn(corpus.sparkSession, s"$root/cells", "_src")) {
       build(corpus, indexDir, nlist, iters, seed, corpusId, corpusVec)
-  }
+    }
 
   /** Incremental maintenance: assign NEW vectors to the EXISTING
     * quantizer and append them to their cell partitions — O(|delta|),
@@ -133,74 +114,47 @@ object VectorIndex {
     * orphan every already-assigned cell); as the corpus drifts, recall
     * degrades gracefully until a periodic [[build]] re-clusters — the
     * standard IVF operating procedure. Appended vectors are immediately
-    * visible to [[topK]] because cells are plain parquet partitions. */
+    * visible to [[topK]] because cells are plain parquet partitions. The
+    * meta fingerprint absorbs the delta once per (tag, delta) pair
+    * ([[IndexMaintenance.append]]). */
   def append(delta: DataFrame, indexDir: String,
              corpusId: String = "vec_id",
              corpusVec: String = "embedding",
-             tag: String = "append"): Unit = {
-    val s = delta.sparkSession
-    val conf = s.sparkContext.hadoopConfiguration
-    // write lease: a compact() racing this append fails loudly at its
-    // own acquire instead of retiring the generation mid-append
-    IndexMaintenance.withLease(conf, indexDir, "write") {
-    val root = IndexMaintenance.liveRoot(conf, indexDir)
-    val centroids = loadCentroidsFromRoot(s, root)
-    // a tombstoned id is dead until compact() reclaims: re-ingesting it
-    // would be hidden by the id-scoped anti-join and then wrongly
-    // dropped by the reclaim filter (see [[LogicalDelete]])
-    LogicalDelete.requireNotTombstoned(s, indexDir,
-      delta.select(col(corpusId)), corpusId, "VectorIndex.append")
-    delta
-      .withColumn("cell", Similarity.nearestCentroid(col(corpusVec), centroids))
-      .withColumn("norm", VectorOps.norm(col(corpusVec)))
-      .withColumn("_src", lit(tag))
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$root/cells")
-    // keep the staleness fingerprint in step: merge the delta in O(1) —
-    // once per (tag, delta) pair, so a crash-replayed append (ADVICE r9)
-    // can't drift meta away from the corpus of record
-    readMeta(s, root).foreach { old =>
-      val dfp = Fingerprint.of(delta, Seq(corpusId, corpusVec))
-      if (Fingerprint.shouldMerge(conf, indexDir, tag, dfp)) {
-        writeMeta(s, root, Fingerprint.merge(old, dfp))
-        Fingerprint.recordMerge(conf, indexDir, tag, dfp)
+             tag: String = "append"): Unit =
+    IndexMaintenance.append(delta, indexDir, tag, "write",
+        Seq(corpusId, corpusVec), "vector") { ctx =>
+      val centroids = loadCentroidsFromRoot(delta.sparkSession, ctx.root)
+      delta
+        .withColumn("cell", Similarity.nearestCentroid(col(corpusVec), centroids))
+        .withColumn("norm", VectorOps.norm(col(corpusVec)))
+        .withColumn("_src", lit(tag))
+        .write.mode("append").partitionBy("cell")
+        .parquet(s"${ctx.root}/cells")
+      // ---- recall-drift probe (r15, VERDICT r14 item 4): measure how
+      // well the FROZEN quantizer fits THIS batch's distribution, so
+      // IndexAdmin --advise can see the one verb it previously couldn't —
+      // retrain(). Bounded by construction: one TakeOrdered of the delta
+      // (<= recallSampleSize rows reach the driver) and O(S x R x dim)
+      // driver flops; a measurement failure must never fail the ingest.
+      try {
+        val sample = delta.select(col(corpusId), col(corpusVec))
+          .orderBy(col(corpusId)).limit(recallSampleSize)
+          .collect()
+          .map(_.getSeq[Any](1).map {
+            case f: Float => f.toDouble
+            case d: Double => d
+            case n: Number => n.doubleValue()
+          }.toArray)
+        selfRecall(sample, centroids).foreach { rec =>
+          writeRecallProbe(ctx.conf, ctx.indexDir, tag, rec, sample.length)
+        }
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(
+            s"[VectorIndex.append] recall probe failed (ingest unaffected): " +
+              s"${e.getMessage}")
       }
-    }
-    // ---- recall-drift probe (r15, VERDICT r14 item 4): measure how
-    // well the FROZEN quantizer fits THIS batch's distribution, so
-    // IndexAdmin --advise can see the one verb it previously couldn't —
-    // retrain(). Bounded by construction: one TakeOrdered of the delta
-    // (<= recallSampleSize rows reach the driver) and O(S x R x dim)
-    // driver flops; a measurement failure must never fail the ingest.
-    try {
-      val sample = delta.select(col(corpusId), col(corpusVec))
-        .orderBy(col(corpusId)).limit(recallSampleSize)
-        .collect()
-        .map(_.getSeq[Any](1).map {
-          case f: Float => f.toDouble
-          case d: Double => d
-          case n: Number => n.doubleValue()
-        }.toArray)
-      selfRecall(sample, centroids).foreach { rec =>
-        writeRecallProbe(conf, indexDir, tag, rec, sample.length)
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(
-          s"[VectorIndex.append] recall probe failed (ingest unaffected): " +
-            s"${e.getMessage}")
-    }
-    // build-time file statuses no longer describe the corpus of
-    // record: freshness reverts to the content-hash authority
-    Fingerprint.clearSourceStatus(conf, indexDir)
-    // behind the lease this cannot fire; it guards the broke-stale-leases
-    // case (see ClusterIndex.append)
-    require(IndexMaintenance.liveRoot(conf, indexDir) == root,
-      s"VectorIndex.append on $indexDir: index compacted to a new " +
-        s"generation during the append; rows landed in the retired tree " +
-        s"$root — re-run the append after verifying no maintenance is racing")
-    }
-  }
+    } { (ctx, fp) => writeMeta(delta.sparkSession, ctx.root, fp) }
 
   /** The persisted quantizer, reassembled in cell order (bounded read:
     * nlist x dim rows). */
@@ -419,7 +373,7 @@ object VectorIndex {
     val s = victims.sparkSession
     val (conf, normDir, root) = (ctx.conf, ctx.indexDir, ctx.root)
     val centroids = loadCentroidsFromRoot(s, root)
-    val oldFp = readMeta(s, root)
+    val oldFp = IndexMaintenance.metaFingerprint(s, root)
     // pending logical deletions must reclaim first — see [[LogicalDelete]]
     LogicalDelete.requireNonePending(conf, normDir, "VectorIndex.remove")
     val pinned = victims
@@ -501,7 +455,7 @@ object VectorIndex {
     val s = victims.sparkSession
     val (conf, normDir, root) = (ctx.conf, ctx.indexDir, ctx.root)
     val centroids = loadCentroidsFromRoot(s, root)
-    val oldFp = readMeta(s, root)
+    val oldFp = IndexMaintenance.metaFingerprint(s, root)
     val pinned = victims
       .withColumn("cell", Similarity.nearestCentroid(col(corpusVec), centroids))
       .select(col(corpusId), col("cell")).distinct().localCheckpoint()

@@ -825,7 +825,7 @@ object S4Stream {
     // exists() — the isEmpty action (a job over the batch source) only
     // runs for batches that still need applying
     appliedOnce(s, indexDir, runKey, batchId) {
-      // recordMerge is append's LAST meta action and the lake write
+      // recordMerge is append's commit point and the lake write
       // precedes the append, so a RECORDED tag proves this batch fully
       // committed everything except its marker. The replay must then be
       // a pure no-op to the marker: the index may have changed since
@@ -1252,10 +1252,14 @@ object S4Stream {
     if (graft.operators.Rtbf.manifestCommitted(conf, t.lakeDir, tag)) {
       // crash AFTER the snapshot committed: the manifest owns the
       // victim set — re-tombstone from it (idempotent overwrite; also
-      // restores a refusal's rollback for the retry), then resume
-      val (vic, vecVic) = graft.operators.Rtbf.manifestVictims(s, t.lakeDir, tag)
-      tombstone(Some(vic), vecVic)
-      runPurge(s, t, tag, vic = None, vecVic = None)
+      // restores a refusal's rollback for the retry), then resume. A
+      // purge that COMPLETED and marked every index replays as a no-op:
+      // no victim snapshot read, no re-tombstone, no agreement job.
+      if (!purgeSettled(conf, t, tag)) {
+        val (vic, vecVic) = graft.operators.Rtbf.manifestVictims(s, t.lakeDir, tag)
+        tombstone(Some(vic), vecVic)
+        runPurge(s, t, tag, vic = None, vecVic = None)
+      }
     } else if (!batch.isEmpty) {
       val ids = batch.select(col(t.idCol)).distinct().localCheckpoint()
       val n = ids.count()
@@ -1290,6 +1294,20 @@ object S4Stream {
           logical = logical)
       } else tombstone(None, None) // a content-carrying feed's own rows
     }
+  }
+
+  /** `tag`'s purge is COMPLETE with every planned store done, and every
+    * targeted index holds its `applied/<tag>` marker — the last write of
+    * [[runPurge]]. Pure FS metadata. */
+  private def purgeSettled(conf: org.apache.hadoop.conf.Configuration,
+      t: graft.operators.RtbfTargets, tag: String): Boolean = {
+    val safe = graft.operators.Fingerprint.sanitizeTag(tag)
+    graft.operators.Rtbf.status(conf, t.lakeDir).find(_.tag == safe)
+      .exists(st => st.complete && st.incomplete.isEmpty) &&
+      indexStores(t).forall { case (dir, _) =>
+        val marker = new org.apache.hadoop.fs.Path(s"$dir/applied/$safe")
+        marker.getFileSystem(conf).exists(marker)
+      }
   }
 
   /** (index dir, [[graft.operators.Rtbf]] store name) of every targeted

@@ -41,6 +41,34 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** Spark jobs started by `body`, counted by a listener over the job
+    * group `body` runs under; a sentinel job in a second group flushes
+    * the listener queue before the count is read. */
+  private def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => n.incrementAndGet()
+          case Some(g) if g == s"$group-flush" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-flush", "listener flush")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      n.get
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** The run key of the one purge recorded under `lake` (its batch 0). */
   private def purgeRunKey(lake: Path): String = Rtbf
     .status(spark.sparkContext.hadoopConfiguration, lake.toString)
@@ -543,10 +571,12 @@ class StreamingSpec extends SparkSpec {
         "doc_id", "text"), "fingerprint must subtract the victims exactly")
     }
     converged()
-    // the completed batch replays (its checkpoint commit lost): it
-    // resumes from the manifest, never re-resolving the scrubbed lake
-    S4Stream.processRtbfPurgeBatch(Seq(101L, 103L).toDF("doc_id"), 0L, t,
-      purgeRunKey(lake))
+    // the completed batch replays (its checkpoint commit lost): its purge
+    // is COMPLETE and every index holds the applied/ marker, so the
+    // replay is a no-op — no victim-snapshot read and no agreement job
+    val replayJobs = jobsIn(S4Stream.processRtbfPurgeBatch(
+      Seq(101L, 103L).toDF("doc_id"), 0L, t, purgeRunKey(lake)))
+    assert(replayJobs == 0, s"a settled purge's replay ran $replayJobs Spark jobs")
     converged()
     // operator retention: pruning every tombstone unblocks even a
     // byte-identical re-ingest of the once-forgotten content

@@ -249,52 +249,6 @@ class TermIndexSpec extends SparkSpec {
     finally spark.conf.unset("graft.term.checkStats")
   }
 
-  test("append crash matrix: meta stats exactly-once at every boundary (r16 review)") {
-    import graft.operators.FaultInjection
-    // the review-found regression: a crash between the meta write and
-    // recordMerge used to double-merge (n_rows, sum_dl) on replay —
-    // silent mis-scoring now that topK serves stats from meta. The
-    // append commit is idempotent via the removal-state machinery; each
-    // boundary below must replay to survivor-exact stats, INCLUDING
-    // with another append interleaved across the crash.
-    Seq("term.append.state", "term.append.meta", "term.append.record")
-      .foreach { step =>
-        val dir = tmpIdx("term_ac")
-        val (seed, rest) = corpus.splitAt(5)
-        TermIndex.build(seed.toDF("doc_id", "text"), "doc_id", "text", dir)
-        intercept[FaultInjection.InjectedCrash] {
-          FaultInjection.armed(step)(
-            TermIndex.append(rest.toDF("doc_id", "text"), "doc_id", "text",
-              dir, tag = "c1"))
-        }
-        // a DIFFERENT batch under the crashed tag refuses loudly
-        val ex = intercept[IllegalArgumentException] {
-          TermIndex.append(Seq((77L, "other batch")).toDF("doc_id", "text"),
-            "doc_id", "text", dir, tag = "c1")
-        }
-        assert(ex.getMessage.contains("DIFFERENT") ||
-          ex.getMessage.contains("already used"), s"[$step] ${ex.getMessage}")
-        // an append under ANOTHER tag lands while c1's commit pends
-        val late = Seq((40L, "fresh interleaved doc"))
-        TermIndex.append(late.toDF("doc_id", "text"), "doc_id", "text", dir,
-          tag = "c2")
-        // the replay converges exactly-once despite the interleave
-        TermIndex.append(rest.toDF("doc_id", "text"), "doc_id", "text", dir,
-          tag = "c1")
-        assert(metaStats(dir) === storedStats(dir), s"[$step] stats drifted")
-        val fresh = tmpIdx("term_acf")
-        TermIndex.build((corpus ++ late).toDF("doc_id", "text"),
-          "doc_id", "text", fresh)
-        spark.conf.set("graft.term.checkStats", "true")
-        try assert(collectTopK(dir, queries) === collectTopK(fresh, queries),
-          s"[$step] replayed index != fresh union build")
-        finally spark.conf.unset("graft.term.checkStats")
-        assert(TermIndex.isFresh(spark, dir,
-          (corpus ++ late).toDF("doc_id", "text"), "doc_id", "text"),
-          s"[$step] fingerprint drifted across the crash window")
-      }
-  }
-
   test("remove: physical verb == fresh build on survivors, value-exact; rows leave disk; replay no-ops; wrong content refuses (r17)") {
     val dir = tmpIdx("term_rm")
     val conf = spark.sparkContext.hadoopConfiguration
