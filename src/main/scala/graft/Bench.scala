@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
 
 /** Driver-run benchmark: times every SparkEntry query at the requested SF.
   *
@@ -50,7 +49,7 @@ object Bench {
     else {
       val body = json.substring(start + s""""$field":{""".length,
         json.indexOf('}', start))
-      raw""""([A-Za-z0-9_]+)":([0-9.Ee+-]+)""".r.findAllMatchIn(body)
+      raw""""([A-Za-z0-9_.]+)":([0-9.Ee+-]+)""".r.findAllMatchIn(body)
         .flatMap(m => scala.util.Try(m.group(1) -> m.group(2).toDouble).toOption)
         .toMap
     }
@@ -64,8 +63,7 @@ object Bench {
     * (VERDICT r14 item 8: the leg maps had no prior-archive comparison,
     * so a regression inside one leg of a stable-total row still hid). */
   private[graft] def parseLegMins(json: String): Map[String, Double] =
-    Seq("takedown_legs", "takedown_legs_logical", "takedown_legs_term",
-        "takedown_legs_rtbf", "takedown_legs_rtbf_logical", "rrf_legs")
+    legFields.map(_._2)
       .flatMap(f =>
         parseFlatObject(json, f).map { case (k, v) => s"$f.$k" -> v }).toMap
 
@@ -107,48 +105,45 @@ object Bench {
   private[graft] def isMaintenance(name: String): Boolean =
     name.matches(".*_index_(logical_)?remove$") || name.startsWith("rtbf_")
 
-  /** Min-of-3 per leg for a composed takedown query, plus "serve" = run
-    * total minus recorded legs — only when runs and leg maps align 1:1
-    * (a re-run that failed at the count() recorded its legs without
-    * contributing a total; zipping the shortened list would attribute
-    * one run's legs to another's total — review-caught r13). */
-  private[graft] def legSplitJson(legRuns: Seq[Map[String, Double]],
-                                  totals: Seq[Double]): String =
-    if (legRuns.isEmpty) "{}"
+  /** The rows whose phases ([[Phases]]) the artifact publishes, and the
+    * field each lands in (VERDICT r12 item 4 onward: a driver-side
+    * regression in a composed row names its phase instead of hiding in
+    * one conflated number). */
+  private[graft] val legFields = Seq(
+    "doc_cluster_index_remove" -> "takedown_legs",
+    "doc_cluster_index_logical_remove" -> "takedown_legs_logical",
+    "doc_term_index_remove" -> "takedown_legs_term",
+    "rtbf_purge_e2e" -> "takedown_legs_rtbf",
+    "rtbf_purge_logical" -> "takedown_legs_rtbf_logical",
+    "doc_rrf_fusion_indexed" -> "rrf_legs")
+
+  /** One leg field from a row's successful timed runs, each its wall
+    * total and phase record: the min over runs of every phase (a phase
+    * missing from some runs takes the min over the runs that have it),
+    * plus "serve" = the min over runs of total minus that run's
+    * TOP-LEVEL phases. Nested phases (depth > 0, e.g. the `rm_*`
+    * windows inside index_remove) attribute inside their parent's wall;
+    * counting them in the serve subtraction would double-book it. */
+  private[graft] def legSplitJson(runs: Seq[(Double, Map[String, Phases.Phase])]): String =
+    if (runs.forall(_._2.isEmpty)) "{}"
     else {
-      val keys = legRuns.head.keys.toSeq
-      // rm_* entries are SUB-legs nested inside index_remove's wall
-      // (VERDICT r16 item 2) — they attribute, they don't add; counting
-      // them in the serve subtraction would double-book that time
-      val serveRuns =
-        if (totals.size == legRuns.size)
-          totals.zip(legRuns).map { case (t, m) =>
-            math.max(0.0, t - m.collect {
-              case (k, v) if !k.startsWith("rm_") => v
-            }.sum)
-          }
-        else Seq.empty
-      (keys.map(k => k -> legRuns.map(_(k)).min) ++
-        (if (serveRuns.nonEmpty) Seq("serve" -> serveRuns.min) else Nil))
+      val keys = runs.flatMap(_._2.keys).distinct
+      val serve = runs.map { case (t, ph) =>
+        math.max(0.0, t - ph.values.filter(_.depth == 0).map(_.seconds).sum)
+      }.min
+      (keys.map(k => k -> runs.flatMap(_._2.get(k)).map(_.seconds).min) :+
+        ("serve" -> serve))
         .map { case (k, v) => s""""$k":${f"$v%.3f"}""" }
         .mkString("{", ",", "}")
     }
 
-  /** Per-query task metrics: max single-task peak execution memory and
-    * summed JVM GC time across the query's tasks. */
-  private final class MetricsListener extends SparkListener {
-    @volatile var peakExecMem: Long = 0L
-    @volatile var gcTimeMs: Long = 0L
-    @volatile var shuffleWriteBytes: Long = 0L
-    def reset(): Unit = { peakExecMem = 0L; gcTimeMs = 0L; shuffleWriteBytes = 0L }
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        peakExecMem = math.max(peakExecMem, m.peakExecutionMemory)
-        gcTimeMs += m.jvmGCTime
-        shuffleWriteBytes += m.shuffleWriteMetrics.bytesWritten
-      }
-    }
+  /** One row's timed runs (wall seconds and phases; a retry carries no
+    * phases) and the first run's attribution metrics. */
+  private final case class Row(name: String, ok: Boolean,
+                               runs: Seq[(Double, Map[String, Phases.Phase])],
+                               peakMb: Double, gcMs: Long, storMb: Double,
+                               shufMb: Double) {
+    def times: Seq[Double] = runs.map(_._1)
   }
 
   def main(args: Array[String]): Unit = {
@@ -160,33 +155,9 @@ object Bench {
     // retry machinery, never clobbering the driver's sf0.1 artifact.
     // The driver never sets it, so the headline contract is unchanged.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r18 opt (guide §6, file listing): the index tables are 64-dir
-      // partitioned parquet, and the default threshold (32) makes every
-      // read of them schedule a distributed listing JOB (~0.1 s of pure
-      // overhead each; the removal protocols re-resolve such relations
-      // a dozen times per call). Listing ≤1024 dirs on the driver's
-      // thread pool is faster on any filesystem; beyond 1024 dirs the
-      // distributed listing still kicks in, so the 100 TB posture
-      // (thousands of partitions on an object store) is unchanged.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-      // r19 (VERDICT r18 item 1): in-process NIO permissions for the
-      // local scheme — stock RawLocalFileSystem forks a chmod per
-      // created dir/file, a fixed cost on every one of the maintenance
-      // band's many small writes and an outright fork-failure under
-      // late-run memory/PID pressure. file:// only; HDFS/object-store
-      // deployments never route through it.
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.NoForkLocalFileSystem].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(Some(cpus.toInt), logLevel = "ERROR")
     val sc = spark.sparkContext
-    val listener = new MetricsListener
+    val listener = new WorkListener
     sc.addSparkListener(listener)
 
     /** Storage memory held by cached/checkpointed RDD blocks right now. */
@@ -265,14 +236,6 @@ object Bench {
       selected.view.filterKeys(_.startsWith("scan_")).values
         .foreach(fn => fn(spark, sfDir).count()))
     dropPersistedBlocks()
-    // takedown leg attribution (VERDICT r12 item 4, r13 item 2): drop
-    // warmup entries so the per-run leg maps align 1:1 with timed runs
-    graft.queries.TextPipeline.removeLegRuns.clear()
-    graft.queries.TextPipeline.logicalLegRuns.clear()
-    graft.queries.TextPipeline.termLegRuns.clear()
-    graft.queries.RtbfE2e.rtbfLegRuns.clear()
-    graft.queries.RtbfE2e.rtbfLogicalLegRuns.clear()
-    graft.queries.TextPipeline.rrfLegRuns.clear()
     // prior artifact's per-query mins, read BEFORE this run overwrites
     // it — feeds the suspect_noise annotation (VERDICT r13 item 1).
     // Only comparable at the SAME scale factor: a dev smoke at sf0.001
@@ -296,16 +259,24 @@ object Bench {
     // comparable statistic across rounds (noise only ever adds time).
     // Attribution metrics (peak exec mem / GC / shuffle write) come from
     // the first run; all three raw times + min + median are archived.
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      listener.reset()
+    // One run of a row under a fresh phase recorder (Phases): its wall
+    // seconds, and its phases unless it failed — a failure is logged
+    // loudly and contributes no phases.
+    def runOnce(name: String, label: String)
+        : (Double, Option[ListMap[String, Phases.Phase]]) = {
       val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
+      val phases =
+        try Some(Phases.record(selected(name)(spark, sfDir).count())._2)
         catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          false
+          System.err.println(s"[bench] $name$label FAILED: " +
+            s"${e.getClass.getSimpleName}: ${e.getMessage}")
+          None
         }
-      val first = (System.nanoTime() - t0) / 1e9
+      ((System.nanoTime() - t0) / 1e9, phases)
+    }
+    val results = selected.keys.toSeq.sorted.map { name =>
+      listener.reset()
+      val (first, firstPhases) = runOnce(name, "")
       val storMb = storageBytes() / 1e6
       val peakMb = listener.peakExecMem / 1e6
       val gcMs = listener.gcTimeMs
@@ -315,80 +286,40 @@ object Bench {
       // otherwise become the min and report a broken query as fast —
       // the exact masquerade the failed:[] contract forbids); it is
       // logged loudly and the min falls back to the successful runs
-      val runs = first +: (if (ok) (1 to 2).flatMap { i =>
-        val r0 = System.nanoTime()
-        val okRun =
-          try { fn(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name re-run $i FAILED: " +
-              s"${e.getClass.getSimpleName}: ${e.getMessage}")
-            false
-          }
-        val sec = (System.nanoTime() - r0) / 1e9
+      val reruns = if (firstPhases.isEmpty) Seq.empty else (1 to 2).flatMap { i =>
+        val (sec, phases) = runOnce(name, s" re-run $i")
         dropPersistedBlocks()
-        if (okRun) Some(sec) else None
-      } else Seq.empty)
-      (name, ok, runs, peakMb, gcMs, storMb, shufMb)
+        phases.map(sec -> _)
+      }
+      Row(name, firstPhases.nonEmpty,
+        (first -> firstPhases.getOrElse(ListMap.empty)) +: reruns,
+        peakMb, gcMs, storMb, shufMb)
     }
     // csv round-trip attribution (VERDICT r5 item 9): the query's cost is
     // dominated by the gzip WRITE (the operator under test), which the
     // single timing above can't show — time the two halves separately.
     // Skipped when a BENCH_ONLY subset doesn't include the query.
     val csvSplit = if (!selected.contains("scan_csv_roundtrip")) """{}""" else try {
-      val w0 = System.nanoTime()
       // force = true: stage-once would make this a marker-check no-op on
       // a warmed box and write_s would silently measure nothing
-      val path = graft.queries.Scans.csvWrite(spark, sfDir, force = true)
-      val wS = (System.nanoTime() - w0) / 1e9
-      val r0 = System.nanoTime()
-      graft.queries.Scans.csvRead(spark, path).count()
-      val rS = (System.nanoTime() - r0) / 1e9
-      f"""{"write_s":$wS%.3f,"read_s":$rS%.3f}"""
+      val (_, ph) = Phases.record {
+        val path = Phases.time("write_s")(graft.queries.Scans.csvWrite(spark, sfDir, force = true))
+        Phases.time("read_s")(graft.queries.Scans.csvRead(spark, path).count())
+      }
+      ph.map { case (k, p) => f""""$k":${p.seconds}%.3f""" }.mkString("{", ",", "}")
     } catch { case _: Throwable => """{}""" }
 
-    // takedown leg splits (VERDICT r12 item 4 / r13 item 2): min-of-3
-    // PER LEG of both composed takedown queries — physical
-    // doc_cluster_index_remove {ensure, snapshot, lake_stage, victims,
-    // lake_scrub, index_remove} and logical
-    // doc_cluster_index_logical_remove {ensure, snapshot, victims,
-    // logical} — plus "serve" = run total minus recorded legs (since
-    // r15 the logical row's serve carries the read-only bridge-split;
-    // the compact() reclaim is out of the timed path entirely).
-    // Same runs as the headline numbers, so a driver-side regression
-    // names its leg instead of hiding in one conflated second count.
+    // leg splits: min-of-3 per phase of each composed row (legFields),
+    // from the same runs as the headline numbers.
     // bench_result.json only (stdout stays compact).
-    import scala.jdk.CollectionConverters._
-    def runTotals(name: String): Seq[Double] =
-      results.find(_._1 == name).map(_._3).getOrElse(Seq.empty)
-    val takedownLegs = legSplitJson(
-      graft.queries.TextPipeline.removeLegRuns.asScala.toSeq,
-      runTotals("doc_cluster_index_remove"))
-    val takedownLegsLogical = legSplitJson(
-      graft.queries.TextPipeline.logicalLegRuns.asScala.toSeq,
-      runTotals("doc_cluster_index_logical_remove"))
-    val takedownLegsTerm = legSplitJson(
-      graft.queries.TextPipeline.termLegRuns.asScala.toSeq,
-      runTotals("doc_term_index_remove"))
-    val takedownLegsRtbf = legSplitJson(
-      graft.queries.RtbfE2e.rtbfLegRuns.asScala.toSeq,
-      runTotals("rtbf_purge_e2e"))
-    val takedownLegsRtbfLogical = legSplitJson(
-      graft.queries.RtbfE2e.rtbfLogicalLegRuns.asScala.toSeq,
-      runTotals("rtbf_purge_logical"))
-    val rrfLegs = legSplitJson(
-      graft.queries.TextPipeline.rrfLegRuns.asScala.toSeq,
-      runTotals("doc_rrf_fusion_indexed"))
-
+    val legs = legFields.map { case (row, field) =>
+      field -> results.find(r => r.name == row && r.ok)
+        .fold("{}")(r => legSplitJson(r.runs))
+    }
     // leg mins join the diff under their field prefix — parsed back out
     // of the EXACT strings the artifact will carry, so the comparison
     // can never drift from what a future run reads as its prior
-    val nowLegs = Seq("takedown_legs" -> takedownLegs,
-        "takedown_legs_logical" -> takedownLegsLogical,
-        "takedown_legs_term" -> takedownLegsTerm,
-        "takedown_legs_rtbf" -> takedownLegsRtbf,
-        "takedown_legs_rtbf_logical" -> takedownLegsRtbfLogical,
-        "rrf_legs" -> rrfLegs)
-      .flatMap { case (f, j) =>
+    val nowLegs = legs.flatMap { case (f, j) =>
         parseFlatObject(s""""$f":$j""", f).map { case (k, v) => s"$f.$k" -> v } }
       .toMap
 
@@ -398,37 +329,25 @@ object Bench {
     // clear it. Each QUERY-level flagged query is re-run once more and
     // the extra time joins its min — an in-band retry clears the flag, a
     // genuine regression survives a 4th run. Leg-level flags are not
-    // retried standalone (a leg re-runs only inside its query, and an
-    // extra run after the leg JSON is built would misalign the 1:1
-    // runs↔legs attribution — the leg strings above are already final).
+    // retried standalone: a leg re-runs only inside its query, and the
+    // leg strings above are already final.
     // ok-only: a failed query's time-to-failure is not a min, and
     // flagging it as a >2x "speedup" would conflate breakage with the
     // measurement noise this annotation isolates (review-caught r14).
-    val preMins = results.collect {
-      case (k, true, runs, _, _, _, _) => k -> runs.min
-    }.toMap
+    val preMins = results.collect { case r if r.ok => r.name -> r.times.min }.toMap
     val retryTimes: Map[String, Double] = suspectKeys(priorMins, preMins)
       .filter(selected.contains).flatMap { k =>
         System.err.println(s"[bench] retrying suspect query $k once")
-        val r0 = System.nanoTime()
-        val okRun = try { selected(k)(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $k retry FAILED: " +
-              s"${e.getClass.getSimpleName}: ${e.getMessage}")
-            false
-          }
-        val sec = (System.nanoTime() - r0) / 1e9
+        val (sec, phases) = runOnce(k, " retry")
         dropPersistedBlocks()
-        if (okRun) Some(k -> sec) else None
+        phases.map(_ => k -> sec)
       }.toMap
-    val resultsF = results.map {
-      case (k, true, runs, a, b, c, d) if retryTimes.contains(k) =>
-        (k, true, runs :+ retryTimes(k), a, b, c, d)
-      case r => r
+    val resultsF = results.map { r =>
+      retryTimes.get(r.name).fold(r)(t => r.copy(runs = r.runs :+ (t -> ListMap.empty)))
     }
-    val repJson = resultsF.map { case (k, _, runs, _, _, _, _) =>
-      val sorted = runs.sorted
-      s""""$k":{"runs":${runs.map(t => f"$t%.3f").mkString("[", ",", "]")},""" +
+    val repJson = resultsF.map { r =>
+      val sorted = r.times.sorted
+      s""""${r.name}":{"runs":${r.times.map(t => f"$t%.3f").mkString("[", ",", "]")},""" +
         s""""min":${f"${sorted.head}%.3f"},"median":${f"${sorted(sorted.size / 2)}%.3f"}}"""
     }.mkString("{", ",", "}")
 
@@ -437,20 +356,18 @@ object Bench {
     // are excluded from the total and listed in "failed" so a broken
     // query can never masquerade as a fast one. peak_exec_mb / gc_ms /
     // storage_mb are the per-query attribution channels.
-    def jmap(f: ((String, Boolean, Seq[Double], Double, Long, Double, Double)) => String): String =
-      resultsF.map(f).mkString("{", ",", "}")
-    val qs = jmap { case (k, _, runs, _, _, _, _) => s""""$k":${f"${runs.min}%.3f"}""" }
-    val mem = jmap { case (k, _, _, m, _, _, _) => s""""$k":${f"$m%.1f"}""" }
-    val gc = jmap { case (k, _, _, _, g, _, _) => s""""$k":$g""" }
-    val stor = jmap { case (k, _, _, _, _, s, _) => s""""$k":${f"$s%.1f"}""" }
-    val shuf = jmap { case (k, _, _, _, _, _, sw) => s""""$k":${f"$sw%.1f"}""" }
-    val okTotal = resultsF.collect { case (_, true, runs, _, _, _, _) => runs.min }.sum
+    def jmap(f: Row => String): String =
+      resultsF.map(r => s""""${r.name}":${f(r)}""").mkString("{", ",", "}")
+    val qs = jmap(r => f"${r.times.min}%.3f")
+    val mem = jmap(r => f"${r.peakMb}%.1f")
+    val gc = jmap(_.gcMs.toString)
+    val stor = jmap(r => f"${r.storMb}%.1f")
+    val shuf = jmap(r => f"${r.shufMb}%.1f")
+    val okTotal = resultsF.filter(_.ok).map(_.times.min).sum
     // headline split (VERDICT r15 item 2): query-answering vs
     // index-maintenance bands, each legible on its own
-    val okMaint = resultsF.collect {
-      case (k, true, runs, _, _, _, _) if isMaintenance(k) => runs.min
-    }.sum
-    val failed = resultsF.collect { case (k, false, _, _, _, _, _) => s""""$k"""" }.mkString("[", ",", "]")
+    val okMaint = resultsF.filter(r => r.ok && isMaintenance(r.name)).map(_.times.min).sum
+    val failed = resultsF.filterNot(_.ok).map(r => s""""${r.name}"""").mkString("[", ",", "]")
     // stdout line stays COMPACT (driver captures only the tail of stdout;
     // r4's line with the three attribution maps inlined grew past that
     // window and the driver recorded parsed:null). The attribution maps
@@ -472,12 +389,7 @@ object Bench {
     val detail =
       line.dropRight(1) + s""","peak_exec_mb":$mem,"gc_ms":$gc,"storage_mb":$stor,""" +
         s""""shuffle_write_mb":$shuf,"csv_split":$csvSplit,""" +
-        s""""takedown_legs":$takedownLegs,""" +
-        s""""takedown_legs_logical":$takedownLegsLogical,""" +
-        s""""takedown_legs_term":$takedownLegsTerm,""" +
-        s""""takedown_legs_rtbf":$takedownLegsRtbf,""" +
-        s""""takedown_legs_rtbf_logical":$takedownLegsRtbfLogical,""" +
-        s""""rrf_legs":$rrfLegs,""" +
+        legs.map { case (f, j) => s""""$f":$j,""" }.mkString +
         s""""suspect_noise":$suspect,"retried":$retriedJson,""" +
         s""""repeats":$repJson}"""
     Files.writeString(Paths.get(outPath), detail)

@@ -417,13 +417,7 @@ object IndexCheck {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
       "usage: runMain graft.IndexCheck <indexDir> [<indexDir>...]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(Some(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt))
     val reports = args.toSeq.map(check(spark, _))
     reports.foreach(r => println(format(r)))
     spark.stop()

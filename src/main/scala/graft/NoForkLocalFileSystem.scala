@@ -17,8 +17,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * removes every such fork — same permissions applied, nothing left to
   * fail under memory/PID pressure.
   *
-  * Registered via `spark.hadoop.fs.file.impl` in the test session and
-  * the bench/verify entrypoints. Local-scheme only by construction: a
+  * Registered via `spark.hadoop.fs.file.impl` by [[GraftSession]], for
+  * every entrypoint and the test session. Local-scheme only by construction: a
   * production deployment on HDFS/object stores never routes through
   * this class, so the 100 TB posture is untouched.
   */

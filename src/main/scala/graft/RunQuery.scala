@@ -1,32 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-loop single-query runner: time one named SparkEntry query (or a
   * comma list) under the same session config as Bench, without paying
   * for the other ~95. `runMain graft.RunQuery <sfDir> <name[,name...]>
-  * [--explain] [--jobs]`. Each query runs twice; the second (warm) time
-  * is the comparable number. `--jobs` prints a per-Spark-job wall/desc
-  * table for the warm run — the "is this wall Spark work or driver-side
-  * gaps" attribution question the maintenance rows need. */
+  * [--explain | --explain-only] [--jobs]`. Each query runs twice; the
+  * second (warm) time is the comparable number, and the warm run's
+  * phases ([[Phases]]) print one line each, indented by depth.
+  * `--jobs` also prints a per-Spark-job wall/desc table for the warm
+  * run — the "is this wall Spark work or driver-side gaps" attribution
+  * question the maintenance rows need. `--explain-only` prints each
+  * row's formatted plan without running it. */
 object RunQuery {
-
-  /** Job-level profile of the warm run: (jobId, wall s, description). */
-  private final class JobListener
-      extends org.apache.spark.scheduler.SparkListener {
-    val rows = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, String)]()
-    private val starts =
-      new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    var enabled = false
-    override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      if (enabled) starts.put(j.jobId,
-        (j.time, Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(j.stageInfos.headOption.map(_.name)).getOrElse("")))
-    override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-      val s = starts.remove(j.jobId)
-      if (s != null) rows.add((j.jobId, s._1, j.time, s._2))
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -34,23 +18,8 @@ object RunQuery {
     val explainOnly = args.contains("--explain-only")
     val explain = args.contains("--explain") || explainOnly
     val jobs = args.contains("--jobs")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // driver-side listing for ≤1024-dir tables (see Bench — r18 opt)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-      // no-fork local-FS permissions (see Bench — r19, VERDICT r18 item 1)
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.NoForkLocalFileSystem].getName)
-      .config("spark.ui.enabled", "false")
-      // NOTE: driver memory cannot be set here — the JVM is already
-      // running by the time the builder executes. Pass it at launch
-      // (e.g. sbt -J-Xmx8g or .jvmopts) if a query needs more heap.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val jl = new JobListener
+    val spark = GraftSession(Some(32))
+    val jl = new WorkListener
     if (jobs) spark.sparkContext.addSparkListener(jl)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
@@ -59,16 +28,16 @@ object RunQuery {
         fn(spark, sfDir).explain("formatted")
       }
       if (!explainOnly) (1 to 2).foreach { i =>
-        jl.rows.clear()
-        jl.enabled = jobs && i == 2
+        jl.reset()
+        jl.recordJobs = jobs && i == 2
         val wall0 = System.currentTimeMillis()
         val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
+        val (n, phases) = Phases.record(fn(spark, sfDir).count())
         val s = (System.nanoTime() - t0) / 1e9
-        if (jl.enabled) {
+        if (jl.recordJobs) {
           Thread.sleep(300) // let the listener bus drain the last job-end
           import scala.jdk.CollectionConverters._
-          val rs = jl.rows.asScala.toSeq.sortBy(_._2)
+          val rs = jl.jobs.asScala.toSeq.sortBy(_._2)
           var prevEnd = wall0
           rs.foreach { case (id, st, en, desc) =>
             println(f"[job] #$id%-4d wall=${(en - st) / 1e3}%7.3fs " +
@@ -81,6 +50,7 @@ object RunQuery {
             f"queryWall=$s%.3fs driverGap=${s - jobWall}%.3fs " +
             "(jobs overlap, so sum can exceed wall)")
         }
+        if (i == 2) Phases.lines(phases).foreach(l => println(s"[phase] $l"))
         println(f"[runquery] $name run$i rows=$n $s%.3f s")
       }
     }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,29 +8,17 @@ object Verify {
     // Optional extra args: run only these queries (local iteration aid;
     // the driver always passes exactly two args → full run).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession(Some(cpus), extra = Seq(
       // portable-dedup cap audit (ADVICE r13): if the maxBucket valve
       // fires during an oracle run, fail loudly naming the cap instead
       // of surfacing as an unattributable DuckDB hash mismatch
-      .config("graft.dedup.capAudit", "true")
+      "graft.dedup.capAudit" -> "true",
       // TermIndex serve-time stats come from meta since r16; during the
       // oracle run, cross-check them against the stored dl rows so any
       // incremental-maintenance drift fails THIS gate loudly instead of
       // surfacing as an unattributable score mismatch
-      .config("graft.term.checkStats", "true")
-      // driver-side listing for ≤1024-dir tables (see Bench — r18 opt)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-      // no-fork local-FS permissions (see Bench — r19, VERDICT r18 item 1)
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.NoForkLocalFileSystem].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "graft.term.checkStats" -> "true"))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -78,30 +78,6 @@ object ClusterIndex {
   private[operators] def tokenize(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol), Dedup.hashedTokenSet(col(textCol)).as("_toks"))
 
-  /** GRAFT_PROBE_DEBUG=1: time each probe leg with an extra count()
-    * action (costs a re-execution per leg — debug channel only, the
-    * same contract as GRAFT_CC_DEBUG). */
-  private val probeDebug = sys.env.get("GRAFT_PROBE_DEBUG").contains("1")
-  /** GRAFT_REMOVE_DEBUG=1: time each remove() leg (same debug-only
-    * contract as GRAFT_PROBE_DEBUG). */
-  private val removeDebug = sys.env.get("GRAFT_REMOVE_DEBUG").contains("1")
-  private[operators] def rleg[T](name: String)(f: => T): T = {
-    if (removeDebug) {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[remove] $name%-18s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    } else f
-  }
-  private[operators] def dbg(name: String)(df: DataFrame): DataFrame = {
-    if (probeDebug) {
-      val t0 = System.nanoTime()
-      val n = df.count()
-      println(f"[probe] $name%-14s ${(System.nanoTime() - t0) / 1e9}%7.2fs rows=$n")
-    }
-    df
-  }
-
   /** One corpus pass: tokenize, exact near-dup edges (prefix-filtered,
     * no O(n²) stage), O(log n)-round CC, then persist assignments +
     * token sets + full postings + the df hint + the fingerprinted meta
@@ -540,14 +516,6 @@ object ClusterIndex {
   def remove(victims: DataFrame, idCol: String, textCol: String,
              indexDir: String, tag: String = "remove"): Unit =
     ClusterRemoval.remove(victims, idCol, textCol, indexDir, tag)
-
-  /** Window walls (rm_validate / rm_stage / rm_flip) of the last
-    * [[remove]] on THIS index on this driver — the bench's
-    * composed-takedown query publishes them inside `takedown_legs`
-    * (VERDICT r16 item 2; keyed per indexDir since r18 so concurrent
-    * removals on different indexes can't mix attributions). */
-  private[graft] def lastRemoveWindows(indexDir: String): Map[String, Double] =
-    ClusterRemoval.lastWindows(indexDir)
 
   /** LOGICAL targeted delete — the RTBF fast path (tombstone +
     * persisted serve-overlay, no table rewrite; reclaim at the next

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Phases
+
 /** The cluster family's REMOVAL protocols — the staged physical
   * [[remove]] (windows A/B/C: brief-lease validation + barrier,
   * lease-free staging, brief-lease flip), its plan-first crash-replay
@@ -18,40 +20,8 @@ import org.apache.spark.sql.functions._
   */
 private[operators] object ClusterRemoval {
 
-  import ClusterIndex.{idb, tb, rleg}
+  import ClusterIndex.{idb, tb}
   import ClusterResplit.{resplitPlan, repairComponents, writeOverlay}
-
-  /** Window walls of the LAST [[remove]] on this driver (VERDICT r16
-    * item 2 — the physical takedown's cross-box swing needs sub-leg
-    * attribution): `rm_validate` = window A (brief-lease validation +
-    * fingerprint commit + barrier), `rm_stage` = window B (lease-free
-    * staging), `rm_flip` = window C (brief-lease validate + flip +
-    * bookkeeping; also carries the in-place fallback/replay path). The
-    * bench's composed-takedown query publishes these inside
-    * `takedown_legs`, so a contaminated archive names the stage instead
-    * of one conflated index_remove number. Driver-side bench plumbing —
-    * remove() itself is single-caller-per-index under its leases, but
-    * leases are PER-INDEX: two removals on different indexes are legal
-    * concurrently, so the windows are keyed by normalized indexDir
-    * (ADVICE r17 — a single global map interleaved their resets and
-    * published mixed numbers into takedown_legs). */
-  private val lastWindowsByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Double]]()
-  private[graft] def lastWindows(indexDir: String): Map[String, Double] =
-    lastWindowsByDir.getOrDefault(
-      IndexMaintenance.normalize(indexDir), Map.empty)
-  private def resetWindows(dir: String): Unit =
-    lastWindowsByDir.put(dir,
-      Map("rm_validate" -> 0.0, "rm_stage" -> 0.0, "rm_flip" -> 0.0))
-  private def timedWindow[T](dir: String, k: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    lastWindowsByDir.compute(dir, (_, m0) => {
-      val m = Option(m0).getOrElse(Map.empty[String, Double])
-      m + (k -> (m.getOrElse(k, 0.0) + (System.nanoTime() - t0) / 1e9))
-    })
-    r
-  }
 
   /** Index-side targeted DELETE (VERDICT r10 item 1 — the
     * right-to-be-forgotten contract reaching the persisted index, not
@@ -133,10 +103,11 @@ private[operators] object ClusterRemoval {
     var planReady = false
     var completedReplay = false
     var stagedPath = false
-    resetWindows(normDir)
     // pre-lease wait, IndexMaintenance.removal's step 1
     Fingerprint.awaitInflightQuiesce(conf, normDir, rmTag)
-    timedWindow(normDir, "rm_validate")(IndexMaintenance.withLease(conf, indexDir, "remove") {
+    // phases rm_validate / rm_stage / rm_flip time windows A, B and C
+    // (VERDICT r16 item 2: a cross-box swing in the remove names its window)
+    Phases.time("rm_validate")(IndexMaintenance.withLease(conf, indexDir, "remove") {
       root = IndexMaintenance.liveRoot(conf, indexDir)
       val m = s.read.parquet(s"$root/meta").head()
       thr = m.getAs[Double]("threshold")
@@ -189,13 +160,13 @@ private[operators] object ClusterRemoval {
           // DIFFERENT tables and share no state — run them concurrently
           // (r18 opt, guide §2.6; runLegs rethrows the known-check's
           // refusal first on a double failure, preserving message order)
-          val vToksA = rleg("vtoks")(s.read.parquet(s"$root/toks")
+          val vToksA = Phases.time("vtoks")(s.read.parquet(s"$root/toks")
             .filter(col("idb").isin(vIdb: _*))
             .join(bVids(vids), Seq(idCol), "leftsemi")
             .select(col(idCol), col("_toks"))
             .localCheckpoint(eager = false))
           IndexMaintenance.runLegs(Seq(
-            "rm.known" -> (() => rleg("known-check")(
+            "rm.known" -> (() => Phases.time("known_check")(
               TargetedDelete.requireKnownContent(
                 victims, xxhash64(Dedup.hashedTokenSet(col(textCol))),
                 vToksA, xxhash64(col("_toks")), idCol, nV,
@@ -205,7 +176,7 @@ private[operators] object ClusterRemoval {
             // subtract — its delta was never added. Pruned provenance read,
             // bounded by |tags|.
             "rm.guard" -> (() => if (oldFp.isDefined) {
-              val vSrcs = rleg("guard")(s.read.parquet(s"$root/assign")
+              val vSrcs = Phases.time("guard")(s.read.parquet(s"$root/assign")
                 .filter(col("idb").isin(vIdb: _*))
                 .join(bVids(vids), Seq(idCol), "leftsemi")
                 .select(col("_src")).filter(col("_src").isNotNull) // pre-provenance rows = build-era
@@ -223,7 +194,7 @@ private[operators] object ClusterRemoval {
           oldFp, "ClusterIndex.remove")
         Fingerprint.resolveRemovalMeta(conf, normDir, rmTag, oldFp,
           "ClusterIndex.remove").foreach { fp =>
-          rleg("meta-commit")(ClusterIndex.writeMeta(s, root, thr, nBuckets, fp))
+          Phases.time("meta_commit")(ClusterIndex.writeMeta(s, root, thr, nBuckets, fp))
         }
         FaultInjection.maybeCrash("cluster.meta")
         if (!replay) Fingerprint.recordMerge(conf, indexDir, rmTag, vfp)
@@ -246,7 +217,7 @@ private[operators] object ClusterRemoval {
         Fingerprint.withInflightBeat(conf, normDir, rmTag)(
           removeStaged(s, conf, root, normDir, rmTag, stateDir, planMarker,
             idCol, vids, nV, vIdb, nBuckets))
-      else timedWindow(normDir, "rm_flip")(IndexMaintenance.withLease(conf, indexDir, "remove") {
+      else Phases.time("rm_flip")(IndexMaintenance.withLease(conf, indexDir, "remove") {
         require(IndexMaintenance.liveRoot(conf, indexDir) == root,
           s"ClusterIndex.remove on $indexDir: the index was compacted to a " +
             "new generation during the removal — re-run it (same tag + " +
@@ -326,7 +297,7 @@ private[operators] object ClusterRemoval {
     val tagsAtPlan = readTagFile(conf, s"$stateDir/plantags")
       .getOrElse(return false) // no snapshot => cannot prove validity
     if (tagsNow == tagsAtPlan) true
-    else rleg("plan-validate") {
+    else Phases.time("plan_validate") {
       val compsDf = s.read.parquet(s"$stateDir/comps")
       val current = s.read.parquet(s"$root/assign")
         .join(broadcast(compsDf), Seq("component"), "left_semi")
@@ -371,7 +342,7 @@ private[operators] object ClusterRemoval {
     // fan-out so stage.postings needn't wait for this plan call's
     // CC-bearing critical path (r19); same expression, same pristine
     // read, the file written below is identical either way.
-    lazy val vToks = rleg("vtoks")(s.read.parquet(s"$root/toks")
+    lazy val vToks = Phases.time("vtoks")(s.read.parquet(s"$root/toks")
       .filter(col("idb").isin(vIdb: _*))
       .join(bVids(vids), Seq(idCol), "leftsemi")
       .select(col(idCol), col("_toks"))
@@ -386,7 +357,7 @@ private[operators] object ClusterRemoval {
     // caller gets the lists without a parquet round-trip.
     var parts: Seq[(String, Long)] = Seq.empty
     var vTb: Seq[Long] = Seq.empty
-    rleg("plan-write")(IndexMaintenance.runLegs(Seq(
+    Phases.time("plan_write")(IndexMaintenance.runLegs(Seq(
       "plan.newassign" -> (() =>
         newAssign.write.mode("overwrite").parquet(s"$stateDir/newassign")),
       // the assign partitions to rewrite: every partition holding a
@@ -469,23 +440,23 @@ private[operators] object ClusterRemoval {
     val vTb = s.read.parquet(s"$stateDir/vtb")
       .collect().map(_.getLong(0)).toSeq
     IndexMaintenance.runLegs(Seq(
-      "cluster.assign" -> (() => rleg("assign-rewrite")(if (parts.nonEmpty) {
+      "cluster.assign" -> (() => Phases.time("assign_rewrite")(if (parts.nonEmpty) {
         val (mark, keep, prePrune) = assignSurgery(s, stateDir, idCol, vids, nV, parts)
         TargetedDelete.rewriteWhere(
           s, s"$root/assign", Seq("_src", "idb"), mark, keep, prePrune)
         (): Unit
       })),
-      "cluster.postings" -> (() => rleg("del-postings")(if (vTb.nonEmpty) {
+      "cluster.postings" -> (() => Phases.time("del_postings")(if (vTb.nonEmpty) {
         TargetedDelete.delete(s, s"$root/postings",
           Seq("_src", "tb"), idCol, vids, col("tb").isin(vTb: _*))
         (): Unit
       })),
-      "cluster.toks" -> (() => rleg("del-toks") {
+      "cluster.toks" -> (() => Phases.time("del_toks") {
         TargetedDelete.delete(s, s"$root/toks",
           Seq("_src", "idb"), idCol, vids, col("idb").isin(vIdb: _*))
         (): Unit
       }),
-      "cluster.edges" -> (() => rleg("del-edges") {
+      "cluster.edges" -> (() => Phases.time("del_edges") {
         TargetedDelete.deleteAnyKey(s, s"$root/edges",
           Seq("_src", "eb"), Seq("u", "v"), idCol, vids)
         (): Unit
@@ -501,7 +472,7 @@ private[operators] object ClusterRemoval {
                            normDir: String, rmTag: String,
                            barrierBatch: String): Unit = {
     Fingerprint.clearSourceStatus(conf, normDir)
-    rleg("bookkeeping")(IndexMaintenance.purgeRetired(conf, normDir,
+    Phases.time("bookkeeping")(IndexMaintenance.purgeRetired(conf, normDir,
       Seq("assign", "toks", "postings", "df", "edges", "meta")))
     LogicalDelete.clearBatches(conf, normDir, Seq(barrierBatch))
     Fingerprint.clearRemoveState(conf, normDir, rmTag)
@@ -594,16 +565,16 @@ private[operators] object ClusterRemoval {
     // healthy in-flight removal's rmstate as "crashed ... never
     // completed" (review-caught r15: a takedown stream retries the
     // former and dies on the latter) ----
-    timedWindow(normDir, "rm_stage")(IndexMaintenance.withLease(conf, normDir, "write") {
+    Phases.time("rm_stage")(IndexMaintenance.withLease(conf, normDir, "write") {
       import s.implicits._
       // the postings bucket prune, derived UP FRONT (pristine toks read
       // — same expression persistPlan would run) so the plan call's
       // CC-bearing critical path no longer gates stage.postings
-      val vToksPre = rleg("vtoks")(s.read.parquet(s"$root/toks")
+      val vToksPre = Phases.time("vtoks")(s.read.parquet(s"$root/toks")
         .filter(col("idb").isin(vIdb: _*))
         .join(bVids(vids), Seq(idCol), "leftsemi")
         .select(col(idCol), col("_toks")))
-      vTb = rleg("vtb")(vToksPre.select(explode(col("_toks")).as("_tok"))
+      vTb = Phases.time("vtb")(vToksPre.select(explode(col("_toks")).as("_tok"))
         .select(tb(col("_tok"), nBuckets).as("tb")).distinct()
         .collect().map(_.getLong(0)).toSeq)
       // OVERLAP the CC-bearing plan (and the assign staging that needs
@@ -624,7 +595,7 @@ private[operators] object ClusterRemoval {
           // nested single leg keeps the stage.assign crash point and
           // leg name exactly where the matrix arms them
           IndexMaintenance.runLegs(Seq(
-            "stage.assign" -> (() => rleg("stage-assign")(if (parts.nonEmpty) {
+            "stage.assign" -> (() => Phases.time("stage_assign")(if (parts.nonEmpty) {
               val (mark, keep, prePrune) =
                 assignSurgery(s, stateDir, idCol, vids, nV, parts)
               TargetedDelete.stageRewrite(
@@ -633,21 +604,21 @@ private[operators] object ClusterRemoval {
                 captureStatus = true) // assign is the one append-amendable table
             }))))
         }),
-        "stage.postings" -> (() => rleg("stage-postings")(if (vTb.nonEmpty) {
+        "stage.postings" -> (() => Phases.time("stage_postings")(if (vTb.nonEmpty) {
           TargetedDelete.stageRewrite(
             s, s"$root/postings", s"$staged/postings", Seq("_src", "tb"),
             mark = df => df.join(bVids(vids), Seq(idCol), "left_semi"),
             keep = df => df.join(bVids(vids), Seq(idCol), "left_anti"),
             prePrune = col("tb").isin(vTb: _*))
         })),
-        "stage.toks" -> (() => rleg("stage-toks") {
+        "stage.toks" -> (() => Phases.time("stage_toks") {
           TargetedDelete.stageRewrite(
             s, s"$root/toks", s"$staged/toks", Seq("_src", "idb"),
             mark = df => df.join(bVids(vids), Seq(idCol), "left_semi"),
             keep = df => df.join(bVids(vids), Seq(idCol), "left_anti"),
             prePrune = col("idb").isin(vIdb: _*))
         }),
-        "stage.edges" -> (() => rleg("stage-edges") {
+        "stage.edges" -> (() => Phases.time("stage_edges") {
           def keysAs(c: String) =
             TargetedDelete.maybeBroadcast(vids.select(col(idCol).as(c)), nV)
           TargetedDelete.stageRewrite(
@@ -661,7 +632,7 @@ private[operators] object ClusterRemoval {
     })
     FaultInjection.maybeCrash("cluster.stage")
     // ---- WINDOW C: validate + flip under the remove lease ----
-    timedWindow(normDir, "rm_flip")(IndexMaintenance.withLease(conf, normDir, "remove") {
+    Phases.time("rm_flip")(IndexMaintenance.withLease(conf, normDir, "remove") {
       require(IndexMaintenance.liveRoot(conf, normDir) == root,
         s"ClusterIndex.remove on $normDir: the index was compacted to a " +
           "new generation during the removal — re-run it (same tag + " +
@@ -687,7 +658,7 @@ private[operators] object ClusterRemoval {
           // them, and a crash after any flip replays through
           // commitFromPlan (plan present => fallback), which restores
           // cut-mid-swap partitions and re-reads LIVE state
-          "cluster.assign" -> (() => rleg("flip-assign")(if (parts.nonEmpty) {
+          "cluster.assign" -> (() => Phases.time("flip_assign")(if (parts.nonEmpty) {
             if (!TargetedDelete.applyStaged(s, s"$root/assign", s"$staged/assign")) {
               // an append amended a staged assign partition (digest
               // drift): in-place assign rewrite reads current rows
@@ -698,15 +669,15 @@ private[operators] object ClusterRemoval {
               (): Unit
             }
           })),
-          "cluster.postings" -> (() => rleg("flip-postings")(if (vTb.nonEmpty) {
+          "cluster.postings" -> (() => Phases.time("flip_postings")(if (vTb.nonEmpty) {
             TargetedDelete.applyStaged(s, s"$root/postings", s"$staged/postings")
             (): Unit
           })),
-          "cluster.toks" -> (() => rleg("flip-toks") {
+          "cluster.toks" -> (() => Phases.time("flip_toks") {
             TargetedDelete.applyStaged(s, s"$root/toks", s"$staged/toks")
             (): Unit
           }),
-          "cluster.edges" -> (() => rleg("flip-edges") {
+          "cluster.edges" -> (() => Phases.time("flip_edges") {
             TargetedDelete.applyStaged(s, s"$root/edges", s"$staged/edges")
             (): Unit
           })))
@@ -770,7 +741,7 @@ private[operators] object ClusterRemoval {
         // known-check and provenance guard run concurrently like
         // remove()'s (r18)
         IndexMaintenance.runLegs(Seq(
-          "lrm.known" -> (() => rleg("known-check")(
+          "lrm.known" -> (() => Phases.time("known_check")(
             TargetedDelete.requireKnownContent(
               victims, xxhash64(Dedup.hashedTokenSet(col(textCol))),
               s.read.parquet(s"$root/toks")
@@ -780,7 +751,7 @@ private[operators] object ClusterRemoval {
               "ClusterIndex.logicalRemove"))),
           // mid-append crash guard, same as remove()
           "lrm.guard" -> (() => if (oldFp.isDefined) {
-            val vSrcs = rleg("guard")(s.read.parquet(s"$root/assign")
+            val vSrcs = Phases.time("guard")(s.read.parquet(s"$root/assign")
               .filter(col("idb").isin(vIdb: _*))
               .join(bVids(vids), Seq(idCol), "leftsemi")
               .select(col("_src")).filter(col("_src").isNotNull)
@@ -844,7 +815,7 @@ private[operators] object ClusterRemoval {
         // BEST-EFFORT (review-caught r15): a transient failure must not
         // leave rmstate pending and wedge later removals over an artifact
         // whose absence costs one extra per-read recompute.
-        try rleg("overlay")(writeOverlay(s, root, normDir, idCol, nBuckets,
+        try Phases.time("overlay")(writeOverlay(s, root, normDir, idCol, nBuckets,
           curBatch = rmTag, curVids = (vids, nV, vIdb), newFp = resolvedFp))
         catch {
           case scala.util.control.NonFatal(e) =>

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Phases
+
 /** The victim-scoped component RE-SPLIT machinery shared by every
   * consumer that must answer "what do the affected components look
   * like without these docs" — [[ClusterIndex.assignments]]'s
@@ -16,7 +18,7 @@ import org.apache.spark.sql.functions._
   */
 private[operators] object ClusterResplit {
 
-  import ClusterIndex.{idb, rleg}
+  import ClusterIndex.idb
   import IndexMaintenance.metaFingerprint
 
   // ---- tombstone serve-overlay (r15, this round): the bridge-split as a
@@ -171,13 +173,13 @@ private[operators] object ClusterResplit {
     // s.read.parquet resolves the 64-dir file index anew — pure driver
     // overhead when repeated within one call)
     val assign = s.read.parquet(s"$root/assign")
-    val comps = rleg("comps")(assign
+    val comps = Phases.time("comps")(assign
       .filter(col("idb").isin(vIdb: _*))
       .join(bVids(vids), Seq(idCol), "leftsemi")
       .select(col("component")).distinct().localCheckpoint(eager = false))
     // one column-pruned scan of the (id, component) map restricted to
     // the affected components (comps is bounded by |victims|)
-    val survivors = rleg("survivors")(assign
+    val survivors = Phases.time("survivors")(assign
       .join(bVids(comps), Seq("component"))
       .select(col(idCol), col("_src"), col("idb").cast("long").as("idb"))
       .join(bVids(vids), Seq(idCol), "left_anti")
@@ -266,7 +268,7 @@ private[operators] object ClusterResplit {
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     if (parts.nonEmpty) {
       val partsDf = parts.toDF("_psrc", "_pidb")
-      rleg("label-repair")(TargetedDelete.rewriteWhere(
+      Phases.time("label_repair")(TargetedDelete.rewriteWhere(
         s, s"$root/assign", Seq("_src", "idb"),
         mark = df => df.join(broadcast(partsDf),
           col("_src") === col("_psrc") &&

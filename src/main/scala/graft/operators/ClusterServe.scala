@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   */
 private[operators] object ClusterServe {
 
-  import ClusterIndex.{tokenize, dbg, readMeta, sanitize, tb, idb}
+  import ClusterIndex.{tokenize, readMeta, sanitize, tb, idb}
 
   /** Incoming docs' components under the UNION corpus (exact — see the
     * quotient argument in the class doc), plus the merge map for old
@@ -33,9 +33,8 @@ private[operators] object ClusterServe {
     val incToks = tokenize(incoming, idCol, textCol)
       .localCheckpoint(eager = false)
     // delta-internal connectivity (sparse star+rep form, exact)
-    val inner = dbg("inner-edges")(
-      SetSimJoin.jaccardEdges(incToks, idCol, "_toks", t)
-        .select(col("id1").as("src"), col("id2").as("dst")))
+    val inner = SetSimJoin.jaccardEdges(incToks, idCol, "_toks", t)
+      .select(col("id1").as("src"), col("id2").as("dst"))
     // probe prefix: the |x| - ceil(t|x|) + 1 rarest tokens by the FROZEN
     // df hint (new tokens coalesce to df 0 — rarest). ONE bounded collect
     // (<= nBuckets longs) of the delta's token buckets turns BOTH the df
@@ -67,13 +66,13 @@ private[operators] object ClusterServe {
       excludeTag.fold(postAll)(tg =>
         postAll.filter(col("_src") =!= lit(sanitize(tg)))),
       idCol, tomb)
-    val cands = dbg("cands")(pref
+    val cands = pref
       .join(post.select(col("_tok"), col(idCol).as("_ref"), col("_sz").as("_szr")), "_tok")
       // size filter: J >= t forces t|x| <= |y| <= |x|/t
       .filter(col("_szr") >= lit(t) * col("_szi") - lit(1e-9)
         && col("_szi") >= lit(t) * col("_szr") - lit(1e-9))
       .select(col("_inc"), col("_ref")).distinct()
-      .localCheckpoint(eager = false)) // feeds the bucket collect AND the verify join
+      .localCheckpoint(eager = false) // feeds the bucket collect AND the verify join
     val candIdb = cands.select(idb(col("_ref"), nBuckets).as("idb"))
       .distinct().collect().map(_.getLong(0)).toSeq
     def prunedByIdb(table: String): DataFrame = {
@@ -101,11 +100,11 @@ private[operators] object ClusterServe {
     // consumer would not: without distinct+checkpoint the merge map
     // re-executes the whole candidate+verify chain and re-reads the
     // multi-edge relation.
-    val bridge = dbg("bridge")(matches
+    val bridge = matches
       .join(prunedByIdb("assign").select(col(idCol).as("_ref"), col("component")), "_ref")
       .select(col("_inc").as("src"), col("component").as("dst"))
       .distinct()
-      .localCheckpoint(eager = false))
+      .localCheckpoint(eager = false)
     val qcc = ConnectedComponents.components(
         inner.unionByName(bridge), "src", "dst")
       .select(col("id").as("_ccid"), col("component").as("_cccomp"))

@@ -141,23 +141,17 @@ object ConnectedComponents {
         coalesce(bit_xor(xxhash64(col("dst"), col("src"))), lit(0L))).head()
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
-    // GRAFT_CC_DEBUG=1: per-round (count, millis) to stderr — the
-    // diagnostic for "where do the rounds go" without a UI in local mode
-    val debug = sys.env.get("GRAFT_CC_DEBUG").contains("1")
+    // phases cc_input / cc_rounds / cc_tail say where the rounds go
+    // (RunQuery prints them); lastRounds / lastTailEdges say how many
     ConnectedComponents.lastRounds = 0
     ConnectedComponents.lastTailEdges = -1L
-    var t0 = System.nanoTime()
-    var sig = signature(cur)
-    if (debug) System.err.println(
-      f"[cc] round 0 (input): edges=${sig._1} ${(System.nanoTime() - t0) / 1e6}%.0f ms")
+    var sig = graft.Phases.time("cc_input")(signature(cur))
     var it = 0
     var converged = false
     while (!converged && it < maxIter) {
       if (localTailMaxEdges > 0 && sig._1 <= localTailMaxEdges) {
-        if (debug) System.err.println(
-          s"[cc] local tail finish: ${sig._1} edges <= $localTailMaxEdges after $it rounds")
         ConnectedComponents.lastTailEdges = sig._1
-        return localFinish(cur)
+        return graft.Phases.time("cc_tail")(localFinish(cur))
       }
       // ONE star round per materialization. (Chaining two rounds into a
       // single plan to halve the job count was tried and is SLOWER: each
@@ -165,17 +159,13 @@ object ConnectedComponents {
       // replicates the input subtree 4× per extra round — plan blowup
       // beats the saved scheduling.) The signature agg doubles as the
       // lazy checkpoint's materializing action: one job per round.
-      t0 = System.nanoTime()
       val next = smallStar(largeStar(cur)).localCheckpoint(eager = false)
-      val nextSig = signature(next)
+      val nextSig = graft.Phases.time("cc_rounds")(signature(next))
       converged = nextSig == sig
       sig = nextSig
       cur = next
       it += 1
       ConnectedComponents.lastRounds = it
-      if (debug) System.err.println(
-        f"[cc] round $it: edges=${sig._1} ${(System.nanoTime() - t0) / 1e6}%.0f ms" +
-          (if (converged) " (fixpoint)" else ""))
     }
     if (!converged)
       throw new IllegalStateException(

@@ -385,21 +385,35 @@ private[graft] object IndexMaintenance {
     * test assertion). Each leg carries its [[FaultInjection]] step id,
     * fired after the leg's work; the replay contract is the caller's:
     * every leg must converge from any completed subset. */
-  private[operators] def runLegs(legs: Seq[(String, () => Unit)]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(legs.size)
-    try settleAll(legs.map { case (step, run) =>
-      pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = {
-          // label the leg's jobs (guide §1.5; thread-local, so each
-          // concurrent leg names its own jobs in the UI / profilers)
-          SparkSession.active.sparkContext.setJobDescription(step)
-          run(); FaultInjection.maybeCrash(step)
-        }
-      })
+  private[graft] def runLegs(legs: Seq[(String, () => Unit)]): Unit = {
+    parallel(legs.map { case (step, run) => () =>
+      // label the leg's jobs (guide §1.5; thread-local, so each
+      // concurrent leg names its own jobs in the UI / profilers),
+      // and put back the label the thread inherited, even on a throw
+      val sc = SparkSession.active.sparkContext
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(step)
+      try { run(); FaultInjection.maybeCrash(step) }
+      finally sc.setLocalProperty("spark.job.description", prev)
     })
-    finally pool.shutdown()
     ()
   }
+
+  /** Run `tasks` concurrently on a pool made for this call (at most
+    * `threads` at once) and return their values in order once every
+    * task settles ([[settleAll]]). A per-call pool's threads are born
+    * inside the caller's open phase, so each task records into the
+    * caller's recorder ([[graft.Phases]]). */
+  private[graft] def parallel[T](tasks: Seq[() => T],
+                                 threads: Int = Int.MaxValue): Seq[T] =
+    if (tasks.isEmpty) Nil
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(threads, tasks.size))
+      try settleAll(tasks.map(t =>
+        pool.submit(new java.util.concurrent.Callable[T] { def call(): T = t() })))
+      finally pool.shutdown()
+    }
 
   /** Wait for EVERY future, then return their values in order — or
     * rethrow the first failure (in `fs` order) with the later ones

@@ -104,15 +104,6 @@ object Rtbf {
   private def stateDir(lakeDir: String, tag: String): String =
     s"${IndexMaintenance.normalize(lakeDir)}/_rtbf/${Fingerprint.sanitizeTag(tag)}"
 
-  /** One-shot async helper for independent Spark actions (r18 opt). */
-  private def concurrently[T](name: String)(f: => T)
-      : java.util.concurrent.Future[T] = {
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    try pool.submit(new java.util.concurrent.Callable[T] {
-      def call(): T = f
-    }) finally pool.shutdown()
-  }
-
   /** Purge `victims` — the EXACT `(id, text)` rows as ingested, the
     * same contract every index family's remove() validates — from all
     * targeted stores under one `tag`. `vecVictims` carries the exact
@@ -217,21 +208,16 @@ object Rtbf {
     // the one authoritative victim capture — every verb reads THIS.
     // Doc and vec snapshots materialize concurrently (r18 opt, guide
     // §2.6 — two independent tiny reads, two fewer serial job walls).
-    val vicF = concurrently(s"rtbf.victims") {
-      val v = s.read.parquet(s"$state/victims").localCheckpoint()
+    // Both settle before the first failure rethrows (ADVICE r18).
+    def snapshot(path: String) = () => {
+      val v = s.read.parquet(path).localCheckpoint()
       (v, v.count())
     }
-    val vecF = concurrently(s"rtbf.vec_victims") {
-      if (fs.exists(new Path(s"$state/vec_victims"))) {
-        val v = s.read.parquet(s"$state/vec_victims").localCheckpoint()
-        Some((v, v.count()))
-      } else None
-    }
-    // settle BOTH before rethrowing (ADVICE r18): callers see the
-    // task's own exception, and no sibling job is left running
-    IndexMaintenance.settleAll(Seq(vicF, vecF))
-    val (vic, nV) = vicF.get()
-    val vecPair = vecF.get()
+    val vecPath = s"$state/vec_victims"
+    val snaps = IndexMaintenance.parallel(snapshot(s"$state/victims") +:
+      (if (fs.exists(new Path(vecPath))) Seq(snapshot(vecPath)) else Nil))
+    val (vic, nV) = snaps.head
+    val vecPair = snaps.lift(1)
     val vecVic = vecPair.map(_._1)
     val nVec = vecPair.fold(0L)(_._2)
 
@@ -239,7 +225,7 @@ object Rtbf {
     def execStore(store: String): RtbfStoreResult =
       if (fs.exists(done(store)))
         RtbfStoreResult(store, skippedDone = true, 0.0)
-      else {
+      else graft.Phases.time(s"rm_$store") {
         val t0 = System.nanoTime()
         runStore(s, store, targets, vic, vecVic, tag, logical)
         // verb done but marker not yet — a crash here replays the verb
@@ -263,14 +249,7 @@ object Rtbf {
     val (idxStores, lakeStores) = planned.partition(_.startsWith("idx."))
     val idxResults =
       if (idxStores.size <= 1) idxStores.map(execStore)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(idxStores.size)
-        try IndexMaintenance.settleAll(idxStores.map(st =>
-          pool.submit(new java.util.concurrent.Callable[RtbfStoreResult] {
-            def call(): RtbfStoreResult = execStore(st)
-          })))
-        finally pool.shutdown()
-      }
+      else IndexMaintenance.parallel(idxStores.map(st => () => execStore(st)))
     // the LAKES stay sequential and doc-last ON PURPOSE (an r18
     // concurrency attempt was reverted): the doc lake is the system of
     // record and must outlive every derivation — including the

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Phases, Tables}
 import graft.operators.{ClusterIndex, IndexMaintenance, Rtbf, RtbfTargets,
   TermIndex, TextIndex, VectorIndex}
 
@@ -51,18 +51,6 @@ import graft.operators.{ClusterIndex, IndexMaintenance, Rtbf, RtbfTargets,
   * model-literal key the vec_* oracles record. */
 object RtbfE2e {
 
-  /** Per-run leg walls {ensure, snapshot, purge, store.*, serve} —
-    * Bench clears after warmups and publishes min-of-3 per leg as
-    * `takedown_legs_rtbf` (the same attribution channel as the other
-    * takedown rows, from this row's first round). */
-  private[graft] val rtbfLegRuns =
-    new java.util.concurrent.CopyOnWriteArrayList[Map[String, Double]]()
-
-  /** The logical row's own channel (`takedown_legs_rtbf_logical`) — the
-    * two rows must never mix leg mins. */
-  private[graft] val rtbfLogicalLegRuns =
-    new java.util.concurrent.CopyOnWriteArrayList[Map[String, Double]]()
-
   /** The purged vector index's quantizer, recorded when the query RAN
     * in this JVM — unrolled into DuckDB centroid literals by [[oracles]]
     * (the model-literal pattern of [[Vectors]]). */
@@ -86,18 +74,13 @@ object RtbfE2e {
     * logical purge promises exactly that every serve surface equals
     * the survivors-only world while the bytes await compact() — so
     * hash-green here proves blind-serving equivalence, not just the
-    * spec gates. Own run namespace, tag, and leg channel so the two
-    * rows never share purge state or leg mins. */
+    * spec gates. Own run namespace and tag so the two rows never share
+    * purge state. */
   def purgeLogicalE2e(s: SparkSession, dir: String): DataFrame =
     purgeImpl(s, dir, logical = true)
 
   private def purgeImpl(s: SparkSession, dir: String,
                         logical: Boolean): DataFrame = {
-    val legs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def leg[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      legs(name) = (System.nanoTime() - t0) / 1e9; r
-    }
     val conf = s.sparkContext.hadoopConfiguration
     val key = Tables.fixtureKey(dir)
     val tmp = System.getProperty("java.io.tmpdir")
@@ -114,7 +97,7 @@ object RtbfE2e {
     val vecLake = s"$base/veclake"
 
     // ---- staged once per fixture generation: lakes + index builds ----
-    leg("ensure") {
+    Phases.time("ensure") {
       Staging.stageOnce(docs, lake)(docs.write.mode("overwrite")
         .partitionBy("source").parquet(lake))
       Staging.stageOnce(emb, vecLake)(emb.write.mode("overwrite")
@@ -133,24 +116,13 @@ object RtbfE2e {
     }
 
     // ---- per run: pristine index copies + a clean purge namespace ----
-    leg("snapshot") {
+    Phases.time("snapshot") {
       // the four copies are independent file trees — run them
       // concurrently (r18 opt, guide §2.6: serial they cost four I/O
       // walls; this is bench-harness plumbing, see snapshotIndex's
       // production caveat)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      // settle ALL copies before rethrowing the first unwrapped cause
-      // (ADVICE r18: a raw get() on the first future surfaces
-      // ExecutionException and leaves the siblings running unobserved)
-      try IndexMaintenance.settleAll(Seq("textidx", "clusteridx", "termidx", "vecidx").map { ix =>
-          // bind OUTSIDE the anonymous class: inside it, $run in an
-          // interpolation would resolve to its own run() method
-          val (from, to) = (s"$base/$ix", s"$run/$ix")
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = TextPipeline.snapshotIndex(s, from, to)
-          })
-        })
-      finally pool.shutdown()
+      IndexMaintenance.parallel(Seq("textidx", "clusteridx", "termidx", "vecidx")
+        .map(ix => () => TextPipeline.snapshotIndex(s, s"$base/$ix", s"$run/$ix")))
       // prior runs' purge state would read THIS run as a completed
       // replay and no-op the verbs against the fresh copies
       val st = new org.apache.hadoop.fs.Path(s"$lake/_rtbf")
@@ -161,7 +133,7 @@ object RtbfE2e {
     // victims read out of the FIXTURE subset (the staged lake is
     // already scrubbed on warm runs) — the verbs need the exact
     // ingested rows for their fingerprint subtraction
-    val (victims, vecVictims) = leg("victims") {
+    val (victims, vecVictims) = Phases.time("victims") {
       (docs.filter(col("doc_id") % 65 === 0)
          .select(col("doc_id"), col("text")).localCheckpoint(),
        emb.filter(col("vec_id") % 65 === 0)
@@ -175,13 +147,11 @@ object RtbfE2e {
       termIndex = Some(s"$run/termidx"),
       vectorIndex = Some(s"$run/vecidx"),
       vecLakeDir = Some(vecLake), vecLakePartitionCols = Seq("label"))
-    val report = leg("purge") {
+    // each store's verb times itself as rm_<store>, nested in purge
+    Phases.time("purge") {
       Rtbf.purge(victims, Some(vecVictims), targets,
         tag = if (logical) "e2e-log" else "e2e", logical = logical)
     }
-    // rm_ prefix = sub-legs nested inside the purge wall (the Bench
-    // serve subtraction excludes them — they attribute, they don't add)
-    report.stores.foreach(r => legs(s"rm_${r.store}") = r.seconds)
 
     // record the quantizer for the oracle's centroid-literal replay
     lastCentroids = Some(VectorIndex.loadCentroidsFromRoot(s,
@@ -204,28 +174,21 @@ object RtbfE2e {
     // stores, and building the term/cluster/vector ones runs their
     // serve paths' bounded collects — construct them CONCURRENTLY
     // (r18 opt, guide §2.6); the union below is unchanged
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-    def async(f: => DataFrame) =
-      pool.submit(new java.util.concurrent.Callable[DataFrame] {
-        def call(): DataFrame = f
-      })
-    val (lakeSurface, termSurface, clusterSurface, vectorSurface,
-        textSurface) =
-      try {
-        val lakeF = async(shaped("lake", col("doc_id"),
-          md5(col("text").cast("binary")))(s.read.parquet(lake)))
-        val termF = async(shaped("term",
+    val out = IndexMaintenance.parallel(Seq(
+        () => shaped("lake", col("doc_id"),
+          md5(col("text").cast("binary")))(s.read.parquet(lake)),
+        () => shaped("term",
           col("query_id") * 1000 + col("rank"), col("doc_id"))(
-          TermIndex.topK(s, s"$run/termidx", bm25Queries, k = 10)))
-        val clusterF = async(shaped("cluster", col("doc_id"), col("component"))(
-          ClusterIndex.assignments(s, s"$run/clusteridx", "doc_id")))
-        val vectorF = async(shaped("vector",
+          TermIndex.topK(s, s"$run/termidx", bm25Queries, k = 10)),
+        () => shaped("cluster", col("doc_id"), col("component"))(
+          ClusterIndex.assignments(s, s"$run/clusteridx", "doc_id")),
+        () => shaped("vector",
           col("q_id") * 100 + col("rn"), col("vec_id"))(
-          VectorIndex.topK(s, s"$run/vecidx", probes, k = 5)))
+          VectorIndex.topK(s, s"$run/vecidx", probes, k = 5)),
         // text membership is a raw band read for the physical row (the rows
         // must be GONE); the logical row reads the SERVE view — the same
         // overlay anti-join TextIndex.probe consults
-        val textF = async {
+        () => {
           val bandsRaw = s.read.parquet(
             s"${IndexMaintenance.liveRoot(conf, s"$run/textidx")}/bands")
           shaped("textidx", col("doc_id"), lit("1"))(
@@ -234,16 +197,9 @@ object RtbfE2e {
                  graft.operators.LogicalDelete.ids(s, s"$run/textidx"))
              else bandsRaw)
               .select(col("doc_id")).distinct())
-        }
-        IndexMaintenance.settleAll(Seq(lakeF, termF, clusterF, vectorF, textF)) // ADVICE r18
-        (lakeF.get(), termF.get(), clusterF.get(), vectorF.get(),
-          textF.get())
-      } finally pool.shutdown()
-    val out = Seq(lakeSurface, termSurface, clusterSurface, vectorSurface,
-        textSurface)
+        }))
       .reduce(_ unionByName _)
       .orderBy(col("surface"), col("k"), col("v"))
-    (if (logical) rtbfLogicalLegRuns else rtbfLegRuns).add(legs.toMap)
     out
   }
 

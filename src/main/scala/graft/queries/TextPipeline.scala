@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Phases, Tables}
 import graft.functions.TextOps
 import graft.operators.{AsofJoin, ConnectedComponents, Dedup, SetSimJoin, WeightedSample}
 
@@ -623,15 +623,6 @@ object TextPipeline {
     * scrub leg is an idempotent pruned no-op scan (the lake-delete cost
     * has its own bench row, `s4_targeted_delete`); the remove stays the
     * honest headline. */
-  /** Per-run leg timings of [[clusterIndexRemove]] (VERDICT r12 item 4):
-    * each invocation appends {ensure, snapshot, lake_stage, victims,
-    * lake_scrub, index_remove} seconds; Bench clears this after its
-    * warmups and publishes the min-of-3 per leg beside the headline
-    * total, so a driver-side regression in the composed takedown is
-    * attributable to its leg instead of vanishing into one number. */
-  private[graft] val removeLegRuns =
-    new java.util.concurrent.CopyOnWriteArrayList[Map[String, Double]]()
-
   /** Parallel index snapshot: FileUtil.copy walks the index's few
     * hundred bucket files serially (~3 s of the timed path at sf0.1); a
     * small driver pool copies them concurrently — pure I/O either way.
@@ -650,60 +641,42 @@ object TextPipeline {
       walk(basePath)
     }
     val baseUri = basePath.toUri.getPath
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
-    try {
-      val futures = files.map { f =>
-        pool.submit(new Runnable {
-          def run(): Unit = {
-            val rel = f.toUri.getPath.stripPrefix(baseUri).stripPrefix("/")
-            org.apache.hadoop.fs.FileUtil.copy(fs, f, fs,
-              new org.apache.hadoop.fs.Path(s"$scratch/$rel"), false, conf)
-          }
-        })
-      }
-      futures.foreach(_.get())
-    } finally pool.shutdown()
+    graft.operators.IndexMaintenance.parallel(files.map(f => () => {
+      val rel = f.toUri.getPath.stripPrefix(baseUri).stripPrefix("/")
+      org.apache.hadoop.fs.FileUtil.copy(fs, f, fs,
+        new org.apache.hadoop.fs.Path(s"$scratch/$rel"), false, conf)
+    }), threads = 16)
   }
 
   def clusterIndexRemove(s: SparkSession, dir: String): DataFrame = {
-    val legs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def leg[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      legs(name) = (System.nanoTime() - t0) / 1e9; r
-    }
-    val base = leg("ensure") { ensureClusterIndex(s, dir) }
+    val base = Phases.time("ensure") { ensureClusterIndex(s, dir) }
     val key = Tables.fixtureKey(dir)
     val tmp = System.getProperty("java.io.tmpdir")
     val scratch = s"$tmp/graft_clusteridx_rm/$key"
-    leg("snapshot") { snapshotIndex(s, base, scratch) }
+    Phases.time("snapshot") { snapshotIndex(s, base, scratch) }
     val lake = s"$tmp/graft_rmlake/$key"
     val docs = Tables.documents(s, dir)
-    leg("lake_stage") {
+    Phases.time("lake_stage") {
       Staging.stageOnce(docs, lake)(
         docs.write.mode("overwrite").partitionBy("source").parquet(lake))
     }
     // victims read out of the FIXTURE (the lake may already be scrubbed
     // on a warm run) — remove() needs the exact ingested (id, text) rows
     // for its fingerprint subtraction
-    val victims = leg("victims") {
+    val victims = Phases.time("victims") {
       docs.filter(col("doc_id") % 37 === 0)
         .select(col("doc_id"), col("text")).localCheckpoint()
     }
-    leg("lake_scrub") {
+    Phases.time("lake_scrub") {
       graft.operators.TargetedDelete.delete(s, lake, Seq("source"), "doc_id",
         victims.select(col("doc_id")))
     }
-    leg("index_remove") {
+    // the staged remove times its three windows (rm_validate, rm_stage,
+    // rm_flip) nested inside index_remove (VERDICT r16 item 2)
+    Phases.time("index_remove") {
       graft.operators.ClusterIndex.remove(victims, "doc_id", "text", scratch,
         tag = "takedown")
     }
-    // sub-leg attribution INSIDE index_remove (VERDICT r16 item 2): the
-    // staged remove's three windows ride the same takedown_legs map, so
-    // a cross-box swing in the one conflated number names its stage
-    // (validation+commit / lease-free staging / flip)
-    graft.operators.ClusterIndex.lastRemoveWindows(scratch)
-      .foreach { case (k, v) => legs(k) = v }
-    removeLegRuns.add(legs.toMap)
     graft.operators.ClusterIndex.assignments(s, scratch, "doc_id")
       .join(s.read.parquet(lake).select(col("doc_id")), Seq("doc_id"), "leftsemi")
       .orderBy(col("doc_id"))
@@ -727,36 +700,20 @@ object TextPipeline {
     * where maintenance belongs — the compaction benchmarks — not inside
     * every takedown (VERDICT r14 item 1: the in-path reclaim was 9.3 s
     * of this row's 13 s and mostly re-measured compact()). */
-  /** Per-run leg timings of [[clusterIndexLogicalRemove]] (VERDICT r13
-    * item 2 — the heaviest query in the suite was one conflated number):
-    * each invocation appends {ensure, snapshot, victims, logical}
-    * seconds; Bench clears this after its warmups and publishes the
-    * min-of-3 per leg as `takedown_legs_logical` beside the physical
-    * `takedown_legs`, with "serve" derived as run total minus legs —
-    * since r15 the serve leg carries the read-only bridge-split. */
-  private[graft] val logicalLegRuns =
-    new java.util.concurrent.CopyOnWriteArrayList[Map[String, Double]]()
-
   def clusterIndexLogicalRemove(s: SparkSession, dir: String): DataFrame = {
-    val legs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def leg[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      legs(name) = (System.nanoTime() - t0) / 1e9; r
-    }
-    val base = leg("ensure") { ensureClusterIndex(s, dir) }
+    val base = Phases.time("ensure") { ensureClusterIndex(s, dir) }
     val key = Tables.fixtureKey(dir)
     val scratch =
       s"${System.getProperty("java.io.tmpdir")}/graft_clusteridx_lrm/$key"
-    leg("snapshot") { snapshotIndex(s, base, scratch) }
-    val victims = leg("victims") {
+    Phases.time("snapshot") { snapshotIndex(s, base, scratch) }
+    val victims = Phases.time("victims") {
       Tables.documents(s, dir).filter(col("doc_id") % 41 === 0)
         .select(col("doc_id"), col("text")).localCheckpoint()
     }
-    leg("logical") {
+    Phases.time("logical") {
       graft.operators.ClusterIndex.logicalRemove(victims, "doc_id", "text",
         scratch, tag = "rtbf")
     }
-    logicalLegRuns.add(legs.toMap)
     graft.operators.ClusterIndex.assignments(s, scratch, "doc_id")
       .orderBy(col("doc_id"))
   }
@@ -1196,36 +1153,21 @@ object TextPipeline {
     * a full-strength check that targeted physical deletion equals a
     * fresh rebuild without the victims, df/N/avgdl included. Lands in
     * the bench's maintenance band by name shape. */
-  /** Per-run leg timings of [[termIndexRemove]] — the same attribution
-    * channel as the cluster takedowns from the row's first round, so
-    * its wall never becomes one conflated number: {ensure, snapshot,
-    * victims, index_remove}; Bench clears after warmups and publishes
-    * min-of-3 per leg as `takedown_legs_term`, with "serve" derived as
-    * run total minus legs. */
-  private[graft] val termLegRuns =
-    new java.util.concurrent.CopyOnWriteArrayList[Map[String, Double]]()
-
   def termIndexRemove(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val legs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def leg[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      legs(name) = (System.nanoTime() - t0) / 1e9; r
-    }
-    val base = leg("ensure") { ensureTermIndex(s, dir) }
+    val base = Phases.time("ensure") { ensureTermIndex(s, dir) }
     val key = Tables.fixtureKey(dir)
     val scratch =
       s"${System.getProperty("java.io.tmpdir")}/graft_termidx_rm/$key"
-    leg("snapshot") { snapshotIndex(s, base, scratch) }
-    val victims = leg("victims") {
+    Phases.time("snapshot") { snapshotIndex(s, base, scratch) }
+    val victims = Phases.time("victims") {
       Tables.documents(s, dir).filter(col("doc_id") % 43 === 0)
         .select(col("doc_id"), col("text")).localCheckpoint()
     }
-    leg("index_remove") {
+    Phases.time("index_remove") {
       graft.operators.TermIndex.remove(victims, "doc_id", "text", scratch,
         tag = "takedown")
     }
-    termLegRuns.add(legs.toMap)
     val queries = Seq(
       (1L, "spark table join"),
       (2L, "data stream window agg"),
@@ -1336,74 +1278,40 @@ object TextPipeline {
     * ranks are value-exact, no rerank fudge needed. At FULL visit
     * fraction (nprobe = nlist) the indexed fusion provably equals the
     * exact-leg fusion (RrfIndexedSpec). */
-  /** Per-run leg walls of [[rrfFusionIndexed]] {ensure, lex, sem} —
-    * "fuse" is derived as run total minus legs (the legSplitJson
-    * "serve" convention). Bench clears after warmups and publishes
-    * min-of-3 per leg as `rrf_legs` (VERDICT r17 item 2: the fused row
-    * sat 1.8× above its standalone-leg sum and the one conflated number
-    * couldn't say which leg owned the gap). */
-  private[graft] val rrfLegRuns =
-    new java.util.concurrent.CopyOnWriteArrayList[Map[String, Double]]()
-
   def rrfFusionIndexed(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val legN = 20; val topK = 10; val kRrf = 60
-    val legs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def wall[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     val docs = Tables.documents(s, dir)
-    val (idxs, tEnsure) = wall {
+    val (termIdx, vecIdx) = Phases.time("ensure") {
       (ensureTermIndex(s, dir), Vectors.ensureIndex(s, dir))
     }
-    val (termIdx, vecIdx) = idxs
-    legs("ensure") = tEnsure
     // Each leg materializes EAGERLY (<= 5 queries x 20 rows) on its own
     // driver thread, so the postings-bucket scan and the probed-cell
     // scan run CONCURRENTLY — the fused row's wall is max(leg), not
     // lex + sem + fuse in one serialized job DAG (the r17 serve floor:
     // fused 2.8s vs 1.5s leg sum came from exactly that serialization).
     // The fuse then joins two checkpointed 100-row tables — negligible.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (lex, sem) =
-      try {
-        val lexF = pool.submit(new java.util.concurrent.Callable[(DataFrame, Double)] {
-          def call() = wall {
-            graft.operators.TermIndex.topK(s, termIdx,
-                docs.filter(col("doc_id").isInCollection(Vectors.probeIds))
-                  .select(col("doc_id").as("query_id"), col("text").as("q")),
-                k = legN, excludeSelf = true)
-              .select(col("query_id"), col("doc_id"), col("rank").as("lrank"))
-              .localCheckpoint()
-          }
-        })
-        val semF = pool.submit(new java.util.concurrent.Callable[(DataFrame, Double)] {
-          def call() = wall {
-            val emb = Tables.embeddings(s, dir)
-            graft.operators.VectorIndex.topK(s, vecIdx,
-                emb.filter(col("vec_id").isInCollection(Vectors.probeIds))
-                  .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-                k = legN, excludeSelf = true)
-              .select(col("q_id").as("query_id"), col("vec_id").as("doc_id"),
-                col("rn").as("vrank"))
-              .localCheckpoint()
-          }
-        })
-        val t0 = System.nanoTime()
-        val (lexDf, tLex) = lexF.get()
-        val (semDf, tSem) = semF.get()
-        // the two legs OVERLAP in wall time: "legs" is the parallel
-        // section's wall (what the row actually pays), rm_lex/rm_sem
-        // are per-leg attributions nested inside it (the rm_ sub-leg
-        // convention — they attribute, they don't add), and the
-        // artifact's derived "serve" is then the fuse+rank tail alone
-        legs("legs") = (System.nanoTime() - t0) / 1e9
-        legs("rm_lex") = tLex
-        legs("rm_sem") = tSem
-        (lexDf, semDf)
-      } finally pool.shutdown()
-    rrfLegRuns.add(legs.toMap)
+    // Phase "legs" is the parallel section's wall, with the overlapping
+    // rm_lex/rm_sem nested in it (VERDICT r17 item 2).
+    val Seq(lex, sem) = Phases.time("legs")(graft.operators.IndexMaintenance.parallel(Seq(
+      () => Phases.time("rm_lex") {
+        graft.operators.TermIndex.topK(s, termIdx,
+            docs.filter(col("doc_id").isInCollection(Vectors.probeIds))
+              .select(col("doc_id").as("query_id"), col("text").as("q")),
+            k = legN, excludeSelf = true)
+          .select(col("query_id"), col("doc_id"), col("rank").as("lrank"))
+          .localCheckpoint()
+      },
+      () => Phases.time("rm_sem") {
+        val emb = Tables.embeddings(s, dir)
+        graft.operators.VectorIndex.topK(s, vecIdx,
+            emb.filter(col("vec_id").isInCollection(Vectors.probeIds))
+              .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
+            k = legN, excludeSelf = true)
+          .select(col("q_id").as("query_id"), col("vec_id").as("doc_id"),
+            col("rn").as("vrank"))
+          .localCheckpoint()
+      })))
     lex.join(sem, Seq("query_id", "doc_id"), "full_outer")
       .withColumn("rrf", round(
         coalesce(lit(1.0) / (lit(kRrf) + col("lrank")), lit(0.0)) +

@@ -134,10 +134,7 @@ object S4Main {
 
   def main(args: Array[String]): Unit = {
     val (cmd, flags) = parse(args)
-    val spark = SparkSession.builder()
-      .appName("s4spark")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.GraftSession(cores = None)
     if (flags.contains("s3a")) applyS3aProfile(spark)
     cmd match {
       case "run" =>

@@ -43,12 +43,8 @@ class AppendEnvelopeSpec extends SparkSpec {
                             isFresh: (String, DataFrame) => Boolean,
                             check: String => Unit = _ => ())
 
-  private def concurrently[A](xs: Seq[A])(f: A => Unit): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(xs.size)
-    try IndexMaintenance.settleAll(xs.map(x =>
-      pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = f(x) })))
-    finally pool.shutdown()
-  }
+  private def concurrently[A](xs: Seq[A])(f: A => Unit): Unit =
+    IndexMaintenance.parallel(xs.map(x => () => f(x)))
 
   private def docs(rows: (Long, String)*): DataFrame = rows.toDF("doc_id", "text")
 

@@ -1,6 +1,10 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.Phases.Phase
 
 /** The self-defending bench archive (VERDICT r13 item 1): r13 shipped a
   * 40% inflated headline because nothing diffed the new artifact
@@ -96,9 +100,10 @@ class BenchArchiveSpec extends AnyFunSuite {
     // index_remove = 10s of the 12s run; its windows rm_validate 2 +
     // rm_stage 7 + rm_flip 1 are NESTED inside that wall — serve must be
     // total - (top-level legs) = 12 - 11 = 1, never 12 - 21 clamped to 0
-    val legs = Seq(Map("ensure" -> 1.0, "index_remove" -> 10.0,
-      "rm_validate" -> 2.0, "rm_stage" -> 7.0, "rm_flip" -> 1.0))
-    val json = Bench.legSplitJson(legs, totals = Seq(12.0))
+    val run = ListMap("ensure" -> Phase(0, 1.0), "index_remove" -> Phase(0, 10.0),
+      "rm_validate" -> Phase(1, 2.0), "rm_stage" -> Phase(1, 7.0),
+      "rm_flip" -> Phase(1, 1.0))
+    val json = Bench.legSplitJson(Seq(12.0 -> run))
     val parsed = Bench.parseFlatObject(s""""takedown_legs":$json""", "takedown_legs")
     assert(parsed("serve") === 1.0, s"serve must skip rm_* sub-legs: $json")
     assert(parsed("rm_stage") === 7.0 && parsed("rm_validate") === 2.0 &&
@@ -115,6 +120,21 @@ class BenchArchiveSpec extends AnyFunSuite {
     val term = Bench.parseLegMins(
       """{"takedown_legs_term":{"snapshot":1.2,"index_remove":3.4}}""")
     assert(term("takedown_legs_term.index_remove") === 3.4, term.toString)
+  }
+
+  test("leg fields: min per phase over the runs that have it, serve per run") {
+    // run 2 never entered rm_flip (e.g. a replayed remove); its other
+    // phases and its serve still count
+    val runs = Seq(
+      6.0 -> ListMap("index_remove" -> Phase(0, 5.0), "rm_flip" -> Phase(1, 1.5)),
+      4.5 -> ListMap("index_remove" -> Phase(0, 4.0)))
+    val parsed = Bench.parseFlatObject(
+      s""""f":${Bench.legSplitJson(runs)}""", "f")
+    assert(parsed === Map("index_remove" -> 4.0, "rm_flip" -> 1.5, "serve" -> 0.5))
+    assert(Bench.legSplitJson(Seq(1.0 -> ListMap.empty)) === "{}")
+    // the RTBF rows' per-store keys carry a dot and still join the diff
+    assert(Bench.parseLegMins("""{"takedown_legs_rtbf":{"rm_idx.text":1.5}}""") ===
+      Map("takedown_legs_rtbf.rm_idx.text" -> 1.5))
   }
 
   test("maintenance rows split out of the query band (r15 item 2)") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.S4Stream
 
@@ -28,12 +27,7 @@ object IngestBench {
   def main(args: Array[String]): Unit = {
     val nLines = args.headOption.map(_.toLong).getOrElse(2000000L)
     val nFiles = args.lift(1).map(_.toInt).getOrElse(32)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(Some(32), logLevel = "ERROR")
     import spark.implicits._
 
     val base = java.nio.file.Files.createTempDirectory("ingestbench").toString

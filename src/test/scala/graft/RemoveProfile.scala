@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off leg profiler for doc_cluster_index_remove (r11 tuning), plus
@@ -15,51 +14,45 @@ object RemoveProfile {
   def main(args: Array[String]): Unit = {
     if (args.length > 1 && args(1) == "sweep") return sweep(args(0))
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def leg[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[rmprof] $name%-18s ${(System.nanoTime() - t0) / 1e9}%7.2f s"); r
-    }
+    val spark = GraftSession(Some(32))
     (1 to 2).foreach { round =>
       println(s"=== round $round ===")
-      val conf = spark.sparkContext.hadoopConfiguration
-      val base = leg("ensure-base") { graft.queries.TextPipeline.ensureClusterIndex(spark, dir) }
-      val key = graft.Tables.fixtureKey(dir)
-      val tmp = System.getProperty("java.io.tmpdir")
-      val scratch = s"$tmp/graft_clusteridx_rm/$key"
-      leg("snapshot-copy") {
-        val fs = new org.apache.hadoop.fs.Path(scratch).getFileSystem(conf)
-        fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-        org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(base),
-          fs, new org.apache.hadoop.fs.Path(scratch), false, conf)
+      val (_, phases) = Phases.record {
+        val conf = spark.sparkContext.hadoopConfiguration
+        val base = Phases.time("ensure_base") { graft.queries.TextPipeline.ensureClusterIndex(spark, dir) }
+        val key = graft.Tables.fixtureKey(dir)
+        val tmp = System.getProperty("java.io.tmpdir")
+        val scratch = s"$tmp/graft_clusteridx_rm/$key"
+        Phases.time("snapshot_copy") {
+          val fs = new org.apache.hadoop.fs.Path(scratch).getFileSystem(conf)
+          fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
+          org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(base),
+            fs, new org.apache.hadoop.fs.Path(scratch), false, conf)
+        }
+        val lake = s"$tmp/graft_rmlake/$key"
+        val docs = graft.Tables.documents(spark, dir)
+        Phases.time("lake_write") {
+          docs.write.mode("overwrite").partitionBy("source").parquet(lake)
+        }
+        val victims = Phases.time("victims_pin") {
+          docs.filter(col("doc_id") % 37 === 0)
+            .select(col("doc_id"), col("text")).localCheckpoint()
+        }
+        Phases.time("lake_delete") {
+          graft.operators.TargetedDelete.delete(spark, lake, Seq("source"),
+            "doc_id", victims.select(col("doc_id")))
+        }
+        Phases.time("index_remove") {
+          graft.operators.ClusterIndex.remove(victims, "doc_id", "text",
+            scratch, tag = "takedown")
+        }
+        Phases.time("serve") {
+          graft.operators.ClusterIndex.assignments(spark, scratch, "doc_id")
+            .join(spark.read.parquet(lake).select(col("doc_id")), Seq("doc_id"), "leftsemi")
+            .orderBy(col("doc_id")).count()
+        }
       }
-      val lake = s"$tmp/graft_rmlake/$key"
-      val docs = graft.Tables.documents(spark, dir)
-      leg("lake-write") {
-        docs.write.mode("overwrite").partitionBy("source").parquet(lake)
-      }
-      val victims = leg("victims-pin") {
-        docs.filter(col("doc_id") % 37 === 0)
-          .select(col("doc_id"), col("text")).localCheckpoint()
-      }
-      leg("lake-delete") {
-        graft.operators.TargetedDelete.delete(spark, lake, Seq("source"),
-          "doc_id", victims.select(col("doc_id")))
-      }
-      leg("index-remove") {
-        graft.operators.ClusterIndex.remove(victims, "doc_id", "text",
-          scratch, tag = "takedown")
-      }
-      leg("serve") {
-        graft.operators.ClusterIndex.assignments(spark, scratch, "doc_id")
-          .join(spark.read.parquet(lake).select(col("doc_id")), Seq("doc_id"), "leftsemi")
-          .orderBy(col("doc_id")).count()
-      }
+      Phases.lines(phases).foreach(l => println(s"[rmprof] $l"))
     }
     spark.stop()
   }
@@ -67,12 +60,7 @@ object RemoveProfile {
   /** Victim-fraction cost curve (r12): remove() wall time per fraction,
     * fast path vs forced join path, each on a FRESH index snapshot. */
   private def sweep(dir: String): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(Some(32), logLevel = "ERROR")
     val conf = spark.sparkContext.hadoopConfiguration
     val base = graft.queries.TextPipeline.ensureClusterIndex(spark, dir)
     val docs = graft.Tables.documents(spark, dir)
@@ -98,18 +86,16 @@ object RemoveProfile {
         fs, new org.apache.hadoop.fs.Path(scratch), false, conf)
       if (mode == "join") System.setProperty("graft.delete.broadcastKeys", "1")
       else System.clearProperty("graft.delete.broadcastKeys")
-      val t0 = System.nanoTime()
-      if (mode == "logical") {
-        graft.operators.ClusterIndex.logicalRemove(victims, "doc_id", "text",
-          scratch, tag = s"sw_${frac}_$mode")
-        println(f"$frac%,.4f,$k,logical,${(System.nanoTime() - t0) / 1e9}%.2f")
-        val t1 = System.nanoTime()
-        graft.operators.ClusterIndex.compact(spark, scratch)
-        println(f"$frac%,.4f,$k,reclaim,${(System.nanoTime() - t1) / 1e9}%.2f")
-      } else {
-        graft.operators.ClusterIndex.remove(victims, "doc_id", "text",
-          scratch, tag = s"sw_${frac}_$mode")
-        println(f"$frac%,.4f,$k,$mode,${(System.nanoTime() - t0) / 1e9}%.2f")
+      val (_, ph) = Phases.record {
+        if (mode == "logical") {
+          Phases.time("logical")(graft.operators.ClusterIndex.logicalRemove(
+            victims, "doc_id", "text", scratch, tag = s"sw_${frac}_$mode"))
+          Phases.time("reclaim")(graft.operators.ClusterIndex.compact(spark, scratch))
+        } else Phases.time(mode)(graft.operators.ClusterIndex.remove(
+          victims, "doc_id", "text", scratch, tag = s"sw_${frac}_$mode"))
+      }
+      ph.filter(_._2.depth == 0).foreach { case (m, p) =>
+        println(f"$frac%,.4f,$k,$m,${p.seconds}%.2f")
       }
     }
     System.clearProperty("graft.delete.broadcastKeys")

@@ -39,13 +39,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val copies = if (args.length > 1) args(1).toInt else 5
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(Some(32), logLevel = "ERROR")
     val src = "/root/testdata/sf0.1"
 
     def replicate(name: String, rekey: (DataFrame, Int, Long) => DataFrame): Unit = {

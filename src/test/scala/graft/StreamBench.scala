@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.{NearDupStream, S4Stream}
@@ -23,18 +23,11 @@ import graft.streaming.{NearDupStream, S4Stream}
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val nRows = args.headOption.map(_.toLong).getOrElse(500000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.NoForkLocalFileSystem].getName)
-      // transformWithState requires RocksDB (multiple column families);
-      // run EVERY operator on it so the numbers share one store
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // transformWithState requires RocksDB (multiple column families);
+    // run EVERY operator on it so the numbers share one store
+    val spark = GraftSession(Some(32), logLevel = "ERROR", extra = Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
 
     val base = java.nio.file.Files.createTempDirectory("streambench").toString
 

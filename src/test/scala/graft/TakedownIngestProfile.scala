@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Takedown-under-ingest pause measurement (VERDICT r12 item 5): the
@@ -23,12 +22,7 @@ import org.apache.spark.sql.functions._
 object TakedownIngestProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(Some(32), logLevel = "ERROR")
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
     val base = graft.queries.TextPipeline.ensureClusterIndex(spark, dir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** BM25 slope evidence (SCALING.md): times the persisted-index serve
   * path (`TermIndex.topK`) against the closed-form recompute
   * (`TextPipeline.bm25TopK`) on the same fixture dir, plus the
@@ -15,20 +13,9 @@ object TermScaleProfile {
     val dir = args(0)
     val runs = if (args.length > 1) args(1).toInt else 3
     val nBuckets = if (args.length > 2) args(2).toInt else 64
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(Some(32), logLevel = "ERROR")
     import spark.implicits._
 
-    def time[T](f: => T): (Double, T) = {
-      val t0 = System.nanoTime(); val r = f
-      ((System.nanoTime() - t0) / 1e9, r)
-    }
     val docs = Tables.documents(spark, dir)
     val nDocs = docs.count()
     val idx = s"${System.getProperty("java.io.tmpdir")}/graft_termprof/" +
@@ -37,19 +24,20 @@ object TermScaleProfile {
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(idx), true)
-    val (buildS, _) = time {
-      graft.operators.TermIndex.build(docs, "doc_id", "text", idx, nBuckets)
-    }
     val queries = Seq((1L, "spark table join"), (2L, "data stream window agg"),
       (3L, "dup merge"), (4L, "customer query fast")).toDF("query_id", "q")
-    val serve = (1 to runs).map { _ =>
-      time(graft.operators.TermIndex.topK(spark, idx, queries, k = 10)
-        .collect().length)._1
+    val (_, phases) = Phases.record {
+      Phases.time("build") {
+        graft.operators.TermIndex.build(docs, "doc_id", "text", idx, nBuckets)
+      }
+      (1 to runs).foreach(i => Phases.time(s"serve_$i")(
+        graft.operators.TermIndex.topK(spark, idx, queries, k = 10).collect()))
+      (1 to runs).foreach(i => Phases.time(s"recompute_$i")(
+        graft.queries.TextPipeline.bm25TopK(spark, dir).collect()))
     }
-    val recompute = (1 to runs).map { _ =>
-      time(graft.queries.TextPipeline.bm25TopK(spark, dir)
-        .collect().length)._1
-    }
+    val buildS = phases("build").seconds
+    val serve = (1 to runs).map(i => phases(s"serve_$i").seconds)
+    val recompute = (1 to runs).map(i => phases(s"recompute_$i").seconds)
     println(f"[termprof] dir=$dir docs=$nDocs nBuckets=$nBuckets build=$buildS%.2fs " +
       f"serve_min=${serve.min}%.2fs recompute_min=${recompute.min}%.2fs " +
       s"serve=${serve.map(t => f"$t%.2f").mkString(",")} " +
