@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *  - `<dir>/postings` (token, id, set size)  PARTITIONED BY (_src, tb)
   *  - `<dir>/df`       (token, doc freq)      PARTITIONED BY (tb) — frozen
   *  - `<dir>/edges`    (u, v) similarity-graph adjacency log in the
-  *    deletion-safe set-node form ([[SetSimJoin.jaccardEdgesSetForm]]:
+  *    deletion-safe set-node form ([[SetSimJoin.jaccardEdgesWithLog]]:
   *    negative ids are virtual per-distinct-token-set nodes) plus
   *    append-time verified doc-doc pairs — PARTITIONED BY (_src, eb).
   *    [[remove]]'s scoped component re-split reads this log (one
@@ -239,7 +239,7 @@ object ClusterIndex {
     ClusterServe.probeParts(s,
       IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir),
       incoming, idCol, textCol, excludeTag,
-      LogicalDelete.ids(s, indexDir))._1
+      LogicalDelete.ids(s, indexDir), salt = "probe")._1
 
   /** Which of `ids` does the index already hold an assignment for?
     * Bounded work: the batch's id-hash buckets (a ≤`nBuckets` collect)
@@ -544,7 +544,6 @@ object ClusterIndex {
         Seq(idCol, textCol), "cluster") { ctx =>
     val s = delta.sparkSession
     val root = ctx.root
-    val thr = ctx.meta.getAs[Double]("threshold")
     val nBuckets = ctx.meta.getAs[Int]("n_buckets")
     // "build" is the build generation's own _src value: excludeTag =
     // Some("build") would also exclude the whole build corpus from the
@@ -553,8 +552,8 @@ object ClusterIndex {
     // _src=build, widening the exposure
     IndexMaintenance.admitOverwriteTag(ctx, tag, "ClusterIndex.append")
     val tagS = sanitize(tag)
-    val (assignInc, merges, toksD, matchPairs) = ClusterServe.probeParts(s, root, delta,
-      idCol, textCol, excludeTag = Some(tag), ctx.tomb)
+    val (assignInc, merges, toksD, matchPairs, deltaSets) = ClusterServe.probeParts(s,
+      root, delta, idCol, textCol, excludeTag = Some(tag), ctx.tomb, salt = tagS)
     // id-sign guard BEFORE any write (review-caught twice: a post-write
     // check would leave a rejected delta's rows committed, and an EMPTY
     // delta — a re-crawl-only streaming batch — aggregates min to null,
@@ -589,11 +588,9 @@ object ClusterIndex {
     // (matchPairs is pair-distinct — cands was). Tag-scoped dynamic
     // overwrite like the other tables: replay rewrites its partitions.
     // salted by this batch's tag so a re-ingested id can never re-create
-    // an earlier generation's node id (delta-sized second repGraph pass;
-    // probeParts' CC input is computed against a different exclusion set
-    // and cannot be shared without entangling the probe hot path)
-    val deltaEdges = SetSimJoin
-      .jaccardEdgesSetForm(toksD, idCol, "_toks", thr, salt = tagS)
+    // an earlier generation's node id (probeParts' repGraph pass, whose
+    // frames its CC input already materialized)
+    val deltaEdges = deltaSets
       .unionByName(matchPairs.select(
         least(col("_inc"), col("_ref")).as("u"),
         greatest(col("_inc"), col("_ref")).as("v")))

@@ -147,44 +147,15 @@ private[operators] object ClusterRemoval {
       completedReplay = replay && !planReady &&
         Fingerprint.readRemoveState(conf, normDir, rmTag).isEmpty
       if (nV > 0L && !completedReplay) {
-        def bVids(df: DataFrame) = TargetedDelete.maybeBroadcast(df, nV)
         // bounded collect: the victim set's id-hash buckets — a pure
         // function of the victims argument, so replay-stable
         vIdb = vids.select(idb(col(idCol), nBuckets).as("idb"))
           .distinct().collect().map(_.getLong(0)).toSeq
-        if (!replay && !planReady) {
-          // content known-check (one row per id in this family — but a
-          // duplicated or conflicting victim feed still mismatches and
-          // refuses). Pristine reads: rewrites only start after PLAN_READY.
-          // The known-check count and the provenance guard read two
-          // DIFFERENT tables and share no state — run them concurrently
-          // (r18 opt, guide §2.6; runLegs rethrows the known-check's
-          // refusal first on a double failure, preserving message order)
-          val vToksA = Phases.time("vtoks")(s.read.parquet(s"$root/toks")
-            .filter(col("idb").isin(vIdb: _*))
-            .join(bVids(vids), Seq(idCol), "leftsemi")
-            .select(col(idCol), col("_toks"))
-            .localCheckpoint(eager = false))
-          IndexMaintenance.runLegs(Seq(
-            "rm.known" -> (() => Phases.time("known_check")(
-              TargetedDelete.requireKnownContent(
-                victims, xxhash64(Dedup.hashedTokenSet(col(textCol))),
-                vToksA, xxhash64(col("_toks")), idCol, nV,
-                "ClusterIndex.remove"))),
-            // mid-append crash guard (see TextIndex.remove): a victim from
-            // an append whose fingerprint merge never recorded must not
-            // subtract — its delta was never added. Pruned provenance read,
-            // bounded by |tags|.
-            "rm.guard" -> (() => if (oldFp.isDefined) {
-              val vSrcs = Phases.time("guard")(s.read.parquet(s"$root/assign")
-                .filter(col("idb").isin(vIdb: _*))
-                .join(bVids(vids), Seq(idCol), "leftsemi")
-                .select(col("_src")).filter(col("_src").isNotNull) // pre-provenance rows = build-era
-                .distinct().collect().map(_.getString(0)).toSet)
-              Fingerprint.requireRecordedProvenance(conf, indexDir, vSrcs,
-                "ClusterIndex.remove")
-            })))
-        }
+        // content known-check and provenance guard on pristine tables:
+        // rewrites only start after PLAN_READY
+        if (!replay && !planReady)
+          validateVictims(s, root, normDir, oldFp, victims, vids, nV, vIdb,
+            idCol, textCol, "rm", "ClusterIndex.remove")
         // ---- idempotent fingerprint commit, the logicalRemove shape:
         // target persisted BEFORE the meta overwrite (and the metabase
         // before both — see Fingerprint.writeRemoveMetaBase), so every
@@ -238,6 +209,38 @@ private[operators] object ClusterRemoval {
         finishRemove(s, conf, normDir, rmTag, barrierBatch)
       })
     }
+  }
+
+  /** The one victim check of both removal verbs, on a first attempt:
+    * the content known-check (one row per id in this family — but a
+    * duplicated or conflicting victim feed still mismatches and refuses)
+    * and the mid-append crash guard (see [[TextIndex.remove]]: a victim
+    * from an append whose fingerprint merge never recorded must not
+    * subtract — its delta was never added; pruned provenance read,
+    * bounded by |tags|). They read two DIFFERENT tables and share no
+    * state, so they run as concurrent legs `<legs>.known`/`<legs>.guard`
+    * (r18 opt, guide §2.6; runLegs rethrows the known-check's refusal
+    * first on a double failure, preserving message order). */
+  private def validateVictims(s: SparkSession, root: String, normDir: String,
+                              oldFp: Option[(Long, Long)], victims: DataFrame,
+                              vids: DataFrame, nV: Long, vIdb: Seq[Long],
+                              idCol: String, textCol: String, legs: String,
+                              opName: String): Unit = {
+    def pruned(table: String) = s.read.parquet(s"$root/$table")
+      .filter(col("idb").isin(vIdb: _*))
+      .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "leftsemi")
+    IndexMaintenance.runLegs(Seq(
+      s"$legs.known" -> (() => Phases.time("known_check")(
+        TargetedDelete.requireKnownContent(
+          victims, xxhash64(Dedup.hashedTokenSet(col(textCol))),
+          pruned("toks"), xxhash64(col("_toks")), idCol, nV, opName))),
+      s"$legs.guard" -> (() => if (oldFp.isDefined) {
+        val vSrcs = Phases.time("guard")(pruned("assign")
+          .select(col("_src")).filter(col("_src").isNotNull) // pre-provenance rows = build-era
+          .distinct().collect().map(_.getString(0)).toSet)
+        Fingerprint.requireRecordedProvenance(s.sparkContext.hadoopConfiguration,
+          normDir, vSrcs, opName)
+      })))
   }
 
   /** Persist the re-split plan (newassign / parts / vtb / comps) for
@@ -705,80 +708,50 @@ private[operators] object ClusterRemoval {
   def logicalRemove(victims: DataFrame, idCol: String, textCol: String,
                     indexDir: String, tag: String = "remove"): Unit = {
     val s = victims.sparkSession
-    import s.implicits._
-    // the lease-free overlay half's arguments, returned by the envelope
-    // when the mutating half ran (r16 — see the comment below)
-    val overlayArgs = IndexMaintenance.removal(victims, indexDir, tag,
-        Seq(idCol, textCol), "ClusterIndex.logicalRemove") { ctx =>
-    val (conf, normDir, root) = (ctx.conf, ctx.indexDir, ctx.root)
-    val (rmTag, vfp, replay) = (ctx.rmTag, ctx.vfp, ctx.replay)
-    val m = s.read.parquet(s"$root/meta").head()
-    val thr = m.getAs[Double]("threshold")
-    val nBuckets = m.getAs[Int]("n_buckets")
-    val oldFp = IndexMaintenance.fingerprintOf(m)
-    val vids = victims.select(col(idCol)).distinct().localCheckpoint()
-    val nV = vids.count()
-    def bVids(df: DataFrame) = TargetedDelete.maybeBroadcast(df, nV)
-    if (nV == 0L || ctx.completedReplay) None
-    else {
-      // a pre-r11 index has no adjacency log: compact's reclaim re-split
-      // reads it, so refusing HERE — nothing mutated yet — beats a
-      // tombstone that bricks every later compact (review-caught r13;
-      // same edgesOk rule as ensure())
-      val edgesDir = new org.apache.hadoop.fs.Path(s"$root/edges")
-      val edgesFs = edgesDir.getFileSystem(conf)
-      if (!edgesFs.exists(edgesDir) || edgesFs.listStatus(edgesDir).isEmpty)
-        Fingerprint.refuse(
-          "ClusterIndex.logicalRemove: this index has no adjacency log " +
-            "(pre-r11 layout) — rebuild it (ensure()) first; compact's " +
-            "reclaim needs the log to re-split the victims' components")
-      val vIdb = vids.select(idb(col(idCol), nBuckets).as("idb"))
-        .distinct().collect().map(_.getLong(0)).toSeq
-      if (!replay) {
-        // a second logical delete of the same id would double-subtract
-        LogicalDelete.requireNotTombstoned(s, normDir, vids, idCol,
-          "ClusterIndex.logicalRemove")
-        // known-check and provenance guard run concurrently like
-        // remove()'s (r18)
-        IndexMaintenance.runLegs(Seq(
-          "lrm.known" -> (() => Phases.time("known_check")(
-            TargetedDelete.requireKnownContent(
-              victims, xxhash64(Dedup.hashedTokenSet(col(textCol))),
-              s.read.parquet(s"$root/toks")
-                .filter(col("idb").isin(vIdb: _*))
-                .join(bVids(vids), Seq(idCol), "leftsemi"),
-              xxhash64(col("_toks")), idCol, nV,
-              "ClusterIndex.logicalRemove"))),
-          // mid-append crash guard, same as remove()
-          "lrm.guard" -> (() => if (oldFp.isDefined) {
-            val vSrcs = Phases.time("guard")(s.read.parquet(s"$root/assign")
-              .filter(col("idb").isin(vIdb: _*))
-              .join(bVids(vids), Seq(idCol), "leftsemi")
-              .select(col("_src")).filter(col("_src").isNotNull)
-              .distinct().collect().map(_.getString(0)).toSet)
-            Fingerprint.requireRecordedProvenance(conf, normDir, vSrcs,
-              "ClusterIndex.logicalRemove")
-          })))
+    // the lease-free overlay half's arguments, set when the in-lease
+    // commit ran (r16 — see the comment below)
+    var overlayArgs: Option[(String, Int, DataFrame, Long, Seq[Long], String)] = None
+    var resolvedFp: Option[(Long, Long)] = None
+    IndexMaintenance.removal(victims, indexDir, tag, Seq(idCol, textCol),
+        "ClusterIndex.logicalRemove", "cluster.logical") { ctx =>
+      val (conf, normDir, root) = (ctx.conf, ctx.indexDir, ctx.root)
+      val thr = ctx.meta.getAs[Double]("threshold")
+      val nBuckets = ctx.meta.getAs[Int]("n_buckets")
+      val vids = victims.select(col(idCol)).distinct().localCheckpoint()
+      val nV = vids.count()
+      if (nV == 0L) None
+      else {
+        // a pre-r11 index has no adjacency log: compact's reclaim
+        // re-split reads it, so refusing HERE — nothing mutated yet —
+        // beats a tombstone that bricks every later compact
+        // (review-caught r13; same edgesOk rule as ensure())
+        val edgesDir = new org.apache.hadoop.fs.Path(s"$root/edges")
+        val edgesFs = edgesDir.getFileSystem(conf)
+        if (!edgesFs.exists(edgesDir) || edgesFs.listStatus(edgesDir).isEmpty)
+          Fingerprint.refuse(
+            "ClusterIndex.logicalRemove: this index has no adjacency log " +
+              "(pre-r11 layout) — rebuild it (ensure()) first; compact's " +
+              "reclaim needs the log to re-split the victims' components")
+        val vIdb = vids.select(idb(col(idCol), nBuckets).as("idb"))
+          .distinct().collect().map(_.getLong(0)).toSeq
+        if (ctx.firstAttempt) {
+          // a second logical delete of the same id would double-subtract
+          LogicalDelete.requireNotTombstoned(s, normDir, vids, idCol,
+            "ClusterIndex.logicalRemove")
+          validateVictims(s, root, normDir, IndexMaintenance.fingerprintOf(ctx.meta),
+            victims, vids, nV, vIdb, idCol, textCol, "lrm",
+            "ClusterIndex.logicalRemove")
+        }
+        overlayArgs = Some((root, nBuckets, vids, nV, vIdb, normDir))
+        Some(IndexMaintenance.RemovalCommit(
+          rows = () => ctx.tombstone(vids, idCol),
+          writeMeta = { fp =>
+            resolvedFp = Some(fp)
+            ClusterIndex.writeMeta(s, root, thr, nBuckets, fp)
+          },
+          holdState = true))
       }
-      // idempotent fingerprint commit — the same protocol shape as the
-      // physical families: metabase, then target, then the meta
-      // overwrite, so every crash boundary — and appends interleaved
-      // across one — replays to the same meta value (r15:
-      // Fingerprint.resolveRemovalMeta's reconstruction)
-      Fingerprint.ensureRemoveState(conf, normDir, rmTag, vfp, replay,
-        oldFp, "ClusterIndex.logicalRemove")
-      FaultInjection.maybeCrash("cluster.logical.state")
-      val resolvedFp = Fingerprint.resolveRemovalMeta(conf, normDir, rmTag,
-        oldFp, "ClusterIndex.logicalRemove")
-      resolvedFp.foreach(ClusterIndex.writeMeta(s, root, thr, nBuckets, _))
-      FaultInjection.maybeCrash("cluster.logical.meta")
-      if (!replay) Fingerprint.recordMerge(conf, normDir, rmTag, vfp)
-      FaultInjection.maybeCrash("cluster.logical.record")
-      // the one correctness-bearing "leg": the tombstone batch
-      // (idempotent) — probes are blind from here
-      LogicalDelete.write(vids, idCol, normDir, rmTag)
-      Some((root, nBuckets, vids, nV, vIdb, resolvedFp, normDir))
-    }}
+    }
     // ---- LEASE-FREE overlay half (r16): the serve-overlay write is
     // the expensive leg of the logical takedown (the victims\' component
     // re-split over the edge log — ~19 s of a ~24 s call at sf1 when a
@@ -793,14 +766,12 @@ private[operators] object ClusterRemoval {
     // exposure (snapshot-less parquet reads under in-flight appends),
     // and anything an interleaved append or compact changes invalidates
     // the overlay at read time (fingerprint/root drift), never serves
-    // it. Protocol order is unchanged: the crash point stays between
-    // the tombstone write and the overlay, state clears LAST, so a
-    // crash anywhere in this half leaves rmstate pending and the replay
-    // re-runs the overlay idempotently (LogicalDeleteSpec case 2). A
-    // concurrent removal cannot start meanwhile (rmstate pends), and a
+    // it. The envelope held the state (`holdState`), so it clears LAST
+    // here: a crash anywhere in this half leaves rmstate pending and the
+    // replay re-runs the overlay idempotently (LogicalDeleteSpec case 2).
+    // A concurrent removal cannot start meanwhile (rmstate pends), and a
     // concurrent append merely invalidates the artifact it raced.
-    overlayArgs.foreach { case (root, nBuckets, vids, nV, vIdb,
-        resolvedFp, normDir) =>
+    overlayArgs.foreach { case (root, nBuckets, vids, nV, vIdb, normDir) =>
       val conf = s.sparkContext.hadoopConfiguration
       val rmTag = s"rm.$tag"
       // in-flight heartbeat (r17, ADVICE r16): rmstate legitimately

@@ -157,7 +157,7 @@ private[operators] object ClusterResplit {
     * members: deleting a handful of docs from a 3.7k-member cluster
     * cost ~a full corpus pass). The log stores build/delta connectivity
     * in the deletion-safe set-node form (negative ids = virtual
-    * per-token-set nodes; see [[SetSimJoin.jaccardEdgesSetForm]]) plus
+    * per-token-set nodes; see [[SetSimJoin.jaccardEdgesWithLog]]) plus
     * append-time doc-doc pairs. Survivor subgraph rules: a doc vertex
     * survives iff the doc survives; a SET node survives iff >= 1 of its
     * member docs survives (its member rows define that); set-set edges

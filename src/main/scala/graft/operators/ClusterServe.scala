@@ -18,12 +18,16 @@ private[operators] object ClusterServe {
   /** Incoming docs' components under the UNION corpus (exact — see the
     * quotient argument in the class doc), plus the merge map for old
     * components the delta bridged, plus the delta's (already
-    * checkpointed) token sets so [[append]] doesn't tokenize twice.
-    * Pure query: mutates nothing. */
+    * checkpointed) token sets so [[append]] doesn't tokenize twice, the
+    * verified (incoming, indexed) pairs, and the delta's own edges in
+    * the set-node form salted by `salt` — the same repGraph pass as the
+    * CC input ([[SetSimJoin.jaccardEdgesWithLog]]); a probe never reads
+    * it. Pure query: mutates nothing. */
   private[operators] def probeParts(s: SparkSession, root: String, incoming: DataFrame,
                          idCol: String, textCol: String,
                          excludeTag: Option[String],
-                         tomb: Option[DataFrame]): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+                         tomb: Option[DataFrame], salt: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val (t, nBuckets) = readMeta(s, root)
     // lazy checkpoints throughout: each frame's FIRST consumer (a bounded
     // collect or append's eager assignD checkpoint) materializes the
@@ -32,9 +36,11 @@ private[operators] object ClusterServe {
     // data volume, dominates wall-clock
     val incToks = tokenize(incoming, idCol, textCol)
       .localCheckpoint(eager = false)
-    // delta-internal connectivity (sparse star+rep form, exact)
-    val inner = SetSimJoin.jaccardEdges(incToks, idCol, "_toks", t)
-      .select(col("id1").as("src"), col("id2").as("dst"))
+    // delta-internal connectivity (sparse star+rep form, exact), and
+    // the same graph in the edge log's set-node form
+    val (star, deltaEdges) =
+      SetSimJoin.jaccardEdgesWithLog(incToks, idCol, "_toks", t, salt)
+    val inner = star.select(col("id1").as("src"), col("id2").as("dst"))
     // probe prefix: the |x| - ceil(t|x|) + 1 rarest tokens by the FROZEN
     // df hint (new tokens coalesce to df 0 — rarest). ONE bounded collect
     // (<= nBuckets longs) of the delta's token buckets turns BOTH the df
@@ -119,6 +125,6 @@ private[operators] object ClusterServe {
     // matches is returned UN-checkpointed: probe() never consumes it (no
     // cost), append() writes it to the adjacency log (its one extra
     // consumer re-executes the verify chain — delta-sized)
-    (assignInc, merges, incToks, matches)
+    (assignInc, merges, incToks, matches, deltaEdges)
   }
 }

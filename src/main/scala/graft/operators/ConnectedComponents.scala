@@ -29,16 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Diagnostics of the LAST [[components]] call on this driver (test +
-    * profiling surface for the O(log n) round bound — the small-SF
-    * fixtures' near-clique graphs converge in 1 round, so only a
-    * deep-chain fixture exercises multi-round behavior): distributed
-    * star rounds run, and the edge count handed to the local tail (-1
-    * when the tail was never used). Driver-local, not thread-safe
-    * across concurrent components() calls — diagnostics only. */
-  @volatile private[graft] var lastRounds: Int = -1
-  @volatile private[graft] var lastTailEdges: Long = -1L
-
   /** Large-star: every node connects its larger neighbors to the minimum
     * of its neighborhood (including itself). Leaves component minima
     * fixed, strictly contracts long chains. */
@@ -111,7 +101,22 @@ object ConnectedComponents {
     * clustering, so leave it false unless the producer guarantees it. */
   def components(edges: DataFrame, srcCol: String, dstCol: String,
                  maxIter: Int = 25, edgesNormalized: Boolean = false,
-                 localTailMaxEdges: Long = 100000L): DataFrame = {
+                 localTailMaxEdges: Long = 100000L): DataFrame =
+    run(edges, srcCol, dstCol, maxIter, edgesNormalized, localTailMaxEdges).components
+
+  /** One [[components]] call's result with its own diagnostics (the
+    * test surface for the O(log n) round bound — the small-SF fixtures'
+    * near-clique graphs converge in 1 round, so only a deep-chain
+    * fixture exercises multi-round behavior): distributed star rounds
+    * run, and the edge count handed to the local tail (-1 when the tail
+    * was never used). Per call, so concurrent callers never see each
+    * other's counts. */
+  private[graft] final case class Run(components: DataFrame, rounds: Int,
+                                      tailEdges: Long)
+
+  private[graft] def run(edges: DataFrame, srcCol: String, dstCol: String,
+                         maxIter: Int = 25, edgesNormalized: Boolean = false,
+                         localTailMaxEdges: Long = 100000L): Run = {
     // canonical large→small orientation (both star steps emit src > dst,
     // so a fixpoint input is recognized after a single round)
     // LAZY checkpoints throughout: the signature aggregation is the
@@ -142,16 +147,13 @@ object ConnectedComponents {
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
     // phases cc_input / cc_rounds / cc_tail say where the rounds go
-    // (RunQuery prints them); lastRounds / lastTailEdges say how many
-    ConnectedComponents.lastRounds = 0
-    ConnectedComponents.lastTailEdges = -1L
+    // (RunQuery prints them); Run.rounds / Run.tailEdges say how many
     var sig = graft.Phases.time("cc_input")(signature(cur))
     var it = 0
     var converged = false
     while (!converged && it < maxIter) {
       if (localTailMaxEdges > 0 && sig._1 <= localTailMaxEdges) {
-        ConnectedComponents.lastTailEdges = sig._1
-        return graft.Phases.time("cc_tail")(localFinish(cur))
+        return Run(graft.Phases.time("cc_tail")(localFinish(cur)), it, sig._1)
       }
       // ONE star round per materialization. (Chaining two rounds into a
       // single plan to halve the job count was tried and is SLOWER: each
@@ -165,16 +167,15 @@ object ConnectedComponents {
       sig = nextSig
       cur = next
       it += 1
-      ConnectedComponents.lastRounds = it
     }
     if (!converged)
       throw new IllegalStateException(
         s"connected components did not converge in $maxIter rounds")
     // at the fixpoint the edge set is a star per component: (member, root)
     // with root = component minimum; roots appear only on the dst side
-    cur.select(col("src").as("id"), col("dst").as("component"))
+    Run(cur.select(col("src").as("id"), col("dst").as("component"))
       .union(cur.select(col("dst").as("id"), col("dst").as("component")))
-      .groupBy(col("id")).agg(min(col("component")).as("component"))
+      .groupBy(col("id")).agg(min(col("component")).as("component")), it, -1L)
   }
 
   /** Driver-side union-find over an edge set already known to fit the

@@ -472,21 +472,50 @@ private[graft] object IndexMaintenance {
     * (tag, victims) pair was already applied (a crash replay). */
   final class RemovalCtx private[IndexMaintenance] (
       val conf: Configuration, val indexDir: String, val root: String,
-      val rmTag: String, val vfp: (Long, Long), val replay: Boolean) {
+      val rmTag: String, val vfp: (Long, Long), val replay: Boolean,
+      step: String, s: SparkSession) {
+    /** The ONE meta row this removal reads; its fingerprint is the
+      * pre-removal meta the commit subtracts from. */
+    lazy val meta: Row = s.read.parquet(s"$root/meta").head()
     /** The removal-commit record of this tag, read on first use. */
     lazy val removeState: Option[((Long, Long), Option[(Long, Long)])] =
       Fingerprint.readRemoveState(conf, indexDir, rmTag)
     /** Applied record and no pending removal state: the prior run of
       * this pair ran through its state cleanup (its last step), so meta,
       * record and rows all landed — and a compact() may since have
-      * reclaimed its tombstone and re-admitted the ids. Re-running it
+      * reclaimed its tombstone or re-admitted the ids. Re-running it
       * would re-hide or re-erase a legitimately re-ingested id (ADVICE
-      * r13); the verbs no-op it. */
+      * r13); [[removal]] no-ops it. */
     lazy val completedReplay: Boolean = replay && removeState.isEmpty
+    /** Neither a replay of a recorded pair nor a crashed first attempt
+      * of these victims (state pends for the same fingerprint, so its
+      * rows may already be mutated): only then do the victim checks
+      * read pristine tables. */
+    lazy val firstAttempt: Boolean =
+      !replay && !removeState.exists(_._1 == vfp)
+    /** The logical verbs' row mutation: one tombstone batch under the
+      * removal's tag — reads are blind to the victims from here on. */
+    def tombstone(vids: DataFrame, idCol: String): Unit = {
+      LogicalDelete.write(vids, idCol, indexDir, rmTag)
+      FaultInjection.maybeCrash(s"$step.tombstone")
+    }
   }
 
-  /** The removal preamble and closing check every index family's
-    * remove()/logicalRemove() shares, in this fixed order:
+  /** A removal verb's part of the commit [[removal]] runs: `plan`
+    * persists extra replay state beside the commit record, `rows` is the
+    * row mutation (pruned delete legs or [[RemovalCtx.tombstone]]),
+    * `writeMeta` is the family's meta row for a target fingerprint,
+    * `retired` names the tables whose retired generations a physical
+    * verb purges, and `holdState` leaves the state pending for a
+    * lease-free tail that clears it (cluster logicalRemove's overlay). */
+  final case class RemovalCommit(rows: () => Unit,
+                                 writeMeta: ((Long, Long)) => Unit,
+                                 plan: () => Unit = () => (),
+                                 retired: Seq[String] = Nil,
+                                 holdState: Boolean = false)
+
+  /** The removal every index family's remove()/logicalRemove() shares,
+    * in this fixed order:
     *
     *  1. [[Fingerprint.awaitInflightQuiesce]] — a polite wait for a
     *     healthy in-flight lease-free removal half. It runs BEFORE the
@@ -497,21 +526,51 @@ private[graft] object IndexMaintenance {
     *     rewrites other generations' partitions, so it races nothing.
     *  3. [[liveRoot]], resolved under the lease.
     *  4. the victims' fingerprint over `fpCols`.
-    *  5.–6. [[admitRemoval]]: the replay check, the refusal of a reused
+    *  5. [[admitRemoval]]: the replay check, the refusal of a reused
     *     tag, and the refusal while another removal's state pends.
-    *  7. `ctx.completedReplay`, lazily, for the verbs that no-op it.
-    *  8. after `body`: the generation recheck. Behind the lease a
-    *     compact cannot cut over, but a lease that expired under a
-    *     stalled holder (or one broken by hand) can let one in; the
-    *     recheck fails the call loudly instead of reporting a removal
-    *     whose writes landed in a retired tree.
+    *  6. a completed replay ([[RemovalCtx.completedReplay]]) is a no-op
+    *     apart from `done`.
+    *  7. `prepare` — the verb's own checks and victim set; it validates
+    *     the victims only on [[RemovalCtx.firstAttempt]], and returns
+    *     None when there is nothing to remove.
+    *  8. the commit, ROWS FIRST for every family:
+    *     a. [[Fingerprint.ensureRemoveState]] persists the pre-removal
+    *        meta base and the target fingerprint, then `plan` its extra
+    *        state; crash step `<step>.state`.
+    *     b. `rows`, BEFORE the meta subtraction (ADVICE r16): readers
+    *        stop seeing the victims here while meta still counts them,
+    *        so a crash between b and c leaves the victims already
+    *        invisible under victim-inclusive meta — the conservative
+    *        direction: `isFresh(survivors)` reads false and TermIndex's
+    *        `checkStats` refuses its slightly-stale N/avgdl loudly until
+    *        the removal replays. The meta-first order had the opposite
+    *        window: meta already survivor-exact (isFresh true, term
+    *        stats served) while probes and topK still returned victims.
+    *        The row steps are idempotent and replay from the state.
+    *     c. the meta write, derived from the state under
+    *        [[Fingerprint.resolveRemovalMeta]]'s interleaved-append rule
+    *        (None: the subtraction already landed); crash `<step>.meta`.
+    *     d. [[Fingerprint.recordMerge]] under `rm.<tag>`, the commit
+    *        point (skipped on a replay); crash `<step>.record`.
+    *     e. [[Fingerprint.clearSourceStatus]], [[purgeRetired]] over
+    *        `retired` (retired generations hold the victims' rows too),
+    *        and [[Fingerprint.clearRemoveState]] LAST — unless
+    *        `holdState`, whose tail clears both.
+    *  9. `done`, after the state cleanup or on a completed replay.
+    * 10. the generation recheck. Behind the lease a compact cannot cut
+    *     over, but a lease that expired under a stalled holder (or one
+    *     broken by hand) can let one in; the recheck fails the call
+    *     loudly instead of reporting a removal whose writes landed in a
+    *     retired tree.
     *
-    * Checks that belong to one verb only (the physical verbs'
-    * [[LogicalDelete.requireNonePending]]) stay in its `body`. */
-  def removal[T](victims: DataFrame, indexDir0: String, tag: String,
-                 fpCols: Seq[String], opName: String)
-                (body: RemovalCtx => T): T = {
-    val conf = victims.sparkSession.sparkContext.hadoopConfiguration
+    * ClusterIndex.remove spreads its work over three lease windows and
+    * keeps its own staged commit ([[ClusterRemoval]]). */
+  def removal(victims: DataFrame, indexDir0: String, tag: String,
+              fpCols: Seq[String], opName: String, step: String,
+              done: RemovalCtx => Unit = _ => ())
+             (prepare: RemovalCtx => Option[RemovalCommit]): Unit = {
+    val s = victims.sparkSession
+    val conf = s.sparkContext.hadoopConfiguration
     val indexDir = normalize(indexDir0)
     val rmTag = s"rm.$tag"
     Fingerprint.awaitInflightQuiesce(conf, indexDir, rmTag)
@@ -519,15 +578,33 @@ private[graft] object IndexMaintenance {
       val root = liveRoot(conf, indexDir)
       val vfp = Fingerprint.of(victims, fpCols)
       val replay = admitRemoval(conf, indexDir, tag, vfp, opName)
-      val r = body(new RemovalCtx(conf, indexDir, root, rmTag, vfp, replay))
+      val ctx = new RemovalCtx(conf, indexDir, root, rmTag, vfp, replay, step, s)
+      if (ctx.completedReplay) done(ctx)
+      else prepare(ctx).foreach { c =>
+        val pre = fingerprintOf(ctx.meta)
+        Fingerprint.ensureRemoveState(conf, indexDir, rmTag, vfp, replay, pre, opName)
+        c.plan()
+        FaultInjection.maybeCrash(s"$step.state")
+        c.rows()
+        Fingerprint.resolveRemovalMeta(conf, indexDir, rmTag, pre, opName)
+          .foreach(c.writeMeta)
+        FaultInjection.maybeCrash(s"$step.meta")
+        if (!replay) Fingerprint.recordMerge(conf, indexDir, rmTag, vfp)
+        FaultInjection.maybeCrash(s"$step.record")
+        if (!c.holdState) {
+          Fingerprint.clearSourceStatus(conf, indexDir)
+          if (c.retired.nonEmpty) purgeRetired(conf, indexDir, c.retired)
+          Fingerprint.clearRemoveState(conf, indexDir, rmTag)
+          done(ctx)
+        }
+      }
       require(liveRoot(conf, indexDir) == root,
         s"$opName on $indexDir: index compacted during the removal — " +
           "re-run it after verifying no maintenance is racing")
-      r
     }
   }
 
-  /** The in-lease admission checks of a removal ([[removal]] steps 5–6;
+  /** The in-lease admission checks of a removal ([[removal]] step 5;
     * ClusterIndex.remove's window A calls them directly). Returns
     * whether this (tag, victims) pair was already applied. Removals keep
     * their records under their own `rm.` namespace: an append and a

@@ -52,9 +52,13 @@ object SetSimJoin {
     // the full occurrence table, which at corpus scale is every token of
     // every doc. Both role tables derive from this subset; leak-free
     // lifecycle as with the token table (blocks freed with the plan).
+    // EAGER: its consumers fork into sibling query stages that Spark
+    // runs as concurrent jobs; over a lazy frame both would compute it,
+    // and the first to finish truncates the lineage under the other,
+    // whose tasks then report to GC'd accumulators (ERROR noise)
     val prefRows = ranked
       .filter(col("_rk") <= col("_sz") - ceil(lit(t) * col("_sz") - lit(1e-9)) + 1)
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     // each prefix row carries the doc's WHOLE prefix (of its own role)
     // as a (df, tok) array sorted in the global token order, so the join
     // below can decide per-row whether it is the pair's earliest shared
@@ -167,19 +171,25 @@ object SetSimJoin {
       .unionByName(repPairs.select(col("id1"), col("id2")))
   }
 
-  /** The same connectivity as [[jaccardEdges]] in a DELETION-SAFE form
-    * (the persisted edge log [[ClusterIndex]] keeps for its scoped
-    * re-split): each distinct token SET becomes a VIRTUAL node (strictly
-    * negative id), every member doc links to its set node, and set-set
-    * edges connect the NODES, not the rep docs. Why the star form
-    * cannot be stored: its hub is a real doc, so deleting the rep would
-    * sever member-member connectivity that the true similarity graph
-    * (where identical docs are pairwise linked) retains; the set node
-    * can never be a deletion victim, and a consumer drops a set node
-    * exactly when its last member doc is gone — which is also exactly
-    * when the true graph loses those paths. Set-set edges are honest
-    * under deletion too: J(S,T) >= t means EVERY surviving member of S
-    * pairs with every surviving member of T directly.
+  /** ONE repGraph pass serving both consumers ([[ClusterIndex.build]],
+    * and [[ClusterIndex.append]] through its probe): the CC-input star
+    * edges ([[jaccardEdges]]) and the same connectivity in the
+    * DELETION-SAFE set form of the persisted edge log [[ClusterIndex]]
+    * keeps for its scoped re-split. The shared (members, repPairs) frames
+    * are lazily checkpointed so the expensive prefix-candidate + verify
+    * join runs once, not once per derived form.
+    *
+    * In the set form each distinct token SET becomes a VIRTUAL node
+    * (strictly negative id), every member doc links to its set node,
+    * and set-set edges connect the NODES, not the rep docs. Why the star
+    * form cannot be stored: its hub is a real doc, so deleting the rep
+    * would sever member-member connectivity that the true similarity
+    * graph (where identical docs are pairwise linked) retains; the set
+    * node can never be a deletion victim, and a consumer drops a set
+    * node exactly when its last member doc is gone — which is also
+    * exactly when the true graph loses those paths. Set-set edges are
+    * honest under deletion too: J(S,T) >= t means EVERY surviving member
+    * of S pairs with every surviving member of T directly.
     *
     * Node ids are `-(xxhash64(salt, rep) & Long.MaxValue) - 1` — always
     * negative, SALTED by the writing generation. A plain `-(rep)-1`
@@ -193,22 +203,6 @@ object SetSimJoin {
     * already accepts.) Doc ids must be NON-NEGATIVE — the log's
     * sign-based vertex classification depends on it; [[ClusterIndex]]
     * enforces that at build/append. */
-  def jaccardEdgesSetForm(toks: DataFrame, idCol: String, toksCol: String,
-                          t: Double, salt: String): DataFrame = {
-    val (members, repPairs) = repGraph(toks, idCol, toksCol, t, needScores = false)
-    def node(rep: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      -(xxhash64(lit(salt), rep).bitwiseAND(lit(Long.MaxValue))) - 1
-    members
-      .select(node(col("_rep")).as("u"), col("_mid").as("v"))
-      .unionByName(repPairs.select(
-        node(col("id1")).as("u"), node(col("id2")).as("v")))
-  }
-
-  /** ONE repGraph pass serving both consumers ([[ClusterIndex.build]]):
-    * the CC-input star edges and the persistable set-form log. The
-    * shared (members, repPairs) frames are lazily checkpointed so the
-    * expensive prefix-candidate + verify join runs once, not once per
-    * derived form. */
   def jaccardEdgesWithLog(toks: DataFrame, idCol: String, toksCol: String,
                           t: Double, salt: String): (DataFrame, DataFrame) = {
     val (members0, repPairs0) = repGraph(toks, idCol, toksCol, t, needScores = false)
@@ -239,10 +233,10 @@ object SetSimJoin {
     *
     * The distinct-set aggregate below is the plan's fan-out point (it
     * feeds members, reps, the df-count, the ranking and the verify
-    * joins); a lazy localCheckpoint there runs the tokenization+grouping
-    * once — inside the first consumer's job, no separate checkpoint job —
-    * WITHOUT the CacheManager leak a persist-with-no-unpersist-point has
-    * (ADVICE r2): checkpoint blocks free when the returned plan is dropped.
+    * joins); a localCheckpoint there runs the tokenization+grouping
+    * once WITHOUT the CacheManager leak a persist-with-no-unpersist-point
+    * has (ADVICE r2): checkpoint blocks free when the returned plan is
+    * dropped.
     * Empty sets are dropped up front: brute force scores an
     * identical-empty pair 0/0 = NaN (excluded by >= t), and an empty set
     * can never reach t > 0 against anything else. */
@@ -253,12 +247,13 @@ object SetSimJoin {
     // dedup-first refactor this aggregate is the fan-out point — members,
     // reps, the prefix index and the verify join all derive from it — and
     // everything upstream (tokenization included) has exactly one
-    // consumer. Lazy: the first consumer job materializes the blocks, so
-    // no separate checkpoint job runs.
+    // consumer. Eager, like prefRows: its first consumers (the df count
+    // and the ranking join) are sibling stages that run as concurrent
+    // jobs.
     val groups = toks.filter(size(col(toksCol)) > 0)
       .groupBy(col(toksCol))
       .agg(min(col(idCol)).as("_rep"), collect_list(col(idCol)).as("_ids"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val members = groups.select(col("_rep"), explode(col("_ids")).as("_mid"))
     val reps = groups.select(col("_rep").as(idCol), col(toksCol))
     // score-free callers (edge producers) get the short-circuiting

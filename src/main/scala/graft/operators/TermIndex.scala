@@ -57,16 +57,9 @@ import org.apache.spark.sql.functions._
   * cadence; [[remove]] (r17) is the "data must be GONE now" verb — the
   * same bucket-pruned partition rewrites as the siblings, so a BM25
   * index honors the strict-SLA takedown without waiting for the next
-  * compaction. All four families now carry both verbs.
-  *
-  * Because topK serves (N, avgdl) FROM meta, both removal verbs order
-  * their mutations rows-first: the tombstone write (logical) / the
-  * postings+dl deletes (physical) land BEFORE the meta subtraction, so
-  * served stats never LEAD the served rows (ADVICE r16) — a crash in
-  * between leaves victims already invisible with slightly-stale
-  * survivor stats (the conservative direction; `checkStats` refuses
-  * that window loudly until the removal replays), never victims still
-  * returnable under survivor-exact stats.
+  * compaction. All four families now carry both verbs, and both commit
+  * rows-first ([[IndexMaintenance.removal]]), so the stats topK serves
+  * from meta never LEAD the served rows.
   *
   * Writers hold the EXCLUSIVE `xwrite` lease, not the shared `write`
   * one (ADVICE r16): concurrent tag-scoped appends never collide on
@@ -346,23 +339,33 @@ object TermIndex {
           .filter(col("_src") === lit(sanitize(tag))))))
     }
 
-  /** The victims' recomputed (tf, dl) under the frozen tokenizer, plus
-    * their term/id bucket lists — a PURE function of the victims
-    * argument, so the removal verbs need no persisted bucket plan: a
-    * crash-replay recomputes the identical prune from the same rows
-    * (unlike [[TextIndex.remove]], whose buckets derive from the stored
-    * toks table and must ride the rmstate dir). */
-  private def victimStats(victims: DataFrame, idCol: String, textCol: String,
-                          vids: DataFrame, nBuckets: Int)
-      : (DataFrame, DataFrame, Seq[Long], Seq[Long]) = {
-    val (vtf0, vdl) = stats(victims, idCol, textCol)
-    val vtf = vtf0.localCheckpoint() // bucket collect + signature/meta reuse
-    val vTb = vtf.select(tb(col("term"), nBuckets).as("tb"))
+  /** A removal's victims: their ids and id buckets, plus their
+    * recomputed (tf, dl) and term buckets under the frozen tokenizer — a
+    * PURE function of the victims argument, so the removal verbs need
+    * no persisted bucket plan: a crash-replay recomputes the identical
+    * prune from the same rows (unlike [[TextIndex.remove]], whose
+    * buckets derive from the stored toks table and must ride the
+    * rmstate dir). */
+  private final class Victims(victims: DataFrame, val idCol: String,
+                              textCol: String, nBuckets: Int) {
+    val vids: DataFrame = victims.select(col(idCol)).distinct().localCheckpoint()
+    // ONE job for the count and the id-bucket list (<= nBuckets rows)
+    private val perIdb = vids.groupBy(idb(col(idCol), nBuckets).as("idb"))
+      .count().collect()
+    val nV: Long = perIdb.map(_.getLong(1)).sum
+    val vIdb: Seq[Long] = perIdb.map(_.getLong(0)).toSeq
+    private val (tf0, dl0) = stats(victims, idCol, textCol)
+    val dl: DataFrame = dl0
+    lazy val tf: DataFrame = tf0.localCheckpoint() // bucket collect + signature reuse
+    lazy val vTb: Seq[Long] = tf.select(tb(col("term"), nBuckets).as("tb"))
       .distinct().collect().map(_.getLong(0)).toSeq
-    val vIdb = vids.select(idb(col(idCol), nBuckets).as("idb"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    (vtf, vdl, vTb, vIdb)
+    def bVids: DataFrame = TargetedDelete.maybeBroadcast(vids, nV)
   }
+
+  /** The victim set of a removal; None when it is empty. */
+  private def victimsOf(victims: DataFrame, idCol: String, textCol: String,
+                        nBuckets: Int): Option[Victims] =
+    Some(new Victims(victims, idCol, textCol, nBuckets)).filter(_.nV > 0L)
 
   /** First-attempt victim validation shared by both removal verbs:
     * content known-check (the victims' recomputed per-id postings
@@ -377,26 +380,24 @@ object TermIndex {
     * the pruned buckets would make the stored dl strictly larger) —
     * the same argument that makes the physical verb's tb-pruned
     * postings delete exact. */
-  private def validateVictims(s: SparkSession, root: String, indexDir: String,
-                              victims: DataFrame, vids: DataFrame, nV: Long,
-                              idCol: String, vtf: DataFrame, vdl: DataFrame,
-                              vTb: Seq[Long], vIdb: Seq[Long],
+  private def validateVictims(ctx: IndexMaintenance.RemovalCtx, v: Victims,
                               opName: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
+    val s = v.vids.sparkSession
+    val (idCol, nV) = (v.idCol, v.nV)
     def profile(tf: DataFrame): DataFrame = tf
       .groupBy(col(idCol))
       .agg(xxhash64(sort_array(collect_list(struct(col("term"),
         col("tf"))))).as("_sig"))
-    val vSig = profile(vtf)
+    val vSig = profile(v.tf)
       .withColumnRenamed("_sig", "_vsig")
-      .join(vdl.select(col(idCol), col("dl").as("_vdl")), Seq(idCol))
-    val storedDl = s.read.parquet(s"$root/dl")
-      .filter(col("idb").isin(vIdb: _*))
-      .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "leftsemi")
+      .join(v.dl.select(col(idCol), col("dl").as("_vdl")), Seq(idCol))
+    val storedDl = s.read.parquet(s"${ctx.root}/dl")
+      .filter(col("idb").isin(v.vIdb: _*))
+      .join(v.bVids, Seq(idCol), "leftsemi")
       .localCheckpoint() // signature join + provenance collect
     val storedSig = profile(
-      s.read.parquet(s"$root/postings")
-        .filter(col("tb").isin(vTb: _*))
+      s.read.parquet(s"${ctx.root}/postings")
+        .filter(col("tb").isin(v.vTb: _*))
         .join(TargetedDelete.maybeBroadcast(
           storedDl.select(col(idCol)), nV), Seq(idCol), "leftsemi")
         .select(col(idCol), col("term"), col("tf")))
@@ -424,78 +425,42 @@ object TermIndex {
         val vSrcs = storedDl.select(col("_src"))
           .filter(col("_src").isNotNull)
           .distinct().collect().map(_.getString(0)).toSet
-        Fingerprint.requireRecordedProvenance(conf, indexDir, vSrcs, opName)
+        Fingerprint.requireRecordedProvenance(ctx.conf, ctx.indexDir, vSrcs, opName)
       })))
   }
 
-  /** LOGICAL targeted delete — the RTBF fast path: the same validation +
-    * idempotent fingerprint subtraction protocol as the siblings, one
-    * tombstone-batch write, physical reclaim at the next [[compact]]
-    * (or [[remove]] for a strict "gone now" SLA). Queries are blind —
-    * and their df/N/avgdl statistics survivor-exact — the moment this
-    * returns. `victims` must carry the EXACT `(id, text)` rows as
-    * ingested.
-    *
-    * Mutation order is TOMBSTONE-then-meta (ADVICE r16, inverted from
-    * the siblings on purpose): this family serves N/avgdl from meta, so
-    * the meta-first order had a crash window where topK scored
-    * still-visible victim rows under survivor-exact stats. Tombstone
-    * first, a crash in between leaves victims invisible with stale
-    * (victim-inclusive) stats — conservative, and loudly refused by the
-    * `checkStats` tripwire until the removal replays. A crash-resumed
-    * replay (removal state present for the SAME victim fingerprint)
-    * skips the validation — its first attempt already passed it against
-    * pristine tables, and the tombstone it wrote would now fail
-    * requireNotTombstoned. */
+  /** LOGICAL targeted delete — the RTBF fast path: the same victim
+    * check and the same rows-first commit ([[IndexMaintenance.removal]])
+    * as the siblings, with one tombstone-batch write as its rows and
+    * physical reclaim at the next [[compact]] (or [[remove]] for a
+    * strict "gone now" SLA). Queries are blind — and their df/N/avgdl
+    * statistics survivor-exact — the moment this returns. `victims`
+    * must carry the EXACT `(id, text)` rows as ingested. */
   def logicalRemove(victims: DataFrame, idCol: String, textCol: String,
                     indexDir: String, tag: String = "remove"): Unit =
     IndexMaintenance.removal(victims, indexDir, tag, Seq(idCol, textCol),
-        "TermIndex.logicalRemove") { ctx =>
+        "TermIndex.logicalRemove", "term.logical") { ctx =>
       val s = victims.sparkSession
-      val (conf, normDir, root) = (ctx.conf, ctx.indexDir, ctx.root)
-      val (rmTag, vfp, replay) = (ctx.rmTag, ctx.vfp, ctx.replay)
-      val (nBuckets, oldFp, oldSumDl) = readMeta(s, root)
-      val vids = victims.select(col(idCol)).distinct().localCheckpoint()
-      val nV = vids.count()
-      // crash-resumed first attempt: state pends for THESE victims but
-      // recordMerge never ran (a crash before the record point); the
-      // tombstone may already be written, so validation must not re-run
-      val resumed = ctx.removeState.exists(_._1 == vfp)
-      if (nV > 0L && !ctx.completedReplay) {
-        val (vtf, vdl, vTb, vIdb) =
-          victimStats(victims, idCol, textCol, vids, nBuckets)
-        if (!replay && !resumed) {
-          LogicalDelete.requireNotTombstoned(s, indexDir, vids, idCol,
+      val (nBuckets, _, oldSumDl) = metaOf(ctx.meta)
+      victimsOf(victims, idCol, textCol, nBuckets).map { v =>
+        if (ctx.firstAttempt) {
+          LogicalDelete.requireNotTombstoned(s, ctx.indexDir, v.vids, idCol,
             "TermIndex.logicalRemove")
-          validateVictims(s, root, indexDir, victims, vids, nV, idCol,
-            vtf, vdl, vTb, vIdb, "TermIndex.logicalRemove")
+          validateVictims(ctx, v, "TermIndex.logicalRemove")
         }
-        Fingerprint.ensureRemoveState(conf, normDir, rmTag, vfp, replay,
-          oldFp, "TermIndex.logicalRemove")
-        FaultInjection.maybeCrash("term.logical.state")
-        // ROWS FIRST (class doc): queries are blind from this write on,
-        // while meta still carries the victims until the write below —
-        // stats may lag the rows across a crash here, never lead them
-        LogicalDelete.write(vids, idCol, normDir, rmTag)
-        FaultInjection.maybeCrash("term.logical.tombstone")
-        Fingerprint.resolveRemovalMeta(conf, normDir, rmTag, oldFp,
-          "TermIndex.logicalRemove").foreach { fp =>
+        IndexMaintenance.RemovalCommit(
+          rows = () => ctx.tombstone(v.vids, idCol),
           // sum_dl subtraction rides the SAME atomic meta write the
-          // resolver just gated: when the fingerprint is on the
-          // pre-subtraction side (Some), so is sum_dl (one file), so
-          // "current minus victims" is exact under crash replay AND
-          // under appends interleaved mid-removal (their sum_dl merges
-          // arrived through the same meta writes the resolver's addend
-          // accounts for). Victims' token total is recomputed from the
-          // given (id, text) rows — validated content-equal to the
-          // stored rows on the first attempt — O(victims).
-          writeMeta(s, root, nBuckets, fp, oldSumDl.map(_ - sumDlOf(vdl)))
-        }
-        FaultInjection.maybeCrash("term.logical.meta")
-        if (!replay) Fingerprint.recordMerge(conf, indexDir, rmTag, vfp)
-        FaultInjection.maybeCrash("term.logical.record")
-        Fingerprint.clearSourceStatus(conf, normDir)
-        Fingerprint.clearRemoveState(conf, normDir, rmTag)
+          // resolver gates: when the fingerprint is on the
+          // pre-subtraction side, so is sum_dl (one file), so "current
+          // minus victims" is exact under crash replay AND under appends
+          // interleaved mid-removal (their sum_dl merges arrived through
+          // the same meta writes the resolver's addend accounts for).
+          // Victims' token total is recomputed from the given (id, text)
+          // rows — validated content-equal to the stored rows on the
+          // first attempt — O(victims).
+          writeMeta = fp => writeMeta(s, ctx.root, nBuckets, fp,
+            oldSumDl.map(_ - sumDlOf(v.dl))))
       }
     }
 
@@ -503,21 +468,26 @@ object TermIndex {
     * verb asymmetry): the victims' rows leave `postings` and `dl` ON
     * DISK before this returns, for the "data must be GONE" RTBF SLA
     * that [[logicalRemove]]+[[compact]] only bounds by the compaction
-    * cadence. Protocol = the [[TextIndex.remove]] shape (validation →
-    * idempotent state/meta commit → pruned parallel partition rewrites
-    * → retired-generation purge → state cleanup LAST), with two
-    * term-family twists:
+    * cadence. The commit is the shared rows-first one
+    * ([[IndexMaintenance.removal]]); this family's rows are:
     *
-    *  - NO persisted bucket plan: the postings prune (victims' term
-    *    buckets) recomputes from the victims' own (id, text) under the
-    *    frozen tokenizer — replay-stable by construction — where
-    *    TextIndex must persist `vhb` because its prune derives from the
-    *    stored toks table that a parallel leg deletes. The prune is
-    *    EXACT by the validateVictims dl-equality totality argument.
-    *  - ROWS-first ordering (class doc): the deletes run BEFORE the
-    *    meta subtraction, so served stats never lead the served rows —
-    *    a mid-removal crash leaves victims already gone with stale
-    *    victim-inclusive stats, refused loudly under `checkStats`.
+    *  - a victim BARRIER (r17 review, the ClusterRemoval staged-path
+    *    move): appends are allowed while a crashed removal's state
+    *    pends (the resolver's addend rule keeps META exact under them),
+    *    but an append RE-INGESTING a victim id in that window would have
+    *    its fresh rows deleted by the id-keyed replay while its
+    *    fingerprint stays merged — rows and meta diverging for good. The
+    *    barrier tombstones the victims for the removal's duration
+    *    (requireNotTombstoned refuses their re-ingest; topK goes blind to
+    *    them even before the deletes land) and is cleared after the
+    *    state, in `done`;
+    *  - two pruned parallel partition rewrites with NO persisted bucket
+    *    plan: the postings prune (victims' term buckets) recomputes from
+    *    the victims' own (id, text) under the frozen tokenizer —
+    *    replay-stable by construction — where TextIndex must persist
+    *    `vhb` because its prune derives from the stored toks table that
+    *    a parallel leg deletes. The prune is EXACT by the
+    *    validateVictims dl-equality totality argument.
     *
     * `victims` must carry the EXACT `(id, text)` rows as ingested, all
     * ids indexed (checked before anything mutates); pending logical
@@ -527,89 +497,55 @@ object TermIndex {
     * build on the survivors value-exact, victim rows absent from disk,
     * IndexCheck clean. */
   def remove(victims: DataFrame, idCol: String, textCol: String,
-             indexDir: String, tag: String = "remove"): Unit =
+             indexDir: String, tag: String = "remove"): Unit = {
+    val barrierBatch = Fingerprint.sanitizeTag(s"rm.$tag")
     IndexMaintenance.removal(victims, indexDir, tag, Seq(idCol, textCol),
-        "TermIndex.remove") { ctx =>
-      val s = victims.sparkSession
-      val (conf, normDir, root) = (ctx.conf, ctx.indexDir, ctx.root)
-      val (rmTag, vfp, replay) = (ctx.rmTag, ctx.vfp, ctx.replay)
-      val (nBuckets, oldFp, oldSumDl) = readMeta(s, root)
-      val barrierBatch = Fingerprint.sanitizeTag(rmTag)
-      LogicalDelete.requireNonePending(conf, normDir, "TermIndex.remove",
-        exceptBatch = Some(barrierBatch))
-      val vids = victims.select(col(idCol)).distinct().localCheckpoint()
-      val nV = vids.count()
-      val resumed = ctx.removeState.exists(_._1 == vfp)
-      val completedReplay = ctx.completedReplay
-      if (nV > 0L && !completedReplay) {
-        val (vtf, vdl, vTb, vIdb) =
-          victimStats(victims, idCol, textCol, vids, nBuckets)
-        if (!replay && !resumed)
-          validateVictims(s, root, indexDir, victims, vids, nV, idCol,
-            vtf, vdl, vTb, vIdb, "TermIndex.remove")
-        Fingerprint.ensureRemoveState(conf, normDir, rmTag, vfp, replay,
-          oldFp, "TermIndex.remove")
-        FaultInjection.maybeCrash("term.remove.state")
-        // victim BARRIER (r17 review, the ClusterRemoval staged-path
-        // move): appends are allowed while a crashed removal's state
-        // pends (the resolver's addend rule keeps META exact under
-        // them), but an append RE-INGESTING a victim id in that window
-        // would have its fresh rows deleted by the id-keyed replay
-        // while its fingerprint stays merged — rows and meta diverging
-        // for good. The barrier tombstones the victims for the
-        // removal's duration (requireNotTombstoned refuses their
-        // re-ingest; topK goes blind to them right here, even before
-        // the deletes land) and is cleared with the state at the end.
-        LogicalDelete.write(vids, idCol, normDir, rmTag)
-        FaultInjection.maybeCrash("term.remove.barrier")
-        // ROWS FIRST: both deletes are idempotent pruned dynamic
-        // overwrites driven by replay-stable bucket lists — parallel,
-        // order-free, convergent from any completed subset
-        IndexMaintenance.runLegs(Seq(
-          "term.remove.postings" -> (() => {
-            TargetedDelete.delete(s, s"$root/postings", Seq("_src", "tb"),
-              idCol, vids, col("tb").isin(vTb: _*))
-            (): Unit
-          }),
-          "term.remove.dl" -> (() => {
-            TargetedDelete.delete(s, s"$root/dl", Seq("_src", "idb"),
-              idCol, vids, col("idb").isin(vIdb: _*))
-            (): Unit
-          })))
-        Fingerprint.resolveRemovalMeta(conf, normDir, rmTag, oldFp,
-          "TermIndex.remove").foreach { fp =>
-          // same sum_dl protocol as logicalRemove: the subtraction rides
-          // the resolver-gated atomic meta write, victims' token total
-          // recomputed from the given rows — O(victims)
-          writeMeta(s, root, nBuckets, fp, oldSumDl.map(_ - sumDlOf(vdl)))
-        }
-        FaultInjection.maybeCrash("term.remove.meta")
-        if (!replay) Fingerprint.recordMerge(conf, indexDir, rmTag, vfp)
-        FaultInjection.maybeCrash("term.remove.record")
-        Fingerprint.clearSourceStatus(conf, indexDir)
-        // retired GC-grace generations hold the victims' rows too —
-        // right-to-be-forgotten beats reader grace
-        IndexMaintenance.purgeRetired(conf, indexDir,
-          Seq("postings", "dl", "meta"))
+        "TermIndex.remove", "term.remove",
         // state FIRST, barrier second — deliberate: a crash between the
         // two leaves a stale barrier with no state, which merely keeps
         // the (already-erased) ids refusing re-ingest until the next
-        // compact or completedReplay clears it — an availability hiccup.
-        // The opposite order would open a window where an append
+        // compact or the completed replay clears it — an availability
+        // hiccup. The opposite order would open a window where an append
         // re-ingests a victim id while state still pends and a replay's
         // id-keyed deletes then erase the NEW rows with their
         // fingerprint left merged — rows/meta divergence for good.
-        Fingerprint.clearRemoveState(conf, normDir, rmTag)
-        FaultInjection.maybeCrash("term.remove.cleanup")
-        LogicalDelete.clearBatches(conf, normDir, Seq(barrierBatch))
+        done = ctx => {
+          FaultInjection.maybeCrash("term.remove.cleanup")
+          if (LogicalDelete.pendingBatches(ctx.conf, ctx.indexDir).contains(barrierBatch))
+            LogicalDelete.clearBatches(ctx.conf, ctx.indexDir, Seq(barrierBatch))
+        }) { ctx =>
+      val s = victims.sparkSession
+      val (nBuckets, _, oldSumDl) = metaOf(ctx.meta)
+      LogicalDelete.requireNonePending(ctx.conf, ctx.indexDir, "TermIndex.remove",
+        exceptBatch = Some(barrierBatch))
+      victimsOf(victims, idCol, textCol, nBuckets).map { v =>
+        if (ctx.firstAttempt) validateVictims(ctx, v, "TermIndex.remove")
+        IndexMaintenance.RemovalCommit(
+          rows = () => {
+            LogicalDelete.write(v.vids, idCol, ctx.indexDir, ctx.rmTag)
+            FaultInjection.maybeCrash("term.remove.barrier")
+            // both deletes are idempotent pruned dynamic overwrites
+            // driven by replay-stable bucket lists — parallel,
+            // order-free, convergent from any completed subset
+            IndexMaintenance.runLegs(Seq(
+              "term.remove.postings" -> (() => {
+                TargetedDelete.delete(s, s"${ctx.root}/postings", Seq("_src", "tb"),
+                  idCol, v.vids, col("tb").isin(v.vTb: _*))
+                (): Unit
+              }),
+              "term.remove.dl" -> (() => {
+                TargetedDelete.delete(s, s"${ctx.root}/dl", Seq("_src", "idb"),
+                  idCol, v.vids, col("idb").isin(v.vIdb: _*))
+                (): Unit
+              })))
+          },
+          // same sum_dl protocol as logicalRemove
+          writeMeta = fp => writeMeta(s, ctx.root, nBuckets, fp,
+            oldSumDl.map(_ - sumDlOf(v.dl))),
+          retired = Seq("postings", "dl", "meta"))
       }
-      // tail of the benign crash window above: a completed replay
-      // (record exists, state cleaned) clears its own leftover barrier —
-      // tag reuse is refused, so the batch can only be this removal's
-      if (completedReplay &&
-          LogicalDelete.pendingBatches(conf, normDir).contains(barrierBatch))
-        LogicalDelete.clearBatches(conf, normDir, Seq(barrierBatch))
     }
+  }
 
   /** Fold the accreted append partitions to one file each (pure I/O,
     * `_src`/`tb` structure preserved — provenance keeps working) and

@@ -149,226 +149,172 @@ object TextIndex {
       writeMeta(delta.sparkSession, ctx.root, params(ctx.meta), fp)
     }
 
+  /** A removal's victims under the frozen parameters: their ids, id
+    * buckets and, on demand, their INDEXED token sets and the band
+    * buckets those hash to (frozen family => an exact recompute). */
+  private final class Victims(s: SparkSession, root: String, victims: DataFrame,
+                              val idCol: String, val p: Params) {
+    val vids: DataFrame = victims.select(col(idCol)).distinct().localCheckpoint()
+    // ONE job for the count and the id-bucket list (<= nBuckets rows)
+    private val perIdb = vids
+      .groupBy(pmod(xxhash64(col(idCol)), lit(p.nBuckets.toLong)).as("idb"))
+      .count().collect()
+    val nV: Long = perIdb.map(_.getLong(1)).sum
+    val vIdb: Seq[Long] = perIdb.map(_.getLong(0)).toSeq
+    // broadcast only below the mass-victim key threshold (VERDICT r11
+    // item 1), like every victim join in the remove family
+    def bVids: DataFrame = TargetedDelete.maybeBroadcast(vids, nV)
+    lazy val toks: DataFrame = s.read.parquet(s"$root/toks")
+      .filter(col("idb").isin(vIdb: _*))
+      .join(bVids, Seq(idCol), "leftsemi")
+      .select(col(idCol), col("_toks"))
+      .localCheckpoint() // both legs of the victim check read it
+    lazy val bandBuckets: Seq[Long] =
+      bandRows(toks, idCol, p.numHashes, p.bands, p.nBuckets, p.seed)
+        .select(col("hb")).distinct().collect().map(_.getLong(0)).toSeq
+  }
+
+  /** The victim set of a removal; None when it is empty. */
+  private def victimsOf(ctx: IndexMaintenance.RemovalCtx, victims: DataFrame,
+                        idCol: String): Option[Victims] =
+    Some(new Victims(victims.sparkSession, ctx.root, victims, idCol,
+      params(ctx.meta))).filter(_.nV > 0L)
+
+  /** The one victim check of both removal verbs, run on a first attempt
+    * only ([[IndexMaintenance.RemovalCtx.firstAttempt]]): two concurrent
+    * legs over the victims' checkpointed token sets (the known-check's
+    * refusal is rethrown first on a double failure).
+    *  - per victim id, the stored token-set hashes must EQUAL the victim
+    *    rows' (r14): the delete is id-keyed, so a partial victim set
+    *    would subtract a fingerprint that diverges from the rows
+    *    actually removed, poisoning isFresh forever;
+    *  - victims whose append crashed MID-append (rows landed, fingerprint
+    *    merge never recorded) must not subtract — their delta was never
+    *    added. One pruned read of the victims' band rows' provenance,
+    *    bounded by |tags|; only meaningful on fingerprinted indexes with
+    *    provenance columns. */
+  private def validateVictims(ctx: IndexMaintenance.RemovalCtx, v: Victims,
+                              victims: DataFrame, textCol: String,
+                              opName: String): Unit = {
+    val bands = victims.sparkSession.read.parquet(s"${ctx.root}/bands")
+    val toks = v.toks // materialized before the legs fork
+    IndexMaintenance.runLegs(Seq(
+      "text.validate.known" -> (() =>
+        TargetedDelete.requireKnownContent(
+          victims, xxhash64(Dedup.hashedTokenSet(col(textCol))),
+          toks, xxhash64(col("_toks")), v.idCol, v.nV, opName)),
+      "text.validate.bands" -> (() =>
+        if (IndexMaintenance.fingerprintOf(ctx.meta).isDefined &&
+            bands.schema.fieldNames.contains("_src")) {
+          val vSrcs = bands
+            .filter(col("hb").isin(v.bandBuckets: _*))
+            .join(v.bVids, Seq(v.idCol), "leftsemi")
+            .select(col("_src")).filter(col("_src").isNotNull) // pre-provenance rows = build-era
+            .distinct().collect().map(_.getString(0)).toSet
+          Fingerprint.requireRecordedProvenance(ctx.conf, ctx.indexDir, vSrcs, opName)
+        })))
+  }
+
   /** Index-side targeted DELETE (VERDICT r10 item 1): drop `victims`
     * from both tables so probes stop matching right-to-be-forgotten
     * docs, and subtract their contribution from the meta fingerprint so
     * [[isFresh]] tracks the surviving corpus of record. `victims` must
     * carry the EXACT `(id, text)` rows as ingested (read them from the
     * lake before scrubbing it) and every id must be indexed — checked
-    * before anything mutates. Crash-safe like the cluster sibling: the
-    * subtract + replay record commit first, then the idempotent pruned
-    * rewrites (band buckets recomputed from the victims' indexed token
-    * sets under the frozen hash family, so the prune is exact); a
-    * replayed `(tag, victims)` pair re-runs only the rewrites. Removes
-    * duplicate rows from crashed append replays too — removal is by id,
-    * not by row. */
+    * before anything mutates. The commit is the shared rows-first one
+    * ([[IndexMaintenance.removal]]); the rows are two pruned rewrites,
+    * band buckets recomputed from the victims' indexed token sets under
+    * the frozen hash family, so the prune is exact. Removes duplicate
+    * rows from crashed append replays too — removal is by id, not by
+    * row. */
   def remove(victims: DataFrame, idCol: String, textCol: String,
              indexDir: String, tag: String = "remove"): Unit =
     IndexMaintenance.removal(victims, indexDir, tag, Seq(idCol, textCol),
-        "TextIndex.remove") { ctx =>
-    val s = victims.sparkSession
-    val conf = ctx.conf
-    val root = ctx.root
-    val m = s.read.parquet(s"$root/meta").head()
-    val Params(numHashes, bandCount, nBuckets, seed) = params(m)
-    val oldFp = IndexMaintenance.fingerprintOf(m)
-    // pending logical deletions must reclaim first (their victims would
-    // read as indexed rows here) — see [[LogicalDelete]]
-    LogicalDelete.requireNonePending(conf, ctx.indexDir, "TextIndex.remove")
-    val vids = victims.select(col(idCol)).distinct().localCheckpoint()
-    val nV = vids.count()
-    if (nV > 0L) {
-      val vIdb = vids
-        .select(pmod(xxhash64(col(idCol)), lit(nBuckets.toLong)).as("idb"))
-        .distinct().collect().map(_.getLong(0)).toSeq
-      // the victims' INDEXED token sets: authoritative for the band
-      // buckets their rows live in (frozen family => exact recompute).
-      // Broadcast only below the mass-victim key threshold (VERDICT r11
-      // item 1), like every victim join in the remove family.
-      val vToks = s.read.parquet(s"$root/toks")
-        .filter(col("idb").isin(vIdb: _*))
-        .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "leftsemi")
-        .select(col(idCol), col("_toks"))
-        .localCheckpoint()
-      // the content known-check and the band-bucket collect + provenance
-      // guard share only already-checkpointed inputs (vToks, vids) — run
-      // them concurrently (r18 opt, guide §2.6; the known-check's
-      // refusal is rethrown first on a double failure)
-      var vHb: Seq[Long] = Seq.empty
-      val bands = s.read.parquet(s"$root/bands") // ONE relation resolution
-      IndexMaintenance.runLegs(Seq(
-        "text.validate.known" -> (() => if (!ctx.replay)
-          // per victim id, the stored token-set hashes must EQUAL the
-          // victim rows' (r14): the delete is id-keyed, so a partial
-          // victim set would subtract a fingerprint that diverges from
-          // the rows actually removed, poisoning isFresh forever
-          TargetedDelete.requireKnownContent(
-            victims, xxhash64(Dedup.hashedTokenSet(col(textCol))),
-            vToks, xxhash64(col("_toks")), idCol, nV, "TextIndex.remove")),
-        "text.validate.bands" -> (() => {
-          vHb = bandRows(vToks, idCol, numHashes, bandCount, nBuckets, seed)
-            .select(col("hb")).distinct().collect().map(_.getLong(0)).toSeq
-          // victims whose append crashed MID-append (rows landed, fingerprint
-          // merge never recorded) must not subtract — their delta was never
-          // added. One pruned read of the victims' band rows' provenance,
-          // bounded by |tags|; only meaningful on fingerprinted indexes with
-          // provenance columns. Same sanitized namespace as tagfp/ names.
-          if (!ctx.replay && oldFp.isDefined &&
-              bands.schema.fieldNames.contains("_src")) {
-            val vSrcs = bands
-              .filter(col("hb").isin(vHb: _*))
-              .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "leftsemi")
-              .select(col("_src")).filter(col("_src").isNotNull) // pre-provenance rows = build-era
-              .distinct().collect().map(_.getString(0)).toSet
-            Fingerprint.requireRecordedProvenance(conf, ctx.indexDir, vSrcs,
-              "TextIndex.remove")
-          }
-        })))
-      // idempotent fingerprint commit (ADVICE r11; r15: metabase-first +
-      // resolveRemovalMeta, so appends interleaved across a crash
-      // window replay exactly instead of having their merges wiped by
-      // an absolute-target overwrite)
-      Fingerprint.ensureRemoveState(conf, ctx.indexDir, ctx.rmTag, ctx.vfp,
-        ctx.replay, oldFp, "TextIndex.remove")
-      val stateDir = Fingerprint.removeStatePath(ctx.indexDir, ctx.rmTag)
-      // the victims' band buckets join the commit record as plan state
-      // (computed from the toks table, pristine on any first attempt):
-      // the bands prune no longer depends on another rewrite's table,
-      // so the two deletes are order-free — and parallel (the same
-      // protocol as ClusterIndex.remove's four legs). Written whenever
-      // ABSENT, not only with a fresh record, so a removal that crashed
-      // under the pre-plan protocol (record exists, no vhb) self-heals:
-      // recomputing from the current toks reproduces exactly the old
-      // protocol's bucket list at every one of its crash boundaries
-      // (toks was always deleted last, and an empty recompute can only
-      // happen after the bands delete already completed).
-      // Presence is an explicit fs.create'd marker (ClusterIndex's
-      // PLAN_READY protocol) or surviving part files — NOT _SUCCESS,
-      // which deployments disable (mapreduce.fileoutputcommitter
-      // .marksuccessfuljobs=false is common object-store tuning): with
-      // only _SUCCESS probed, a replay after the parallel toks leg
-      // completed would recompute vHb from the now-empty toks table and
-      // overwrite the plan with an empty bucket list, leaving the
-      // victims' band rows alive forever. An existing plan is never
-      // overwritten.
-      val vhbDir = new org.apache.hadoop.fs.Path(s"$stateDir/vhb")
-      val vhbMarker = new org.apache.hadoop.fs.Path(s"$stateDir/VHB_READY")
-      val vhbFs = vhbMarker.getFileSystem(conf)
-      val vhbPresent = vhbFs.exists(vhbMarker) ||
-        (vhbFs.exists(vhbDir) && vhbFs.listStatus(vhbDir)
-          .exists(st => st.isFile && st.getPath.getName.startsWith("part-")))
-      if (!vhbPresent) {
-        import s.implicits._
-        vHb.toDF("hb").coalesce(1)
-          .write.mode("overwrite").parquet(vhbDir.toString)
+        "TextIndex.remove", "text") { ctx =>
+      val s = victims.sparkSession
+      // pending logical deletions must reclaim first (their victims would
+      // read as indexed rows here) — see [[LogicalDelete]]
+      LogicalDelete.requireNonePending(ctx.conf, ctx.indexDir, "TextIndex.remove")
+      victimsOf(ctx, victims, idCol).map { v =>
+        if (ctx.firstAttempt) validateVictims(ctx, v, victims, textCol, "TextIndex.remove")
+        val stateDir = Fingerprint.removeStatePath(ctx.indexDir, ctx.rmTag)
+        // the victims' band buckets join the commit record as plan state
+        // (computed from the toks table, pristine until the rows step):
+        // the bands prune no longer depends on another rewrite's table,
+        // so the two deletes are order-free — and parallel. Presence is
+        // an explicit fs.create'd marker (ClusterIndex's PLAN_READY
+        // protocol) or surviving part files — NOT _SUCCESS, which
+        // deployments disable (mapreduce.fileoutputcommitter
+        // .marksuccessfuljobs=false is common object-store tuning): with
+        // only _SUCCESS probed, a replay after the parallel toks leg
+        // completed would recompute vHb from the now-empty toks table and
+        // overwrite the plan with an empty bucket list, leaving the
+        // victims' band rows alive forever. An existing plan is never
+        // overwritten; an absent one is recomputed, which a replay can do
+        // only before the rows step (plan first, then `.state`).
+        val vhbDir = new org.apache.hadoop.fs.Path(s"$stateDir/vhb")
+        val vhbMarker = new org.apache.hadoop.fs.Path(s"$stateDir/VHB_READY")
+        val vhbFs = vhbMarker.getFileSystem(ctx.conf)
+        val vhbPresent = vhbFs.exists(vhbMarker) ||
+          (vhbFs.exists(vhbDir) && vhbFs.listStatus(vhbDir)
+            .exists(st => st.isFile && st.getPath.getName.startsWith("part-")))
+        IndexMaintenance.RemovalCommit(
+          plan = () => {
+            if (!vhbPresent) {
+              import s.implicits._
+              v.bandBuckets.toDF("hb").coalesce(1)
+                .write.mode("overwrite").parquet(vhbDir.toString)
+            }
+            if (!vhbFs.exists(vhbMarker)) vhbFs.create(vhbMarker, true).close()
+          },
+          rows = () => {
+            // when THIS call just wrote the plan, the in-memory list IS
+            // its content (r18 opt); a replay that found an existing plan
+            // reads the file of record
+            val vHb =
+              if (!vhbPresent) v.bandBuckets
+              else s.read.parquet(vhbDir.toString).collect().map(_.getLong(0)).toSeq
+            IndexMaintenance.runLegs(Seq(
+              "text.bands" -> (() => {
+                TargetedDelete.delete(s, s"${ctx.root}/bands", Seq("hb"), idCol,
+                  v.vids, col("hb").isin(vHb: _*))
+                (): Unit
+              }),
+              "text.toks" -> (() => {
+                TargetedDelete.delete(s, s"${ctx.root}/toks", Seq("idb"), idCol,
+                  v.vids, col("idb").isin(v.vIdb: _*))
+                (): Unit
+              })))
+          },
+          writeMeta = writeMeta(s, ctx.root, params(ctx.meta), _),
+          retired = Seq("bands", "toks", "meta"))
       }
-      if (!vhbFs.exists(vhbMarker)) vhbFs.create(vhbMarker, true).close()
-      FaultInjection.maybeCrash("text.state")
-      Fingerprint.resolveRemovalMeta(conf, ctx.indexDir, ctx.rmTag, oldFp,
-        "TextIndex.remove").foreach(writeMeta(s, root, params(m), _))
-      FaultInjection.maybeCrash("text.meta")
-      if (!ctx.replay) Fingerprint.recordMerge(conf, ctx.indexDir, ctx.rmTag, ctx.vfp)
-      FaultInjection.maybeCrash("text.record")
-      // both rewrites plan-driven and idempotent: run concurrently,
-      // surface the first failure only after both settle (a mid-leg
-      // crash must never leave a sibling job racing the replay).
-      // When THIS call just wrote the plan, the in-memory list IS its
-      // content — re-reading the file buys nothing (r18 opt); a replay
-      // that found an existing plan still reads the file of record.
-      val vHbPlan =
-        if (!vhbPresent) vHb
-        else s.read.parquet(s"$stateDir/vhb")
-          .collect().map(_.getLong(0)).toSeq
-      IndexMaintenance.runLegs(Seq(
-        "text.bands" -> (() => {
-          TargetedDelete.delete(s, s"$root/bands", Seq("hb"), idCol, vids,
-            col("hb").isin(vHbPlan: _*))
-          (): Unit
-        }),
-        "text.toks" -> (() => {
-          TargetedDelete.delete(s, s"$root/toks", Seq("idb"), idCol, vids,
-            col("idb").isin(vIdb: _*))
-          (): Unit
-        })))
-      Fingerprint.clearSourceStatus(conf, ctx.indexDir)
-      // retired GC-grace generations hold the victims' rows too —
-      // right-to-be-forgotten beats reader grace (see
-      // IndexMaintenance.purgeRetired)
-      IndexMaintenance.purgeRetired(conf, ctx.indexDir, Seq("bands", "toks", "meta"))
-      // state cleanup LAST — every step above replays from the record
-      Fingerprint.clearRemoveState(conf, ctx.indexDir, ctx.rmTag)
     }
-  }
 
   /** LOGICAL targeted delete (VERDICT r12 item 1) — the RTBF fast path:
-    * same validation and the same idempotent fingerprint subtraction as
-    * [[remove]], but the only mutation is one small tombstone-batch
-    * write under `<indexDir>/deleted/` — O(victims), no band/toks
-    * rewrite. [[probe]] is blind to the victims the moment this
-    * returns; the rows are physically reclaimed by the next [[compact]]
-    * (see [[LogicalDelete]] — tombstoned ids are dead to appends until
-    * then). `victims` must carry the EXACT `(id, text)` rows as
-    * ingested; tags share the remove namespace. */
+    * the same victim check and the same rows-first commit as [[remove]],
+    * but the only row mutation is one small tombstone-batch write under
+    * `<indexDir>/deleted/` — O(victims), no band/toks rewrite. [[probe]]
+    * is blind to the victims the moment this returns; the rows are
+    * physically reclaimed by the next [[compact]] (see [[LogicalDelete]]
+    * — tombstoned ids are dead to appends until then). `victims` must
+    * carry the EXACT `(id, text)` rows as ingested; tags share the
+    * remove namespace. */
   def logicalRemove(victims: DataFrame, idCol: String, textCol: String,
                     indexDir: String, tag: String = "remove"): Unit =
     IndexMaintenance.removal(victims, indexDir, tag, Seq(idCol, textCol),
-        "TextIndex.logicalRemove") { ctx =>
-    val s = victims.sparkSession
-    val conf = ctx.conf
-    val root = ctx.root
-    val m = s.read.parquet(s"$root/meta").head()
-    val Params(numHashes, bandCount, nBuckets, seed) = params(m)
-    val oldFp = IndexMaintenance.fingerprintOf(m)
-    val vids = victims.select(col(idCol)).distinct().localCheckpoint()
-    val nV = vids.count()
-    if (nV > 0L && !ctx.completedReplay) {
-      val vIdb = vids
-        .select(pmod(xxhash64(col(idCol)), lit(nBuckets.toLong)).as("idb"))
-        .distinct().collect().map(_.getLong(0)).toSeq
-      if (!ctx.replay) {
-        LogicalDelete.requireNotTombstoned(s, ctx.indexDir, vids, idCol,
-          "TextIndex.logicalRemove")
-        // the victims' indexed token sets, read ONCE for both checks: the
-        // content check's job materializes the lazy checkpoint and the
-        // provenance guard's band recompute reuses it
-        val vToks = s.read.parquet(s"$root/toks")
-          .filter(col("idb").isin(vIdb: _*))
-          .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "leftsemi")
-          .select(col(idCol), col("_toks"))
-          .localCheckpoint(eager = false)
-        TargetedDelete.requireKnownContent(
-          victims, xxhash64(Dedup.hashedTokenSet(col(textCol))),
-          vToks, xxhash64(col("_toks")), idCol, nV, "TextIndex.logicalRemove")
-        // mid-append crash guard, same pruned provenance read as remove()
-        val bands = s.read.parquet(s"$root/bands") // ONE relation resolution
-        if (oldFp.isDefined && bands.schema.fieldNames.contains("_src")) {
-          val vHb = bandRows(vToks, idCol, numHashes, bandCount, nBuckets, seed)
-            .select(col("hb")).distinct().collect().map(_.getLong(0)).toSeq
-          val vSrcs = bands
-            .filter(col("hb").isin(vHb: _*))
-            .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "leftsemi")
-            .select(col("_src")).filter(col("_src").isNotNull)
-            .distinct().collect().map(_.getString(0)).toSet
-          Fingerprint.requireRecordedProvenance(conf, ctx.indexDir, vSrcs,
-            "TextIndex.logicalRemove")
+        "TextIndex.logicalRemove", "text.logical") { ctx =>
+      victimsOf(ctx, victims, idCol).map { v =>
+        if (ctx.firstAttempt) {
+          LogicalDelete.requireNotTombstoned(victims.sparkSession, ctx.indexDir,
+            v.vids, idCol, "TextIndex.logicalRemove")
+          validateVictims(ctx, v, victims, textCol, "TextIndex.logicalRemove")
         }
+        IndexMaintenance.RemovalCommit(
+          rows = () => ctx.tombstone(v.vids, idCol),
+          writeMeta = writeMeta(victims.sparkSession, ctx.root, params(ctx.meta), _))
       }
-      // idempotent fingerprint commit — remove()'s protocol shape (r15:
-      // metabase-first + interleaving-exact replay resolution)
-      Fingerprint.ensureRemoveState(conf, ctx.indexDir, ctx.rmTag, ctx.vfp,
-        ctx.replay, oldFp, "TextIndex.logicalRemove")
-      FaultInjection.maybeCrash("text.logical.state")
-      Fingerprint.resolveRemovalMeta(conf, ctx.indexDir, ctx.rmTag, oldFp,
-        "TextIndex.logicalRemove").foreach(writeMeta(s, root, params(m), _))
-      FaultInjection.maybeCrash("text.logical.meta")
-      if (!ctx.replay) Fingerprint.recordMerge(conf, ctx.indexDir, ctx.rmTag, ctx.vfp)
-      FaultInjection.maybeCrash("text.logical.record")
-      // the one "leg": the tombstone batch — probes blind from here
-      LogicalDelete.write(vids, idCol, ctx.indexDir, ctx.rmTag)
-      Fingerprint.clearSourceStatus(conf, ctx.indexDir)
-      Fingerprint.clearRemoveState(conf, ctx.indexDir, ctx.rmTag)
     }
-  }
 
   /** Fold the accreted append files: rewrite `bands`/`toks` as one file
     * per partition directory with pure I/O (no re-tokenize, no

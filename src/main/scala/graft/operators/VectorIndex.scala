@@ -353,157 +353,120 @@ object VectorIndex {
       .groupBy(col("inc_id")).agg(min(col("ref_id")).as("dup_of"))
   }
 
+  /** A removal's victims pinned to their cells under the FROZEN
+    * quantizer (assignment is deterministic, so the cell list is a pure
+    * function of the victims argument — replay-stable). */
+  private final class Victims(s: SparkSession, root: String, victims: DataFrame,
+                              val corpusId: String, corpusVec: String) {
+    private val pinned = victims
+      .withColumn("cell", Similarity.nearestCentroid(col(corpusVec),
+        loadCentroidsFromRoot(s, root)))
+      .select(col(corpusId), col("cell")).distinct().localCheckpoint()
+    // ONE job for the count and the cell list (<= nlist rows); an id
+    // sits in one cell (its stored embedding's), and a victim feed that
+    // pins one id to two cells fails the known-check
+    private val perCell = pinned.groupBy(col("cell")).count().collect()
+    val nV: Long = perCell.map(_.getLong(1)).sum
+    val vCells: Seq[Int] = perCell.map(_.getInt(0)).toSeq
+    val vids: DataFrame = pinned.select(col(corpusId)).distinct()
+    def bVids: DataFrame = TargetedDelete.maybeBroadcast(vids, nV)
+  }
+
+  /** The victim set of a removal; None when it is empty. */
+  private def victimsOf(ctx: IndexMaintenance.RemovalCtx, victims: DataFrame,
+                        corpusId: String, corpusVec: String): Option[Victims] =
+    Some(new Victims(victims.sparkSession, ctx.root, victims, corpusId,
+      corpusVec)).filter(_.nV > 0L)
+
+  /** The one victim check of both removal verbs, run on a first attempt
+    * only ([[IndexMaintenance.RemovalCtx.firstAttempt]]): two concurrent
+    * legs over ONE checkpointed slice of the victims' cells (the
+    * known-check's refusal is rethrown first on a double failure).
+    *  - this family stores the ingested embedding itself, so the content
+    *    equality is over EXACT float arrays, not token sets;
+    *  - mid-append crash guard (see [[TextIndex.remove]]): a victim row
+    *    from an append whose merge never recorded must not subtract. */
+  private def validateVictims(ctx: IndexMaintenance.RemovalCtx, v: Victims,
+                              victims: DataFrame, corpusVec: String,
+                              opName: String): Unit = {
+    val cellsPruned = victims.sparkSession.read.parquet(s"${ctx.root}/cells")
+      .filter(col("cell").isInCollection(v.vCells))
+      .join(v.bVids, Seq(v.corpusId), "leftsemi")
+      .localCheckpoint()
+    IndexMaintenance.runLegs(Seq(
+      "vector.validate.known" -> (() =>
+        TargetedDelete.requireKnownContent(
+          victims, xxhash64(col(corpusVec)),
+          cellsPruned, xxhash64(col(corpusVec)), v.corpusId, v.nV, opName)),
+      "vector.validate.guard" -> (() =>
+        if (IndexMaintenance.fingerprintOf(ctx.meta).isDefined &&
+            cellsPruned.schema.fieldNames.contains("_src")) {
+          val vSrcs = cellsPruned
+            .select(col("_src")).filter(col("_src").isNotNull) // pre-provenance rows = build-era
+            .distinct().collect().map(_.getString(0)).toSet
+          Fingerprint.requireRecordedProvenance(ctx.conf, ctx.indexDir, vSrcs, opName)
+        })))
+  }
+
   /** Index-side targeted DELETE (VERDICT r10 item 1): drop `victims`
     * from their cells so [[probeDups]]/[[topK]] stop matching
     * right-to-be-forgotten vectors, and subtract their contribution from
     * the meta fingerprint so [[isFresh]] tracks the surviving corpus.
     * `victims` must carry the EXACT `(id, embedding)` rows as ingested
     * and every id must be indexed. The touched-cell set is recomputed
-    * from the victim embeddings under the FROZEN quantizer (assignment
-    * is deterministic), so the rewrite prunes to ≤ nlist cell
-    * partitions and is independent of index state — replay-safe at any
-    * crash boundary. The quantizer itself is untouched: cell centroids
-    * describe geometry, not membership, and recall semantics are
-    * unchanged by removals. */
+    * from the victim embeddings under the FROZEN quantizer, so the
+    * rewrite prunes to ≤ nlist cell partitions and is independent of
+    * index state — replay-safe at any crash boundary of the shared
+    * rows-first commit ([[IndexMaintenance.removal]]). The quantizer
+    * itself is untouched: cell centroids describe geometry, not
+    * membership, and recall semantics are unchanged by removals. */
   def remove(victims: DataFrame, indexDir: String,
              corpusId: String = "vec_id", corpusVec: String = "embedding",
              tag: String = "remove"): Unit =
     IndexMaintenance.removal(victims, indexDir, tag, Seq(corpusId, corpusVec),
-        "VectorIndex.remove") { ctx =>
-    val s = victims.sparkSession
-    val (conf, normDir, root) = (ctx.conf, ctx.indexDir, ctx.root)
-    val centroids = loadCentroidsFromRoot(s, root)
-    val oldFp = IndexMaintenance.metaFingerprint(s, root)
-    // pending logical deletions must reclaim first — see [[LogicalDelete]]
-    LogicalDelete.requireNonePending(conf, normDir, "VectorIndex.remove")
-    val pinned = victims
-      .withColumn("cell", Similarity.nearestCentroid(col(corpusVec), centroids))
-      .select(col(corpusId), col("cell")).distinct().localCheckpoint()
-    val nV = pinned.select(col(corpusId)).distinct().count()
-    if (nV > 0L) {
-      val vCells = pinned.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toSeq // bounded by nlist
-      val vids = pinned.select(col(corpusId)).distinct()
-      if (!ctx.replay) {
-        // ONE cells relation for both checks (r18 opt: repeated
-        // spark.read.parquet re-resolves the file index), and the
-        // known-check runs concurrently with the provenance guard
-        // (guide §2.6; known-check's refusal wins a double failure)
-        val cellsPruned = s.read.parquet(s"$root/cells")
-          .filter(col("cell").isInCollection(vCells))
-          .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(corpusId),
-            "leftsemi")
-          .localCheckpoint(eager = false) // shared by both legs
-        IndexMaintenance.runLegs(Seq(
-          // this family stores the ingested embedding itself, so the
-          // content equality is over EXACT float arrays, not token sets
-          "vector.validate.known" -> (() =>
-            TargetedDelete.requireKnownContent(
-              victims, xxhash64(col(corpusVec)),
-              cellsPruned, xxhash64(col(corpusVec)), corpusId, nV,
-              "VectorIndex.remove")),
-          // mid-append crash guard (see TextIndex.remove): a victim row
-          // from an append whose merge never recorded must not subtract
-          "vector.validate.guard" -> (() =>
-            if (oldFp.isDefined &&
-                cellsPruned.schema.fieldNames.contains("_src")) {
-              val vSrcs = cellsPruned
-                .select(col("_src")).filter(col("_src").isNotNull) // pre-provenance rows = build-era
-                .distinct().collect().map(_.getString(0)).toSet
-              Fingerprint.requireRecordedProvenance(conf, normDir, vSrcs,
-                "VectorIndex.remove")
-            })))
+        "VectorIndex.remove", "vector") { ctx =>
+      val s = victims.sparkSession
+      // pending logical deletions must reclaim first — see [[LogicalDelete]]
+      LogicalDelete.requireNonePending(ctx.conf, ctx.indexDir, "VectorIndex.remove")
+      victimsOf(ctx, victims, corpusId, corpusVec).map { v =>
+        if (ctx.firstAttempt) validateVictims(ctx, v, victims, corpusVec, "VectorIndex.remove")
+        IndexMaintenance.RemovalCommit(
+          rows = () => IndexMaintenance.runLegs(Seq("vector.cells" -> (() => {
+            TargetedDelete.delete(s, s"${ctx.root}/cells", Seq("cell"), corpusId,
+              v.vids, col("cell").isInCollection(v.vCells))
+            (): Unit
+          }))),
+          writeMeta = writeMeta(s, ctx.root, _),
+          retired = Seq("cells", "centroids", "meta"))
       }
-      // idempotent fingerprint commit (ADVICE r11; r15: metabase-first +
-      // interleaving-exact replay resolution — see Fingerprint
-      // .resolveRemovalMeta)
-      Fingerprint.ensureRemoveState(conf, normDir, ctx.rmTag, ctx.vfp,
-        ctx.replay, oldFp, "VectorIndex.remove")
-      Fingerprint.resolveRemovalMeta(conf, normDir, ctx.rmTag, oldFp,
-        "VectorIndex.remove").foreach(fp => writeMeta(s, root, fp))
-      FaultInjection.maybeCrash("vector.meta")
-      if (!ctx.replay) Fingerprint.recordMerge(conf, normDir, ctx.rmTag, ctx.vfp)
-      FaultInjection.maybeCrash("vector.record")
-      TargetedDelete.delete(s, s"$root/cells", Seq("cell"), corpusId, vids,
-        col("cell").isInCollection(vCells))
-      Fingerprint.clearSourceStatus(conf, normDir)
-      // retired GC-grace generations hold the victims' rows too —
-      // right-to-be-forgotten beats reader grace (see
-      // IndexMaintenance.purgeRetired)
-      IndexMaintenance.purgeRetired(conf, normDir, Seq("cells", "centroids", "meta"))
-      // state cleanup LAST — every step above replays from the record
-      Fingerprint.clearRemoveState(conf, normDir, ctx.rmTag)
     }
-  }
 
   /** LOGICAL targeted delete (VERDICT r12 item 1) — the RTBF fast path:
-    * same validation and the same idempotent fingerprint subtraction as
-    * [[remove]], but the only mutation is one small tombstone-batch
-    * write under `<indexDir>/deleted/` — O(victims), no cell rewrite.
-    * [[topK]] and [[probeDups]] are blind to the victims the moment
-    * this returns; the rows are physically reclaimed by the next
-    * [[compact]] (see [[LogicalDelete]] — tombstoned ids are dead to
-    * appends until then). `victims` must carry the EXACT
-    * `(id, embedding)` rows as ingested; tags share the remove
-    * namespace. */
+    * the same victim check and the same rows-first commit as [[remove]],
+    * but the only row mutation is one small tombstone-batch write under
+    * `<indexDir>/deleted/` — O(victims), no cell rewrite. [[topK]] and
+    * [[probeDups]] are blind to the victims the moment this returns; the
+    * rows are physically reclaimed by the next [[compact]] (see
+    * [[LogicalDelete]] — tombstoned ids are dead to appends until then).
+    * `victims` must carry the EXACT `(id, embedding)` rows as ingested;
+    * tags share the remove namespace. */
   def logicalRemove(victims: DataFrame, indexDir: String,
                     corpusId: String = "vec_id",
                     corpusVec: String = "embedding",
                     tag: String = "remove"): Unit =
     IndexMaintenance.removal(victims, indexDir, tag, Seq(corpusId, corpusVec),
-        "VectorIndex.logicalRemove") { ctx =>
-    val s = victims.sparkSession
-    val (conf, normDir, root) = (ctx.conf, ctx.indexDir, ctx.root)
-    val centroids = loadCentroidsFromRoot(s, root)
-    val oldFp = IndexMaintenance.metaFingerprint(s, root)
-    val pinned = victims
-      .withColumn("cell", Similarity.nearestCentroid(col(corpusVec), centroids))
-      .select(col(corpusId), col("cell")).distinct().localCheckpoint()
-    val vids = pinned.select(col(corpusId)).distinct()
-    val nV = vids.count()
-    if (nV > 0L && !ctx.completedReplay) {
-      if (!ctx.replay) {
-        LogicalDelete.requireNotTombstoned(s, normDir, vids, corpusId,
-          "VectorIndex.logicalRemove")
-        val vCells = pinned.select(col("cell")).distinct()
-          .collect().map(_.getInt(0)).toSeq // bounded by nlist
-        // the victims' pruned cells slice, read ONCE for both checks: the
-        // content check's job materializes the lazy checkpoint and the
-        // provenance guard reuses it
-        val cellsPruned = s.read.parquet(s"$root/cells")
-          .filter(col("cell").isInCollection(vCells))
-          .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(corpusId),
-            "leftsemi")
-          .localCheckpoint(eager = false)
-        TargetedDelete.requireKnownContent(
-          victims, xxhash64(col(corpusVec)),
-          cellsPruned, xxhash64(col(corpusVec)), corpusId, nV,
-          "VectorIndex.logicalRemove")
-        // mid-append crash guard, same pruned provenance read as remove()
-        if (oldFp.isDefined && cellsPruned.schema.fieldNames.contains("_src")) {
-          val vSrcs = cellsPruned
-            .select(col("_src")).filter(col("_src").isNotNull)
-            .distinct().collect().map(_.getString(0)).toSet
-          Fingerprint.requireRecordedProvenance(conf, normDir, vSrcs,
-            "VectorIndex.logicalRemove")
+        "VectorIndex.logicalRemove", "vector.logical") { ctx =>
+      victimsOf(ctx, victims, corpusId, corpusVec).map { v =>
+        if (ctx.firstAttempt) {
+          LogicalDelete.requireNotTombstoned(victims.sparkSession, ctx.indexDir,
+            v.vids, corpusId, "VectorIndex.logicalRemove")
+          validateVictims(ctx, v, victims, corpusVec, "VectorIndex.logicalRemove")
         }
+        IndexMaintenance.RemovalCommit(
+          rows = () => ctx.tombstone(v.vids, corpusId),
+          writeMeta = writeMeta(victims.sparkSession, ctx.root, _))
       }
-      // idempotent fingerprint commit — remove()'s protocol shape (r15:
-      // metabase-first + interleaving-exact replay resolution)
-      Fingerprint.ensureRemoveState(conf, normDir, ctx.rmTag, ctx.vfp,
-        ctx.replay, oldFp, "VectorIndex.logicalRemove")
-      FaultInjection.maybeCrash("vector.logical.state")
-      Fingerprint.resolveRemovalMeta(conf, normDir, ctx.rmTag, oldFp,
-        "VectorIndex.logicalRemove").foreach(fp => writeMeta(s, root, fp))
-      FaultInjection.maybeCrash("vector.logical.meta")
-      if (!ctx.replay) Fingerprint.recordMerge(conf, normDir, ctx.rmTag, ctx.vfp)
-      FaultInjection.maybeCrash("vector.logical.record")
-      // the one "leg": the tombstone batch — reads blind from here
-      LogicalDelete.write(vids, corpusId, normDir, ctx.rmTag)
-      Fingerprint.clearSourceStatus(conf, normDir)
-      Fingerprint.clearRemoveState(conf, normDir, ctx.rmTag)
     }
-  }
 
   /** RETRAIN the coarse quantizer over the CURRENT corpus of record and
     * re-partition every vector into the new cells (VERDICT r12 item 2)

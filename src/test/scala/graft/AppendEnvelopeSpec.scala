@@ -16,21 +16,9 @@ import graft.operators.{ClusterIndex, FaultInjection, Fingerprint, IndexMaintena
   * treat it as a crashed append. Each family's base index is built once;
   * every step works on a filesystem copy of it. */
 class AppendEnvelopeSpec extends SparkSpec {
-  import spark.implicits._
+  import IndexFixtures._
 
   private def conf = spark.sparkContext.hadoopConfiguration
-
-  private def tmpIdx(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/idx"
-
-  private def copyOf(template: String, prefix: String): String = {
-    val src = java.nio.file.Paths.get(template)
-    val dst = java.nio.file.Paths.get(tmpIdx(prefix))
-    val walk = java.nio.file.Files.walk(src)
-    try walk.forEach(p => java.nio.file.Files.copy(p, dst.resolve(src.relativize(p))))
-    finally walk.close()
-    dst.toString
-  }
 
   /** One family under test: its three batches beside the base corpus
     * (`other` differs from `rest`, the batch crashed under tag c1), its
@@ -43,50 +31,21 @@ class AppendEnvelopeSpec extends SparkSpec {
                             isFresh: (String, DataFrame) => Boolean,
                             check: String => Unit = _ => ())
 
-  private def concurrently[A](xs: Seq[A])(f: A => Unit): Unit =
-    IndexMaintenance.parallel(xs.map(x => () => f(x)))
-
-  private def docs(rows: (Long, String)*): DataFrame = rows.toDF("doc_id", "text")
-
-  private def textRows(ids: Seq[Long]): DataFrame =
-    docs(ids.map(id => id -> (0 until 12).map(i => s"w${id}_$i").mkString(" ")): _*)
-
-  private def vecRows(ids: Seq[Long]): DataFrame = ids.map { id =>
-    (id, Seq(math.sin(id.toDouble).toFloat, math.cos(id.toDouble).toFloat,
-      (id % 3).toFloat))
-  }.toDF("vec_id", "embedding")
+  private def docs(rows: (Long, String)*): DataFrame = IndexFixtures.docs(spark, rows: _*)
+  private def textRows(ids: Seq[Long]): DataFrame = IndexFixtures.textRows(spark, ids)
+  private def vecRows(ids: Seq[Long]): DataFrame = IndexFixtures.vecRows(spark, ids)
 
   test("append crash matrix: every family's meta commit is exactly-once") {
     // term: a crash between the meta write and recordMerge used to
     // double-merge (n_rows, sum_dl) on replay — silent mis-scoring, since
     // topK serves stats from meta; the replay must land survivor-exact
     // stats and rankings equal to a fresh build over the corpus of record
-    val termCorpus = Seq(
-      (1L, "spark streams join tables fast"),
-      (2L, "duck pond data lake"),
-      (3L, "spark spark spark tuning guide"),
-      (4L, "join order optimizer statistics"),
-      (5L, "tables of data in the lake"),
-      (6L, "a very long document about nothing in particular with many words"),
-      (7L, "fast join fast scan"),
-      (8L, "pond guide"))
     val (termSeed, termRest) = termCorpus.splitAt(5)
     val termLate = Seq((40L, "fresh interleaved doc"))
-    val queries = Seq((1L, "spark join"), (2L, "data lake guide")).toDF("query_id", "q")
+    val queries = docs((1L, "spark join"), (2L, "data lake guide")).toDF("query_id", "q")
     def topK(dir: String) = TermIndex.topK(spark, dir, queries).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2)).toSeq
-    def metaStats(dir: String): (Long, Long) = {
-      val m = spark.read.parquet(s"${IndexMaintenance.liveRoot(conf, dir)}/meta").head()
-      (m.getAs[Long]("n_rows"), m.getAs[Long]("sum_dl"))
-    }
-    def storedStats(dir: String): (Long, Long) = {
-      val r = LogicalDelete.hide(
-          spark.read.parquet(s"${IndexMaintenance.liveRoot(conf, dir)}/dl"),
-          "doc_id", LogicalDelete.ids(spark, dir))
-        .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
     val fresh = tmpIdx("term_acf")
     lazy val want = topK(fresh)
     val families = Seq(
@@ -111,7 +70,7 @@ class AppendEnvelopeSpec extends SparkSpec {
         (d, dir, tag) => TermIndex.append(d, "doc_id", "text", dir, tag),
         (dir, d) => TermIndex.isFresh(spark, dir, d, "doc_id", "text"),
         check = dir => {
-          assert(metaStats(dir) === storedStats(dir), "stats drifted")
+          assert(termMetaStats(spark, dir) === termStoredStats(spark, dir), "stats drifted")
           assert(topK(dir) === want, "replayed index != fresh union build")
         }))
     spark.conf.set("graft.term.checkStats", "true")

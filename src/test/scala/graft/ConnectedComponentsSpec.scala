@@ -104,21 +104,21 @@ class ConnectedComponentsSpec extends SparkSpec {
     // would need ~1500): alternating star rounds contract geometrically,
     // so <= ~2*log2(1500) ~ 22; empirically single digits.
     val chain = (1L until 1500L).map(i => (i, i + 1))
-    val got = ConnectedComponents.components(chain.toDF("a", "b"), "a", "b",
+    val run = ConnectedComponents.run(chain.toDF("a", "b"), "a", "b",
         localTailMaxEdges = 0L)
-      .as[(Long, Long)].collect().toMap
+    val got = run.components.as[(Long, Long)].collect().toMap
     assert(got == (1L to 1500L).map(_ -> 1L).toMap)
-    val rounds = ConnectedComponents.lastRounds
+    val rounds = run.rounds
     assert(rounds >= 2, s"a diameter-1499 path cannot star-contract in $rounds round")
     assert(rounds <= 22, s"$rounds rounds blows the O(log n) bound on 1500 edges")
-    assert(ConnectedComponents.lastTailEdges == -1L, "cap 0 must never use the tail")
+    assert(run.tailEdges == -1L, "cap 0 must never use the tail")
   }
 
   test("cap-guarded tail takes over mid-contraction (cliques collapse under the cap)") {
     // A CHAIN never hands over to the tail: star rounds contract its
     // diameter but the fixpoint is still one edge per member, so the
     // edge COUNT stays ~n (verified by the deep-chain test above, where
-    // lastTailEdges stays -1 under cap 0 and would under any cap < n).
+    // tailEdges stays -1 under cap 0 and would under any cap < n).
     // Cliques are the opposite: 3x C(30,2)=1305 parallel-path edges
     // collapse to ~87 star edges after one round — the count crosses a
     // 600 cap mid-run and the driver union-find finishes.
@@ -128,15 +128,15 @@ class ConnectedComponentsSpec extends SparkSpec {
         yield (base + i, base + j)
     }
     assert(cliques.size > 600)
-    val got = ConnectedComponents.components(cliques.toDF("a", "b"), "a", "b",
+    val run = ConnectedComponents.run(cliques.toDF("a", "b"), "a", "b",
         localTailMaxEdges = 600L)
-      .as[(Long, Long)].collect().toMap
+    val got = run.components.as[(Long, Long)].collect().toMap
     val expect = (0 until 3).flatMap(c =>
       (0 until 30).map(i => (c * 100L + i) -> c * 100L)).toMap
     assert(got == expect)
-    assert(ConnectedComponents.lastRounds >= 1,
+    assert(run.rounds >= 1,
       "1305 edges over a 600 cap must run at least one distributed round")
-    val tail = ConnectedComponents.lastTailEdges
+    val tail = run.tailEdges
     assert(tail > 0L && tail <= 600L,
       s"tail must engage under the cap once contraction crosses it, got $tail")
   }
@@ -149,9 +149,9 @@ class ConnectedComponentsSpec extends SparkSpec {
     val toks = docs.select(col("doc_id"),
       graft.operators.Dedup.hashedTokenSet(col("text")).as("toks"))
     val edges = graft.operators.SetSimJoin
-      .jaccardEdgesSetForm(toks, "doc_id", "toks", 0.8, salt = "ccchain")
-    val comp = ConnectedComponents.components(edges, "u", "v",
-        localTailMaxEdges = 0L)
+      .jaccardEdgesWithLog(toks, "doc_id", "toks", 0.8, salt = "ccchain")._2
+    val run = ConnectedComponents.run(edges, "u", "v", localTailMaxEdges = 0L)
+    val comp = run.components
       .filter(col("id") >= 0) // drop virtual set nodes
       .as[(Long, Long)].collect().toMap
     // raw component ids can root at a NEGATIVE set node (the pipeline
@@ -161,7 +161,7 @@ class ConnectedComponentsSpec extends SparkSpec {
       "every chain doc must be assigned")
     assert(comp.values.toSet.size == 1,
       s"the chain corpus must form ONE cluster, got ${comp.values.toSet.size}")
-    assert(ConnectedComponents.lastRounds >= 2,
+    assert(run.rounds >= 2,
       "the 300-doc chain graph must need multiple star rounds")
   }
 }

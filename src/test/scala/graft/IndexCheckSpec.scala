@@ -12,12 +12,7 @@ import graft.operators.{ClusterIndex, IndexMaintenance, TextIndex, VectorIndex}
   * restore that brought back the wrong meta, a flipped cell value. */
 class IndexCheckSpec extends SparkSpec {
   import spark.implicits._
-
-  private def span(a: Int, b: Int): String =
-    (a until b).map(i => s"w$i").mkString(" ")
-
-  private def tmpIdx(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/idx"
+  import IndexFixtures.{span, tmpIdx}
 
   private def conf = spark.sparkContext.hadoopConfiguration
 

@@ -12,14 +12,9 @@ import graft.operators.{ClusterIndex, Fingerprint, TextIndex, VectorIndex}
   * replay-idempotent. */
 class IndexRemoveSpec extends SparkSpec {
   import spark.implicits._
+  import IndexFixtures.span
 
-  /** Tokens [a, b) — Jaccard(span(0,50), span(5,55)) = 45/55 ≈ 0.818. */
-  private def span(a: Int, b: Int): String =
-    (a until b).map(i => s"w$i").mkString(" ")
-
-  private def assignMap(dir: String): Map[Long, Long] =
-    ClusterIndex.assignments(spark, dir, "doc_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private def assignMap(dir: String) = IndexFixtures.assignMap(spark, dir)
 
   test("removing a bridge doc splits its component; result == fresh build on survivors") {
     // chain A(10)-B(20)-C(30): J(A,B) = J(B,C) ≈ 0.818 >= 0.8 but
@@ -398,40 +393,6 @@ class IndexRemoveSpec extends SparkSpec {
       "fingerprint must track survivors + the interleaved append")
   }
 
-  test("text/vector remove crash windows: fingerprint never subtracts twice") {
-    import graft.operators.FaultInjection
-    // text family
-    Seq("text.state", "text.meta", "text.record", "text.bands").foreach { step =>
-      val docs = (0 until 12)
-        .map(i => (i.toLong, s"doc $i same shared boilerplate body"))
-        .toDF("doc_id", "text")
-      val dir = java.nio.file.Files.createTempDirectory("rm_txc").toString + "/idx"
-      TextIndex.build(docs, "doc_id", "text", dir)
-      val victims = docs.filter(col("doc_id") === 5L)
-      intercept[FaultInjection.InjectedCrash] {
-        FaultInjection.armed(step)(
-          TextIndex.remove(victims, "doc_id", "text", dir, tag = "t1"))
-      }
-      TextIndex.remove(victims, "doc_id", "text", dir, tag = "t1")
-      val survivors = docs.filter(col("doc_id") =!= 5L)
-      assert(TextIndex.isFresh(spark, dir, survivors, "doc_id", "text"),
-        s"[$step] text fingerprint drifted across the crash window")
-    }
-    // vector family
-    Seq("vector.meta", "vector.record").foreach { step =>
-      val corpus = Tables.embeddings(spark, sf0001)
-      val dir = java.nio.file.Files.createTempDirectory("rm_vxc").toString + "/idx"
-      VectorIndex.build(corpus, dir, nlist = 8)
-      val victims = corpus.filter(col("vec_id") === 7L)
-      intercept[FaultInjection.InjectedCrash] {
-        FaultInjection.armed(step)(VectorIndex.remove(victims, dir, tag = "t1"))
-      }
-      VectorIndex.remove(victims, dir, tag = "t1")
-      assert(VectorIndex.isFresh(spark, dir, corpus.filter(col("vec_id") =!= 7L)),
-        s"[$step] vector fingerprint drifted across the crash window")
-    }
-  }
-
   test("text remove replay preserves the vhb plan without _SUCCESS markers") {
     // ADVICE r12: plan presence was probed via the parquet committer's
     // _SUCCESS marker. Deployments that disable marksuccessfuljobs
@@ -448,10 +409,10 @@ class IndexRemoveSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("rm_vhb").toString + "/idx"
     TextIndex.build(docs, "doc_id", "text", dir)
     val victims = docs.filter(col("doc_id") === 5L)
-    // crash right after the replay record: plan + commit persisted, no
-    // rewrite leg has run
+    // crash right after the removal state: plan + commit persisted, no
+    // rewrite leg has run (the commit is rows-first)
     intercept[FaultInjection.InjectedCrash] {
-      FaultInjection.armed("text.record")(
+      FaultInjection.armed("text.state")(
         TextIndex.remove(victims, "doc_id", "text", dir, tag = "t1"))
     }
     val root = graft.operators.IndexMaintenance.liveRoot(

@@ -15,17 +15,9 @@ import graft.operators.{ClusterIndex, Fingerprint, LogicalDelete, TextIndex,
   * refused. */
 class LogicalDeleteSpec extends SparkSpec {
   import spark.implicits._
+  import IndexFixtures.{span, tmpIdx}
 
-  /** Tokens [a, b) — Jaccard(span(0,50), span(5,55)) = 45/55 ≈ 0.818. */
-  private def span(a: Int, b: Int): String =
-    (a until b).map(i => s"w$i").mkString(" ")
-
-  private def assignMap(dir: String): Map[Long, Long] =
-    ClusterIndex.assignments(spark, dir, "doc_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  private def tmpIdx(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/idx"
+  private def assignMap(dir: String) = IndexFixtures.assignMap(spark, dir)
 
   test("cluster: blind immediately, logical-then-compact == physical remove == fresh build") {
     // the IndexRemoveSpec bridge fixture: A(10)-B(20)-C(30) chain, D(40)
@@ -114,43 +106,6 @@ class LogicalDeleteSpec extends SparkSpec {
       .toDF("doc_id", "text"), "doc_id", "text", dir, tag = "ap2")
     assert(assignMap(dir).get(20L) === Some(20L),
       "a reclaimed id must re-ingest as a fresh document")
-  }
-
-  test("cluster logical remove crash matrix: every boundary converges") {
-    import graft.operators.FaultInjection
-    Seq("cluster.logical.state", "cluster.logical.meta",
-        "cluster.logical.record").foreach { step =>
-      val a = (10L, span(0, 50)); val b = (20L, span(5, 55))
-      val c = (30L, span(10, 60))
-      val corpus = Seq(a, b, c).toDF("doc_id", "text")
-      val dir = tmpIdx("ld_crash")
-      ClusterIndex.build(corpus, "doc_id", "text", dir)
-      val victims = Seq(b).toDF("doc_id", "text")
-      intercept[FaultInjection.InjectedCrash] {
-        FaultInjection.armed(step)(
-          ClusterIndex.logicalRemove(victims, "doc_id", "text", dir, tag = "t1"))
-      }
-      // a DIFFERENT removal is refused while the crashed one pends
-      val ex = intercept[IllegalArgumentException] {
-        ClusterIndex.logicalRemove(Seq(c).toDF("doc_id", "text"),
-          "doc_id", "text", dir, tag = "t2")
-      }
-      assert(ex.getMessage.contains("never completed"), s"[$step] ${ex.getMessage}")
-      // and so is compact — reclaim must never fold half-committed state
-      val exC = intercept[IllegalArgumentException] {
-        ClusterIndex.compact(spark, dir)
-      }
-      assert(exC.getMessage.contains("never completed"), s"[$step] ${exC.getMessage}")
-      // the replay converges
-      ClusterIndex.logicalRemove(victims, "doc_id", "text", dir, tag = "t1")
-      assert(!assignMap(dir).contains(20L), s"[$step] victim still visible")
-      assert(ClusterIndex.isFresh(spark, dir,
-        Seq(a, c).toDF("doc_id", "text"), "doc_id", "text"),
-        s"[$step] fingerprint drifted across the crash window")
-      ClusterIndex.compact(spark, dir)
-      assert(assignMap(dir) === Map(10L -> 10L, 30L -> 30L),
-        s"[$step] reclaim after replay must split the component")
-    }
   }
 
   test("replay meta is interleaving-exact: an append between crash and replay survives (r15)") {
@@ -468,6 +423,36 @@ class LogicalDeleteSpec extends SparkSpec {
       Seq((900L, "completely new post-reclaim content three"))
         .toDF("doc_id", "text"), "doc_id", "text").count() == 1L,
       "re-ingested id must stay visible after the completed replay")
+    // the PHYSICAL verbs: a re-fired completed remove must not erase the
+    // re-ingested rows while the append's fingerprint stays merged
+    val reText = Seq((3L, "completely new post-removal content three"))
+      .toDF("doc_id", "text")
+    val pDir = tmpIdx("ld_crp")
+    TextIndex.build(docs, "doc_id", "text", pDir)
+    TextIndex.remove(victims, "doc_id", "text", pDir, tag = "pr1")
+    TextIndex.append(reText, "doc_id", "text", pDir, tag = "re3")
+    TextIndex.remove(victims, "doc_id", "text", pDir, tag = "pr1")
+    assert(TextIndex.probe(spark, pDir, reText.select(lit(900L).as("doc_id"),
+        col("text")), "doc_id", "text").count() == 1L,
+      "a completed physical replay erased the re-ingested text rows")
+    assert(TextIndex.isFresh(spark, pDir,
+      docs.filter(col("doc_id") =!= 3L).unionByName(reText), "doc_id", "text"))
+    val vecs = Tables.embeddings(spark, sf0001).select(col("vec_id"), col("embedding"))
+      .filter(col("vec_id") < 40L).localCheckpoint()
+    val vVictims = vecs.filter(col("vec_id") === 7L)
+    val reVec = vVictims.select(col("vec_id"),
+      transform(col("embedding"), x => -x).as("embedding")).localCheckpoint()
+    val vDir = tmpIdx("ld_crv")
+    VectorIndex.build(vecs, vDir, nlist = 4)
+    VectorIndex.remove(vVictims, vDir, tag = "pr1")
+    VectorIndex.append(reVec, vDir, tag = "re7")
+    VectorIndex.remove(vVictims, vDir, tag = "pr1")
+    assert(VectorIndex.topK(spark, vDir, reVec.select(col("vec_id").as("q_id"),
+        col("embedding").as("q_emb")), k = 40, nprobe = 4)
+      .filter(col("vec_id") === 7L).count() == 1L,
+      "a completed physical replay erased the re-ingested vector")
+    assert(VectorIndex.isFresh(spark, vDir,
+      vecs.filter(col("vec_id") =!= 7L).unionByName(reVec)))
   }
 
   test("wrong-content victims refuse in all three families (r14 content-aware known-check)") {
@@ -576,46 +561,6 @@ class LogicalDeleteSpec extends SparkSpec {
       Seq((900L, "rebuild fixture doc 2 shared boilerplate"))
         .toDF("doc_id", "text"), "doc_id", "text").count() == 1L,
       "the rebuilt corpus' rows must be visible under the recycled id")
-  }
-
-  test("term family: blind + survivor-exact immediately; crash matrix converges (r15)") {
-    import graft.operators.{FaultInjection, TermIndex}
-    Seq("term.logical.state", "term.logical.meta",
-        "term.logical.record").foreach { step =>
-      val docs = Seq((1L, "alpha beta gamma"), (2L, "beta delta"),
-        (3L, "gamma alpha epsilon"), (4L, "delta epsilon zeta"))
-      val dir = tmpIdx("ld_term")
-      TermIndex.build(docs.toDF("doc_id", "text"), "doc_id", "text", dir)
-      val victims = Seq((2L, "beta delta")).toDF("doc_id", "text")
-      intercept[FaultInjection.InjectedCrash] {
-        FaultInjection.armed(step)(
-          TermIndex.logicalRemove(victims, "doc_id", "text", dir, tag = "t1"))
-      }
-      // a different removal refuses while the crashed one pends
-      val ex = intercept[IllegalArgumentException] {
-        TermIndex.logicalRemove(Seq((3L, "gamma alpha epsilon"))
-          .toDF("doc_id", "text"), "doc_id", "text", dir, tag = "t2")
-      }
-      assert(ex.getMessage.contains("never completed"), s"[$step] ${ex.getMessage}")
-      // the replay converges: victim blind, stats survivor-exact,
-      // fingerprint tracks the survivors. checkStats armed: the serve
-      // itself validates meta (N, sum_dl) against the stored rows, so a
-      // stats drift at ANY crash step fails here by name (r16)
-      TermIndex.logicalRemove(victims, "doc_id", "text", dir, tag = "t1")
-      spark.conf.set("graft.term.checkStats", "true")
-      val hits = try TermIndex.topK(spark, dir,
-          Seq((9L, "beta")).toDF("query_id", "q"))
-        .collect().map(_.getLong(2)).toSet
-      finally spark.conf.unset("graft.term.checkStats")
-      assert(!hits.contains(2L), s"[$step] victim still retrieved: $hits")
-      val survivors = docs.filterNot(_._1 == 2L)
-      assert(TermIndex.isFresh(spark, dir,
-        survivors.toDF("doc_id", "text"), "doc_id", "text"),
-        s"[$step] fingerprint drifted across the crash window")
-      TermIndex.compact(spark, dir)
-      assert(LogicalDelete.pendingBatches(
-        spark.sparkContext.hadoopConfiguration, dir).isEmpty, s"[$step]")
-    }
   }
 
   test("serve-overlay: persisted re-split serves reads; stale/missing falls back (r15)") {

@@ -6,17 +6,19 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Spark-free guards over `src`: one session builder ([[GraftSession]])
-  * and no returning `GRAFT_*_DEBUG` timing knob ([[Phases]] replaced
-  * them). */
+/** Spark-free guards over `src`: one session builder ([[GraftSession]]),
+  * no returning `GRAFT_*_DEBUG` timing knob ([[Phases]] replaced them),
+  * and one removal commit (`IndexMaintenance.removal`). */
 class SourceGuardSpec extends AnyFunSuite {
 
-  private lazy val sources = {
-    val walk = Files.walk(Paths.get("src"))
+  private def scalaFiles(dir: String): Seq[(String, String)] = {
+    val walk = Files.walk(Paths.get(dir))
     try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
       .map(p => p.getFileName.toString -> Files.readString(p)).toSeq
     finally walk.close()
   }
+
+  private lazy val sources = scalaFiles("src")
 
   test("one session builder, in GraftSession") {
     assert(sources.size > 100, s"read ${sources.size} files under src")
@@ -29,5 +31,22 @@ class SourceGuardSpec extends AnyFunSuite {
     val knob = "GRAFT_[A-Z]+_DEBUG".r
     val hits = sources.flatMap { case (f, t) => knob.findAllIn(t).map(k => s"$f: $k") }
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("the removal commit primitives are called only by the envelope") {
+    // a new removal verb passes its rows, meta row and retired tables to
+    // IndexMaintenance.removal instead of growing its own commit;
+    // ClusterRemoval keeps the staged commit of ClusterIndex.remove
+    // qualified or imported: any call of the four names
+    val primitive =
+      """(?<![\w.])(Fingerprint\s*\.\s*)?(ensureRemoveState|resolveRemovalMeta|recordMerge|clearRemoveState)\s*\(""".r
+    val main = scalaFiles("src/main")
+    assert(main.size > 50, s"read ${main.size} files under src/main")
+    val callers = main.collect {
+      case (f, t) if primitive.findFirstIn(t).isDefined => f
+    }.toSet
+    assert(callers.subsetOf(Set("IndexMaintenance.scala", "ClusterRemoval.scala",
+      "Fingerprint.scala")), callers.toSeq.sorted.mkString(", "))
+    assert(callers.contains("IndexMaintenance.scala"), "the envelope commits")
   }
 }

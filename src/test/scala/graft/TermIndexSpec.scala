@@ -13,6 +13,7 @@ import graft.operators.{Fingerprint, IndexMaintenance, LogicalDelete, TermIndex}
   * the query terms' buckets. */
 class TermIndexSpec extends SparkSpec {
   import spark.implicits._
+  import IndexFixtures.tmpIdx
 
   private val k1 = 1.2; private val b = 0.75
 
@@ -55,18 +56,7 @@ class TermIndexSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2))
 
-  private def tmpIdx(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/idx"
-
-  private val corpus = Seq(
-    (1L, "spark streams join tables fast"),
-    (2L, "duck pond data lake"),
-    (3L, "spark spark spark tuning guide"),
-    (4L, "join order optimizer statistics"),
-    (5L, "tables of data in the lake"),
-    (6L, "a very long document about nothing in particular with many words"),
-    (7L, "fast join fast scan"),
-    (8L, "pond guide"))
+  private val corpus = IndexFixtures.termCorpus
   private val queries = Seq((1L, "spark join"), (2L, "data lake guide"))
 
   test("build + topK == the driver-side closed form, value-exact") {
@@ -177,23 +167,8 @@ class TermIndexSpec extends SparkSpec {
     assert(collectTopK(dir, Seq((9L, "compact"))).exists(_._3 == 20L))
   }
 
-  private def metaStats(dir: String): (Long, Long) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = IndexMaintenance.liveRoot(conf, dir)
-    val m = spark.read.parquet(s"$root/meta").head()
-    (m.getAs[Long]("n_rows"), m.getAs[Long]("sum_dl"))
-  }
-
-  /** Survivor (tombstone-hidden) aggregate over the stored dl rows —
-    * what meta's incremental (n_rows, sum_dl) must always equal. */
-  private def storedStats(dir: String): (Long, Long) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = IndexMaintenance.liveRoot(conf, dir)
-    val r = LogicalDelete.hide(spark.read.parquet(s"$root/dl"), "doc_id",
-        LogicalDelete.ids(spark, dir))
-      .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).head()
-    (r.getLong(0), r.getLong(1))
-  }
+  private def metaStats(dir: String) = IndexFixtures.termMetaStats(spark, dir)
+  private def storedStats(dir: String) = IndexFixtures.termStoredStats(spark, dir)
 
   test("meta corpus stats stay survivor-exact through the whole lifecycle (r16)") {
     val dir = tmpIdx("term_ms")
@@ -310,58 +285,6 @@ class TermIndexSpec extends SparkSpec {
         "doc_id", "text", dir, tag = "pr")
     }
     assert(ex.getMessage.contains("pending reclaim"), ex.getMessage)
-  }
-
-  test("remove crash matrix: every boundary replays to survivor-exact stats and empty victim rows (r17)") {
-    import graft.operators.FaultInjection
-    val conf = spark.sparkContext.hadoopConfiguration
-    Seq("term.remove.state", "term.remove.barrier", "term.remove.postings",
-        "term.remove.dl", "term.remove.meta", "term.remove.record")
-      .foreach { step =>
-      val dir = tmpIdx("term_rc")
-      TermIndex.build(corpus.toDF("doc_id", "text"), "doc_id", "text", dir)
-      val victims = corpus.filter(_._1 == 3L)
-      intercept[FaultInjection.InjectedCrash] {
-        FaultInjection.armed(step)(
-          TermIndex.remove(victims.toDF("doc_id", "text"), "doc_id", "text",
-            dir, tag = "c1"))
-      }
-      // crashed state blocks NEW removals under other tags
-      val ex = intercept[IllegalArgumentException] {
-        TermIndex.remove(corpus.filter(_._1 == 1L).toDF("doc_id", "text"),
-          "doc_id", "text", dir, tag = "c2")
-      }
-      assert(ex.getMessage.contains("never completed"), s"[$step] ${ex.getMessage}")
-      // once the victim barrier is up, a mid-crash re-ingest of the
-      // victim id refuses — the id-keyed replay deletes would otherwise
-      // erase the NEW rows while their fingerprint stays merged
-      if (step != "term.remove.state") {
-        val exB = intercept[IllegalArgumentException] {
-          TermIndex.append(Seq((3L, "sneaky mid-crash re-ingest"))
-            .toDF("doc_id", "text"), "doc_id", "text", dir,
-            tag = s"sneak_$step")
-        }
-        assert(exB.getMessage.contains("logically deleted"),
-          s"[$step] ${exB.getMessage}")
-      }
-      // the replay converges from any boundary
-      TermIndex.remove(victims.toDF("doc_id", "text"), "doc_id", "text", dir,
-        tag = "c1")
-      assert(metaStats(dir) === storedStats(dir), s"[$step] stats drifted")
-      val fresh = tmpIdx("term_rcf")
-      TermIndex.build(corpus.filterNot(_._1 == 3L).toDF("doc_id", "text"),
-        "doc_id", "text", fresh)
-      spark.conf.set("graft.term.checkStats", "true")
-      try assert(collectTopK(dir, queries) === collectTopK(fresh, queries),
-        s"[$step] replayed remove != fresh survivor build")
-      finally spark.conf.unset("graft.term.checkStats")
-      val root = IndexMaintenance.liveRoot(conf, dir)
-      Seq("dl", "postings").foreach { t =>
-        assert(spark.read.parquet(s"$root/$t")
-          .filter(col("doc_id") === 3L).count() == 0L,
-          s"[$step] victim rows must leave $t after the replay")
-      }
-    }
   }
 
   test("remove tail window: a stale barrier after state cleanup only blocks re-ingest until the replay clears it (r17)") {
