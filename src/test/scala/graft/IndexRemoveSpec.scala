@@ -10,7 +10,7 @@ import graft.operators.{ClusterIndex, Fingerprint, TextIndex, VectorIndex}
   * deliberately does not cover), the meta fingerprint subtracted
   * exactly, probes blind to the removed docs, and the whole operation
   * replay-idempotent. */
-class IndexRemoveSpec extends SparkSpec {
+class IndexRemoveSpec extends SparkSpec with RemovalCrashMatrix {
   import spark.implicits._
   import IndexFixtures.span
 
@@ -391,6 +391,10 @@ class IndexRemoveSpec extends SparkSpec {
     assert(ClusterIndex.isFresh(spark, dir,
       Seq(b, c, (60L, span(10, 60))).toDF("doc_id", "text"), "doc_id", "text"),
       "fingerprint must track survivors + the interleaved append")
+  }
+
+  test("text/vector remove crash windows: fingerprint never subtracts twice") {
+    removalCrashMatrix("text", "vector")
   }
 
   test("text remove replay preserves the vhb plan without _SUCCESS markers") {

@@ -13,7 +13,7 @@ import graft.operators.{ClusterIndex, Fingerprint, LogicalDelete, TextIndex,
   * interim semantics are pinned too: tombstoned ids are dead to appends
   * and physical removes until reclaim, and a double logical delete is
   * refused. */
-class LogicalDeleteSpec extends SparkSpec {
+class LogicalDeleteSpec extends SparkSpec with RemovalCrashMatrix {
   import spark.implicits._
   import IndexFixtures.{span, tmpIdx}
 
@@ -106,6 +106,10 @@ class LogicalDeleteSpec extends SparkSpec {
       .toDF("doc_id", "text"), "doc_id", "text", dir, tag = "ap2")
     assert(assignMap(dir).get(20L) === Some(20L),
       "a reclaimed id must re-ingest as a fresh document")
+  }
+
+  test("cluster logical remove crash matrix: every boundary converges") {
+    removalCrashMatrix("cluster.logical")
   }
 
   test("replay meta is interleaving-exact: an append between crash and replay survives (r15)") {
@@ -561,6 +565,10 @@ class LogicalDeleteSpec extends SparkSpec {
       Seq((900L, "rebuild fixture doc 2 shared boilerplate"))
         .toDF("doc_id", "text"), "doc_id", "text").count() == 1L,
       "the rebuilt corpus' rows must be visible under the recycled id")
+  }
+
+  test("term family: blind + survivor-exact immediately; crash matrix converges (r15)") {
+    removalCrashMatrix("term.logical")
   }
 
   test("serve-overlay: persisted re-split serves reads; stale/missing falls back (r15)") {

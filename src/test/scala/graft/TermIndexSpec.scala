@@ -11,7 +11,7 @@ import graft.operators.{Fingerprint, IndexMaintenance, LogicalDelete, TermIndex}
   * exactly-once under crash replay (ranking SUMS cannot tolerate the
   * duplicate rows the match-once families shrug off), and read only
   * the query terms' buckets. */
-class TermIndexSpec extends SparkSpec {
+class TermIndexSpec extends SparkSpec with RemovalCrashMatrix {
   import spark.implicits._
   import IndexFixtures.tmpIdx
 
@@ -285,6 +285,10 @@ class TermIndexSpec extends SparkSpec {
         "doc_id", "text", dir, tag = "pr")
     }
     assert(ex.getMessage.contains("pending reclaim"), ex.getMessage)
+  }
+
+  test("remove crash matrix: every boundary replays to survivor-exact stats and empty victim rows (r17)") {
+    removalCrashMatrix("term.remove")
   }
 
   test("remove tail window: a stale barrier after state cleanup only blocks re-ingest until the replay clears it (r17)") {
