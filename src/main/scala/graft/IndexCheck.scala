@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{IndexMaintenance, LogicalDelete, Similarity, TextIndex,
+import graft.operators.{IndexMaintenance, IndexSnapshot, LogicalDelete, Similarity, TextIndex,
   VectorIndex}
 
 /** Deep READ-ONLY integrity audit of a persisted index — the data-plane
@@ -88,11 +88,12 @@ object IndexCheck {
       else throw new IllegalArgumentException(
         s"IndexCheck: $root holds none of the four index layouts " +
           s"(tables: ${tables.toSeq.sorted.mkString(", ")})")
+    val snap = IndexSnapshot.at(s, dir, root)
     val checks = family match {
-      case "cluster" => clusterChecks(s, root, victims)
-      case "text"    => textChecks(s, root, victims)
-      case "vector"  => vectorChecks(s, root, victims)
-      case "term"    => termChecks(s, root, victims)
+      case "cluster" => clusterChecks(s, snap, victims)
+      case "text"    => textChecks(s, snap, victims)
+      case "vector"  => vectorChecks(s, snap, victims)
+      case "term"    => termChecks(s, snap, victims)
     }
     val report = DataReport(dir, family, inflight, checks)
     // recency stamp ONLY on a clean pass: a failing audit must never
@@ -146,9 +147,9 @@ object IndexCheck {
 
   // ---- cluster family ------------------------------------------------
 
-  private def clusterChecks(s: SparkSession, root: String,
+  private def clusterChecks(s: SparkSession, snap: IndexSnapshot.Snapshot,
                             victims: Option[DataFrame]): Seq[Check] = {
-    val meta = s.read.parquet(s"$root/meta").head()
+    val (root, meta) = (snap.root, snap.meta)
     val nBuckets = meta.getAs[Int]("n_buckets")
     val assign = s.read.parquet(s"$root/assign")
     val idCol = idColOf(assign, Set("component", "_src", "idb"))
@@ -246,9 +247,9 @@ object IndexCheck {
 
   // ---- text family -----------------------------------------------------
 
-  private def textChecks(s: SparkSession, root: String,
+  private def textChecks(s: SparkSession, snap: IndexSnapshot.Snapshot,
                          victims: Option[DataFrame]): Seq[Check] = {
-    val meta = s.read.parquet(s"$root/meta").head()
+    val (root, meta) = (snap.root, snap.meta)
     val (numHashes, bands, nBuckets, seed) =
       (meta.getAs[Int]("num_hashes"), meta.getAs[Int]("bands"),
         meta.getAs[Int]("n_buckets"), meta.getAs[Int]("seed"))
@@ -290,10 +291,10 @@ object IndexCheck {
 
   // ---- vector family ---------------------------------------------------
 
-  private def vectorChecks(s: SparkSession, root: String,
+  private def vectorChecks(s: SparkSession, snap: IndexSnapshot.Snapshot,
                            victims: Option[DataFrame]): Seq[Check] = {
-    val meta = s.read.parquet(s"$root/meta").head()
-    val centroidRows = s.read.parquet(s"$root/centroids").collect()
+    val (root, meta) = (snap.root, snap.meta)
+    val centroidRows = snap.table("centroids").collect()
     val byCell = centroidRows.groupBy(_.getAs[Int]("cell"))
     val nlist = byCell.size
     // (1) quantizer well-formed: contiguous cells 0..nlist-1, equal dims
@@ -302,9 +303,7 @@ object IndexCheck {
     val dims = byCell.values.map(_.length).toSet
     val quantizerBad = (if (cellsContiguous) 0L else 1L) +
       (if (dims.size == 1) 0L else 1L)
-    val centroids = byCell.toSeq.sortBy(_._1).map { case (_, rs) =>
-      rs.sortBy(_.getAs[Int]("pos")).map(_.getAs[Double]("value")).toSeq
-    }
+    val centroids = snap.centroids
 
     val cells = s.read.parquet(s"$root/cells")
     // recover the vector column by TYPE (the array column outside the
@@ -342,9 +341,9 @@ object IndexCheck {
 
   // ---- term (BM25) family ------------------------------------------------
 
-  private def termChecks(s: SparkSession, root: String,
+  private def termChecks(s: SparkSession, snap: IndexSnapshot.Snapshot,
                          victims: Option[DataFrame]): Seq[Check] = {
-    val meta = s.read.parquet(s"$root/meta").head()
+    val (root, meta) = (snap.root, snap.meta)
     val nBuckets = meta.getAs[Int]("n_buckets")
     val dl = s.read.parquet(s"$root/dl")
     val idCol = idColOf(dl, Set("dl", "_src", "idb"))

@@ -155,11 +155,8 @@ object ClusterIndex {
     }
   }
 
-  // root = resolved data root (IndexMaintenance.liveRoot), not the index dir
-  private[operators] def readMeta(s: SparkSession, root: String): (Double, Int) = {
-    val m = s.read.parquet(s"$root/meta").head()
-    (m.getAs[Double]("threshold"), m.getAs[Int]("n_buckets"))
-  }
+  private[operators] def readMeta(snap: IndexSnapshot.Snapshot): (Double, Int) =
+    (snap.meta.getAs[Double]("threshold"), snap.meta.getAs[Int]("n_buckets"))
 
   /** Does the persisted cluster map still describe THIS corpus
     * ([[IndexMaintenance.isFresh]])? Cheap next to the PPJoin+CC pass it
@@ -214,7 +211,7 @@ object ClusterIndex {
         val nV = vids.count()
         val newAssign = ClusterResplit.readOverlay(s, root, indexDir, idCol, batches)
           .getOrElse {
-            val (_, nBuckets) = readMeta(s, root)
+            val (_, nBuckets) = readMeta(IndexSnapshot.at(s, indexDir, root))
             val vIdb = vids.select(idb(col(idCol), nBuckets).as("idb"))
               .distinct().collect().map(_.getLong(0)).toSeq
             ClusterResplit.resplitPlan(s, root, idCol, vids, nV, vIdb)._2
@@ -236,35 +233,15 @@ object ClusterIndex {
   def probe(s: SparkSession, indexDir: String, incoming: DataFrame,
             idCol: String, textCol: String,
             excludeTag: Option[String] = None): DataFrame =
-    ClusterServe.probeParts(s,
-      IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir),
+    ClusterServe.probeParts(s, IndexSnapshot(s, indexDir),
       incoming, idCol, textCol, excludeTag,
       LogicalDelete.ids(s, indexDir), salt = "probe")._1
 
-  /** Which of `ids` does the index already hold an assignment for?
-    * Bounded work: the batch's id-hash buckets (a ≤`nBuckets` collect)
-    * become a static partition filter on `assign`, and the pruned scan
-    * is semi-joined against the broadcast batch — no shuffle, result
-    * ≤ |ids|. `excludeTag` skips rows this batch's own (crashed,
-    * replayed) append wrote, the same provenance rule the probes use —
-    * an id is "known" only if a DIFFERENT batch ingested it. */
+  /** Which of `ids` does the index already hold an assignment for
+    * ([[IndexMaintenance.knownIds]] over `assign`)? */
   def knownIds(s: SparkSession, indexDir: String, ids: DataFrame,
-               idCol: String, excludeTag: Option[String] = None): DataFrame = {
-    val root = IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir)
-    val (_, nBuckets) = readMeta(s, root)
-    val pinned = ids.select(col(idCol)).distinct().localCheckpoint()
-    val touched = pinned.select(idb(col(idCol), nBuckets).as("idb"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val assignAll = s.read.parquet(s"$root/assign")
-      .filter(col("idb").isin(touched: _*))
-    val assign = excludeTag.fold(assignAll)(tg =>
-      assignAll.filter(col("_src") =!= lit(sanitize(tg))))
-    // a logically-deleted id is NOT known: its rows are dead pending
-    // reclaim, exactly as if the physical remove had already run
-    LogicalDelete.hide(
-      assign.join(broadcast(pinned), Seq(idCol), "leftsemi").select(col(idCol)),
-      idCol, LogicalDelete.ids(s, indexDir))
-  }
+               idCol: String, excludeTag: Option[String] = None): DataFrame =
+    IndexMaintenance.knownIds(s, indexDir, "assign", ids, idCol, excludeTag)
 
   /** Fold marker-COMMITTED append generations back into the `build`
     * generation — the small-files lifecycle valve for a long-running
@@ -330,7 +307,7 @@ object ClusterIndex {
       // physical remove computes — discovered here from the from-root,
       // which the fold never mutates, so a crashed compact replays the
       // identical plan. Tombstones clear only AFTER the cutover. ----
-      val (_, nBuckets) = readMeta(s, ctx.fromRoot)
+      val (_, nBuckets) = readMeta(IndexSnapshot.at(s, indexDir, ctx.fromRoot))
       val tomb =
         LogicalDelete.idsOf(s, indexDir, reclaimBatches)
       val reclaim = tomb.map { t =>
@@ -339,8 +316,8 @@ object ClusterIndex {
         val idCol = LogicalDelete.idColOf(t)
         val vids = t.localCheckpoint()
         val nV = vids.count()
-        val vIdb = vids.select(idb(col(idCol), nBuckets).as("idb"))
-          .distinct().collect().map(_.getLong(0)).toSeq
+        val vIdb = IndexMaintenance.distinctRows(vids.select(idb(col(idCol), nBuckets)))
+          .map(_.getLong(0))
         val (_, newAssign) = ClusterResplit.resplitPlan(s, ctx.fromRoot, idCol, vids, nV, vIdb)
         (idCol, vids, nV, newAssign)
       }
@@ -396,8 +373,14 @@ object ClusterIndex {
               .join(keysAs("v"), Seq("v"), "left_anti")
           }
           // one physical pass feeds every branch (same rescan fix as
-          // remove()'s survivor-subgraph frames)
-          val df = df0.localCheckpoint(eager = false)
+          // remove()'s survivor-subgraph frames). This frame and the four
+          // below are EAGER: each feeds sibling stages of the one write
+          // query, which run as concurrent jobs, and a lazy frame two
+          // jobs materialize at once logs "Failed to update accumulator"
+          // ERROR traces and can fail a job submission on the lineage the
+          // other job's checkpoint just cut (seen with a GC forced at
+          // every job end)
+          val df = df0.localCheckpoint()
           val foldsToBuild =
             if (foldUnmarkedTags) lit(true)
             else col("_src").isin(committed: _*) || col("_src") === "build"
@@ -417,10 +400,10 @@ object ClusterIndex {
             .select(col("u"),
               (-(xxhash64(lit("fold"), col("_th"))
                 .bitwiseAND(lit(Long.MaxValue))) - 1).as("_cn"))
-            .distinct().localCheckpoint(eager = false)
+            .distinct().localCheckpoint()
           val members = members0.join(canon, Seq("u"))
             .select(col("_cn").as("u"), col("v")).distinct()
-            .localCheckpoint(eager = false) // feeds the union AND docCn
+            .localCheckpoint() // feeds the union AND docCn
           val setSet = folding.filter(col("u") < 0 && col("v") < 0)
             .join(canon, Seq("u"))
             .join(canon.select(col("u").as("v"), col("_cn").as("_cnv")), Seq("v"))
@@ -432,7 +415,7 @@ object ClusterIndex {
               Seq("u"), "left")
             .join(docCn.select(col("_doc").as("v"), col("_dcn").as("_cv")),
               Seq("v"), "left")
-            .localCheckpoint(eager = false) // feeds converted + kept legs
+            .localCheckpoint() // feeds converted + kept legs
           val ddAsSet = dd
             .filter(col("_cu").isNotNull && col("_cv").isNotNull)
             .select(least(col("_cu"), col("_cv")).as("u"),
@@ -454,7 +437,7 @@ object ClusterIndex {
           // set-set rows — its salted nodes are batch-local, so the
           // liveness rule closes over the kept rows alone
           val keptLive = kept.filter(col("u") < 0 && col("v") >= 0)
-            .select(col("u")).distinct().localCheckpoint(eager = false)
+            .select(col("u")).distinct().localCheckpoint()
           val keptClean = kept.filter(!(col("u") < 0 && col("v") < 0))
             .unionByName(kept.filter(col("u") < 0 && col("v") < 0)
               .join(keptLive, Seq("u"), "leftsemi")
@@ -553,7 +536,8 @@ object ClusterIndex {
     IndexMaintenance.admitOverwriteTag(ctx, tag, "ClusterIndex.append")
     val tagS = sanitize(tag)
     val (assignInc, merges, toksD, matchPairs, deltaSets) = ClusterServe.probeParts(s,
-      root, delta, idCol, textCol, excludeTag = Some(tag), ctx.tomb, salt = tagS)
+      IndexSnapshot.at(s, ctx.indexDir, root), delta, idCol, textCol,
+      excludeTag = Some(tag), ctx.tomb, salt = tagS)
     // id-sign guard BEFORE any write (review-caught twice: a post-write
     // check would leave a rejected delta's rows committed, and an EMPTY
     // delta — a re-crawl-only streaming batch — aggregates min to null,

@@ -109,7 +109,7 @@ private[operators] object ClusterRemoval {
     // (VERDICT r16 item 2: a cross-box swing in the remove names its window)
     Phases.time("rm_validate")(IndexMaintenance.withLease(conf, indexDir, "remove") {
       root = IndexMaintenance.liveRoot(conf, indexDir)
-      val m = s.read.parquet(s"$root/meta").head()
+      val m = IndexSnapshot.at(s, normDir, root).meta
       thr = m.getAs[Double]("threshold")
       nBuckets = m.getAs[Int]("n_buckets")
       val oldFp = IndexMaintenance.fingerprintOf(m)
@@ -149,8 +149,8 @@ private[operators] object ClusterRemoval {
       if (nV > 0L && !completedReplay) {
         // bounded collect: the victim set's id-hash buckets — a pure
         // function of the victims argument, so replay-stable
-        vIdb = vids.select(idb(col(idCol), nBuckets).as("idb"))
-          .distinct().collect().map(_.getLong(0)).toSeq
+        vIdb = IndexMaintenance.distinctRows(vids.select(idb(col(idCol), nBuckets)))
+          .map(_.getLong(0))
         // content known-check and provenance guard on pristine tables:
         // rewrites only start after PLAN_READY
         if (!replay && !planReady)
@@ -577,9 +577,9 @@ private[operators] object ClusterRemoval {
         .filter(col("idb").isin(vIdb: _*))
         .join(bVids(vids), Seq(idCol), "leftsemi")
         .select(col(idCol), col("_toks")))
-      vTb = Phases.time("vtb")(vToksPre.select(explode(col("_toks")).as("_tok"))
-        .select(tb(col("_tok"), nBuckets).as("tb")).distinct()
-        .collect().map(_.getLong(0)).toSeq)
+      vTb = Phases.time("vtb")(IndexMaintenance.distinctRows(
+        vToksPre.select(explode(col("_toks")).as("_tok")).select(tb(col("_tok"), nBuckets)))
+        .map(_.getLong(0)))
       // OVERLAP the CC-bearing plan (and the assign staging that needs
       // its newassign/parts output) with the three victim-only staged
       // rewrites (r19, guide §2.6): staging never mutates the live
@@ -732,8 +732,8 @@ private[operators] object ClusterRemoval {
             "ClusterIndex.logicalRemove: this index has no adjacency log " +
               "(pre-r11 layout) — rebuild it (ensure()) first; compact's " +
               "reclaim needs the log to re-split the victims' components")
-        val vIdb = vids.select(idb(col(idCol), nBuckets).as("idb"))
-          .distinct().collect().map(_.getLong(0)).toSeq
+        val vIdb = IndexMaintenance.distinctRows(vids.select(idb(col(idCol), nBuckets)))
+          .map(_.getLong(0))
         if (ctx.firstAttempt) {
           // a second logical delete of the same id would double-subtract
           LogicalDelete.requireNotTombstoned(s, normDir, vids, idCol,

@@ -19,7 +19,6 @@ import graft.Phases
 private[operators] object ClusterResplit {
 
   import ClusterIndex.idb
-  import IndexMaintenance.metaFingerprint
 
   // ---- tombstone serve-overlay (r15, this round): the bridge-split as a
   // persisted artifact instead of a per-read recompute -------------------
@@ -70,7 +69,7 @@ private[operators] object ClusterResplit {
                            newFp: Option[(Long, Long)]): Unit = {
     import s.implicits._
     val conf = s.sparkContext.hadoopConfiguration
-    newFp.orElse(metaFingerprint(s, root)).foreach { fp =>
+    newFp.orElse(IndexSnapshot.fingerprint(s, normDir, root)).foreach { fp =>
       val batches = LogicalDelete.pendingBatches(conf, normDir)
       val union: Option[(DataFrame, Long, Seq[Long])] =
         if (batches == Seq(Fingerprint.sanitizeTag(curBatch))) Some(curVids)
@@ -129,7 +128,7 @@ private[operators] object ClusterResplit {
       val om = s.read.parquet(overlayMetaDir(indexDir)).head()
       val valid = om.getAs[String]("root") == root &&
         om.getAs[String]("batches") == batches.mkString(",") &&
-        metaFingerprint(s, root).contains(
+        IndexSnapshot.fingerprint(s, indexDir, root).contains(
           (om.getAs[Long]("n_rows"), om.getAs[Long]("content_hash")))
       if (!valid) None
       else {
@@ -141,7 +140,7 @@ private[operators] object ClusterResplit {
           col("_ov_hash"), col("_ov_batches")).head()
         val embOk = emb.getString(0) == root &&
           emb.getString(3) == batches.mkString(",") &&
-          metaFingerprint(s, root).contains((emb.getLong(1), emb.getLong(2)))
+          IndexSnapshot.fingerprint(s, indexDir, root).contains((emb.getLong(1), emb.getLong(2)))
         if (!embOk) None
         else Some(payload.select(col(src).as(idCol), col("_newcomp")))
       }
@@ -206,10 +205,15 @@ private[operators] object ClusterResplit {
     // necessary pass.
     val edgesAll = s.read.parquet(s"$root/edges")
       .localCheckpoint(eager = false)
-    // doc->set membership rows among survivors decide set survival
+    // doc->set membership rows among survivors decide set survival.
+    // Eager, and so edgesAll's blocks with it: the two liveSets joins
+    // below are sibling stages that run as concurrent jobs, and a lazy
+    // frame both materialize logs "Failed to update accumulator" ERROR
+    // traces as the first of them ends (seen with a GC forced at every
+    // job end, in the reclaim of a cluster compact)
     val liveSets = edgesAll.filter(col("u") < 0 && col("v") >= 0)
       .join(survIds, col("v") === col("_sid"), "leftsemi")
-      .select(col("u")).distinct().localCheckpoint(eager = false)
+      .select(col("u")).distinct().localCheckpoint()
     // a member row whose doc survives has a live set by definition
     val memberEdges = edgesAll.filter(col("u") < 0 && col("v") >= 0)
       .join(survIds, col("v") === col("_sid"), "leftsemi")

@@ -23,12 +23,14 @@ private[operators] object ClusterServe {
     * the set-node form salted by `salt` — the same repGraph pass as the
     * CC input ([[SetSimJoin.jaccardEdgesWithLog]]); a probe never reads
     * it. Pure query: mutates nothing. */
-  private[operators] def probeParts(s: SparkSession, root: String, incoming: DataFrame,
+  private[operators] def probeParts(s: SparkSession, snap: IndexSnapshot.Snapshot,
+                         incoming: DataFrame,
                          idCol: String, textCol: String,
                          excludeTag: Option[String],
                          tomb: Option[DataFrame], salt: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (t, nBuckets) = readMeta(s, root)
+    val root = snap.root
+    val (t, nBuckets) = readMeta(snap)
     // lazy checkpoints throughout: each frame's FIRST consumer (a bounded
     // collect or append's eager assignD checkpoint) materializes the
     // blocks inside its own job, so the probe path pays no standalone

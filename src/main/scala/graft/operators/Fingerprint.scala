@@ -722,8 +722,7 @@ object Fingerprint {
   def recordCorpusStatus(s: org.apache.spark.sql.SparkSession, indexDir: String,
                          corpus: DataFrame, cols: Seq[String]): Unit = {
     val conf = s.sparkContext.hadoopConfiguration
-    val root = IndexMaintenance.liveRoot(conf, indexDir)
-    val m = s.read.parquet(s"$root/meta").head()
+    val m = IndexSnapshot(s, indexDir).meta
     val recorded = (m.getAs[Long]("n_rows"), m.getAs[Long]("content_hash"))
     val actual = of(corpus, cols)
     require(recorded == actual,

@@ -433,6 +433,24 @@ private[graft] object IndexMaintenance {
     settled.map(_.get)
   }
 
+  /** The distinct rows of a driver-small `df` in ONE job and no shuffle:
+    * each partition dedupes its own rows, the driver the rest — for the
+    * bounded bucket lists the serve paths turn into partition filters,
+    * where a `distinct()` exchange would cost a second job. */
+  def distinctRows(df: DataFrame): Seq[Row] =
+    df.rdd.mapPartitions(_.toSet.iterator).collect().distinct.toSeq
+
+  /** The row count of `df` and the distinct values of its bounded
+    * `bucket` column, in ONE job and no shuffle — a removal's victim
+    * count and bucket list. */
+  def countAndBuckets[T](df: DataFrame, bucket: Column): (Long, Seq[T]) = {
+    val parts = df.select(bucket).rdd.mapPartitions { it =>
+      val vs = it.map(_.get(0)).toSeq
+      Iterator((vs.size.toLong, vs.distinct))
+    }.collect()
+    (parts.map(_._1).sum, parts.toSeq.flatMap(_._2).distinct.map(_.asInstanceOf[T]))
+  }
+
   /** Operator escape hatch: clear ALL leases after independently
     * verifying no maintenance is actually running (a crashed holder
     * cannot clean up after itself). */
@@ -474,9 +492,11 @@ private[graft] object IndexMaintenance {
       val conf: Configuration, val indexDir: String, val root: String,
       val rmTag: String, val vfp: (Long, Long), val replay: Boolean,
       step: String, s: SparkSession) {
+    /** The snapshot under `root` ([[IndexSnapshot]]). */
+    lazy val snapshot: IndexSnapshot.Snapshot = IndexSnapshot.at(s, indexDir, root)
     /** The ONE meta row this removal reads; its fingerprint is the
       * pre-removal meta the commit subtracts from. */
-    lazy val meta: Row = s.read.parquet(s"$root/meta").head()
+    lazy val meta: Row = snapshot.meta
     /** The removal-commit record of this tag, read on first use. */
     lazy val removeState: Option[((Long, Long), Option[(Long, Long)])] =
       Fingerprint.readRemoveState(conf, indexDir, rmTag)
@@ -679,7 +699,7 @@ private[graft] object IndexMaintenance {
     val opName = s"${family.capitalize}Index.append"
     withLease(conf, indexDir, lease) {
       val root = liveRoot(conf, indexDir)
-      val meta = s.read.parquet(s"$root/meta").head()
+      val meta = IndexSnapshot.at(s, indexDir, root).meta
       val tomb = LogicalDelete.ids(s, indexDir)
       LogicalDelete.requireNotTombstoned(s, indexDir,
         delta.select(col(fpCols.head)), fpCols.head, opName, tomb)
@@ -744,12 +764,6 @@ private[graft] object IndexMaintenance {
       Some((meta.getAs[Long]("n_rows"), meta.getAs[Long]("content_hash")))
     else None
 
-  /** The meta fingerprint under a data root; None when meta is absent or
-    * legacy, which reads as stale. */
-  def metaFingerprint(s: SparkSession, root: String): Option[(Long, Long)] =
-    try fingerprintOf(s.read.parquet(s"$root/meta").head())
-    catch { case _: Exception => None }
-
   /** Does the persisted index still describe THIS corpus — the build
     * corpus plus every appended delta, minus every removal? The
     * unchanged-corpus answer is O(files) FS metadata calls
@@ -760,8 +774,32 @@ private[graft] object IndexMaintenance {
   def isFresh(s: SparkSession, indexDir: String, corpus: DataFrame,
               fpCols: Seq[String]): Boolean =
     Fingerprint.statusFresh(indexDir, corpus) ||
-      metaFingerprint(s, liveRoot(s.sparkContext.hadoopConfiguration, indexDir))
+      IndexSnapshot.fingerprint(s, indexDir,
+          liveRoot(s.sparkContext.hadoopConfiguration, indexDir))
         .contains(Fingerprint.of(corpus, fpCols))
+
+  /** Which of `ids` the id-bucketed (`_src`, `idb`) `table` of the live
+    * snapshot already holds — the term and cluster families' streaming
+    * first-write-wins filter. The batch's id buckets (a <= nBuckets
+    * collect) turn the read into a static partition filter, and the
+    * pruned scan is semi-joined against the broadcast batch (no
+    * shuffle). An id is known only if a DIFFERENT batch than
+    * `excludeTag` (a crashed append's replay) ingested it, and a
+    * logically-deleted id is not known: its rows are dead pending
+    * reclaim, as if the physical remove had already run. */
+  def knownIds(s: SparkSession, indexDir: String, table: String, ids: DataFrame,
+               idCol: String, excludeTag: Option[String]): DataFrame = {
+    val snap = IndexSnapshot(s, indexDir)
+    val nBuckets = snap.meta.getAs[Int]("n_buckets")
+    val pinned = ids.select(col(idCol)).distinct().localCheckpoint()
+    val touched = distinctRows(pinned.select(pmod(xxhash64(col(idCol)),
+      lit(nBuckets.toLong)))).map(_.getLong(0))
+    val all = snap.table(table).filter(col("idb").isin(touched: _*))
+    LogicalDelete.hide(
+      excludeTag.fold(all)(tg => all.filter(col("_src") =!= lit(Fingerprint.sanitizeTag(tg))))
+        .join(broadcast(pinned), Seq(idCol), "leftsemi").select(col(idCol)),
+      idCol, LogicalDelete.ids(s, indexDir))
+  }
 
   /** Build-once/serve-many: run `build` when the index has no committed
     * `table`, when `legacy(root)` says its layout predates a feature the
@@ -773,12 +811,15 @@ private[graft] object IndexMaintenance {
     val conf = s.sparkContext.hadoopConfiguration
     val root = liveRoot(conf, indexDir)
     val success = new Path(s"$root/$table/_SUCCESS")
-    if (!success.getFileSystem(conf).exists(success) || legacy(root) ||
+    // an unreadable snapshot is legacy too
+    if (!success.getFileSystem(conf).exists(success) ||
+        scala.util.Try(legacy(root)).getOrElse(true) ||
         !isFresh(s, indexDir, corpus, fpCols))
       build
   }
 
-  /** Whether the table at `path` has column `c`; false when unreadable. */
+  /** Whether the table at `path` has column `c`, inferred from its files
+    * (not the snapshot's pinned schema); false when unreadable. */
   def hasColumn(s: SparkSession, path: String, c: String): Boolean =
     try s.read.parquet(path).schema.fieldNames.contains(c)
     catch { case _: Exception => false }

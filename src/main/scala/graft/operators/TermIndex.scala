@@ -155,10 +155,6 @@ object TermIndex {
         Some(m.getAs[Long]("sum_dl"))
       else None)
 
-  private def readMeta(s: SparkSession, root: String)
-      : (Int, Option[(Long, Long)], Option[Long]) =
-    metaOf(s.read.parquet(s"$root/meta").head())
-
   /** Fingerprint freshness, same contract as the siblings
     * ([[IndexMaintenance.isFresh]]). */
   def isFresh(s: SparkSession, indexDir: String, corpus: DataFrame,
@@ -172,7 +168,8 @@ object TermIndex {
   def ensure(docs: DataFrame, idCol: String, textCol: String, indexDir: String,
              nBuckets: Int = 64): Unit =
     IndexMaintenance.ensureFresh(docs, indexDir, Seq(idCol, textCol), "postings",
-      root => !IndexMaintenance.hasColumn(docs.sparkSession, s"$root/meta", "sum_dl")) {
+      root => !IndexSnapshot.at(docs.sparkSession, indexDir, root).meta.schema
+        .fieldNames.contains("sum_dl")) {
       build(docs, idCol, textCol, indexDir, nBuckets)
     }
 
@@ -198,35 +195,29 @@ object TermIndex {
            k: Int = 10, k1: Double = 1.2, b: Double = 0.75,
            excludeSelf: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val conf = s.sparkContext.hadoopConfiguration
-    val root = IndexMaintenance.liveRoot(conf, indexDir)
-    val (nBuckets, metaFp, metaSumDl) = readMeta(s, root)
-    val postingsAll = s.read.parquet(s"$root/postings")
+    val snap = IndexSnapshot(s, indexDir)
+    val (nBuckets, metaFp, metaSumDl) = metaOf(snap.meta)
+    val postingsAll = snap.table("postings")
     val idCol = postingsAll.columns
       .filterNot(Set("term", "tf", "_src", "tb")).head
     val tomb = LogicalDelete.ids(s, indexDir)
     def hide(df: DataFrame) = LogicalDelete.hide(df, idCol, tomb)
 
-    // ONE job for the whole query side (VERDICT r16 item 5 — the serve
-    // floor): the (query_id, term) pairs were driver-bound anyway (every
-    // consumer below broadcast()s them), so collecting them once — WITH
-    // their term buckets in the same rows — replaces the former
-    // localCheckpoint job + separate bucket-collect job, and the joins
-    // below consume a driver-local relation with no re-scan. Still
-    // bounded by the query batch's vocabulary, never the corpus.
+    // ONE job for the whole query side: the (query_id, term) pairs, with
+    // their term buckets, deduped per partition and on the driver (no
+    // shuffle). The joins below consume a driver-local relation, and the
+    // postings read filters on the query vocabulary itself. Bounded by
+    // the query batch's vocabulary, never the corpus.
     val qtPlan = queries
       .select(col(queryIdCol),
         explode(graft.functions.TextOps.tokens(col(queryTextCol))).as("term"))
-      .distinct()
-    val qtRows = qtPlan.withColumn("_tb", tb(col("term"), nBuckets)).collect()
-    val touchedTb = qtRows.map(_.getLong(2)).distinct.toSeq
-    val qterms = s.createDataFrame(
-      java.util.Arrays.asList(qtRows.map(r =>
-        org.apache.spark.sql.Row(r.get(0), r.get(1))): _*),
-      qtPlan.schema)
+      .withColumn("_tb", tb(col("term"), nBuckets))
+    val qtRows = IndexMaintenance.distinctRows(qtPlan)
+    val qterms = s.createDataFrame(java.util.Arrays.asList(qtRows: _*), qtPlan.schema)
+      .drop("_tb")
     val tfQ = hide(postingsAll
-        .filter(col("tb").isin(touchedTb: _*))
-        .join(broadcast(qterms.select(col("term")).distinct()), Seq("term")))
+        .filter(col("tb").isin(qtRows.map(_.getLong(2)).distinct: _*) &&
+          col("term").isin(qtRows.map(_.getString(1)).distinct: _*)))
       .select(col(idCol), col("term"), col("tf"))
       // lazy: the idb collect right below is the materializing action,
       // so the checkpoint costs no extra job (df + score join reuse it)
@@ -236,9 +227,9 @@ object TermIndex {
     // idb values turn the per-doc dl join read into a static partition
     // filter too — with the meta stats below, no read in this serve
     // path touches more than the query's own buckets
-    val touchedIdb = tfQ.select(idb(col(idCol), nBuckets).as("idb"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val dlCand = hide(s.read.parquet(s"$root/dl")
+    val touchedIdb = IndexMaintenance.distinctRows(
+      tfQ.select(idb(col(idCol), nBuckets))).map(_.getLong(0))
+    val dlCand = hide(snap.table("dl")
         .filter(col("idb").isin(touchedIdb: _*)))
       .select(col(idCol), col("dl"))
     // N and avgdl come from meta — maintained survivor-exact by every
@@ -252,7 +243,7 @@ object TermIndex {
         s.conf.getOption("graft.term.checkStats").exists(_.toBoolean)) {
       // drift tripwire (Verify sets this): re-derive both stats from the
       // stored rows of record and refuse on ANY disagreement with meta
-      val r = hide(s.read.parquet(s"$root/dl")).agg(count(lit(1)).as("n"),
+      val r = hide(snap.table("dl")).agg(count(lit(1)).as("n"),
         coalesce(sum(col("dl")), lit(0L)).as("sd")).head()
       require(r.getLong(0) == metaFp.get._1 && r.getLong(1) == metaSumDl.get,
         s"TermIndex.topK on $indexDir: meta corpus stats (n=${metaFp.get._1}, " +
@@ -270,7 +261,7 @@ object TermIndex {
       else joined0
     metaStats.fold {
       // pre-r16 meta without sum_dl: the legacy full-table aggregate
-      val dlAll = hide(s.read.parquet(s"$root/dl"))
+      val dlAll = hide(snap.table("dl"))
         .select(col(idCol), col("dl"))
       val corpusStats = dlAll.agg(count(lit(1)).cast("double").as("n"),
         (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
@@ -290,25 +281,12 @@ object TermIndex {
       .select(col(queryIdCol), col("rank"), col(idCol), col("score"))
   }
 
-  /** Which of `ids` are already indexed (streaming first-write-wins
-    * filter — the unique-id contract means a stable-id re-crawl must
-    * not re-enter): pruned dl read, logically-deleted ids NOT known.
-    * `excludeTag` keeps a crashed append's own rows from masking its
-    * replay, like the cluster sibling. */
+  /** Which of `ids` are already indexed ([[IndexMaintenance.knownIds]]
+    * over `dl`): the unique-id contract means a stable-id re-crawl must
+    * not re-enter. */
   def knownIds(s: SparkSession, indexDir: String, ids: DataFrame,
-               idCol: String, excludeTag: Option[String] = None): DataFrame = {
-    val root = IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir)
-    val (nBuckets, _, _) = readMeta(s, root)
-    val pinned = ids.select(col(idCol)).distinct().localCheckpoint()
-    val touched = pinned.select(idb(col(idCol), nBuckets).as("idb"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val dlAll = s.read.parquet(s"$root/dl").filter(col("idb").isin(touched: _*))
-    val dl = excludeTag.fold(dlAll)(tg =>
-      dlAll.filter(col("_src") =!= lit(sanitize(tg))))
-    LogicalDelete.hide(
-      dl.join(broadcast(pinned), Seq(idCol), "leftsemi").select(col(idCol)),
-      idCol, LogicalDelete.ids(s, indexDir))
-  }
+               idCol: String, excludeTag: Option[String] = None): DataFrame =
+    IndexMaintenance.knownIds(s, indexDir, "dl", ids, idCol, excludeTag)
 
   /** O(|delta|) maintenance — `tag` must be BATCH-UNIQUE: writes are
     * tag-scoped dynamic overwrites (see the class doc for why this
@@ -349,11 +327,7 @@ object TermIndex {
   private final class Victims(victims: DataFrame, val idCol: String,
                               textCol: String, nBuckets: Int) {
     val vids: DataFrame = victims.select(col(idCol)).distinct().localCheckpoint()
-    // ONE job for the count and the id-bucket list (<= nBuckets rows)
-    private val perIdb = vids.groupBy(idb(col(idCol), nBuckets).as("idb"))
-      .count().collect()
-    val nV: Long = perIdb.map(_.getLong(1)).sum
-    val vIdb: Seq[Long] = perIdb.map(_.getLong(0)).toSeq
+    val (nV, vIdb) = IndexMaintenance.countAndBuckets[Long](vids, idb(col(idCol), nBuckets))
     private val (tf0, dl0) = stats(victims, idCol, textCol)
     val dl: DataFrame = dl0
     lazy val tf: DataFrame = tf0.localCheckpoint() // bucket collect + signature reuse

@@ -36,13 +36,14 @@ object TextIndex {
   // token sets to audit the persisted table against the frozen params.
   // posexplode_outer: the band array is never null or empty, and a plain
   // posexplode's inferred size(_bh) > 0 filter runs the kernel twice
+  // `carry` keeps more input columns on every band row (the probe's `_toks`)
   private[graft] def bandRows(toks: DataFrame, idCol: String, numHashes: Int,
-                              bands: Int, nBuckets: Int, seed: Int): DataFrame =
+                              bands: Int, nBuckets: Int, seed: Int,
+                              carry: Seq[String] = Nil): DataFrame =
     toks
-      .select(col(idCol),
-        graft.functions.MinHashBands(col("_toks"), numHashes, bands, seed).as("_bh"))
-      .select(col(idCol), col("_bh"),
-        posexplode_outer(col("_bh")).as(Seq("band", "band_hash")))
+      .select((idCol +: carry).map(col) :+
+        graft.functions.MinHashBands(col("_toks"), numHashes, bands, seed).as("_bh"): _*)
+      .select(col("*"), posexplode_outer(col("_bh")).as(Seq("band", "band_hash")))
       .withColumn("hb", pmod(col("band_hash"), lit(nBuckets.toLong)))
 
   private def tokRows(toks: DataFrame, idCol: String, nBuckets: Int): DataFrame =
@@ -92,10 +93,6 @@ object TextIndex {
   private def params(m: org.apache.spark.sql.Row): Params =
     Params(m.getAs[Int]("num_hashes"), m.getAs[Int]("bands"),
       m.getAs[Int]("n_buckets"), m.getAs[Int]("seed"))
-
-  // root = resolved data root (IndexMaintenance.liveRoot), not the index dir
-  private def readParams(s: SparkSession, root: String): Params =
-    params(s.read.parquet(s"$root/meta").head())
 
   private def writeMeta(s: SparkSession, root: String, p: Params,
                         fp: (Long, Long)): Unit = {
@@ -155,12 +152,8 @@ object TextIndex {
   private final class Victims(s: SparkSession, root: String, victims: DataFrame,
                               val idCol: String, val p: Params) {
     val vids: DataFrame = victims.select(col(idCol)).distinct().localCheckpoint()
-    // ONE job for the count and the id-bucket list (<= nBuckets rows)
-    private val perIdb = vids
-      .groupBy(pmod(xxhash64(col(idCol)), lit(p.nBuckets.toLong)).as("idb"))
-      .count().collect()
-    val nV: Long = perIdb.map(_.getLong(1)).sum
-    val vIdb: Seq[Long] = perIdb.map(_.getLong(0)).toSeq
+    val (nV, vIdb) = IndexMaintenance.countAndBuckets[Long](vids,
+      pmod(xxhash64(col(idCol)), lit(p.nBuckets.toLong)))
     // broadcast only below the mass-victim key threshold (VERDICT r11
     // item 1), like every victim join in the remove family
     def bVids: DataFrame = TargetedDelete.maybeBroadcast(vids, nV)
@@ -343,35 +336,19 @@ object TextIndex {
             idCol: String, textCol: String,
             threshold: Double = 0.8,
             excludeTag: Option[String] = None): DataFrame = {
-    val root = IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir)
-    val Params(numHashes, bands, nBuckets, seed) = readParams(s, root)
-    val incToks = incoming
-      .select(col(idCol), Dedup.hashedTokenSet(col(textCol)).as("_toks"))
+    val snap = IndexSnapshot(s, indexDir)
+    val Params(numHashes, bands, nBuckets, seed) = params(snap.meta)
+    // ONE checkpoint of the incoming side, consumed by the bucket
+    // collect, the join and the verify: the band rows carry the token
+    // sets, and band 0 holds each incoming doc once
+    val incBands = bandRows(
+        incoming.select(col(idCol), Dedup.hashedTokenSet(col(textCol)).as("_toks")),
+        idCol, numHashes, bands, nBuckets, seed, carry = Seq("_toks"))
       .localCheckpoint()
-    val incBands = bandRows(incToks, idCol, numHashes, bands, nBuckets, seed)
-      .localCheckpoint() // consumed twice: bucket collect + the join
+    val incToks = incBands.filter(col("band") === 0).select(col(idCol), col("_toks"))
     // bounded collect: at most nBuckets longs — prunes the band scan
-    val touchedHb = incBands.select(col("hb")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    // Schema resolution: default inference samples ONE footer; on an
-    // index mixing pre-_src files with tagged appends it could come back
-    // without _src — hiding the appended rows' provenance and silently
-    // disabling the replay guard. But an unconditional mergeSchema read
-    // merges EVERY file's footer on every probe — a per-micro-batch
-    // full-metadata pass on the hot streaming path. So: try the cheap
-    // single-footer read; only when the sampled footer lacks _src (the
-    // rare mixed-legacy index, which ensure() rebuilds anyway) pay the
-    // mergeSchema pass to check whether any appended file carries it.
-    val plainBands = s.read.parquet(s"$root/bands")
-    val refBandsRead =
-      (if (plainBands.columns.contains("_src")) plainBands
-       else s.read.option("mergeSchema", "true").parquet(s"$root/bands"))
-        .filter(col("hb").isin(touchedHb: _*))
-    // fully pre-provenance index (ensure() rebuilds these, but direct
-    // probe calls must still resolve): legacy rows are _src = null
-    val refBandsAll =
-      if (refBandsRead.columns.contains("_src")) refBandsRead
-      else refBandsRead.withColumn("_src", lit(null).cast("string"))
+    val touchedHb = IndexMaintenance.distinctRows(incBands.select(col("hb"))).map(_.getLong(0))
+    val refBandsAll = snap.withSrc("bands").filter(col("hb").isin(touchedHb: _*))
     // null-safe (ADVICE r9): on an index mixing pre-_src files with tagged
     // appends, legacy rows read _src = null; `=!=` would evaluate NULL and
     // silently drop the whole pre-upgrade corpus from the probe.
@@ -390,12 +367,14 @@ object TextIndex {
         Seq("band", "band_hash"))
       .filter(graft.functions.FirstBandMatch(col("_bh1"), col("_bh2")) === col("band"))
       .select(col("inc_id"), col("ref_id"))
-      .localCheckpoint() // consumed twice: id-bucket collect + verify join
+      // lazy: the id-bucket collect below materializes it, and the
+      // verify join reuses it
+      .localCheckpoint(eager = false)
     // bounded collect again: candidate ref ids' buckets prune the verify scan
-    val touchedIdb = cands
-      .select(pmod(xxhash64(col("ref_id")), lit(nBuckets.toLong)).as("idb"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val refToks = s.read.parquet(s"$root/toks")
+    val touchedIdb = IndexMaintenance.distinctRows(
+        cands.select(pmod(xxhash64(col("ref_id")), lit(nBuckets.toLong))))
+      .map(_.getLong(0))
+    val refToks = snap.table("toks")
       .filter(col("idb").isin(touchedIdb: _*))
       .select(col(idCol).as("ref_id"), col("_toks").as("_tr"))
     Dedup.bestMatches(cands,

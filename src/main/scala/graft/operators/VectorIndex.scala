@@ -123,7 +123,7 @@ object VectorIndex {
              tag: String = "append"): Unit =
     IndexMaintenance.append(delta, indexDir, tag, "write",
         Seq(corpusId, corpusVec), "vector") { ctx =>
-      val centroids = loadCentroidsFromRoot(delta.sparkSession, ctx.root)
+      val centroids = IndexSnapshot.at(delta.sparkSession, ctx.indexDir, ctx.root).centroids
       delta
         .withColumn("cell", Similarity.nearestCentroid(col(corpusVec), centroids))
         .withColumn("norm", VectorOps.norm(col(corpusVec)))
@@ -157,17 +157,9 @@ object VectorIndex {
     } { (ctx, fp) => writeMeta(delta.sparkSession, ctx.root, fp) }
 
   /** The persisted quantizer, reassembled in cell order (bounded read:
-    * nlist x dim rows). */
+    * nlist x dim rows, once per snapshot). */
   def loadCentroids(s: SparkSession, indexDir: String): Seq[Seq[Double]] =
-    loadCentroidsFromRoot(s,
-      IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir))
-
-  private[graft] def loadCentroidsFromRoot(s: SparkSession, root: String): Seq[Seq[Double]] =
-    s.read.parquet(s"$root/centroids").collect()
-      .groupBy(_.getAs[Int]("cell")).toSeq.sortBy(_._1)
-      .map { case (_, rs) =>
-        rs.sortBy(_.getAs[Int]("pos")).map(_.getAs[Double]("value")).toSeq
-      }
+    IndexSnapshot(s, indexDir).centroids
 
   // ---- recall-drift probe (r15): constants + the pure measurement ----
   // Sample cap: what the TakeOrdered collects to the driver per append.
@@ -313,29 +305,15 @@ object VectorIndex {
                 tau: Double, corpusId: String = "vec_id",
                 corpusVec: String = "embedding",
                 excludeTag: Option[String] = None): DataFrame = {
-    val root = IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir)
-    val centroids = loadCentroidsFromRoot(s, root)
+    val snap = IndexSnapshot(s, indexDir)
     val probed = incoming
-      .withColumn("_cid", Similarity.nearestCentroid(col(corpusVec), centroids))
+      .withColumn("_cid", Similarity.nearestCentroid(col(corpusVec), snap.centroids))
       .withColumn("_nrm", VectorOps.norm(col(corpusVec)))
       .select(col(corpusId).as("inc_id"), col(corpusVec).as("_ei"),
         col("_nrm").as("_ni"), col("_cid"))
     // bounded collect (<= nlist ints): static partition filter on cells
-    val touched = probed.select(col("_cid")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    // a mixed pre-_src index must expose the appended rows' provenance
-    // (single-footer inference could hide it and silently disable the
-    // replay guard) — but the mergeSchema pass reads every footer, so
-    // it runs only when the cheap read lacks _src; see TextIndex.probe
-    val plainCells = s.read.parquet(s"$root/cells")
-    val cellsRead =
-      (if (plainCells.columns.contains("_src")) plainCells
-       else s.read.option("mergeSchema", "true").parquet(s"$root/cells"))
-        .filter(col("cell").isInCollection(touched))
-    // fully pre-provenance index: legacy rows are _src = null
-    val cells0 =
-      if (cellsRead.columns.contains("_src")) cellsRead
-      else cellsRead.withColumn("_src", lit(null).cast("string"))
+    val touched = IndexMaintenance.distinctRows(probed.select(col("_cid"))).map(_.getInt(0))
+    val cells0 = snap.withSrc("cells").filter(col("cell").isInCollection(touched))
     // null-safe (ADVICE r9): pre-_src rows read _src = null; `=!=` would
     // evaluate NULL and silently drop them from the probe.
     // Logically-deleted vectors leave the reference side here (tombstone
@@ -356,18 +334,15 @@ object VectorIndex {
   /** A removal's victims pinned to their cells under the FROZEN
     * quantizer (assignment is deterministic, so the cell list is a pure
     * function of the victims argument — replay-stable). */
-  private final class Victims(s: SparkSession, root: String, victims: DataFrame,
+  private final class Victims(centroids: Seq[Seq[Double]], victims: DataFrame,
                               val corpusId: String, corpusVec: String) {
     private val pinned = victims
-      .withColumn("cell", Similarity.nearestCentroid(col(corpusVec),
-        loadCentroidsFromRoot(s, root)))
+      .withColumn("cell", Similarity.nearestCentroid(col(corpusVec), centroids))
       .select(col(corpusId), col("cell")).distinct().localCheckpoint()
     // ONE job for the count and the cell list (<= nlist rows); an id
     // sits in one cell (its stored embedding's), and a victim feed that
     // pins one id to two cells fails the known-check
-    private val perCell = pinned.groupBy(col("cell")).count().collect()
-    val nV: Long = perCell.map(_.getLong(1)).sum
-    val vCells: Seq[Int] = perCell.map(_.getInt(0)).toSeq
+    val (nV, vCells) = IndexMaintenance.countAndBuckets[Int](pinned, col("cell"))
     val vids: DataFrame = pinned.select(col(corpusId)).distinct()
     def bVids: DataFrame = TargetedDelete.maybeBroadcast(vids, nV)
   }
@@ -375,8 +350,8 @@ object VectorIndex {
   /** The victim set of a removal; None when it is empty. */
   private def victimsOf(ctx: IndexMaintenance.RemovalCtx, victims: DataFrame,
                         corpusId: String, corpusVec: String): Option[Victims] =
-    Some(new Victims(victims.sparkSession, ctx.root, victims, corpusId,
-      corpusVec)).filter(_.nV > 0L)
+    Some(new Victims(ctx.snapshot.centroids, victims, corpusId, corpusVec))
+      .filter(_.nV > 0L)
 
   /** The one victim check of both removal verbs, run on a first attempt
     * only ([[IndexMaintenance.RemovalCtx.firstAttempt]]): two concurrent
@@ -517,7 +492,7 @@ object VectorIndex {
         .localCheckpoint() // one materialization feeds train + re-assign
       val k =
         if (nlist > 0) nlist
-        else loadCentroidsFromRoot(s, ctx.fromRoot).size
+        else IndexSnapshot.at(s, indexDir, ctx.fromRoot).centroids.size
       val centroids = Similarity.trainCentroids(live, k, iters, seed,
         corpusId, corpusVec)
       require(centroids.nonEmpty,
@@ -568,11 +543,10 @@ object VectorIndex {
            corpusVec: String = "embedding",
            probeId: String = "q_id", probeVec: String = "q_emb",
            excludeSelf: Boolean = false): DataFrame = {
-    val root = IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir)
-    val centroids = loadCentroidsFromRoot(s, root)
+    val snap = IndexSnapshot(s, indexDir)
     val probed = probes
       .select(col(probeId), col(probeVec),
-        posexplode(CosineScores(col(probeVec), centroids)).as(Seq("_cid", "_score")))
+        posexplode(CosineScores(col(probeVec), snap.centroids)).as(Seq("_cid", "_score")))
       .withColumn("_rk", row_number().over(
         Window.partitionBy(col(probeId)).orderBy(col("_score").desc, col("_cid"))))
       .filter(col("_rk") <= nprobe)
@@ -580,10 +554,9 @@ object VectorIndex {
       .select(col(probeId), col(probeVec), col("_np"), col("_cid"))
     // bounded collect (<= nlist ints): the probe batch's touched cells,
     // turned into a STATIC partition filter so the file scan prunes
-    val touched = probed.select(col("_cid")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val touched = IndexMaintenance.distinctRows(probed.select(col("_cid"))).map(_.getInt(0))
     val cells = LogicalDelete.hide(
-      s.read.parquet(s"$root/cells")
+      snap.table("cells")
         .filter(col("cell").isInCollection(touched)),
       corpusId, LogicalDelete.ids(s, indexDir))
     val w = Window.partitionBy(col(probeId))

@@ -154,8 +154,7 @@ object RtbfE2e {
     }
 
     // record the quantizer for the oracle's centroid-literal replay
-    lastCentroids = Some(VectorIndex.loadCentroidsFromRoot(s,
-      IndexMaintenance.liveRoot(conf, s"$run/vecidx")))
+    lastCentroids = Some(VectorIndex.loadCentroids(s, s"$run/vecidx"))
 
     // ---- serve every surface from what the purge left on disk ----
     import s.implicits._

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{ClusterIndex, FaultInjection, Fingerprint, IndexMaintenance,
+import graft.operators.{ClusterIndex, FaultInjection, Fingerprint, IndexMaintenance, IndexSnapshot,
   LogicalDelete, TermIndex, TextIndex, VectorIndex}
 
 /** The one removal crash matrix over the seven removal verbs (text,
@@ -37,7 +37,7 @@ trait RemovalCrashMatrix { self: SparkSpec =>
   /** What isFresh compares with a corpus fingerprint (an in-memory
     * corpus has no file statuses for its fast path). */
   private def metaFp(dir: String): Option[(Long, Long)] =
-    IndexMaintenance.metaFingerprint(spark, root(dir))
+    IndexSnapshot.fingerprint(spark, dir, root(dir))
 
   private def rows(rs: (Long, String)*): DataFrame = IndexFixtures.docs(spark, rs: _*)
   private def textRows(ids: Seq[Long]): DataFrame = IndexFixtures.textRows(spark, ids)

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark-free guards over `src`: one session builder ([[GraftSession]]),
   * no returning `GRAFT_*_DEBUG` timing knob ([[Phases]] replaced them),
-  * and one removal commit (`IndexMaintenance.removal`). */
+  * one removal commit (`IndexMaintenance.removal`), and one reader of an
+  * index snapshot's meta and centroids (`IndexSnapshot`). */
 class SourceGuardSpec extends AnyFunSuite {
 
   private def scalaFiles(dir: String): Seq[(String, String)] = {
@@ -48,5 +49,15 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(callers.subsetOf(Set("IndexMaintenance.scala", "ClusterRemoval.scala",
       "Fingerprint.scala")), callers.toSeq.sorted.mkString(", "))
     assert(callers.contains("IndexMaintenance.scala"), "the envelope commits")
+  }
+
+  test("index meta and centroids are read only by the snapshot reader") {
+    // a serve path reading them itself would bring back the per-probe
+    // meta, centroid and schema-inference jobs the snapshot memoizes
+    val read = """read\s*\.\s*parquet\(\s*s"\$\{?[\w.]*\}?/(meta|centroids)"\s*\)""".r
+    val readers = scalaFiles("src/main").collect {
+      case (f, t) if read.findFirstIn(t).isDefined => f
+    }
+    assert(readers === Seq("IndexSnapshot.scala"))
   }
 }
