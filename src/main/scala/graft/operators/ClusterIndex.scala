@@ -617,8 +617,7 @@ object ClusterIndex {
                                    threshold: Double, nBuckets: Int,
                                    fp: (Long, Long)): Unit = {
     import s.implicits._
-    Seq((threshold, nBuckets, fp._1, fp._2))
-      .toDF("threshold", "n_buckets", "n_rows", "content_hash")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
+    IndexSnapshot.writeMeta(Seq((threshold, nBuckets, fp._1, fp._2))
+        .toDF("threshold", "n_buckets", "n_rows", "content_hash"), root)
   }
 }

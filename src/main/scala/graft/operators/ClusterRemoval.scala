@@ -712,8 +712,8 @@ private[operators] object ClusterRemoval {
     // commit ran (r16 — see the comment below)
     var overlayArgs: Option[(String, Int, DataFrame, Long, Seq[Long], String)] = None
     var resolvedFp: Option[(Long, Long)] = None
-    IndexMaintenance.removal(victims, indexDir, tag, Seq(idCol, textCol),
-        "ClusterIndex.logicalRemove", "cluster.logical") { ctx =>
+    IndexMaintenance.removal(IndexMaintenance.Victims(victims, Seq(idCol, textCol)),
+        indexDir, tag, "ClusterIndex.logicalRemove", "cluster.logical") { ctx =>
       val (conf, normDir, root) = (ctx.conf, ctx.indexDir, ctx.root)
       val thr = ctx.meta.getAs[Double]("threshold")
       val nBuckets = ctx.meta.getAs[Int]("n_buckets")

@@ -18,9 +18,8 @@ import org.apache.spark.sql.functions._
   *  - Sum, unlike XOR, is multiplicity-sensitive: XOR cancels any row
   *    appearing an even number of times, so {A,A,B,B} and {C,C,D,D}
   *    would collide at (4, 0) and a stale index would read as fresh.
-  *    The sum accumulates in DECIMAL(38,0) (no ANSI long overflow) and
-  *    the low 64 bits are kept — exactly sum mod 2^64, which a Scala
-  *    wrapping `+` reproduces on merge.
+  *    The sum is kept mod 2^64 (a wrapping long add, no ANSI overflow),
+  *    which a Scala wrapping `+` also reproduces on merge.
   *  - A check costs a single pruned scan + 16-byte agg — orders of
   *    magnitude cheaper than the rebuild it guards (quantizer training /
   *    128 min-hashes per doc), and skippable entirely by deployments
@@ -28,17 +27,17 @@ import org.apache.spark.sql.functions._
   */
 object Fingerprint {
 
-  /** One pruned scan: (n_rows, sum of xxhash64(cols...) mod 2^64).
+  /** One pruned scan, ONE Spark job: (n_rows, sum of xxhash64(cols...)
+    * mod 2^64). Each task sums its own rows with a wrapping add and the
+    * driver adds the task sums — the same low 64 bits as the exact sum.
     * Empty input fingerprints as (0, 0). */
-  def of(df: DataFrame, cols: Seq[String]): (Long, Long) = {
-    val r = df
-      .agg(count(lit(1)).as("n"),
-        coalesce(
-          sum(expr(s"xxhash64(${cols.mkString(", ")})").cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")).as("h"))
-      .head()
-    (r.getLong(0), r.getDecimal(1).toBigInteger.longValue()) // low 64 bits
-  }
+  def of(df: DataFrame, cols: Seq[String]): (Long, Long) =
+    df.select(xxhash64(cols.map(col): _*)).rdd.mapPartitions { it =>
+      var n = 0L
+      var h = 0L
+      it.foreach { r => n += 1; h += r.getLong(0) }
+      Iterator((n, h))
+    }.fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
 
   /** Fingerprint of (a ∪ b) from the parts — the append path. The
     * wrapping long add equals decimal-sum-mod-2^64 of the union. */

@@ -484,6 +484,25 @@ private[graft] object IndexMaintenance {
 
   // ---- removal envelope --------------------------------------------------
 
+  /** One removal's victim rows, captured ONCE: their fingerprint over
+    * `fpCols` and their distinct ids (`fpCols.head`) as a
+    * [[TargetedDelete.Keys]], both from one Spark job
+    * ([[TargetedDelete.Keys.capture]]). An RTBF purge captures each
+    * victim snapshot once and hands the capture to every store it
+    * scrubs ([[Rtbf]]); the removal verbs capture the rows they are
+    * passed. */
+  final class Victims private (val rows: DataFrame, val fpCols: Seq[String],
+                               val fp: (Long, Long), val keys: TargetedDelete.Keys) {
+    def idCol: String = fpCols.head
+  }
+
+  object Victims {
+    def apply(rows: DataFrame, fpCols: Seq[String]): Victims = {
+      val (fp, keys) = TargetedDelete.Keys.capture(rows, fpCols.head, fpCols)
+      new Victims(rows, fpCols, fp, keys)
+    }
+  }
+
   /** What a removal verb's body works with: the normalized index dir,
     * the data root resolved under the lease, the removal's own tag
     * namespace (`rm.<tag>`), the victims' fingerprint, and whether this
@@ -545,7 +564,7 @@ private[graft] object IndexMaintenance {
     *  2. the exclusive `remove` lease ([[withLease]]) — a removal
     *     rewrites other generations' partitions, so it races nothing.
     *  3. [[liveRoot]], resolved under the lease.
-    *  4. the victims' fingerprint over `fpCols`.
+    *  4. the victims' fingerprint, from their capture ([[Victims]]).
     *  5. [[admitRemoval]]: the replay check, the refusal of a reused
     *     tag, and the refusal while another removal's state pends.
     *  6. a completed replay ([[RemovalCtx.completedReplay]]) is a no-op
@@ -585,18 +604,18 @@ private[graft] object IndexMaintenance {
     *
     * ClusterIndex.remove spreads its work over three lease windows and
     * keeps its own staged commit ([[ClusterRemoval]]). */
-  def removal(victims: DataFrame, indexDir0: String, tag: String,
-              fpCols: Seq[String], opName: String, step: String,
+  def removal(victims: Victims, indexDir0: String, tag: String,
+              opName: String, step: String,
               done: RemovalCtx => Unit = _ => ())
              (prepare: RemovalCtx => Option[RemovalCommit]): Unit = {
-    val s = victims.sparkSession
+    val s = victims.rows.sparkSession
     val conf = s.sparkContext.hadoopConfiguration
     val indexDir = normalize(indexDir0)
     val rmTag = s"rm.$tag"
     Fingerprint.awaitInflightQuiesce(conf, indexDir, rmTag)
     withLease(conf, indexDir, "remove") {
       val root = liveRoot(conf, indexDir)
-      val vfp = Fingerprint.of(victims, fpCols)
+      val vfp = victims.fp
       val replay = admitRemoval(conf, indexDir, tag, vfp, opName)
       val ctx = new RemovalCtx(conf, indexDir, root, rmTag, vfp, replay, step, s)
       if (ctx.completedReplay) done(ctx)

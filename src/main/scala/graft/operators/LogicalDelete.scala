@@ -101,27 +101,52 @@ private[graft] object LogicalDelete {
 
   /** [[ids]] for callers that already hold the pending-batch listing
     * (the compact/retrain paths snapshot it under the lease) — zero
-    * additional FS metadata calls. */
+    * additional FS metadata calls. The batches are read under the
+    * schema [[write]] recorded beside them (one small file read, no
+    * schema-inference job); batches written before that record existed
+    * fall back to inference. */
   def idsOf(s: SparkSession, indexDir: String,
             batches: Seq[String]): Option[DataFrame] =
     if (batches.isEmpty) None
     else {
       val d = dir(indexDir)
-      val raw = s.read.parquet(batches.map(b => s"$d/batch=$b"): _*)
+      val paths = batches.map(b => s"$d/batch=$b")
+      val raw = schemaOf(s, paths.head).fold(s.read)(s.read.schema).parquet(paths: _*)
       Some(raw.select(col(idColOf(raw))).distinct())
     }
+
+  /** The schema file [[write]] leaves in every batch (hidden from Spark
+    * by its `_` prefix), and the marker of a physical remove's barrier
+    * batch. */
+  private val SchemaFile = "_schema.json"
+  private val BarrierFile = "_BARRIER"
+
+  private def schemaOf(s: SparkSession, batchDir: String)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val p = new org.apache.hadoop.fs.Path(batchDir, SchemaFile)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    try {
+      val in = fs.open(p)
+      val json = try new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+      Some(org.apache.spark.sql.types.DataType.fromJson(json)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
 
   /** The index's id column name, recovered from a pending tombstone
     * frame (its only non-partition column). */
   def idColOf(tomb: DataFrame): String =
     tomb.columns.filterNot(_ == "batch").head
 
-  /** Persist one removal batch's victim ids — the logical remove's only
-    * mutation. Readers list and read `batch=<tag>` dirs without a lease,
-    * so the batch is written under `_tmp.batch=<tag>` (hidden from
+  /** Persist one removal batch's DISTINCT victim ids `vids` — the
+    * logical remove's only mutation. Readers list and read `batch=<tag>`
+    * dirs without a lease, so the batch is written under `_tmp.batch=<tag>` (hidden from
     * [[pendingBatches]] by its `batch=` prefix filter, and from Spark by
     * its `_` prefix) and then PUBLISHED by one directory rename: a
-    * reader never lists a batch whose files have not committed. A
+    * reader never lists a batch whose files have not committed. The
+    * batch carries its schema ([[idsOf]] reads under it) and, for a
+    * physical remove's victim `barrier`, a marker ([[isBarrier]]). A
     * leftover temp dir from a crashed write is overwritten by the next
     * one. Idempotent per batch: a batch already published is complete
     * and identical (tag reuse is refused, so the same tag always
@@ -130,19 +155,36 @@ private[graft] object LogicalDelete {
     * atomically (a copy then delete), so there a reader can still see a
     * partly copied batch. */
   def write(vids: DataFrame, idCol: String, indexDir: String,
-            rmTag: String): Unit = {
+            rmTag: String, barrier: Boolean = false): Unit = {
     val batch = s"batch=${Fingerprint.sanitizeTag(rmTag)}"
     val dest = new org.apache.hadoop.fs.Path(dirPath(indexDir), batch)
     val tmp = new org.apache.hadoop.fs.Path(dirPath(indexDir), s"_tmp.$batch")
     val fs = dest.getFileSystem(vids.sparkSession.sparkContext.hadoopConfiguration)
     if (!fs.exists(dest)) {
-      vids.select(col(idCol)).distinct()
-        .coalesce(1) // a deletion batch is driver-small by nature
+      val ids = vids.select(col(idCol))
+      ids.coalesce(1) // a deletion batch is driver-small by nature
         .write.mode("overwrite").parquet(tmp.toString)
+      def put(name: String, body: String): Unit = {
+        val out = fs.create(new org.apache.hadoop.fs.Path(tmp, name), true)
+        try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+      }
+      put(SchemaFile, ids.schema.json)
+      if (barrier) put(BarrierFile, "")
       if (!fs.rename(tmp, dest))
         throw new java.io.IOException(
           s"tombstone batch could not be published: rename $tmp -> $dest refused")
     }
+  }
+
+  /** Whether the pending `batch` is a physical remove's victim barrier
+    * ([[write]] with `barrier`), not a logical removal's tombstone of the
+    * same name. A barrier written before the marker existed reads as a
+    * tombstone and stays until the next compact — the safe direction. */
+  def isBarrier(conf: org.apache.hadoop.conf.Configuration, indexDir: String,
+                batch: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dirPath(indexDir), s"batch=$batch/$BarrierFile")
+    p.getFileSystem(conf).exists(p)
   }
 
   /** Hide tombstoned rows at read: anti-join `df` against the pending
@@ -165,6 +207,24 @@ private[graft] object LogicalDelete {
                            opName: String): Unit =
     requireNotTombstoned(s, indexDir, keys, idCol, opName, ids(s, indexDir))
 
+  /** The removal verbs' form over a resolved victim key set: one job
+    * collects the tombstoned victim ids. */
+  def requireNotTombstoned(indexDir: String, keys: TargetedDelete.Keys,
+                           opName: String): Unit =
+    ids(keys.frame.sparkSession, indexDir).foreach { t =>
+      val hit = IndexMaintenance.distinctRows(
+        keys.semi(t.select(col(idColOf(t)).as(keys.name)), keys.name))
+      if (hit.nonEmpty) refuseTombstoned(hit.size.toLong, indexDir, opName)
+    }
+
+  private def refuseTombstoned(n: Long, indexDir: String, opName: String): Nothing =
+    Fingerprint.refuse(
+      s"$opName: $n of the ids are logically deleted (tombstoned under " +
+        s"${dir(indexDir)}) and awaiting physical reclaim — compact() the " +
+        "index first. (If a compact() just completed, these tombstones " +
+        "survived a crash between its cutover and its cleanup and match " +
+        "nothing — re-running compact() clears them.)")
+
   /** Overload for callers that already resolved the pending set — the
     * hot ingest path must not pay a second FS probe + parquet read. */
   def requireNotTombstoned(s: SparkSession, indexDir: String,
@@ -173,12 +233,7 @@ private[graft] object LogicalDelete {
     tomb.foreach { t =>
       val n = keys.select(col(idCol)).distinct()
         .join(t.select(col(idColOf(t)).as(idCol)), Seq(idCol), "left_semi").count()
-      if (n > 0L) Fingerprint.refuse(
-        s"$opName: $n of the ids are logically deleted (tombstoned under " +
-          s"${dir(indexDir)}) and awaiting physical reclaim — compact() the " +
-          "index first. (If a compact() just completed, these tombstones " +
-          "survived a crash between its cutover and its cleanup and match " +
-          "nothing — re-running compact() clears them.)")
+      if (n > 0L) refuseTombstoned(n, indexDir, opName)
     }
 
   /** Refusal for the physical remove(): while ANY tombstone pends, its

@@ -70,10 +70,11 @@ final case class RtbfStatus(tag: String, planned: Seq[String],
   *    partial success is never silent.
   *
   * Scale: no step materializes the corpus on the driver. The victim
-  * snapshot is one semi-join write of O(victims); each index verb is
-  * the family's own bucket-pruned rewrite; the agreement check is six
-  * broadcast-semi-join counts over column-pruned scans (id columns
-  * only). At 100 TB the check is the priciest read (a full id-column
+  * snapshot is one write of O(victims), captured once (fingerprint and
+  * distinct ids, one job); each index verb is the family's own
+  * bucket-pruned rewrite; the agreement check is one job over
+  * column-pruned scans (id columns only, filtered to the victim keys).
+  * At 100 TB the check is the priciest read (a full id-column
   * scan per store) — it is the point: a purge certificate must read
   * what is actually on disk.
   *
@@ -158,12 +159,13 @@ object Rtbf {
           s"but this call asks for $mode — a replay executes the mode " +
           "the manifest recorded; use a fresh tag to purge the other way")
     } else {
-      // snapshot FIRST, manifest (the commit point) LAST: a crash in
-      // between re-stages the snapshot from the caller's rows
-      victims.select(col(targets.idCol), col(targets.textCol))
-        .write.mode("overwrite").parquet(s"$state/victims")
-      vecVictims.foreach(_.select(col(targets.vecIdCol), col(targets.vecCol))
-        .write.mode("overwrite").parquet(s"$state/vec_victims"))
+      // snapshot FIRST (both at once), manifest (the commit point) LAST:
+      // a crash in between re-stages the snapshot from the caller's rows
+      IndexMaintenance.parallel(
+        (() => victims.select(col(targets.idCol), col(targets.textCol))
+          .write.mode("overwrite").parquet(s"$state/victims")) +:
+          vecVictims.toSeq.map(v => () => v.select(col(targets.vecIdCol), col(targets.vecCol))
+            .write.mode("overwrite").parquet(s"$state/vec_victims")))
       writeManifest(fs, manifest,
         ManifestRec(s"${vfp._1}:${vfp._2}", plannedStores(targets),
           if (logical) "logical" else "physical"))
@@ -205,21 +207,34 @@ object Rtbf {
     val planned = rec.stores
     val logical = rec.mode == "logical"
 
-    // the one authoritative victim capture — every verb reads THIS.
-    // Doc and vec snapshots materialize concurrently (r18 opt, guide
-    // §2.6 — two independent tiny reads, two fewer serial job walls).
-    // Both settle before the first failure rethrows (ADVICE r18).
-    def snapshot(path: String) = () => {
-      val v = s.read.parquet(path).localCheckpoint()
-      (v, v.count())
-    }
+    // the one authoritative victim capture — every store reads THIS:
+    // one job per snapshot gives its fingerprint and its distinct ids
+    // (IndexMaintenance.Victims), and each verb, lake scrub and the
+    // agreement below consume that capture instead of re-deriving it.
+    // Beside it, every store's table schema is resolved once: an index
+    // table's is pinned by its snapshot (the verb that scrubs it reads
+    // the same entry), a lake's is read here and serves its scrub too,
+    // and the agreement reads every store with no schema-inference job.
+    // All these reads are independent and tiny, so they run at once
+    // (r18 opt, guide §2.6); all settle before the first failure
+    // rethrows (ADVICE r18).
+    def capture(path: String, fpCols: Seq[String]) = () =>
+      Left(IndexMaintenance.Victims(s.read.parquet(path), fpCols))
     val vecPath = s"$state/vec_victims"
-    val snaps = IndexMaintenance.parallel(snapshot(s"$state/victims") +:
-      (if (fs.exists(new Path(vecPath))) Seq(snapshot(vecPath)) else Nil))
-    val (vic, nV) = snaps.head
-    val vecPair = snaps.lift(1)
-    val vecVic = vecPair.map(_._1)
-    val nVec = vecPair.fold(0L)(_._2)
+    val tables = planned.flatMap(st => storeTable(st, targets, conf).map(st -> _))
+    val resolved = IndexMaintenance.parallel[Either[IndexMaintenance.Victims,
+        (String, org.apache.spark.sql.types.StructType)]](
+      (capture(s"$state/victims", Seq(targets.idCol, targets.textCol)) +:
+        (if (fs.exists(new Path(vecPath)))
+          Seq(capture(vecPath, Seq(targets.vecIdCol, targets.vecCol)))
+        else Nil)) ++
+        tables.map { case (st, (dir, table)) => () =>
+          Right(st -> (if (table.isEmpty) s.read.parquet(dir).schema
+                       else IndexSnapshot(s, dir).schema(table)))
+        })
+    val caps = resolved.collect { case Left(v) => v }
+    val (vic, vecVic) = (caps.head, caps.lift(1))
+    val schemas = resolved.collect { case Right(kv) => kv }.toMap
 
     def done(store: String) = new Path(s"$state/done_$store")
     def execStore(store: String): RtbfStoreResult =
@@ -227,7 +242,7 @@ object Rtbf {
         RtbfStoreResult(store, skippedDone = true, 0.0)
       else graft.Phases.time(s"rm_$store") {
         val t0 = System.nanoTime()
-        runStore(s, store, targets, vic, vecVic, tag, logical)
+        runStore(s, store, targets, vic, vecVic, tag, logical, schemas.get(store))
         // verb done but marker not yet — a crash here replays the verb
         // (idempotent under its own tag) and then lands the marker
         FaultInjection.maybeCrash(s"rtbf.verb.$store")
@@ -258,67 +273,78 @@ object Rtbf {
     val results = idxResults ++ lakeStores.map(execStore)
 
     // ---- cross-store agreement: every surface, read from disk, ONE
-    // job (the six counts union into a store-labeled aggregate — six
-    // sequential count() jobs would pay six job-overheads for the same
-    // scans) ----
-    val vids = vic.select(col(targets.idCol)).distinct().localCheckpoint()
-    val vecIds = vecVic.map(_.select(col(targets.vecIdCol))
-      .distinct().localCheckpoint())
-    val leftovers = planned
-      .map(st => victimRows(s, st, targets, vids, nV, vecIds, nVec, logical))
-      .reduce(_ unionByName _)
-      .groupBy(col("store")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1))
-      .filter(_._2 > 0L).toSeq.sortBy(_._1)
+    // job: each store's victim ids (and, for a logical purge, its
+    // tombstoned victim ids) collected per task and compared on the
+    // driver ----
+    val seen = IndexMaintenance.distinctRows(planned
+      .flatMap(st => victimIds(s, st, targets, vic, vecVic, logical, schemas.get(st)))
+      .reduce(_ unionByName _))
+      .map(r => (r.getString(0), r.getBoolean(1), r.get(2)))
+    val hidden = seen.collect { case (st, true, id) => (st, id) }.toSet
+    val leftovers = seen.collect { case (st, false, id) if !hidden((st, id)) => st }
+      .groupBy(identity).map { case (st, ids) => st -> ids.size }.toSeq.sortBy(_._1)
     if (leftovers.nonEmpty) throw new IllegalStateException(
       s"Rtbf.purge '$tag': stores disagree on survivorship after all " +
-        s"verbs ran — victim rows remain in ${leftovers
+        s"verbs ran — victim ids remain in ${leftovers
           .map { case (st, n) => s"$st($n)" }.mkString(", ")}; the purge " +
         "is NOT marked complete — investigate (IndexCheck the index " +
         "families) and re-run to replay")
     fs.create(new Path(s"$state/COMPLETE"), true).close()
-    RtbfReport(tag, nV, nVec, results, complete = true)
+    RtbfReport(tag, vic.fp._1, vecVic.fold(0L)(_.fp._1), results, complete = true)
+  }
+
+  /** The (dir, table) whose schema a store's scrub and agreement read:
+    * an index family's id-bearing table, or a lake with data (table
+    * ""). None for the cluster family (its agreement reads the served
+    * assignments) and for an empty lake. */
+  private def storeTable(store: String, t: RtbfTargets,
+                         conf: org.apache.hadoop.conf.Configuration)
+      : Option[(String, String)] = {
+    def lake(dir: String) = Some(dir -> "").filter(_ => hasData(conf, dir))
+    store match {
+      case IdxText => Some(t.textIndex.get -> "bands")
+      case IdxTerm => Some(t.termIndex.get -> "dl")
+      case IdxVector => Some(t.vectorIndex.get -> "cells")
+      case IdxCluster => None
+      case LakeVec => lake(t.vecLakeDir.get)
+      case LakeDoc => lake(t.lakeDir)
+    }
   }
 
   private def runStore(s: SparkSession, store: String, t: RtbfTargets,
-                       vic: DataFrame, vecVic: Option[DataFrame],
-                       tag: String, logical: Boolean): Unit = store match {
-    case IdxText =>
-      if (logical)
-        TextIndex.logicalRemove(vic, t.idCol, t.textCol, t.textIndex.get,
+                       vic: IndexMaintenance.Victims,
+                       vecVic: Option[IndexMaintenance.Victims],
+                       tag: String, logical: Boolean,
+                       schema: Option[org.apache.spark.sql.types.StructType]): Unit =
+    store match {
+      case IdxText =>
+        if (logical) TextIndex.logicalRemove(vic, t.textCol, t.textIndex.get, tag)
+        else TextIndex.remove(vic, t.textCol, t.textIndex.get, tag)
+      case IdxCluster =>
+        if (logical)
+          ClusterIndex.logicalRemove(vic.rows, t.idCol, t.textCol,
+            t.clusterIndex.get, tag = tag)
+        else ClusterIndex.remove(vic.rows, t.idCol, t.textCol, t.clusterIndex.get,
           tag = tag)
-      else TextIndex.remove(vic, t.idCol, t.textCol, t.textIndex.get,
-        tag = tag)
-    case IdxCluster =>
-      if (logical)
-        ClusterIndex.logicalRemove(vic, t.idCol, t.textCol,
-          t.clusterIndex.get, tag = tag)
-      else ClusterIndex.remove(vic, t.idCol, t.textCol, t.clusterIndex.get,
-        tag = tag)
-    case IdxTerm =>
-      if (logical)
-        TermIndex.logicalRemove(vic, t.idCol, t.textCol, t.termIndex.get,
-          tag = tag)
-      else TermIndex.remove(vic, t.idCol, t.textCol, t.termIndex.get,
-        tag = tag)
-    case IdxVector =>
-      if (logical)
-        VectorIndex.logicalRemove(vecVic.get, t.vectorIndex.get, t.vecIdCol,
-          t.vecCol, tag = tag)
-      else VectorIndex.remove(vecVic.get, t.vectorIndex.get, t.vecIdCol,
-        t.vecCol, tag = tag)
-    // the lakes scrub PHYSICALLY in both modes: the system-of-record
-    // delete is the actual RTBF obligation (and partition-pruned cheap);
-    // logical only buys cheap index-side leases
-    case LakeVec =>
-      if (hasData(s.sparkContext.hadoopConfiguration, t.vecLakeDir.get))
-        TargetedDelete.delete(s, t.vecLakeDir.get, t.vecLakePartitionCols,
-          t.vecIdCol, vecVic.get.select(col(t.vecIdCol)))
-    case LakeDoc =>
-      if (hasData(s.sparkContext.hadoopConfiguration, t.lakeDir))
-        TargetedDelete.delete(s, t.lakeDir, t.lakePartitionCols, t.idCol,
-          vic.select(col(t.idCol)))
-  }
+      case IdxTerm =>
+        if (logical) TermIndex.logicalRemove(vic, t.textCol, t.termIndex.get, tag)
+        else TermIndex.remove(vic, t.textCol, t.termIndex.get, tag)
+      case IdxVector =>
+        if (logical) VectorIndex.logicalRemove(vecVic.get, t.vectorIndex.get, tag)
+        else VectorIndex.remove(vecVic.get, t.vectorIndex.get, tag)
+      // the lakes scrub PHYSICALLY in both modes: the system-of-record
+      // delete is the actual RTBF obligation (and partition-pruned
+      // cheap); logical only buys cheap index-side leases. A lake that
+      // held no data when the schemas were resolved has none to scrub.
+      case LakeVec =>
+        if (schema.nonEmpty)
+          TargetedDelete.deleteKeys(s, t.vecLakeDir.get, t.vecLakePartitionCols,
+            t.vecIdCol, vecVic.get.keys, schema = schema)
+      case LakeDoc =>
+        if (schema.nonEmpty)
+          TargetedDelete.deleteKeys(s, t.lakeDir, t.lakePartitionCols, t.idCol,
+            vic.keys, schema = schema)
+    }
 
   /** Whether a lake holds any rows: absent, or holding only hidden
     * entries (this purge state under `_rtbf/`; the scrub drops emptied
@@ -335,53 +361,47 @@ object Rtbf {
     }
   }
 
-  /** Victim rows still visible in one store, read from what is ON
-    * DISK: lakes and index tables are scanned id-column-only and
-    * semi-joined against the (broadcast-sized) victim id set, labeled
-    * with the store name for the fused agreement aggregate. For a
+  /** Victim ids still visible in one store, read from what is ON DISK
+    * under the store's resolved `schema`: `(store, tombstoned, id)` rows
+    * of the store's id column filtered to the capture's keys. For a
     * PHYSICAL purge the reads are raw tables on purpose — its
     * certificate must not be satisfied by a tombstone overlay hiding
     * rows that still exist. For a LOGICAL purge the victim rows remain
-    * on disk BY DESIGN (reclaimed at each family's next compact), so
-    * the certificate reads each family's SERVE surface instead: the raw
-    * rows anti-joined through the LogicalDelete overlay the serve paths
-    * consult — certifying that every surface is blind, which is what a
-    * logical purge promises. The cluster family's [[ClusterIndex
-    * .assignments]] IS that overlay-aware serve read in both modes (a
-    * physical remove refuses while logical tombstones pend, so its raw
-    * table never hides behind one). */
-  private def victimRows(s: SparkSession, store: String, t: RtbfTargets,
-                         vids: DataFrame, nV: Long,
-                         vecIds: Option[DataFrame], nVec: Long,
-                         logical: Boolean): DataFrame = {
+    * on disk BY DESIGN (reclaimed at each family's next compact), so the
+    * certificate reads each family's SERVE surface instead: the
+    * tombstoned victim ids come along flagged, and the driver drops the
+    * raw ids they hide — certifying that every surface is blind, which
+    * is what a logical purge promises. The cluster family's
+    * [[ClusterIndex.assignments]] IS that overlay-aware serve read in
+    * both modes (a physical remove refuses while logical tombstones
+    * pend, so its raw table never hides behind one). An empty lake (no
+    * schema) holds nothing. */
+  private def victimIds(s: SparkSession, store: String, t: RtbfTargets,
+                        vic: IndexMaintenance.Victims,
+                        vecVic: Option[IndexMaintenance.Victims], logical: Boolean,
+                        schema: Option[org.apache.spark.sql.types.StructType])
+      : Seq[DataFrame] = {
     val conf = s.sparkContext.hadoopConfiguration
-    def root(dir: String) = IndexMaintenance.liveRoot(conf, dir)
-    def in(df: DataFrame, c: String, keys: DataFrame, n: Long) =
-      df.select(col(c))
-        .join(TargetedDelete.maybeBroadcast(keys, n), Seq(c), "left_semi")
-        .select(lit(store).as("store"))
-    def served(df: DataFrame, c: String, dir: String) =
-      if (!logical) df
-      else LogicalDelete.hide(df, c, LogicalDelete.ids(s, dir))
-    def lake(dir: String, keys: DataFrame) =
-      if (hasData(conf, dir)) s.read.parquet(dir) else keys.limit(0)
+    def ids(df: DataFrame, c: String, keys: TargetedDelete.Keys, tomb: Boolean) =
+      keys.semi(df.select(col(c)), c)
+        .select(lit(store).as("store"), lit(tomb).as("tomb"), col(c).cast("string").as("id"))
+    def table(dir: String, name: String, c: String, keys: TargetedDelete.Keys) = {
+      val raw = ids(s.read.schema(schema.get)
+        .parquet(s"${IndexMaintenance.liveRoot(conf, dir)}/$name"), c, keys, tomb = false)
+      raw +: (if (!logical) Nil else LogicalDelete.ids(s, dir).toSeq.map(tb =>
+        ids(tb.select(col(LogicalDelete.idColOf(tb)).as(c)), c, keys, tomb = true)))
+    }
+    def lake(dir: String, c: String, keys: TargetedDelete.Keys) =
+      schema.toSeq.map(sc => ids(s.read.schema(sc).parquet(dir), c, keys, tomb = false))
     store match {
-      case IdxText =>
-        in(served(s.read.parquet(s"${root(t.textIndex.get)}/bands"),
-          t.idCol, t.textIndex.get), t.idCol, vids, nV)
+      case IdxText => table(t.textIndex.get, "bands", t.idCol, vic.keys)
       case IdxCluster =>
-        in(ClusterIndex.assignments(s, t.clusterIndex.get, t.idCol),
-          t.idCol, vids, nV)
-      case IdxTerm =>
-        in(served(s.read.parquet(s"${root(t.termIndex.get)}/dl"),
-          t.idCol, t.termIndex.get), t.idCol, vids, nV)
-      case IdxVector =>
-        in(served(s.read.parquet(s"${root(t.vectorIndex.get)}/cells"),
-          t.vecIdCol, t.vectorIndex.get), t.vecIdCol, vecIds.get, nVec)
-      case LakeVec =>
-        in(lake(t.vecLakeDir.get, vecIds.get), t.vecIdCol, vecIds.get, nVec)
-      case LakeDoc =>
-        in(lake(t.lakeDir, vids), t.idCol, vids, nV)
+        Seq(ids(ClusterIndex.assignments(s, t.clusterIndex.get, t.idCol), t.idCol,
+          vic.keys, tomb = false))
+      case IdxTerm => table(t.termIndex.get, "dl", t.idCol, vic.keys)
+      case IdxVector => table(t.vectorIndex.get, "cells", t.vecIdCol, vecVic.get.keys)
+      case LakeVec => lake(t.vecLakeDir.get, t.vecIdCol, vecVic.get.keys)
+      case LakeDoc => lake(t.lakeDir, t.idCol, vic.keys)
     }
   }
 

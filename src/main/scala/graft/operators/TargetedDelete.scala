@@ -11,14 +11,15 @@ import org.apache.spark.sql.functions._
   * The 100 TB point is what does NOT get rewritten: a naive delete
   * rescans and rewrites the whole table for a handful of keys. Here:
   *
-  *  1. ONE pruned pass finds the distinct partitions that actually
-  *     contain victim keys (semi-join, aggregated to the partition
-  *     cols — the only driver-sized data in play),
-  *  2. only those partitions are re-read, anti-joined against the key
-  *     set (broadcast — a deletion list is small by nature),
+  *  1. ONE collected pass finds the partitions — values and on-disk
+  *     files — that hold victim keys,
+  *  2. only those partitions are re-read (a partition-value filter),
+  *     the victims dropped, the rest eagerly checkpointed (the write
+  *     overwrites what it read),
   *  3. dynamic partition OVERWRITE replaces just the touched
-  *     partitions (the Compaction recipe, including the eager
-  *     checkpoint so the write never overlaps its own read).
+  *     partitions, and a touched dir the write did not replace (every
+  *     row a victim, or a dir name that is not the canonical form of
+  *     its value) is removed.
   *
   * Untouched partitions keep their very FILES — TargetedDeleteSpec
   * asserts file identity, not just content. Deleting from an
@@ -27,152 +28,258 @@ import org.apache.spark.sql.functions._
   */
 object TargetedDelete {
 
-  /** Above this many distinct victim keys the delete's key joins drop
-    * their broadcast hint and run as shuffle joins (VERDICT r11 items
-    * 1/4): an RTBF request (tens to thousands of ids) broadcasts, a
-    * compliance sweep (millions — 0.1% of a 100 TB corpus) must not —
-    * a broadcast of that list strains the driver while a shuffle
-    * hash-join on the key column costs one exchange of the (already
-    * bucket-pruned) touched slice. Tunable for tests and deployments
-    * via `-Dgraft.delete.broadcastKeys=N`; the decision is made on the
-    * driver per call, so the property is read at call time. */
+  /** At or below this many distinct victim keys a key set travels as a
+    * driver-side SET ([[Keys]]): `isInCollection` predicates, which Spark
+    * plans as `InSet` and pushes into the parquet scan — no key frame to
+    * checkpoint, count or join. Above it (a compliance sweep, millions of
+    * ids) a literal list would ship in every task, so the keys stay a
+    * frame matched by shuffle joins. Tunable for tests and deployments
+    * via `-Dgraft.delete.broadcastKeys=N` (the name predates the set
+    * route, which replaced the broadcast joins below the bound); the
+    * decision is made on the driver per call, so the property is read at
+    * call time. */
   private[graft] def broadcastKeyLimit: Long =
     sys.props.get("graft.delete.broadcastKeys").map(_.toLong).getOrElse(1000000L)
 
-  /** Per-victim-id DISTINCT content set for the removal known-checks
-    * (r14): `(id, sorted set of content hashes)`. The removal protocols
-    * require this set to EQUAL the stored rows' per-id set, because the
-    * physical delete is id-keyed (every stored version of the id goes)
-    * while the fingerprint subtracts exactly the rows the caller passed:
+  /** A victim key set resolved once. `values` holds the distinct non-null
+    * keys on the driver when there are at most [[broadcastKeyLimit]] of
+    * them (the set route); otherwise None, and `frame` is a checkpointed
+    * one-column frame of the distinct keys (the shuffle-join route). A
+    * null key matches nothing on either route. */
+  final class Keys private[operators] (val name: String,
+                                       val dataType: org.apache.spark.sql.types.DataType,
+                                       val values: Option[Seq[Any]],
+                                       val n: Long, frame0: () => DataFrame) {
+    /** The distinct keys as a one-column frame named `name`: a local
+      * relation on the set route. */
+    lazy val frame: DataFrame = frame0()
+
+    private def as(c: String): DataFrame = frame.select(col(name).as(c))
+
+    /** Rows of `df` whose column `c` holds a key. */
+    def semi(df: DataFrame, c: String): DataFrame = values match {
+      case Some(vs) => df.filter(col(c).isInCollection(vs))
+      case None => df.join(as(c), Seq(c), "left_semi")
+    }
+
+    /** Rows of `df` whose column `c` holds no key (a null `c` included). */
+    def anti(df: DataFrame, c: String): DataFrame = values match {
+      case Some(vs) => df.filter(!coalesce(col(c).isInCollection(vs), lit(false)))
+      case None => df.join(as(c), Seq(c), "left_anti")
+    }
+
+    /** Rows of `df` where ANY of `cs` holds a key. On the join route a
+      * union of per-column semi-joins, which may repeat a row matching
+      * on two columns (callers dedupe what they collect), and avoids an
+      * OR-join, which would degrade to a nested-loop join. */
+    def semiAny(df: DataFrame, cs: Seq[String]): DataFrame = values match {
+      case Some(vs) => df.filter(cs.map(c => col(c).isInCollection(vs)).reduce(_ || _))
+      case None => cs.map(semi(df, _)).reduce(_ unionByName _)
+    }
+
+    /** The distinct values of `f(key)`, a bounded bucket list: evaluated
+      * on the driver with no Spark job on the set route (a projection of
+      * a local relation is folded into a local relation), one job on the
+      * join route. */
+    def mapDistinct(f: Column => Column): Seq[Any] = values match {
+      case Some(_) => frame.select(f(col(name))).collect().map(_.get(0)).distinct.toSeq
+      case None => IndexMaintenance.distinctRows(frame.select(f(col(name)))).map(_.get(0))
+    }
+  }
+
+  object Keys {
+    /** The key set of `df`'s column `c`: ONE job when it is a set. */
+    def of(df: DataFrame, c: String): Keys =
+      capture(df.select(col(c)), c, Nil)._2
+
+    /** ONE job over `df`: the fingerprint over `fpCols`
+      * ([[Fingerprint.of]]; skipped when empty) and the distinct values
+      * of `keyCol` when there are at most [[broadcastKeyLimit]] of them.
+      * Each task dedupes its own keys and stops collecting past the
+      * bound; the driver merges the task results as they arrive, so it
+      * never holds more than the bound plus the tasks in flight. Above
+      * the bound the keys are checkpointed and counted as a frame. */
+    private[operators] def capture(df: DataFrame, keyCol: String,
+                                   fpCols: Seq[String]): ((Long, Long), Keys) = {
+      val limit = broadcastKeyLimit
+      val hash = if (fpCols.isEmpty) lit(0L) else xxhash64(fpCols.map(col): _*)
+      type Part = (Long, Long, Option[Set[Any]])
+      val (nRows, h, set) = df.select(hash, col(keyCol)).rdd.mapPartitions { it =>
+        var n = 0L
+        var sum = 0L
+        val seen = scala.collection.mutable.HashSet.empty[Any]
+        it.foreach { r =>
+          n += 1; sum += r.getLong(0)
+          if (seen.size <= limit && !r.isNullAt(1)) seen += r.get(1)
+        }
+        Iterator[Part]((n, sum, Some(seen.toSet).filter(_.size <= limit)))
+      }.fold((0L, 0L, Some(Set.empty[Any]))) { (a, b) =>
+        (a._1 + b._1, a._2 + b._2,
+          for (x <- a._3; y <- b._3; u = x ++ y if u.size <= limit) yield u)
+      }
+      val s = df.sparkSession
+      val dt = df.schema(keyCol).dataType
+      val keys = set match {
+        case Some(vs) =>
+          val schema = org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField(keyCol, dt)))
+          new Keys(keyCol, dt, Some(vs.toSeq), vs.size.toLong, () =>
+            s.createDataFrame(java.util.Arrays.asList(
+              vs.toSeq.map(v => org.apache.spark.sql.Row(v)): _*), schema))
+        case None =>
+          val frame = df.select(col(keyCol)).filter(col(keyCol).isNotNull)
+            .distinct().localCheckpoint()
+          new Keys(keyCol, dt, None, frame.count(), () => frame)
+      }
+      ((nRows, h), keys)
+    }
+  }
+
+  /** The per-(side, id) digest [[digests]] merges: the weight sum, the
+    * weighted hash sum (wrapping) and the set of hashes. */
+  final case class Digest(n: Long, sum: Long, hashes: Set[Long])
+
+  /** A removal's victim checks in ONE job, compared on the driver:
+    * `rows` is a union of labeled frames with columns (`side`, the id
+    * column `idCol`, `w` long weight, `h` long hash, `_src` string) —
+    * the victims' own rows and the stored rows of their pruned slice.
+    * Each task folds its rows per (side, id) into a [[Digest]] and
+    * collects the non-null `_src` values; the driver merges the task
+    * results. The caller compares the digests per victim id (a set
+    * compare for families that tolerate replayed duplicate rows, a
+    * multiset compare by (n, sum) otherwise) and passes the sources to
+    * the provenance guard. Driver memory is O(victim ids x tasks). */
+  private[graft] def digests(rows: DataFrame, idCol: String)
+      : (Map[(String, Any), Digest], Set[String]) = {
+    type Acc = (Map[(String, Any), Digest], Set[String])
+    def merge(a: Digest, b: Digest) = Digest(a.n + b.n, a.sum + b.sum, a.hashes ++ b.hashes)
+    rows.select(col("side"), col(idCol), col("w"), col("h"), col("_src")).rdd
+      .mapPartitions { it =>
+        val m = scala.collection.mutable.HashMap.empty[(String, Any), Digest]
+        val srcs = scala.collection.mutable.HashSet.empty[String]
+        it.foreach { r =>
+          val k = (r.getString(0), r.get(1))
+          val (w, h) = (r.getLong(2), r.getLong(3))
+          m(k) = merge(m.getOrElse(k, Digest(0L, 0L, Set.empty)), Digest(w, w * h, Set(h)))
+          if (!r.isNullAt(4)) srcs += r.getString(4)
+        }
+        Iterator[Acc]((m.toMap, srcs.toSet))
+      }
+      .fold((Map.empty, Set.empty)) { (a, b) =>
+        (b._1.foldLeft(a._1) { case (m, (k, d)) =>
+          m.updated(k, m.get(k).fold(d)(merge(_, d))) }, a._2 ++ b._2)
+      }
+  }
+
+  /** A row of [[digests]]' input: `side`, the id, weight, hash, source. */
+  private[graft] def digestRow(df: DataFrame, side: String, idCol: String,
+                               w: Column, h: Column,
+                               src: Column = lit(null).cast("string")): DataFrame =
+    df.select(lit(side).as("side"), col(idCol), w.cast("long").as("w"),
+      h.cast("long").as("h"), src.cast("string").as("_src"))
+
+  /** The content known-check every removal runs on [[digests]]' output:
+    * `known` of the `nV` victim ids must pass, else refuse before
+    * anything mutates. The stored per-id content must EQUAL the victim
+    * rows': the physical delete is id-keyed (every stored version of the
+    * id goes) while the fingerprint subtracts exactly the rows the
+    * caller passed, so
     *
     *  - a wrong-content victim row refuses (nothing stored matches);
     *  - a PARTIAL-version takedown of a re-crawled id refuses — passing
     *    only (7, textB) when the index holds textA AND textB would
-    *    delete both but subtract one, drifting meta silently (this was
-    *    reachable pre-r14);
+    *    delete both but subtract one, drifting meta silently;
     *  - a FULL multi-version takedown (all of an id's ingested rows —
-    *    exactly what rtbfPurgeStream resolves from a lake) passes
-    *    and subtracts every version;
+    *    exactly what rtbfPurgeStream resolves from a lake) passes and
+    *    subtracts every version;
     *  - a victim whose ingest crashed between the lake write and the
     *    index append refuses loudly (stored side lacks the new version)
-    *    instead of silently subtracting a never-merged fingerprint —
-    *    the ingest replay completes the append, the takedown retries.
+    *    instead of silently subtracting a never-merged fingerprint.
     *
-    * SET, not multiset, on purpose: a crashed-append REPLAY leaves
-    * duplicate physical rows in the index while the fingerprint merged
-    * once (IndexRemoveSpec pins that a single victim row then removes
-    * them all and subtracts once), so stored physical multiplicity is
-    * not the merged multiplicity and must not be matched against.
-    * Residual trust (unchanged from the pre-r14 contract): a direct
-    * caller who duplicates a victim ROW beyond the record subtracts it
-    * per copy — rtbfPurgeStream cannot produce this (it passes the
-    * lake's rows of record). Hash-level compare on purpose: the
-    * joined frames carry ids + small hash arrays, never token sets or
-    * embeddings, so the victim-side broadcast stays id-scale bytes at
-    * any document size. */
-  private def contentSet(rows: DataFrame, idCol: String,
-                         contentHash: Column): DataFrame =
-    rows.select(col(idCol), contentHash.as("_ch"))
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_set(col("_ch"))).as("_chs"))
-
-  /** The removal verbs' content known-check, one `count()` job: every
-    * one of the `nV` distinct victim ids must be stored (`stored`, the
-    * victims' pruned slice of the index) with a [[contentSet]] EQUAL to
-    * the victims' own — content hashed by `victimHash` over the victim
-    * rows and `storedHash` over the stored rows. Refuses before
-    * anything mutates otherwise. */
-  private[graft] def requireKnownContent(victims: DataFrame, victimHash: Column,
-                                         stored: DataFrame, storedHash: Column,
-                                         idCol: String, nV: Long,
-                                         opName: String): Unit = {
-    val vAgg = contentSet(victims, idCol, victimHash)
-      .withColumnRenamed("_chs", "_vchs")
-    val known = contentSet(stored, idCol, storedHash)
-      .join(maybeBroadcast(vAgg, nV), Seq(idCol))
-      .filter(col("_chs") === col("_vchs"))
-      .count()
+    * The text and vector families compare hash SETS, not multisets: a
+    * crashed-append REPLAY leaves duplicate physical rows while the
+    * fingerprint merged once (IndexRemoveSpec pins that a single victim
+    * row then removes them all and subtracts once). */
+  private[graft] def requireKnown(known: Long, nV: Long, opName: String): Unit =
     if (known != nV) Fingerprint.refuse(
       s"$opName: only $known of $nV victim ids are indexed with matching " +
         "content (ALL stored versions of each id — the delete is " +
         "id-keyed); the fingerprint subtraction needs exactly the " +
         "ingested rows — pass them as they entered the index")
+
+  /** [[requireKnown]] for the families that compare per-id hash SETS of
+    * side `v` (victims) and `s` (stored). */
+  private[graft] def requireKnownSets(d: Map[(String, Any), Digest], keys: Keys,
+                                      opName: String): Unit = {
+    val ids = d.keySet.collect { case ("v", id) => id }
+    requireKnown(ids.count(id =>
+      d.get(("s", id)).exists(_.hashes == d(("v", id)).hashes)).toLong, keys.n, opName)
   }
 
-  /** Broadcast only below the key-count threshold — shared by every
-    * victim-keyed join in the delete/remove family. */
+  /** The content known-check of the cluster family: one `count()` job
+    * over Spark joins, every one of the `nV` distinct victim ids stored
+    * (`stored`, the victims' pruned slice) with a per-id content-hash
+    * SET equal to the victims' (see [[requireKnown]]). */
+  private[graft] def requireKnownContent(victims: DataFrame, victimHash: Column,
+                                         stored: DataFrame, storedHash: Column,
+                                         idCol: String, nV: Long,
+                                         opName: String): Unit = {
+    def contentSet(rows: DataFrame, h: Column): DataFrame =
+      rows.select(col(idCol), h.as("_ch")).groupBy(col(idCol))
+        .agg(sort_array(collect_set(col("_ch"))).as("_chs"))
+    val vAgg = contentSet(victims, victimHash).withColumnRenamed("_chs", "_vchs")
+    val known = contentSet(stored, storedHash)
+      .join(maybeBroadcast(vAgg, nV), Seq(idCol))
+      .filter(col("_chs") === col("_vchs"))
+      .count()
+    requireKnown(known, nV, opName)
+  }
+
+  /** Broadcast only below the key-count threshold — the cluster
+    * family's victim-keyed joins. */
   private[graft] def maybeBroadcast(df: DataFrame, nKeys: Long): DataFrame =
     if (nKeys <= broadcastKeyLimit) broadcast(df) else df
 
   /** Delete every row whose `keyCol` appears in `keys` from the
     * partitioned table at `tableDir`. Returns the number of partitions
-    * rewritten.
+    * rewritten (the three passes are in the object doc).
     *
     * `prePrune` (default: everything) is a PARTITION-column predicate
     * bounding pass 1: when the caller can name the partitions the
     * victims could possibly live in (the persisted indexes hash their
     * keys into bucket partitions, so the victim list maps to a bucket
     * list), pass 1 prunes to those files instead of key-scanning the
-    * whole table — the difference between O(victim buckets) and
-    * O(table) reads on a 100 TB index. Rows outside `prePrune` are
-    * untouched by construction. */
+    * whole table. Rows outside `prePrune` are untouched by construction. */
   def delete(spark: SparkSession, tableDir: String, partitionCols: Seq[String],
              keyCol: String, keys: DataFrame,
-             prePrune: org.apache.spark.sql.Column = lit(true)): Long = {
-    // pinned: the checkpoint keeps pass 1's input_file_name projection
-    // single-source (the analyzer rejects it over a plan with two file
-    // relations — e.g. keys read from another parquet table) and gives
-    // the key count for the broadcast decision without recompute
-    val keyList = keys.select(col(keyCol)).distinct().localCheckpoint()
-    val nKeys = keyList.count()
+             prePrune: org.apache.spark.sql.Column = lit(true)): Long =
+    deleteKeys(spark, tableDir, partitionCols, keyCol, Keys.of(keys, keyCol), prePrune)
+
+  /** [[delete]] with a resolved key set — at most four Spark jobs on the
+    * set route (the schema read, pass 1, the checkpoint, the write), and
+    * three when the caller passes the table's `schema`. */
+  private[graft] def deleteKeys(spark: SparkSession, tableDir: String,
+                                partitionCols: Seq[String], keyCol: String,
+                                keys: Keys, prePrune: Column = lit(true),
+                                schema: Option[org.apache.spark.sql.types.StructType] = None): Long =
     deleteImpl(spark, tableDir, partitionCols, prePrune,
-      mark = df => df.join(maybeBroadcast(keyList, nKeys), Seq(keyCol), "left_semi"),
-      keep = df => df.join(maybeBroadcast(keyList, nKeys), Seq(keyCol), "left_anti"))
-  }
+      mark = keys.semi(_, keyCol), keep = keys.anti(_, keyCol), schema)
 
   /** Either-endpoint keyed delete for adjacency/edge logs: delete every
     * row where ANY of `keyCols` matches a key in `keys` (column
     * `keyName`). One combined pass rewrites each touched partition once
     * — per-endpoint keyed [[delete]] calls would rewrite overlapping
-    * partitions twice — and the endpoints are matched with semi/anti
-    * EQUI-joins (broadcast below the key threshold), so the plan carries
-    * no O(|victims|) literal list and no driver-side collect of the key
-    * set, where the former `isInCollection` route blew plan size and
-    * driver memory on mass-victim takedowns (ADVICE r11). */
+    * partitions twice. */
   def deleteAnyKey(spark: SparkSession, tableDir: String,
                    partitionCols: Seq[String], keyCols: Seq[String],
                    keyName: String, keys: DataFrame,
                    prePrune: org.apache.spark.sql.Column = lit(true)): Long = {
     require(keyCols.nonEmpty, "deleteAnyKey needs at least one key column")
-    val keyList = keys.select(col(keyName)).distinct().localCheckpoint()
-    val nKeys = keyList.count()
-    def keysAs(c: String) = maybeBroadcast(keyList.select(col(keyName).as(c)), nKeys)
+    val k = Keys.of(keys, keyName)
     deleteImpl(spark, tableDir, partitionCols, prePrune,
-      // union of per-endpoint semi-joins may duplicate a row matching on
-      // both endpoints — pass 1 only needs the DISTINCT partitions, so
-      // duplicates are harmless and an OR-join (which would degrade to a
-      // nested-loop join) is avoided
-      mark = df => keyCols.map(c => df.join(keysAs(c), Seq(c), "left_semi"))
-        .reduce(_ unionByName _),
-      keep = df => keyCols.foldLeft(df)((d, c) =>
-        d.join(keysAs(c), Seq(c), "left_anti")))
+      mark = k.semiAny(_, keyCols),
+      keep = df => keyCols.foldLeft(df)(k.anti))
   }
-
-  /** Predicate variant: delete every row matching `victim` (a row-level
-    * boolean Column) in one pass. For a MULTI-column victim condition —
-    * e.g. the cluster index's adjacency log, where a doc id may sit in
-    * either endpoint — one combined pass rewrites each touched partition
-    * once, where two keyed [[delete]] calls would rewrite overlapping
-    * partitions twice. The predicate should be driver-bounded (isin
-    * over a small deletion list); for large key sets use the keyed
-    * variant's broadcast join. */
-  def deleteWhere(spark: SparkSession, tableDir: String,
-                  partitionCols: Seq[String],
-                  victim: org.apache.spark.sql.Column,
-                  prePrune: org.apache.spark.sql.Column = lit(true)): Long =
-    deleteImpl(spark, tableDir, partitionCols, prePrune,
-      mark = df => df.filter(victim),
-      keep = df => df.filter(!victim))
 
   /** General partition-surgery variant: `mark` selects the rows whose
     * partitions must be rewritten, `keep` maps the touched slice to its
@@ -234,8 +341,6 @@ object TargetedDelete {
     fs.delete(new org.apache.hadoop.fs.Path(stageDir), true)
     fs.delete(new org.apache.hadoop.fs.Path(stageDir + ".manifest"), true)
     val table = spark.read.parquet(tableDir).filter(prePrune)
-    def partMatch(a: DataFrame, b: DataFrame) =
-      partitionCols.map(c => a(c) <=> b(c)).reduce(_ && _)
     // same one-scan collected touched-partition discovery as deleteImpl
     val t = discoverTouched(table, partitionCols, mark)
     if (t.rows.isEmpty) {
@@ -243,8 +348,7 @@ object TargetedDelete {
       writeManifest(fs, stageDir, Seq.empty)
       return
     }
-    val touched = t.localDf(spark)
-    val slice = table.join(broadcast(touched), partMatch(table, touched), "left_semi")
+    val slice = t.slice(table, partitionCols)
     // write STRAIGHT to the staging dir — it is a different tree than
     // the one being read, so unlike deleteImpl there is no
     // read-overwrites-itself hazard and the former eager checkpoint
@@ -443,61 +547,63 @@ object TargetedDelete {
     }
   }
 
-  /** Collected pass-1 discovery: the touched partitions' VALUE rows
-    * (one Seq[Any] per distinct partition-col tuple) and their on-disk
-    * dirs, plus the value schema — driver-sized by design (r18 opt: one
-    * collect replaces the former two localCheckpoint jobs + count job +
-    * anti-join collect job; at sf0.1 the removal protocols spend their
-    * wall on job COUNT, not data). */
-  private final case class Touched(schema: org.apache.spark.sql.types.StructType,
-                                   rows: Seq[org.apache.spark.sql.Row],
-                                   vals: Seq[Seq[Any]], dirs: Seq[String]) {
-    def localDf(spark: SparkSession): DataFrame = {
-      val distinctVals = vals.distinct
-      spark.createDataFrame(
-        java.util.Arrays.asList(distinctVals.map(vs =>
-          org.apache.spark.sql.Row(vs: _*)): _*), schema)
+  /** Pass 1's result: one row per touched partition DIR (its partition
+    * values, then the dir URI) and the files that hold marked rows —
+    * driver-sized by design. */
+  private final case class Touched(rows: Seq[org.apache.spark.sql.Row],
+                                   files: Seq[String]) {
+    def dirs: Seq[String] = rows.map(r => r.getString(r.length - 1))
+
+    /** The touched partitions' rows of `table`: a null-safe filter on
+      * the partition values (pruned by the file index, no join) and on
+      * the touched dirs themselves — a dir whose name is not the
+      * canonical form of its value (`day=01`, read back as 1) shares
+      * that value with the canonical dir, and only the touched one may
+      * be read and rewritten. */
+    def slice(table: DataFrame, partitionCols: Seq[String]): DataFrame = {
+      val vals = rows.map(r => partitionCols.indices.map(r.get)).distinct
+      def any(cs: Seq[Column]): Column =
+        if (cs.size == 1) cs.head
+        else { val (a, b) = cs.splitAt(cs.size / 2); any(a) || any(b) }
+      val byValue = any(vals.map(vs => partitionCols.zip(vs)
+        .map { case (c, v) => col(c) <=> lit(v) }.reduce(_ && _)))
+      table.filter(byValue)
+        .filter(dirOf(input_file_name()).isInCollection(dirs.distinct))
     }
   }
 
-  /** Pass 1: which partitions hold marked rows, AND those partitions'
-    * ON-DISK directories, in ONE scan, collected (driver-sized). The
-    * dir comes from the files themselves (parent of input_file_name)
-    * captured BEFORE any overwrite: reconstructing "$c=$v" from
-    * partition VALUES is a trap twice over — Spark percent-escapes path
-    * chars and renders null as __HIVE_DEFAULT_PARTITION__, and
+  private def dirOf(file: Column): Column = regexp_replace(file, "/[^/]*$", "")
+
+  /** Pass 1, ONE scan collected: which partitions hold marked rows, their
+    * ON-DISK dirs and the marked files, each task deduping its own rows
+    * ([[IndexMaintenance.distinctRows]]). The dir comes from the files
+    * themselves, captured BEFORE any overwrite: reconstructing "$c=$v"
+    * from partition VALUES is a trap twice over — Spark percent-escapes
+    * path chars and renders null as __HIVE_DEFAULT_PARTITION__, and
     * partition type INFERENCE can change the value's string form
     * entirely (dir `day=01` reads back as long 1 → "day=1" names a path
-    * that does not exist, fs.delete returns false, exists() is false,
-    * and the victim files silently survive). Every file of a partition
-    * shares one parent dir, and any marked row's file lives in its
-    * partition's dir, so the marked rows alone name every touched dir.
-    // _dir is projected BEFORE the mark join (r12): input_file_name()
-    // is only defined on the scan side of the plan — evaluated after an
-    // exchange (the mass-victim SHUFFLE-join mark path) it returns "",
-    // and the emptied-dir cleanup would silently miss every dir.
-    // Projecting it here pins the evaluation under the file scan for
-    // broadcast and shuffle marks alike; mark transforms (semi-joins /
-    // filters) preserve the column. */
+    * that does not exist). The file name is projected BEFORE `mark`:
+    * input_file_name() is only defined on the scan side of the plan —
+    * evaluated after an exchange (the shuffle-join mark route) it
+    * returns "". Mark transforms (filters, semi-joins) keep the column. */
   private def discoverTouched(table: DataFrame, partitionCols: Seq[String],
                               mark: DataFrame => DataFrame): Touched = {
-    val dirOfPart = mark(table.withColumn("_dir",
-        expr("regexp_replace(input_file_name(), '/[^/]*$', '')")))
-      .select(partitionCols.map(col) :+ col("_dir"): _*)
-      .distinct()
-    val rows = dirOfPart.collect().toSeq
-    Touched(
-      org.apache.spark.sql.types.StructType(dirOfPart.schema.dropRight(1)),
-      rows,
-      rows.map(r => partitionCols.indices.map(r.get).toSeq),
-      rows.map(r => r.getString(partitionCols.size)))
+    val hits = IndexMaintenance.distinctRows(
+      mark(table.withColumn("_file", input_file_name()))
+        .select(partitionCols.map(col) :+ col("_file"): _*))
+    val n = partitionCols.size
+    val rows = hits.groupBy(r => dirOfUri(r.getString(n))).toSeq.map { case (dir, rs) =>
+      org.apache.spark.sql.Row((0 until n).map(rs.head.get) :+ dir: _*)
+    }
+    Touched(rows, hits.map(_.getString(n)).distinct)
   }
 
+  private def dirOfUri(file: String): String = file.replaceAll("/[^/]*$", "")
+
   /** Driver-side null-safe partition-value key: Seq equality handles
-    * null (and boxed-NaN, which java equals treats as equal — matching
-    * the `<=>` the former anti-join used) correctly, and both sides of
-    * every comparison carry the SAME Spark-read types by construction
-    * (they derive from one scan of the same table). */
+    * null (and boxed-NaN, which java equals treats as equal) correctly,
+    * and both sides of every comparison carry the SAME Spark-read types
+    * by construction (they derive from one scan of the same table). */
   private def valKey(r: org.apache.spark.sql.Row, nCols: Int): Seq[Any] =
     (0 until nCols).map(r.get)
 
@@ -505,55 +611,40 @@ object TargetedDelete {
                          partitionCols: Seq[String],
                          prePrune: org.apache.spark.sql.Column,
                          mark: DataFrame => DataFrame,
-                         keep: DataFrame => DataFrame): Long = {
+                         keep: DataFrame => DataFrame,
+                         schema: Option[org.apache.spark.sql.types.StructType] = None): Long = {
     require(partitionCols.nonEmpty,
       "targeted delete needs a partitioned table; unpartitioned = full rewrite")
-    val table = spark.read.parquet(tableDir).filter(prePrune)
-    // Partition-col joins must be NULL-SAFE: parquet surfaces the
-    // __HIVE_DEFAULT_PARTITION__ dir as null partition values, and a
-    // plain equi-join would never match them — victims in a null
-    // partition would silently survive the delete.
-    def partMatch(a: DataFrame, b: DataFrame) =
-      partitionCols.map(c => a(c) <=> b(c)).reduce(_ && _)
+    val read = schema.fold(spark.read)(spark.read.schema)
+    val table = read.parquet(tableDir).filter(prePrune)
     val t = discoverTouched(table, partitionCols, mark)
-    val n = t.vals.distinct.size.toLong
-    if (n > 0L) {
+    if (t.rows.nonEmpty) {
       // pass 2: re-read ONLY those partitions, transform, overwrite
-      val touched = t.localDf(spark)
-      val slice = table.join(broadcast(touched), partMatch(table, touched), "left_semi")
-      val remaining = keep(slice)
+      keep(t.slice(table, partitionCols))
         .select(table.columns.map(col): _*)
         .localCheckpoint() // eager: the write overwrites what was read
-      remaining
         .write.partitionBy(partitionCols: _*)
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").parquet(tableDir)
       // dynamic overwrite only replaces partitions PRESENT in the
-      // written frame — a partition whose every row was a victim writes
-      // nothing and would silently keep its files. Remove those dirs
-      // through the Hadoop FS API (works on any scheme, the
-      // upsertStream lesson — never java.io.File).
-      val keptVals = remaining.select(partitionCols.map(col): _*).distinct()
-        .collect().map(valKey(_, partitionCols.size)).toSet
-      val emptied = t.rows.collect {
-        case r if !keptVals(valKey(r, partitionCols.size)) =>
-          r.getString(partitionCols.size)
-      }.distinct
-      if (emptied.nonEmpty) {
-        val fs = new org.apache.hadoop.fs.Path(tableDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        emptied.foreach { uri =>
-          // input_file_name returns the URI-ENCODED form (on-disk %2F
-          // prints as %252F); Path(String) keeps the escapes literal and
-          // misses the dir — going through java.net.URI decodes once,
-          // back to the on-disk name (verified against escaped fixtures)
-          val dir = pathOfUri(uri)
-          if (!fs.delete(dir, true) && fs.exists(dir))
-            throw new java.io.IOException(
-              s"targeted delete could not remove emptied partition $dir")
-        }
+      // written frame, deleting their old files. A touched dir whose
+      // marked files survive the write was not replaced: every row was
+      // a victim, or its name is not the canonical form of its value
+      // and the survivors landed in the canonical dir. Either way it
+      // holds only pre-write rows — remove it through the Hadoop FS API
+      // (works on any scheme, never java.io.File). input_file_name
+      // returns the URI-ENCODED form (on-disk %2F prints as %252F);
+      // going through java.net.URI decodes once, back to the on-disk
+      // name (verified against escaped fixtures).
+      val fs = new org.apache.hadoop.fs.Path(tableDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      t.files.filter(f => fs.exists(pathOfUri(f))).map(dirOfUri).distinct.foreach { uri =>
+        val dir = pathOfUri(uri)
+        if (!fs.delete(dir, true) && fs.exists(dir))
+          throw new java.io.IOException(
+            s"targeted delete could not remove emptied partition $dir")
       }
     }
-    n
+    t.rows.map(valKey(_, partitionCols.size)).distinct.size.toLong
   }
 }

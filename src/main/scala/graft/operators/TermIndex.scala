@@ -109,8 +109,7 @@ object TermIndex {
     import s.implicits._
     val base = Seq((nBuckets, fp._1, fp._2))
       .toDF("n_buckets", "n_rows", "content_hash")
-    sumDl.fold(base)(sd => base.withColumn("sum_dl", lit(sd)))
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
+    IndexSnapshot.writeMeta(sumDl.fold(base)(sd => base.withColumn("sum_dl", lit(sd))), root)
   }
 
   /** Token total of a dl slice — one column-pruned aggregate. The write
@@ -317,90 +316,67 @@ object TermIndex {
           .filter(col("_src") === lit(sanitize(tag))))))
     }
 
-  /** A removal's victims: their ids and id buckets, plus their
-    * recomputed (tf, dl) and term buckets under the frozen tokenizer — a
-    * PURE function of the victims argument, so the removal verbs need
-    * no persisted bucket plan: a crash-replay recomputes the identical
-    * prune from the same rows (unlike [[TextIndex.remove]], whose
-    * buckets derive from the stored toks table and must ride the
-    * rmstate dir). */
-  private final class Victims(victims: DataFrame, val idCol: String,
-                              textCol: String, nBuckets: Int) {
-    val vids: DataFrame = victims.select(col(idCol)).distinct().localCheckpoint()
-    val (nV, vIdb) = IndexMaintenance.countAndBuckets[Long](vids, idb(col(idCol), nBuckets))
-    private val (tf0, dl0) = stats(victims, idCol, textCol)
-    val dl: DataFrame = dl0
-    lazy val tf: DataFrame = tf0.localCheckpoint() // bucket collect + signature reuse
-    lazy val vTb: Seq[Long] = tf.select(tb(col("term"), nBuckets).as("tb"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    def bVids: DataFrame = TargetedDelete.maybeBroadcast(vids, nV)
+  /** A removal's victims: the capture, their id buckets (driver-side for
+    * a key set), and — one job — their term buckets and token total
+    * under the frozen tokenizer. A PURE function of the victims
+    * argument, so the removal verbs need no persisted bucket plan: a
+    * crash-replay recomputes the identical prune from the same rows
+    * (unlike [[TextIndex.remove]], whose plan rides the rmstate dir). */
+  private final class Victims(val v: IndexMaintenance.Victims, val textCol: String,
+                              nBuckets: Int) {
+    def idCol: String = v.idCol
+    val vIdb: Seq[Any] = v.keys.mapDistinct(idb(_, nBuckets))
+    val (vTb, sumDl): (Seq[Long], Long) = {
+      val parts = v.rows
+        .select(transform(graft.functions.TextOps.tokens(col(textCol)),
+          t => tb(t, nBuckets)).as("_tb"))
+        .rdd.mapPartitions { it =>
+          val tbs = scala.collection.mutable.HashSet.empty[Long]
+          var dl = 0L
+          it.filterNot(_.isNullAt(0)).foreach { r =>
+            val a = r.getSeq[Long](0); tbs ++= a; dl += a.size }
+          Iterator((tbs.toSet, dl))
+        }.collect()
+      (parts.flatMap(_._1).distinct.toSeq, parts.map(_._2).sum)
+    }
   }
 
   /** The victim set of a removal; None when it is empty. */
-  private def victimsOf(victims: DataFrame, idCol: String, textCol: String,
+  private def victimsOf(v: IndexMaintenance.Victims, textCol: String,
                         nBuckets: Int): Option[Victims] =
-    Some(new Victims(victims, idCol, textCol, nBuckets)).filter(_.nV > 0L)
+    if (v.keys.n == 0L) None else Some(new Victims(v, textCol, nBuckets))
 
-  /** First-attempt victim validation shared by both removal verbs:
-    * content known-check (the victims' recomputed per-id postings
-    * signature must equal the stored rows' — the fingerprint
-    * subtraction needs exactly the ingested content; unique-id family:
-    * one signature per id, the whole (term, tf) profile) and the
-    * mid-append-crash provenance guard. The stored postings read prunes
-    * to the VICTIMS' term buckets (bounded collect, the topK recipe) —
-    * never the corpus. The prune could hide stored-only terms, so
-    * totality is pinned by the dl equality: pruned-profile match +
-    * equal token counts => full-profile match (a stored term outside
-    * the pruned buckets would make the stored dl strictly larger) —
-    * the same argument that makes the physical verb's tb-pruned
-    * postings delete exact. */
+  /** First-attempt victim validation shared by both removal verbs, in
+    * ONE job compared on the driver ([[TargetedDelete.digests]]): the
+    * content known-check and the mid-append-crash provenance guard
+    * (every victim dl row's `_src` must have recorded its merge).
+    * Content is compared per id as the token MULTISET: the victims'
+    * tokens against the stored postings pruned to the victims' term
+    * buckets, weighted by tf. The prune could hide stored-only terms, so
+    * totality is pinned by the dl: the stored dl must equal the victims'
+    * token count — pruned-multiset match + equal token counts => full
+    * match (a stored term outside the pruned buckets would make the
+    * stored dl strictly larger), the same argument that makes the
+    * physical verb's tb-pruned postings delete exact. */
   private def validateVictims(ctx: IndexMaintenance.RemovalCtx, v: Victims,
                               opName: String): Unit = {
-    val s = v.vids.sparkSession
-    val (idCol, nV) = (v.idCol, v.nV)
-    def profile(tf: DataFrame): DataFrame = tf
-      .groupBy(col(idCol))
-      .agg(xxhash64(sort_array(collect_list(struct(col("term"),
-        col("tf"))))).as("_sig"))
-    val vSig = profile(v.tf)
-      .withColumnRenamed("_sig", "_vsig")
-      .join(v.dl.select(col(idCol), col("dl").as("_vdl")), Seq(idCol))
-    val storedDl = s.read.parquet(s"${ctx.root}/dl")
-      .filter(col("idb").isin(v.vIdb: _*))
-      .join(v.bVids, Seq(idCol), "leftsemi")
-      .localCheckpoint() // signature join + provenance collect
-    val storedSig = profile(
-      s.read.parquet(s"${ctx.root}/postings")
-        .filter(col("tb").isin(v.vTb: _*))
-        .join(TargetedDelete.maybeBroadcast(
-          storedDl.select(col(idCol)), nV), Seq(idCol), "leftsemi")
-        .select(col(idCol), col("term"), col("tf")))
-    // the signature-equality count and the provenance guard both read
-    // only the already-checkpointed storedDl (plus the pruned postings)
-    // and share no other state — run them concurrently (r18 opt, guide
-    // §2.6; the known-check's refusal is rethrown first on a double
-    // failure, preserving message order)
-    IndexMaintenance.runLegs(Seq(
-      "term.validate.known" -> (() => {
-        val known = storedSig
-          .join(storedDl.select(col(idCol), col("dl")), Seq(idCol))
-          .join(TargetedDelete.maybeBroadcast(vSig, nV), Seq(idCol))
-          .filter(col("_sig") === col("_vsig") && col("dl") === col("_vdl"))
-          .count()
-        if (known != nV) Fingerprint.refuse(
-          s"$opName: only $known of $nV victim ids are " +
-            "indexed with matching content; the fingerprint subtraction " +
-            "needs exactly the ingested (id, text) rows")
-      }),
-      // mid-append crash guard: victims' ingest provenance must have
-      // recorded its merge, or the subtraction would remove a
-      // fingerprint that was never added
-      "term.validate.guard" -> (() => {
-        val vSrcs = storedDl.select(col("_src"))
-          .filter(col("_src").isNotNull)
-          .distinct().collect().map(_.getString(0)).toSet
-        Fingerprint.requireRecordedProvenance(ctx.conf, ctx.indexDir, vSrcs, opName)
-      })))
+    val (idCol, keys) = (v.idCol, v.v.keys)
+    val rows = Seq(
+      TargetedDelete.digestRow(v.v.rows.select(col(idCol),
+          explode(graft.functions.TextOps.tokens(col(v.textCol))).as("term")),
+        "v", idCol, lit(1L), xxhash64(col("term"))),
+      TargetedDelete.digestRow(keys.semi(ctx.snapshot.table("postings")
+        .filter(col("tb").isin(v.vTb: _*)), idCol), "s", idCol, col("tf"), xxhash64(col("term"))),
+      TargetedDelete.digestRow(keys.semi(ctx.snapshot.table("dl")
+        .filter(col("idb").isin(v.vIdb: _*)), idCol), "d", idCol, col("dl"), lit(0L), col("_src")))
+    val (d, srcs) = TargetedDelete.digests(rows.reduce(_ unionByName _), idCol)
+    val none = TargetedDelete.Digest(0L, 0L, Set.empty)
+    val known = d.collect { case (("d", id), dl) =>
+      val (vd, sd) = (d.getOrElse(("v", id), none), d.getOrElse(("s", id), none))
+      vd.n == sd.n && vd.sum == sd.sum && dl.n == vd.n
+    }.count(identity)
+    TargetedDelete.requireKnown(known.toLong, keys.n, opName)
+    Fingerprint.requireRecordedProvenance(ctx.conf, ctx.indexDir, srcs, opName)
   }
 
   /** LOGICAL targeted delete — the RTBF fast path: the same victim
@@ -412,18 +388,24 @@ object TermIndex {
     * must carry the EXACT `(id, text)` rows as ingested. */
   def logicalRemove(victims: DataFrame, idCol: String, textCol: String,
                     indexDir: String, tag: String = "remove"): Unit =
-    IndexMaintenance.removal(victims, indexDir, tag, Seq(idCol, textCol),
+    logicalRemove(IndexMaintenance.Victims(victims, Seq(idCol, textCol)), textCol,
+      indexDir, tag)
+
+  /** [[logicalRemove]] of captured victims (an RTBF purge's shared capture). */
+  private[graft] def logicalRemove(victims: IndexMaintenance.Victims, textCol: String,
+                                   indexDir: String, tag: String): Unit =
+    IndexMaintenance.removal(victims, indexDir, tag,
         "TermIndex.logicalRemove", "term.logical") { ctx =>
-      val s = victims.sparkSession
+      val s = victims.rows.sparkSession
       val (nBuckets, _, oldSumDl) = metaOf(ctx.meta)
-      victimsOf(victims, idCol, textCol, nBuckets).map { v =>
+      victimsOf(victims, textCol, nBuckets).map { v =>
         if (ctx.firstAttempt) {
-          LogicalDelete.requireNotTombstoned(s, ctx.indexDir, v.vids, idCol,
+          LogicalDelete.requireNotTombstoned(ctx.indexDir, victims.keys,
             "TermIndex.logicalRemove")
           validateVictims(ctx, v, "TermIndex.logicalRemove")
         }
         IndexMaintenance.RemovalCommit(
-          rows = () => ctx.tombstone(v.vids, idCol),
+          rows = () => ctx.tombstone(victims.keys.frame, v.idCol),
           // sum_dl subtraction rides the SAME atomic meta write the
           // resolver gates: when the fingerprint is on the
           // pre-subtraction side, so is sum_dl (one file), so "current
@@ -434,7 +416,7 @@ object TermIndex {
           // rows — validated content-equal to the stored rows on the
           // first attempt — O(victims).
           writeMeta = fp => writeMeta(s, ctx.root, nBuckets, fp,
-            oldSumDl.map(_ - sumDlOf(v.dl))))
+            oldSumDl.map(_ - v.sumDl)))
       }
     }
 
@@ -454,14 +436,16 @@ object TermIndex {
     *    barrier tombstones the victims for the removal's duration
     *    (requireNotTombstoned refuses their re-ingest; topK goes blind to
     *    them even before the deletes land) and is cleared after the
-    *    state, in `done`;
+    *    state, in `done`. The barrier batch carries a marker
+    *    ([[LogicalDelete.write]]'s `barrier`): a [[logicalRemove]] of
+    *    the same victims under the same tag writes a batch of the same
+    *    name, and a later remove reads as its completed replay — only
+    *    a marked batch is this verb's to clear;
     *  - two pruned parallel partition rewrites with NO persisted bucket
     *    plan: the postings prune (victims' term buckets) recomputes from
     *    the victims' own (id, text) under the frozen tokenizer —
-    *    replay-stable by construction — where TextIndex must persist
-    *    `vhb` because its prune derives from the stored toks table that
-    *    a parallel leg deletes. The prune is EXACT by the
-    *    validateVictims dl-equality totality argument.
+    *    replay-stable by construction — where TextIndex persists `vhb`.
+    *    The prune is EXACT by the validateVictims dl totality argument.
     *
     * `victims` must carry the EXACT `(id, text)` rows as ingested, all
     * ids indexed (checked before anything mutates); pending logical
@@ -471,9 +455,14 @@ object TermIndex {
     * build on the survivors value-exact, victim rows absent from disk,
     * IndexCheck clean. */
   def remove(victims: DataFrame, idCol: String, textCol: String,
-             indexDir: String, tag: String = "remove"): Unit = {
+             indexDir: String, tag: String = "remove"): Unit =
+    remove(IndexMaintenance.Victims(victims, Seq(idCol, textCol)), textCol, indexDir, tag)
+
+  /** [[remove]] of captured victims (an RTBF purge's shared capture). */
+  private[graft] def remove(victims: IndexMaintenance.Victims, textCol: String,
+                            indexDir: String, tag: String): Unit = {
     val barrierBatch = Fingerprint.sanitizeTag(s"rm.$tag")
-    IndexMaintenance.removal(victims, indexDir, tag, Seq(idCol, textCol),
+    IndexMaintenance.removal(victims, indexDir, tag,
         "TermIndex.remove", "term.remove",
         // state FIRST, barrier second — deliberate: a crash between the
         // two leaves a stale barrier with no state, which merely keeps
@@ -485,37 +474,37 @@ object TermIndex {
         // fingerprint left merged — rows/meta divergence for good.
         done = ctx => {
           FaultInjection.maybeCrash("term.remove.cleanup")
-          if (LogicalDelete.pendingBatches(ctx.conf, ctx.indexDir).contains(barrierBatch))
+          if (LogicalDelete.isBarrier(ctx.conf, ctx.indexDir, barrierBatch))
             LogicalDelete.clearBatches(ctx.conf, ctx.indexDir, Seq(barrierBatch))
         }) { ctx =>
-      val s = victims.sparkSession
+      val s = victims.rows.sparkSession
       val (nBuckets, _, oldSumDl) = metaOf(ctx.meta)
       LogicalDelete.requireNonePending(ctx.conf, ctx.indexDir, "TermIndex.remove",
         exceptBatch = Some(barrierBatch))
-      victimsOf(victims, idCol, textCol, nBuckets).map { v =>
+      victimsOf(victims, textCol, nBuckets).map { v =>
         if (ctx.firstAttempt) validateVictims(ctx, v, "TermIndex.remove")
+        def leg(table: String, parts: Seq[String], prune: org.apache.spark.sql.Column) =
+          () => {
+            TargetedDelete.deleteKeys(s, s"${ctx.root}/$table", parts, v.idCol,
+              victims.keys, prune, Some(ctx.snapshot.schema(table)))
+            (): Unit
+          }
         IndexMaintenance.RemovalCommit(
           rows = () => {
-            LogicalDelete.write(v.vids, idCol, ctx.indexDir, ctx.rmTag)
+            LogicalDelete.write(victims.keys.frame, v.idCol, ctx.indexDir, ctx.rmTag,
+              barrier = true)
             FaultInjection.maybeCrash("term.remove.barrier")
             // both deletes are idempotent pruned dynamic overwrites
             // driven by replay-stable bucket lists — parallel,
             // order-free, convergent from any completed subset
             IndexMaintenance.runLegs(Seq(
-              "term.remove.postings" -> (() => {
-                TargetedDelete.delete(s, s"${ctx.root}/postings", Seq("_src", "tb"),
-                  idCol, v.vids, col("tb").isin(v.vTb: _*))
-                (): Unit
-              }),
-              "term.remove.dl" -> (() => {
-                TargetedDelete.delete(s, s"${ctx.root}/dl", Seq("_src", "idb"),
-                  idCol, v.vids, col("idb").isin(v.vIdb: _*))
-                (): Unit
-              })))
+              "term.remove.postings" -> leg("postings", Seq("_src", "tb"),
+                col("tb").isin(v.vTb: _*)),
+              "term.remove.dl" -> leg("dl", Seq("_src", "idb"), col("idb").isin(v.vIdb: _*))))
           },
           // same sum_dl protocol as logicalRemove
           writeMeta = fp => writeMeta(s, ctx.root, nBuckets, fp,
-            oldSumDl.map(_ - sumDlOf(v.dl))),
+            oldSumDl.map(_ - v.sumDl)),
           retired = Seq("postings", "dl", "meta"))
       }
     }

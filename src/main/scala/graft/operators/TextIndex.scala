@@ -97,9 +97,8 @@ object TextIndex {
   private def writeMeta(s: SparkSession, root: String, p: Params,
                         fp: (Long, Long)): Unit = {
     import s.implicits._
-    Seq((p.numHashes, p.bands, p.nBuckets, p.seed, fp._1, fp._2))
-      .toDF("num_hashes", "bands", "n_buckets", "seed", "n_rows", "content_hash")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
+    IndexSnapshot.writeMeta(Seq((p.numHashes, p.bands, p.nBuckets, p.seed, fp._1, fp._2))
+        .toDF("num_hashes", "bands", "n_buckets", "seed", "n_rows", "content_hash"), root)
   }
 
   /** Does the persisted index still describe THIS corpus? False when meta
@@ -146,66 +145,54 @@ object TextIndex {
       writeMeta(delta.sparkSession, ctx.root, params(ctx.meta), fp)
     }
 
-  /** A removal's victims under the frozen parameters: their ids, id
-    * buckets and, on demand, their INDEXED token sets and the band
-    * buckets those hash to (frozen family => an exact recompute). */
-  private final class Victims(s: SparkSession, root: String, victims: DataFrame,
-                              val idCol: String, val p: Params) {
-    val vids: DataFrame = victims.select(col(idCol)).distinct().localCheckpoint()
-    val (nV, vIdb) = IndexMaintenance.countAndBuckets[Long](vids,
-      pmod(xxhash64(col(idCol)), lit(p.nBuckets.toLong)))
-    // broadcast only below the mass-victim key threshold (VERDICT r11
-    // item 1), like every victim join in the remove family
-    def bVids: DataFrame = TargetedDelete.maybeBroadcast(vids, nV)
-    lazy val toks: DataFrame = s.read.parquet(s"$root/toks")
-      .filter(col("idb").isin(vIdb: _*))
-      .join(bVids, Seq(idCol), "leftsemi")
-      .select(col(idCol), col("_toks"))
-      .localCheckpoint() // both legs of the victim check read it
-    lazy val bandBuckets: Seq[Long] =
-      bandRows(toks, idCol, p.numHashes, p.bands, p.nBuckets, p.seed)
-        .select(col("hb")).distinct().collect().map(_.getLong(0)).toSeq
+  /** A removal's victims under the frozen parameters: the capture, the
+    * id buckets (driver-side for a key set) and, on demand, the band
+    * buckets of the victims' token sets — one job. A victim's token set
+    * equals its indexed one (the first attempt's known-check pins it, a
+    * replay re-admits the same rows), so the bands prune is exact. */
+  private final class Victims(val v: IndexMaintenance.Victims, textCol: String,
+                              val p: Params) {
+    def idCol: String = v.idCol
+    val vIdb: Seq[Any] = v.keys.mapDistinct(c => pmod(xxhash64(c), lit(p.nBuckets.toLong)))
+    lazy val bandBuckets: Seq[Long] = IndexMaintenance.distinctRows(
+        bandRows(v.rows.select(col(idCol), Dedup.hashedTokenSet(col(textCol)).as("_toks")),
+          idCol, p.numHashes, p.bands, p.nBuckets, p.seed).select(col("hb")))
+      .map(_.getLong(0))
   }
 
   /** The victim set of a removal; None when it is empty. */
-  private def victimsOf(ctx: IndexMaintenance.RemovalCtx, victims: DataFrame,
-                        idCol: String): Option[Victims] =
-    Some(new Victims(victims.sparkSession, ctx.root, victims, idCol,
-      params(ctx.meta))).filter(_.nV > 0L)
+  private def victimsOf(ctx: IndexMaintenance.RemovalCtx, v: IndexMaintenance.Victims,
+                        textCol: String): Option[Victims] =
+    Some(new Victims(v, textCol, params(ctx.meta))).filter(_.v.keys.n > 0L)
 
   /** The one victim check of both removal verbs, run on a first attempt
-    * only ([[IndexMaintenance.RemovalCtx.firstAttempt]]): two concurrent
-    * legs over the victims' checkpointed token sets (the known-check's
-    * refusal is rethrown first on a double failure).
+    * only ([[IndexMaintenance.RemovalCtx.firstAttempt]]), in ONE job
+    * compared on the driver ([[TargetedDelete.digests]]) over the
+    * victims' rows and their pruned slices of `toks` and `bands`:
     *  - per victim id, the stored token-set hashes must EQUAL the victim
     *    rows' (r14): the delete is id-keyed, so a partial victim set
     *    would subtract a fingerprint that diverges from the rows
     *    actually removed, poisoning isFresh forever;
     *  - victims whose append crashed MID-append (rows landed, fingerprint
     *    merge never recorded) must not subtract — their delta was never
-    *    added. One pruned read of the victims' band rows' provenance,
-    *    bounded by |tags|; only meaningful on fingerprinted indexes with
-    *    provenance columns. */
+    *    added. The band rows' provenance is checked, bounded by |tags|;
+    *    only meaningful on fingerprinted indexes (pre-provenance rows
+    *    read `_src` null = build-era). */
   private def validateVictims(ctx: IndexMaintenance.RemovalCtx, v: Victims,
-                              victims: DataFrame, textCol: String,
-                              opName: String): Unit = {
-    val bands = victims.sparkSession.read.parquet(s"${ctx.root}/bands")
-    val toks = v.toks // materialized before the legs fork
-    IndexMaintenance.runLegs(Seq(
-      "text.validate.known" -> (() =>
-        TargetedDelete.requireKnownContent(
-          victims, xxhash64(Dedup.hashedTokenSet(col(textCol))),
-          toks, xxhash64(col("_toks")), v.idCol, v.nV, opName)),
-      "text.validate.bands" -> (() =>
-        if (IndexMaintenance.fingerprintOf(ctx.meta).isDefined &&
-            bands.schema.fieldNames.contains("_src")) {
-          val vSrcs = bands
-            .filter(col("hb").isin(v.bandBuckets: _*))
-            .join(v.bVids, Seq(v.idCol), "leftsemi")
-            .select(col("_src")).filter(col("_src").isNotNull) // pre-provenance rows = build-era
-            .distinct().collect().map(_.getString(0)).toSet
-          Fingerprint.requireRecordedProvenance(ctx.conf, ctx.indexDir, vSrcs, opName)
-        })))
+                              textCol: String, opName: String): Unit = {
+    val keys = v.v.keys
+    val guard = IndexMaintenance.fingerprintOf(ctx.meta).isDefined
+    val toks = keys.semi(ctx.snapshot.table("toks").filter(col("idb").isin(v.vIdb: _*)), v.idCol)
+    val rows = Seq(
+      TargetedDelete.digestRow(v.v.rows, "v", v.idCol, lit(1L),
+        xxhash64(Dedup.hashedTokenSet(col(textCol)))),
+      TargetedDelete.digestRow(toks, "s", v.idCol, lit(1L), xxhash64(col("_toks")))) ++
+      (if (!guard) Nil else Seq(TargetedDelete.digestRow(
+        keys.semi(ctx.snapshot.withSrc("bands").filter(col("hb").isin(v.bandBuckets: _*)),
+          v.idCol), "b", v.idCol, lit(0L), lit(0L), col("_src"))))
+    val (d, srcs) = TargetedDelete.digests(rows.reduce(_ unionByName _), v.idCol)
+    TargetedDelete.requireKnownSets(d, keys, opName)
+    if (guard) Fingerprint.requireRecordedProvenance(ctx.conf, ctx.indexDir, srcs, opName)
   }
 
   /** Index-side targeted DELETE (VERDICT r10 item 1): drop `victims`
@@ -216,33 +203,32 @@ object TextIndex {
     * lake before scrubbing it) and every id must be indexed — checked
     * before anything mutates. The commit is the shared rows-first one
     * ([[IndexMaintenance.removal]]); the rows are two pruned rewrites,
-    * band buckets recomputed from the victims' indexed token sets under
-    * the frozen hash family, so the prune is exact. Removes duplicate
-    * rows from crashed append replays too — removal is by id, not by
-    * row. */
+    * band buckets computed from the victims' token sets under the
+    * frozen hash family, so the prune is exact. Removes duplicate rows
+    * from crashed append replays too — removal is by id, not by row. */
   def remove(victims: DataFrame, idCol: String, textCol: String,
              indexDir: String, tag: String = "remove"): Unit =
-    IndexMaintenance.removal(victims, indexDir, tag, Seq(idCol, textCol),
+    remove(IndexMaintenance.Victims(victims, Seq(idCol, textCol)), textCol, indexDir, tag)
+
+  /** [[remove]] of captured victims (an RTBF purge's shared capture). */
+  private[graft] def remove(victims: IndexMaintenance.Victims, textCol: String,
+                            indexDir: String, tag: String): Unit =
+    IndexMaintenance.removal(victims, indexDir, tag,
         "TextIndex.remove", "text") { ctx =>
-      val s = victims.sparkSession
+      val s = victims.rows.sparkSession
       // pending logical deletions must reclaim first (their victims would
       // read as indexed rows here) — see [[LogicalDelete]]
       LogicalDelete.requireNonePending(ctx.conf, ctx.indexDir, "TextIndex.remove")
-      victimsOf(ctx, victims, idCol).map { v =>
-        if (ctx.firstAttempt) validateVictims(ctx, v, victims, textCol, "TextIndex.remove")
+      victimsOf(ctx, victims, textCol).map { v =>
+        if (ctx.firstAttempt) validateVictims(ctx, v, textCol, "TextIndex.remove")
         val stateDir = Fingerprint.removeStatePath(ctx.indexDir, ctx.rmTag)
-        // the victims' band buckets join the commit record as plan state
-        // (computed from the toks table, pristine until the rows step):
-        // the bands prune no longer depends on another rewrite's table,
-        // so the two deletes are order-free — and parallel. Presence is
-        // an explicit fs.create'd marker (ClusterIndex's PLAN_READY
-        // protocol) or surviving part files — NOT _SUCCESS, which
-        // deployments disable (mapreduce.fileoutputcommitter
-        // .marksuccessfuljobs=false is common object-store tuning): with
-        // only _SUCCESS probed, a replay after the parallel toks leg
-        // completed would recompute vHb from the now-empty toks table and
-        // overwrite the plan with an empty bucket list, leaving the
-        // victims' band rows alive forever. An existing plan is never
+        // the victims' band buckets join the commit record as plan state,
+        // so a replay prunes the bands rewrite exactly as the first
+        // attempt did. Presence is an explicit fs.create'd marker
+        // (ClusterIndex's PLAN_READY protocol) or surviving part files —
+        // NOT _SUCCESS, which deployments disable
+        // (mapreduce.fileoutputcommitter.marksuccessfuljobs=false is
+        // common object-store tuning). An existing plan is never
         // overwritten; an absent one is recomputed, which a replay can do
         // only before the rows step (plan first, then `.state`).
         val vhbDir = new org.apache.hadoop.fs.Path(s"$stateDir/vhb")
@@ -267,17 +253,14 @@ object TextIndex {
             val vHb =
               if (!vhbPresent) v.bandBuckets
               else s.read.parquet(vhbDir.toString).collect().map(_.getLong(0)).toSeq
+            def leg(table: String, part: String, buckets: Seq[Any]): () => Unit = () => {
+              TargetedDelete.deleteKeys(s, s"${ctx.root}/$table", Seq(part), v.idCol,
+                victims.keys, col(part).isin(buckets: _*), Some(ctx.snapshot.schema(table)))
+              (): Unit
+            }
             IndexMaintenance.runLegs(Seq(
-              "text.bands" -> (() => {
-                TargetedDelete.delete(s, s"${ctx.root}/bands", Seq("hb"), idCol,
-                  v.vids, col("hb").isin(vHb: _*))
-                (): Unit
-              }),
-              "text.toks" -> (() => {
-                TargetedDelete.delete(s, s"${ctx.root}/toks", Seq("idb"), idCol,
-                  v.vids, col("idb").isin(v.vIdb: _*))
-                (): Unit
-              })))
+              "text.bands" -> leg("bands", "hb", vHb),
+              "text.toks" -> leg("toks", "idb", v.vIdb)))
           },
           writeMeta = writeMeta(s, ctx.root, params(ctx.meta), _),
           retired = Seq("bands", "toks", "meta"))
@@ -295,17 +278,23 @@ object TextIndex {
     * remove namespace. */
   def logicalRemove(victims: DataFrame, idCol: String, textCol: String,
                     indexDir: String, tag: String = "remove"): Unit =
-    IndexMaintenance.removal(victims, indexDir, tag, Seq(idCol, textCol),
+    logicalRemove(IndexMaintenance.Victims(victims, Seq(idCol, textCol)), textCol,
+      indexDir, tag)
+
+  /** [[logicalRemove]] of captured victims. */
+  private[graft] def logicalRemove(victims: IndexMaintenance.Victims, textCol: String,
+                                   indexDir: String, tag: String): Unit =
+    IndexMaintenance.removal(victims, indexDir, tag,
         "TextIndex.logicalRemove", "text.logical") { ctx =>
-      victimsOf(ctx, victims, idCol).map { v =>
+      victimsOf(ctx, victims, textCol).map { v =>
         if (ctx.firstAttempt) {
-          LogicalDelete.requireNotTombstoned(victims.sparkSession, ctx.indexDir,
-            v.vids, idCol, "TextIndex.logicalRemove")
-          validateVictims(ctx, v, victims, textCol, "TextIndex.logicalRemove")
+          LogicalDelete.requireNotTombstoned(ctx.indexDir, victims.keys,
+            "TextIndex.logicalRemove")
+          validateVictims(ctx, v, textCol, "TextIndex.logicalRemove")
         }
         IndexMaintenance.RemovalCommit(
-          rows = () => ctx.tombstone(v.vids, idCol),
-          writeMeta = writeMeta(victims.sparkSession, ctx.root, params(ctx.meta), _))
+          rows = () => ctx.tombstone(victims.keys.frame, v.idCol),
+          writeMeta = writeMeta(victims.rows.sparkSession, ctx.root, params(ctx.meta), _))
       }
     }
 

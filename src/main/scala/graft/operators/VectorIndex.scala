@@ -77,11 +77,13 @@ object VectorIndex {
   }
 
   // root = resolved data root (IndexMaintenance.liveRoot), not the index dir
-  private def writeMeta(s: SparkSession, root: String,
-                        fp: (Long, Long)): Unit = {
+  /** The meta commit; `centroids` are the quantizer the commit keeps
+    * (appends and removals never retrain), served by the new snapshot
+    * without a re-read. */
+  private def writeMeta(s: SparkSession, root: String, fp: (Long, Long),
+                        centroids: Option[Seq[Seq[Double]]] = None): Unit = {
     import s.implicits._
-    Seq(fp).toDF("n_rows", "content_hash")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
+    IndexSnapshot.writeMeta(Seq(fp).toDF("n_rows", "content_hash"), root, centroids)
   }
 
   /** Does the persisted index still describe THIS corpus? False when the
@@ -154,7 +156,8 @@ object VectorIndex {
             s"[VectorIndex.append] recall probe failed (ingest unaffected): " +
               s"${e.getMessage}")
       }
-    } { (ctx, fp) => writeMeta(delta.sparkSession, ctx.root, fp) }
+    } { (ctx, fp) => writeMeta(delta.sparkSession, ctx.root, fp,
+      Some(IndexSnapshot.at(delta.sparkSession, ctx.indexDir, ctx.root).centroids)) }
 
   /** The persisted quantizer, reassembled in cell order (bounded read:
     * nlist x dim rows, once per snapshot). */
@@ -331,56 +334,43 @@ object VectorIndex {
       .groupBy(col("inc_id")).agg(min(col("ref_id")).as("dup_of"))
   }
 
-  /** A removal's victims pinned to their cells under the FROZEN
-    * quantizer (assignment is deterministic, so the cell list is a pure
-    * function of the victims argument — replay-stable). */
-  private final class Victims(centroids: Seq[Seq[Double]], victims: DataFrame,
-                              val corpusId: String, corpusVec: String) {
-    private val pinned = victims
-      .withColumn("cell", Similarity.nearestCentroid(col(corpusVec), centroids))
-      .select(col(corpusId), col("cell")).distinct().localCheckpoint()
-    // ONE job for the count and the cell list (<= nlist rows); an id
-    // sits in one cell (its stored embedding's), and a victim feed that
-    // pins one id to two cells fails the known-check
-    val (nV, vCells) = IndexMaintenance.countAndBuckets[Int](pinned, col("cell"))
-    val vids: DataFrame = pinned.select(col(corpusId)).distinct()
-    def bVids: DataFrame = TargetedDelete.maybeBroadcast(vids, nV)
+  /** A removal's victims and their cells under the FROZEN quantizer, one
+    * job (assignment is deterministic, so the cell list is a pure
+    * function of the victims argument — replay-stable). An id sits in
+    * one cell per stored embedding; a victim feed whose embedding is not
+    * the stored one fails the known-check. */
+  private final class Victims(val v: IndexMaintenance.Victims,
+                              centroids: Seq[Seq[Double]], corpusVec: String) {
+    def corpusId: String = v.idCol
+    val vCells: Seq[Any] = IndexMaintenance.distinctRows(v.rows.select(
+      Similarity.nearestCentroid(col(corpusVec), centroids))).map(_.get(0))
   }
 
   /** The victim set of a removal; None when it is empty. */
-  private def victimsOf(ctx: IndexMaintenance.RemovalCtx, victims: DataFrame,
-                        corpusId: String, corpusVec: String): Option[Victims] =
-    Some(new Victims(ctx.snapshot.centroids, victims, corpusId, corpusVec))
-      .filter(_.nV > 0L)
+  private def victimsOf(ctx: IndexMaintenance.RemovalCtx, v: IndexMaintenance.Victims,
+                        corpusVec: String): Option[Victims] =
+    if (v.keys.n == 0L) None else Some(new Victims(v, ctx.snapshot.centroids, corpusVec))
 
   /** The one victim check of both removal verbs, run on a first attempt
-    * only ([[IndexMaintenance.RemovalCtx.firstAttempt]]): two concurrent
-    * legs over ONE checkpointed slice of the victims' cells (the
-    * known-check's refusal is rethrown first on a double failure).
+    * only ([[IndexMaintenance.RemovalCtx.firstAttempt]]), in ONE job over
+    * the victims' rows and their pruned slice of `cells`, compared on the
+    * driver ([[TargetedDelete.digests]]):
     *  - this family stores the ingested embedding itself, so the content
     *    equality is over EXACT float arrays, not token sets;
     *  - mid-append crash guard (see [[TextIndex.remove]]): a victim row
     *    from an append whose merge never recorded must not subtract. */
   private def validateVictims(ctx: IndexMaintenance.RemovalCtx, v: Victims,
-                              victims: DataFrame, corpusVec: String,
-                              opName: String): Unit = {
-    val cellsPruned = victims.sparkSession.read.parquet(s"${ctx.root}/cells")
-      .filter(col("cell").isInCollection(v.vCells))
-      .join(v.bVids, Seq(v.corpusId), "leftsemi")
-      .localCheckpoint()
-    IndexMaintenance.runLegs(Seq(
-      "vector.validate.known" -> (() =>
-        TargetedDelete.requireKnownContent(
-          victims, xxhash64(col(corpusVec)),
-          cellsPruned, xxhash64(col(corpusVec)), v.corpusId, v.nV, opName)),
-      "vector.validate.guard" -> (() =>
-        if (IndexMaintenance.fingerprintOf(ctx.meta).isDefined &&
-            cellsPruned.schema.fieldNames.contains("_src")) {
-          val vSrcs = cellsPruned
-            .select(col("_src")).filter(col("_src").isNotNull) // pre-provenance rows = build-era
-            .distinct().collect().map(_.getString(0)).toSet
-          Fingerprint.requireRecordedProvenance(ctx.conf, ctx.indexDir, vSrcs, opName)
-        })))
+                              corpusVec: String, opName: String): Unit = {
+    val keys = v.v.keys
+    val cells = keys.semi(ctx.snapshot.withSrc("cells")
+      .filter(col("cell").isInCollection(v.vCells)), v.corpusId)
+    val (d, srcs) = TargetedDelete.digests(
+      TargetedDelete.digestRow(v.v.rows, "v", v.corpusId, lit(1L), xxhash64(col(corpusVec)))
+        .unionByName(TargetedDelete.digestRow(cells, "s", v.corpusId, lit(1L),
+          xxhash64(col(corpusVec)), col("_src"))), v.corpusId)
+    TargetedDelete.requireKnownSets(d, keys, opName)
+    if (IndexMaintenance.fingerprintOf(ctx.meta).isDefined)
+      Fingerprint.requireRecordedProvenance(ctx.conf, ctx.indexDir, srcs, opName)
   }
 
   /** Index-side targeted DELETE (VERDICT r10 item 1): drop `victims`
@@ -398,20 +388,28 @@ object VectorIndex {
   def remove(victims: DataFrame, indexDir: String,
              corpusId: String = "vec_id", corpusVec: String = "embedding",
              tag: String = "remove"): Unit =
-    IndexMaintenance.removal(victims, indexDir, tag, Seq(corpusId, corpusVec),
+    remove(IndexMaintenance.Victims(victims, Seq(corpusId, corpusVec)), indexDir, tag)
+
+  /** [[remove]] of captured victims (an RTBF purge's shared capture);
+    * `victims.fpCols` are (id, embedding). */
+  private[graft] def remove(victims: IndexMaintenance.Victims, indexDir: String,
+                            tag: String): Unit =
+    IndexMaintenance.removal(victims, indexDir, tag,
         "VectorIndex.remove", "vector") { ctx =>
-      val s = victims.sparkSession
+      val s = victims.rows.sparkSession
+      val corpusVec = victims.fpCols(1)
       // pending logical deletions must reclaim first — see [[LogicalDelete]]
       LogicalDelete.requireNonePending(ctx.conf, ctx.indexDir, "VectorIndex.remove")
-      victimsOf(ctx, victims, corpusId, corpusVec).map { v =>
-        if (ctx.firstAttempt) validateVictims(ctx, v, victims, corpusVec, "VectorIndex.remove")
+      victimsOf(ctx, victims, corpusVec).map { v =>
+        if (ctx.firstAttempt) validateVictims(ctx, v, corpusVec, "VectorIndex.remove")
         IndexMaintenance.RemovalCommit(
           rows = () => IndexMaintenance.runLegs(Seq("vector.cells" -> (() => {
-            TargetedDelete.delete(s, s"${ctx.root}/cells", Seq("cell"), corpusId,
-              v.vids, col("cell").isInCollection(v.vCells))
+            TargetedDelete.deleteKeys(s, s"${ctx.root}/cells", Seq("cell"), v.corpusId,
+              victims.keys, col("cell").isInCollection(v.vCells),
+              Some(ctx.snapshot.schema("cells")))
             (): Unit
           }))),
-          writeMeta = writeMeta(s, ctx.root, _),
+          writeMeta = writeMeta(s, ctx.root, _, Some(ctx.snapshot.centroids)),
           retired = Seq("cells", "centroids", "meta"))
       }
     }
@@ -429,17 +427,25 @@ object VectorIndex {
                     corpusId: String = "vec_id",
                     corpusVec: String = "embedding",
                     tag: String = "remove"): Unit =
-    IndexMaintenance.removal(victims, indexDir, tag, Seq(corpusId, corpusVec),
+    logicalRemove(IndexMaintenance.Victims(victims, Seq(corpusId, corpusVec)), indexDir, tag)
+
+  /** [[logicalRemove]] of captured victims; `victims.fpCols` are
+    * (id, embedding). */
+  private[graft] def logicalRemove(victims: IndexMaintenance.Victims, indexDir: String,
+                                   tag: String): Unit =
+    IndexMaintenance.removal(victims, indexDir, tag,
         "VectorIndex.logicalRemove", "vector.logical") { ctx =>
-      victimsOf(ctx, victims, corpusId, corpusVec).map { v =>
+      val corpusVec = victims.fpCols(1)
+      victimsOf(ctx, victims, corpusVec).map { v =>
         if (ctx.firstAttempt) {
-          LogicalDelete.requireNotTombstoned(victims.sparkSession, ctx.indexDir,
-            v.vids, corpusId, "VectorIndex.logicalRemove")
-          validateVictims(ctx, v, victims, corpusVec, "VectorIndex.logicalRemove")
+          LogicalDelete.requireNotTombstoned(ctx.indexDir, victims.keys,
+            "VectorIndex.logicalRemove")
+          validateVictims(ctx, v, corpusVec, "VectorIndex.logicalRemove")
         }
         IndexMaintenance.RemovalCommit(
-          rows = () => ctx.tombstone(v.vids, corpusId),
-          writeMeta = writeMeta(victims.sparkSession, ctx.root, _))
+          rows = () => ctx.tombstone(victims.keys.frame, v.corpusId),
+          writeMeta = writeMeta(victims.rows.sparkSession, ctx.root, _,
+            Some(ctx.snapshot.centroids)))
       }
     }
 

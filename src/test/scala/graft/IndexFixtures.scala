@@ -76,4 +76,16 @@ object IndexFixtures {
 
   def concurrently[A](xs: Seq[A])(f: A => Unit): Unit =
     IndexMaintenance.parallel(xs.map(x => () => f(x)))
+
+  /** The descriptions of the Spark jobs `f` runs, in job order (the job
+    * budget specs' counter). */
+  def jobsOf(s: SparkSession)(f: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val sc = s.sparkContext
+    val l = new WorkListener
+    l.recordJobs = true
+    sc.addSparkListener(l)
+    try { f; org.apache.spark.ListenerDrain(sc) } finally sc.removeSparkListener(l)
+    l.jobs.asScala.toSeq.sortBy(_._1).map(_._4)
+  }
 }

@@ -152,11 +152,52 @@ class TargetedDeleteSpec extends SparkSpec {
     assert(dataFiles(dir) == before, "no-op delete must not rewrite anything")
   }
 
-  /** Force the mass-victim regime (shuffle joins instead of broadcast)
-    * for the duration of `body` — VERDICT r11 items 1/4. */
-  private def withJoinPath[T](body: => T): T = {
-    System.setProperty("graft.delete.broadcastKeys", "5")
+  /** Run `body` with the key-set bound at `n` distinct keys: above it a
+    * delete takes the shuffle-join route, at or below the set route. */
+  private def withBound[T](n: Long)(body: => T): T = {
+    System.setProperty("graft.delete.broadcastKeys", n.toString)
     try body finally System.clearProperty("graft.delete.broadcastKeys")
+  }
+
+  /** Force the mass-victim regime (shuffle joins instead of key sets)
+    * for the duration of `body` — VERDICT r11 items 1/4. */
+  private def withJoinPath[T](body: => T): T = withBound(5L)(body)
+
+  /** Every row of the table at `dir`, grouped by the partition dir (as
+    * on disk, relative to the table) of the file holding it. */
+  private def layout(dir: Path): Map[String, Set[Seq[Any]]] =
+    spark.read.parquet(dir.toString)
+      .withColumn("_dir", regexp_extract(input_file_name(), "/lake/(.*)/[^/]*$", 1))
+      .collect().toSeq
+      .groupBy(_.getAs[String]("_dir"))
+      .map { case (d, rs) => d -> rs.map(r => (0 until r.length - 1).map(r.get)).toSet }
+
+  test("set and join routes agree at the bound and one above it: null, escaped, inferred and emptied partitions") {
+    val cases: Seq[(String, Seq[(Long, String, String)], Seq[String])] = Seq(
+      ("null", Seq((1L, "a", null), (2L, "b", null), (3L, "a", "d1"), (4L, "c", "d1")),
+        Seq("a", "b")),
+      ("escaped", Seq((1L, "a", "US/east 1:a"), (2L, "b", "US/east 1:a"),
+        (3L, "b", "plain"), (4L, "c", "plain")), Seq("a", "b")),
+      // '01' reads back as 1: its survivor lands in the canonical dir
+      // day=1 and the touched day=01 dir goes
+      ("inferred", Seq((1L, "a", "01"), (2L, "c", "01"), (3L, "b", "30"), (4L, "c", "30")),
+        Seq("a", "b")),
+      ("emptied", Seq((1L, "a", "d0"), (2L, "a", "d0"), (3L, "b", "d1"), (4L, "c", "d1")),
+        Seq("a", "nobody")))
+    cases.foreach { case (name, rows, keys) =>
+      def run(bound: Long): (Long, Map[String, Set[Seq[Any]]]) = {
+        val dir = Files.createTempDirectory(s"troute_$name").resolve("lake")
+        rows.toDF("event_id", "user", "day").write.partitionBy("day").parquet(dir.toString)
+        val n = withBound(bound)(TargetedDelete.delete(spark, dir.toString, Seq("day"),
+          "user", keys.toDF("user")))
+        (n, layout(dir))
+      }
+      val set = run(keys.size.toLong)
+      val join = run(keys.size - 1L)
+      assert(set == join, s"$name: the set route gave $set, the join route $join")
+      val left = set._2.values.flatten.map(_(1)).toSet
+      assert(left == rows.map(_._2).toSet -- keys, s"$name: survivors $left")
+    }
   }
 
   test("mass-victim JOIN path: same semantics, untouched files identical, emptied dirs removed") {

@@ -287,6 +287,23 @@ class TermIndexSpec extends SparkSpec with RemovalCrashMatrix {
     assert(ex.getMessage.contains("pending reclaim"), ex.getMessage)
   }
 
+  test("remove after a logicalRemove of the same victims and tag keeps the tombstone: victims stay hidden") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = tmpIdx("term_lrrm")
+    TermIndex.build(corpus.toDF("doc_id", "text"), "doc_id", "text", dir)
+    val victims = corpus.filter(_._1 == 1L).toDF("doc_id", "text")
+    assert(collectTopK(dir, queries).exists(_._3 == 1L), "fixture: doc 1 ranks")
+    TermIndex.logicalRemove(victims, "doc_id", "text", dir, tag = "t1")
+    // the same (tag, victims) pair reads as the completed removal: a
+    // no-op, which must not clear the logical tombstone as its barrier
+    TermIndex.remove(victims, "doc_id", "text", dir, tag = "t1")
+    assert(LogicalDelete.pendingBatches(conf, dir) == Seq("rm.t1"),
+      "the logical tombstone must survive the remove")
+    assert(!collectTopK(dir, queries).exists(_._3 == 1L),
+      "victim 1 must stay hidden while meta has subtracted it")
+    assert(metaStats(dir) === storedStats(dir))
+  }
+
   test("remove crash matrix: every boundary replays to survivor-exact stats and empty victim rows (r17)") {
     removalCrashMatrix("term.remove")
   }
