@@ -15,29 +15,22 @@ import org.apache.spark.sql.types.StructType
   * logicalRemove, compact, retrain) writes `meta` last under a fresh
   * part-file name, so a commit always changes the key; compact and
   * retrain also move the root. Per index dir only the current key's
-  * entry is kept. A commit made by this process seeds the entry its key
-  * creates with the meta row it wrote (and the quantizer it kept), so
-  * the next verb or probe reads neither. Row data, file listings and
-  * the tombstone set are not cached (appends add files under an
-  * unchanged schema). A probe that overlaps a meta overwrite fails or
-  * succeeds as an uncached read. */
+  * entry is kept. Row data, file listings and the tombstone set are not
+  * cached (appends add files under an unchanged schema). A probe that
+  * overlaps a meta overwrite fails or succeeds as an uncached read. */
 private[graft] object IndexSnapshot {
 
   final class Snapshot private[IndexSnapshot] (s: SparkSession, val root: String,
-                                               private[IndexSnapshot] val key: Seq[(String, Long, Long)],
-                                               written: Option[Written]) {
-    /** The meta row: the one this process committed ([[writeMeta]]) when
-      * the key is that commit's, else read once. */
-    lazy val meta: Row = written.fold(s.read.parquet(s"$root/meta").head())(_.meta)
+                                               private[IndexSnapshot] val key: Seq[(String, Long, Long)]) {
+    lazy val meta: Row = s.read.parquet(s"$root/meta").head()
 
-    /** The persisted quantizer, reassembled in cell order (nlist x dim);
-      * the one the committing verb kept, when it named it. */
-    lazy val centroids: Seq[Seq[Double]] = written.flatMap(_.centroids).getOrElse(
+    /** The persisted quantizer, reassembled in cell order (nlist x dim). */
+    lazy val centroids: Seq[Seq[Double]] =
       s.read.parquet(s"$root/centroids").collect()
         .groupBy(_.getAs[Int]("cell")).toSeq.sortBy(_._1)
         .map { case (_, rs) =>
           rs.sortBy(_.getAs[Int]("pos")).map(_.getAs[Double]("value")).toSeq
-        })
+        }
 
     private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
@@ -69,29 +62,10 @@ private[graft] object IndexSnapshot {
 
   private val live = new java.util.concurrent.ConcurrentHashMap[String, Snapshot]()
 
-  /** What the last meta commit of this process under a data root left:
-    * the meta files' key, the row, and the quantizer it kept. */
-  private[IndexSnapshot] final case class Written(key: Seq[(String, Long, Long)], meta: Row,
-                                   centroids: Option[Seq[Seq[Double]]])
-
-  private val written = new java.util.concurrent.ConcurrentHashMap[String, Written]()
-
-  private def keyOf(s: SparkSession, root: String): Seq[(String, Long, Long)] = {
-    val dir = new Path(s"$root/meta")
-    dir.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(dir)
-      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted.toSeq
-  }
-
-  /** Commit `meta`, a family's one-row local frame, under `root` — every
-    * family's meta write — and remember the row (and the vector
-    * quantizer the commit kept, if named): the snapshot this commit
-    * creates serves them with no read (collecting a local frame runs no
-    * job). */
-  def writeMeta(meta: DataFrame, root: String,
-                centroids: Option[Seq[Seq[Double]]] = None): Unit = {
+  /** Commit `meta`, a family's one-row frame, under `root` — every
+    * family's meta write, last in each committing verb. */
+  def writeMeta(meta: DataFrame, root: String): Unit =
     meta.coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
-    written.put(root, Written(keyOf(meta.sparkSession, root), meta.collect().head, centroids))
-  }
 
   /** The snapshot currently live under `indexDir`. */
   def apply(s: SparkSession, indexDir: String): Snapshot =
@@ -100,11 +74,12 @@ private[graft] object IndexSnapshot {
   /** The snapshot under an already resolved `root` of `indexDir` (a
     * verb's root under its lease, a compact's source generation). */
   def at(s: SparkSession, indexDir: String, root: String): Snapshot = {
-    val key = keyOf(s, root)
+    val dir = new Path(s"$root/meta")
+    val key = dir.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(dir)
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted.toSeq
     live.compute(IndexMaintenance.normalize(indexDir), (_, old) =>
       if (old != null && old.root == root && old.key == key) old
-      else new Snapshot(s, root, key,
-        Option(written.get(root)).filter(_.key == key)))
+      else new Snapshot(s, root, key))
   }
 
   /** The meta fingerprint under `root`; None when meta is absent or

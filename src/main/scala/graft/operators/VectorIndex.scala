@@ -77,13 +77,9 @@ object VectorIndex {
   }
 
   // root = resolved data root (IndexMaintenance.liveRoot), not the index dir
-  /** The meta commit; `centroids` are the quantizer the commit keeps
-    * (appends and removals never retrain), served by the new snapshot
-    * without a re-read. */
-  private def writeMeta(s: SparkSession, root: String, fp: (Long, Long),
-                        centroids: Option[Seq[Seq[Double]]] = None): Unit = {
+  private def writeMeta(s: SparkSession, root: String, fp: (Long, Long)): Unit = {
     import s.implicits._
-    IndexSnapshot.writeMeta(Seq(fp).toDF("n_rows", "content_hash"), root, centroids)
+    IndexSnapshot.writeMeta(Seq(fp).toDF("n_rows", "content_hash"), root)
   }
 
   /** Does the persisted index still describe THIS corpus? False when the
@@ -156,8 +152,7 @@ object VectorIndex {
             s"[VectorIndex.append] recall probe failed (ingest unaffected): " +
               s"${e.getMessage}")
       }
-    } { (ctx, fp) => writeMeta(delta.sparkSession, ctx.root, fp,
-      Some(IndexSnapshot.at(delta.sparkSession, ctx.indexDir, ctx.root).centroids)) }
+    } { (ctx, fp) => writeMeta(delta.sparkSession, ctx.root, fp) }
 
   /** The persisted quantizer, reassembled in cell order (bounded read:
     * nlist x dim rows, once per snapshot). */
@@ -409,7 +404,7 @@ object VectorIndex {
               Some(ctx.snapshot.schema("cells")))
             (): Unit
           }))),
-          writeMeta = writeMeta(s, ctx.root, _, Some(ctx.snapshot.centroids)),
+          writeMeta = writeMeta(s, ctx.root, _),
           retired = Seq("cells", "centroids", "meta"))
       }
     }
@@ -444,8 +439,7 @@ object VectorIndex {
         }
         IndexMaintenance.RemovalCommit(
           rows = () => ctx.tombstone(victims.keys.frame, v.corpusId),
-          writeMeta = writeMeta(victims.rows.sparkSession, ctx.root, _,
-            Some(ctx.snapshot.centroids)))
+          writeMeta = writeMeta(victims.rows.sparkSession, ctx.root, _))
       }
     }
 

@@ -15,7 +15,7 @@ class MaintenanceJobBudgetSpec extends SparkSpec {
   import spark.implicits._
   import IndexFixtures.{jobsOf, span, tmpIdx}
 
-  private val budgets = Map("purge" -> 49, "logical_purge" -> 36, "delete_leg" -> 5)
+  private val budgets = Map("purge" -> 55, "logical_purge" -> 44, "delete_leg" -> 5)
 
   private def within(name: String, jobs: Seq[String]): Unit =
     assert(jobs.size <= budgets(name),
