@@ -206,19 +206,17 @@ object ClusterIndex {
     LogicalDelete.idsOf(s, indexDir, batches) match {
       case None => base
       case Some(t) =>
-        val vids = t.select(col(LogicalDelete.idColOf(t)).as(idCol))
-          .localCheckpoint()
-        val nV = vids.count()
+        val keys = TargetedDelete.Keys.of(
+          t.select(col(LogicalDelete.idColOf(t)).as(idCol)), idCol)
         val newAssign = ClusterResplit.readOverlay(s, root, indexDir, idCol, batches)
           .getOrElse {
             val (_, nBuckets) = readMeta(IndexSnapshot.at(s, indexDir, root))
-            val vIdb = vids.select(idb(col(idCol), nBuckets).as("idb"))
-              .distinct().collect().map(_.getLong(0)).toSeq
-            ClusterResplit.resplitPlan(s, root, idCol, vids, nV, vIdb)._2
+            val vIdb = keys.mapDistinct(idb(_, nBuckets)).map(_.asInstanceOf[Long])
+            ClusterResplit.resplitPlan(s, root, idCol, keys, vIdb)._2
           }
         // same fold as compact()'s reclaim: drop victims, remap survivors
         // of their components, everyone else passes through untouched
-        base.join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "left_anti")
+        keys.anti(base, idCol)
           .join(newAssign, Seq(idCol), "left")
           .withColumn("component", coalesce(col("_newcomp"), col("component")))
           .drop("_newcomp")
@@ -314,16 +312,13 @@ object ClusterIndex {
         // the id column name rides in the tombstone frame itself —
         // whatever the builder passed to logicalRemove
         val idCol = LogicalDelete.idColOf(t)
-        val vids = t.localCheckpoint()
-        val nV = vids.count()
-        val vIdb = IndexMaintenance.distinctRows(vids.select(idb(col(idCol), nBuckets)))
-          .map(_.getLong(0))
-        val (_, newAssign) = ClusterResplit.resplitPlan(s, ctx.fromRoot, idCol, vids, nV, vIdb)
-        (idCol, vids, nV, newAssign)
+        val keys = TargetedDelete.Keys.of(t, idCol)
+        val vIdb = keys.mapDistinct(idb(_, nBuckets)).map(_.asInstanceOf[Long])
+        val (_, newAssign) = ClusterResplit.resplitPlan(s, ctx.fromRoot, idCol, keys, vIdb)
+        (idCol, keys, newAssign)
       }
       def dropVictims(df: DataFrame): DataFrame = reclaim.fold(df) {
-        case (idCol, vids, nV, _) =>
-          df.join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "left_anti")
+        case (idCol, keys, _) => keys.anti(df, idCol)
       }
       def fold(table: String, bucketCol: String,
                transform: DataFrame => DataFrame = identity): Unit =
@@ -366,11 +361,8 @@ object ClusterIndex {
           // reclaim hygiene first: a tombstoned id must leave the log
           // (either endpoint), exactly as remove()'s deleteAnyKey pass —
           // the member-row drop then feeds the canonicalization below
-          val df0 = reclaim.fold(dfIn) { case (idCol, vids, nV, _) =>
-            def keysAs(c: String) =
-              TargetedDelete.maybeBroadcast(vids.select(col(idCol).as(c)), nV)
-            dfIn.join(keysAs("u"), Seq("u"), "left_anti")
-              .join(keysAs("v"), Seq("v"), "left_anti")
+          val df0 = reclaim.fold(dfIn) { case (_, keys, _) =>
+            Seq("u", "v").foldLeft(dfIn)(keys.anti)
           }
           // one physical pass feeds every branch (same rescan fix as
           // remove()'s survivor-subgraph frames). This frame and the four
@@ -454,8 +446,8 @@ object ClusterIndex {
       // doc_cluster_index_logical_remove clocks.
       IndexMaintenance.runLegs(Seq(
         "compact.assign" -> (() => fold("assign", "idb", df => reclaim.fold(df) {
-          case (idCol, vids, nV, newAssign) =>
-            df.join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "left_anti")
+          case (idCol, keys, newAssign) =>
+            keys.anti(df, idCol)
               .join(newAssign, Seq(idCol), "left")
               .withColumn("component", coalesce(col("_newcomp"), col("component")))
               .drop("_newcomp")
@@ -617,7 +609,8 @@ object ClusterIndex {
                                    threshold: Double, nBuckets: Int,
                                    fp: (Long, Long)): Unit = {
     import s.implicits._
-    IndexSnapshot.writeMeta(Seq((threshold, nBuckets, fp._1, fp._2))
-        .toDF("threshold", "n_buckets", "n_rows", "content_hash"), root)
+    Seq((threshold, nBuckets, fp._1, fp._2))
+      .toDF("threshold", "n_buckets", "n_rows", "content_hash")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
   }
 }

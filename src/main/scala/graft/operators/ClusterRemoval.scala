@@ -76,7 +76,8 @@ private[operators] object ClusterRemoval {
     val conf = s.sparkContext.hadoopConfiguration
     val normDir = IndexMaintenance.normalize(indexDir)
     val rmTag = s"rm.$tag"
-    val vfp = Fingerprint.of(victims, Seq(idCol, textCol))
+    val captured = IndexMaintenance.Victims(victims, Seq(idCol, textCol))
+    val (vfp, keys) = (captured.fp, captured.keys)
     val stateDir = Fingerprint.removeStatePath(normDir, rmTag)
     val planMarker = new org.apache.hadoop.fs.Path(s"$stateDir/PLAN_READY")
     val stateFs = planMarker.getFileSystem(conf)
@@ -96,8 +97,6 @@ private[operators] object ClusterRemoval {
     var root: String = null
     var thr = 0.0
     var nBuckets = 0
-    var vids: DataFrame = null
-    var nV = 0L
     var vIdb: Seq[Long] = Seq.empty
     var replay = false
     var planReady = false
@@ -124,8 +123,6 @@ private[operators] object ClusterRemoval {
       // victims this removal is erasing.
       LogicalDelete.requireNonePending(conf, indexDir, "ClusterIndex.remove",
         exceptBatch = Some(barrierBatch))
-      vids = victims.select(col(idCol)).distinct().localCheckpoint()
-      nV = vids.count()
       planReady = stateFs.exists(planMarker)
       // a PLAN_READY marker without its commit record means the state
       // dir was PARTIALLY deleted (a cut cleanup): fabricating fresh
@@ -146,16 +143,15 @@ private[operators] object ClusterRemoval {
       // ADVICE r13 logical fix) — the replay is a no-op.
       completedReplay = replay && !planReady &&
         Fingerprint.readRemoveState(conf, normDir, rmTag).isEmpty
-      if (nV > 0L && !completedReplay) {
+      if (keys.n > 0L && !completedReplay) {
         // bounded collect: the victim set's id-hash buckets — a pure
         // function of the victims argument, so replay-stable
-        vIdb = IndexMaintenance.distinctRows(vids.select(idb(col(idCol), nBuckets)))
-          .map(_.getLong(0))
+        vIdb = keys.mapDistinct(idb(_, nBuckets)).map(_.asInstanceOf[Long])
         // content known-check and provenance guard on pristine tables:
         // rewrites only start after PLAN_READY
         if (!replay && !planReady)
-          validateVictims(s, root, normDir, oldFp, victims, vids, nV, vIdb,
-            idCol, textCol, "rm", "ClusterIndex.remove")
+          validateVictims(s, root, normDir, oldFp, victims, keys, vIdb,
+            idCol, textCol, "ClusterIndex.remove")
         // ---- idempotent fingerprint commit, the logicalRemove shape:
         // target persisted BEFORE the meta overwrite (and the metabase
         // before both — see Fingerprint.writeRemoveMetaBase), so every
@@ -176,10 +172,10 @@ private[operators] object ClusterRemoval {
         // provenance (legacy pre-fingerprint meta records no merges, so
         // window C could not detect an interleaved append)
         stagedPath = !planReady && oldFp.isDefined
-        if (stagedPath) LogicalDelete.write(vids, idCol, normDir, rmTag)
+        if (stagedPath) LogicalDelete.write(keys.frame, idCol, normDir, rmTag)
       }
     })
-    if (nV > 0L && !completedReplay) {
+    if (keys.n > 0L && !completedReplay) {
       if (stagedPath)
         // in-flight heartbeat across the staged half (r17): rmstate pends
         // through the lease-free window B and the two lease gaps; the
@@ -187,7 +183,7 @@ private[operators] object ClusterRemoval {
         // in-flight removal, never a false crashed verdict (ADVICE r16)
         Fingerprint.withInflightBeat(conf, normDir, rmTag)(
           removeStaged(s, conf, root, normDir, rmTag, stateDir, planMarker,
-            idCol, vids, nV, vIdb, nBuckets))
+            idCol, keys, vIdb, nBuckets))
       else Phases.time("rm_flip")(IndexMaintenance.withLease(conf, indexDir, "remove") {
         require(IndexMaintenance.liveRoot(conf, indexDir) == root,
           s"ClusterIndex.remove on $indexDir: the index was compacted to a " +
@@ -200,51 +196,47 @@ private[operators] object ClusterRemoval {
         // r15: a replay after PLAN_READY used to commit a stale plan
         // without validation, folding interleaved appends in wrongly)
         if (!stateFs.exists(planMarker)) {
-          persistPlan(s, root, normDir, stateDir, idCol, vids, nV, vIdb, nBuckets)
+          persistPlan(s, root, normDir, stateDir, idCol, keys, vIdb, nBuckets)
           stateFs.create(planMarker, true).close()
           FaultInjection.maybeCrash("cluster.plan")
         }
-        commitFromPlan(s, conf, root, normDir, stateDir, idCol, vids, nV,
+        commitFromPlan(s, conf, root, normDir, stateDir, idCol, keys,
           vIdb, nBuckets)
         finishRemove(s, conf, normDir, rmTag, barrierBatch)
       })
     }
   }
 
-  /** The one victim check of both removal verbs, on a first attempt:
-    * the content known-check (one row per id in this family — but a
-    * duplicated or conflicting victim feed still mismatches and refuses)
-    * and the mid-append crash guard (see [[TextIndex.remove]]: a victim
-    * from an append whose fingerprint merge never recorded must not
-    * subtract — its delta was never added; pruned provenance read,
-    * bounded by |tags|). They read two DIFFERENT tables and share no
-    * state, so they run as concurrent legs `<legs>.known`/`<legs>.guard`
-    * (r18 opt, guide §2.6; runLegs rethrows the known-check's refusal
-    * first on a double failure, preserving message order). */
+  /** The one victim check of both removal verbs, on a first attempt,
+    * in ONE job over the victims' rows and their pruned slices of `toks`
+    * and `assign` ([[TargetedDelete.checkVictims]]): the content
+    * known-check (one row per id in this family — but a duplicated or
+    * conflicting victim feed still mismatches and refuses) and the
+    * mid-append crash guard (see [[TextIndex.remove]]: a victim from an
+    * append whose fingerprint merge never recorded must not subtract —
+    * its delta was never added; pre-provenance rows read `_src` null =
+    * build-era). */
   private def validateVictims(s: SparkSession, root: String, normDir: String,
                               oldFp: Option[(Long, Long)], victims: DataFrame,
-                              vids: DataFrame, nV: Long, vIdb: Seq[Long],
-                              idCol: String, textCol: String, legs: String,
-                              opName: String): Unit = {
-    def pruned(table: String) = s.read.parquet(s"$root/$table")
-      .filter(col("idb").isin(vIdb: _*))
-      .join(TargetedDelete.maybeBroadcast(vids, nV), Seq(idCol), "leftsemi")
-    IndexMaintenance.runLegs(Seq(
-      s"$legs.known" -> (() => Phases.time("known_check")(
-        TargetedDelete.requireKnownContent(
-          victims, xxhash64(Dedup.hashedTokenSet(col(textCol))),
-          pruned("toks"), xxhash64(col("_toks")), idCol, nV, opName))),
-      s"$legs.guard" -> (() => if (oldFp.isDefined) {
-        val vSrcs = Phases.time("guard")(pruned("assign")
-          .select(col("_src")).filter(col("_src").isNotNull) // pre-provenance rows = build-era
-          .distinct().collect().map(_.getString(0)).toSet)
-        Fingerprint.requireRecordedProvenance(s.sparkContext.hadoopConfiguration,
-          normDir, vSrcs, opName)
-      })))
+                              keys: TargetedDelete.Keys, vIdb: Seq[Long],
+                              idCol: String, textCol: String, opName: String): Unit = {
+    def pruned(table: String) =
+      keys.semi(s.read.parquet(s"$root/$table").filter(col("idb").isin(vIdb: _*)), idCol)
+    val rows = Seq(
+      TargetedDelete.digestRow(victims, "v", idCol, lit(1L),
+        xxhash64(Dedup.hashedTokenSet(col(textCol)))),
+      TargetedDelete.digestRow(pruned("toks"), "s", idCol, lit(1L), xxhash64(col("_toks")))) ++
+      (if (oldFp.isEmpty) Nil else Seq(TargetedDelete.digestRow(
+        pruned("assign"), "b", idCol, lit(0L), lit(0L), col("_src"))))
+    val srcs = Phases.time("known_check")(TargetedDelete.requireKnownSets(
+      rows.reduce(_ unionByName _), idCol, keys, opName))
+    if (oldFp.isDefined)
+      Fingerprint.requireRecordedProvenance(s.sparkContext.hadoopConfiguration,
+        normDir, srcs, opName)
   }
 
   /** Persist the re-split plan (newassign / parts / vtb / comps) for
-    * `vids` from the CURRENT tree — the discovery half of [[remove]],
+    * the victims `keys` from the CURRENT tree — the discovery half of [[remove]],
     * shared by the staged first run (window B, lease-free behind the
     * victim barrier) and the in-lease fallback/replay path. The parquet
     * writes double as the materialization the r11 eager checkpoints
@@ -295,7 +287,7 @@ private[operators] object ClusterRemoval {
     * Must run under the remove lease with NO rewrite started. */
   private def planValid(s: SparkSession, conf: org.apache.hadoop.conf.Configuration,
                         root: String, normDir: String, stateDir: String,
-                        idCol: String, vids: DataFrame): Boolean = {
+                        idCol: String, keys: TargetedDelete.Keys): Boolean = {
     val tagsNow = Fingerprint.recordedTags(conf, normDir)
     val tagsAtPlan = readTagFile(conf, s"$stateDir/plantags")
       .getOrElse(return false) // no snapshot => cannot prove validity
@@ -308,7 +300,7 @@ private[operators] object ClusterRemoval {
         .localCheckpoint(eager = false)
       val planIds = s.read.parquet(s"$stateDir/newassign")
         .select(col(idCol))
-        .unionByName(vids.select(col(idCol)))
+        .unionByName(keys.frame.select(col(idCol)))
       val newSrcs = (tagsNow -- tagsAtPlan).map(Fingerprint.sanitizeTag).toSeq
       val touchedByNew =
         if (newSrcs.isEmpty) 0L
@@ -327,7 +319,7 @@ private[operators] object ClusterRemoval {
     * rows). */
   private def persistPlan(s: SparkSession, root: String, normDir: String,
                           stateDir: String,
-                          idCol: String, vids: DataFrame, nV: Long,
+                          idCol: String, keys: TargetedDelete.Keys,
                           vIdb: Seq[Long], nBuckets: Int,
                           preVtb: Option[Seq[Long]] = None)
       : (Seq[(String, Long)], Seq[Long]) = {
@@ -336,7 +328,6 @@ private[operators] object ClusterRemoval {
     // snapshot FIRST (see the plantags comment above)
     writeTagFile(conf, s"$stateDir/plantags",
       Fingerprint.recordedTags(conf, normDir))
-    def bVids(df: DataFrame) = TargetedDelete.maybeBroadcast(df, nV)
     // the victims' INDEXED token sets drive the postings bucket prune.
     // Read from the CURRENT toks table on purpose: until del-toks runs
     // it is pristine, and a replay after del-toks finds it empty exactly
@@ -347,10 +338,10 @@ private[operators] object ClusterRemoval {
     // read, the file written below is identical either way.
     lazy val vToks = Phases.time("vtoks")(s.read.parquet(s"$root/toks")
       .filter(col("idb").isin(vIdb: _*))
-      .join(bVids(vids), Seq(idCol), "leftsemi")
+      .transform(keys.semi(_, idCol))
       .select(col(idCol), col("_toks"))
       .localCheckpoint(eager = false))
-    val (comps, newAssign) = resplitPlan(s, root, idCol, vids, nV, vIdb)
+    val (comps, newAssign) = resplitPlan(s, root, idCol, keys, vIdb)
     // the four plan files are independent — write them CONCURRENTLY
     // (r18 opt, guide §2.6 overlap: serial they cost four small-job
     // walls; the shared lazy checkpoints (comps, survivors) are already
@@ -368,7 +359,7 @@ private[operators] object ClusterRemoval {
       // (<= generations x buckets).
       "plan.parts" -> (() => {
         parts = s.read.parquet(s"$root/assign")
-          .join(bVids(comps), Seq("component"), "left_semi")
+          .join(keys.sized(comps), Seq("component"), "left_semi")
           .select(col("_src"), col("idb").cast("long").as("idb")).distinct()
           .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
         parts.toDF("_src", "idb")
@@ -412,11 +403,10 @@ private[operators] object ClusterRemoval {
     * downgrade (one definition; review-caught r15: three copies would
     * drift). */
   private def assignSurgery(s: SparkSession, stateDir: String, idCol: String,
-                            vids: DataFrame, nV: Long,
+                            keys: TargetedDelete.Keys,
                             parts: Seq[(String, Long)]):
       (DataFrame => DataFrame, DataFrame => DataFrame, Column) = {
     import s.implicits._
-    def bVids(df: DataFrame) = TargetedDelete.maybeBroadcast(df, nV)
     // A/B-rejected r19: consuming the in-memory newAssign here (saving
     // the tiny parquet re-read) re-runs the CC-tail joins inside the
     // staged write and FRAGMENTS it into more AQE stage-jobs (14 vs 9
@@ -426,7 +416,7 @@ private[operators] object ClusterRemoval {
     (df => df.join(broadcast(partsDf),
         col("_src") === col("_psrc") &&
           col("idb").cast("long") === col("_pidb"), "left_semi"),
-      df => df.join(bVids(vids), Seq(idCol), "left_anti")
+      df => keys.anti(df, idCol)
         .join(newAssign, Seq(idCol), "left")
         .withColumn("component",
           coalesce(col("_newcomp"), col("component")))
@@ -436,7 +426,7 @@ private[operators] object ClusterRemoval {
 
   private def rewriteFromPlan(s: SparkSession, conf: org.apache.hadoop.conf.Configuration,
                               root: String, stateDir: String, idCol: String,
-                              vids: DataFrame, nV: Long,
+                              keys: TargetedDelete.Keys,
                               vIdb: Seq[Long]): Unit = {
     val parts = s.read.parquet(s"$stateDir/parts")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -444,24 +434,24 @@ private[operators] object ClusterRemoval {
       .collect().map(_.getLong(0)).toSeq
     IndexMaintenance.runLegs(Seq(
       "cluster.assign" -> (() => Phases.time("assign_rewrite")(if (parts.nonEmpty) {
-        val (mark, keep, prePrune) = assignSurgery(s, stateDir, idCol, vids, nV, parts)
+        val (mark, keep, prePrune) = assignSurgery(s, stateDir, idCol, keys, parts)
         TargetedDelete.rewriteWhere(
           s, s"$root/assign", Seq("_src", "idb"), mark, keep, prePrune)
         (): Unit
       })),
       "cluster.postings" -> (() => Phases.time("del_postings")(if (vTb.nonEmpty) {
-        TargetedDelete.delete(s, s"$root/postings",
-          Seq("_src", "tb"), idCol, vids, col("tb").isin(vTb: _*))
+        TargetedDelete.deleteKeys(s, s"$root/postings",
+          Seq("_src", "tb"), idCol, keys, col("tb").isin(vTb: _*))
         (): Unit
       })),
       "cluster.toks" -> (() => Phases.time("del_toks") {
-        TargetedDelete.delete(s, s"$root/toks",
-          Seq("_src", "idb"), idCol, vids, col("idb").isin(vIdb: _*))
+        TargetedDelete.deleteKeys(s, s"$root/toks",
+          Seq("_src", "idb"), idCol, keys, col("idb").isin(vIdb: _*))
         (): Unit
       }),
       "cluster.edges" -> (() => Phases.time("del_edges") {
-        TargetedDelete.deleteAnyKey(s, s"$root/edges",
-          Seq("_src", "eb"), Seq("u", "v"), idCol, vids)
+        TargetedDelete.deleteAnyKeys(s, s"$root/edges",
+          Seq("_src", "eb"), Seq("u", "v"), keys)
         (): Unit
       })))
   }
@@ -501,17 +491,17 @@ private[operators] object ClusterRemoval {
     * components. */
   private def commitFromPlan(s: SparkSession, conf: org.apache.hadoop.conf.Configuration,
                              root: String, normDir: String, stateDir: String,
-                             idCol: String, vids: DataFrame, nV: Long,
+                             idCol: String, keys: TargetedDelete.Keys,
                              vIdb: Seq[Long], nBuckets: Int): Unit = {
     val startedPath = s"$stateDir/REWRITE_STARTED"
     readTagFile(conf, startedPath) match {
       case None =>
-        if (!planValid(s, conf, root, normDir, stateDir, idCol, vids)) {
+        if (!planValid(s, conf, root, normDir, stateDir, idCol, keys)) {
           deleteStaged(conf, stateDir) // stale staging is meaningless now
-          persistPlan(s, root, normDir, stateDir, idCol, vids, nV, vIdb, nBuckets)
+          persistPlan(s, root, normDir, stateDir, idCol, keys, vIdb, nBuckets)
         }
         writeTagFile(conf, startedPath, Fingerprint.recordedTags(conf, normDir))
-        rewriteFromPlan(s, conf, root, stateDir, idCol, vids, nV, vIdb)
+        rewriteFromPlan(s, conf, root, stateDir, idCol, keys, vIdb)
       case Some(tagsAtStart) =>
         // a flip may have been cut between a partition's delete and its
         // rename: restore those partitions from their staged copies
@@ -521,7 +511,7 @@ private[operators] object ClusterRemoval {
         Seq("assign", "postings", "toks", "edges").foreach { t =>
           TargetedDelete.restoreStaged(s, s"$root/$t", s"$staged/$t")
         }
-        rewriteFromPlan(s, conf, root, stateDir, idCol, vids, nV, vIdb)
+        rewriteFromPlan(s, conf, root, stateDir, idCol, keys, vIdb)
         if (Fingerprint.recordedTags(conf, normDir) != tagsAtStart)
           repairComponents(s, root, stateDir, idCol)
     }
@@ -553,9 +543,8 @@ private[operators] object ClusterRemoval {
   private def removeStaged(s: SparkSession, conf: org.apache.hadoop.conf.Configuration,
                            root: String, normDir: String, rmTag: String,
                            stateDir: String, planMarker: org.apache.hadoop.fs.Path,
-                           idCol: String, vids: DataFrame,
-                           nV: Long, vIdb: Seq[Long], nBuckets: Int): Unit = {
-    def bVids(df: DataFrame) = TargetedDelete.maybeBroadcast(df, nV)
+                           idCol: String, keys: TargetedDelete.Keys,
+                           vIdb: Seq[Long], nBuckets: Int): Unit = {
     val stateFs = planMarker.getFileSystem(conf)
     val staged = s"$stateDir/staged"
     var parts: Seq[(String, Long)] = Seq.empty
@@ -575,7 +564,7 @@ private[operators] object ClusterRemoval {
       // CC-bearing critical path no longer gates stage.postings
       val vToksPre = Phases.time("vtoks")(s.read.parquet(s"$root/toks")
         .filter(col("idb").isin(vIdb: _*))
-        .join(bVids(vids), Seq(idCol), "leftsemi")
+        .transform(keys.semi(_, idCol))
         .select(col(idCol), col("_toks")))
       vTb = Phases.time("vtb")(IndexMaintenance.distinctRows(
         vToksPre.select(explode(col("_toks")).as("_tok")).select(tb(col("_tok"), nBuckets)))
@@ -591,7 +580,7 @@ private[operators] object ClusterRemoval {
       IndexMaintenance.runLegs(Seq(
         "stage.plan" -> (() => {
           val planLists = persistPlan(s, root, normDir, stateDir, idCol,
-            vids, nV, vIdb, nBuckets, preVtb = Some(vTb))
+            keys, vIdb, nBuckets, preVtb = Some(vTb))
           stateFs.create(planMarker, true).close() // plan commit point
           FaultInjection.maybeCrash("cluster.plan")
           parts = planLists._1
@@ -600,7 +589,7 @@ private[operators] object ClusterRemoval {
           IndexMaintenance.runLegs(Seq(
             "stage.assign" -> (() => Phases.time("stage_assign")(if (parts.nonEmpty) {
               val (mark, keep, prePrune) =
-                assignSurgery(s, stateDir, idCol, vids, nV, parts)
+                assignSurgery(s, stateDir, idCol, keys, parts)
               TargetedDelete.stageRewrite(
                 s, s"$root/assign", s"$staged/assign", Seq("_src", "idb"),
                 mark, keep, prePrune,
@@ -610,27 +599,22 @@ private[operators] object ClusterRemoval {
         "stage.postings" -> (() => Phases.time("stage_postings")(if (vTb.nonEmpty) {
           TargetedDelete.stageRewrite(
             s, s"$root/postings", s"$staged/postings", Seq("_src", "tb"),
-            mark = df => df.join(bVids(vids), Seq(idCol), "left_semi"),
-            keep = df => df.join(bVids(vids), Seq(idCol), "left_anti"),
+            mark = keys.semi(_, idCol),
+            keep = keys.anti(_, idCol),
             prePrune = col("tb").isin(vTb: _*))
         })),
         "stage.toks" -> (() => Phases.time("stage_toks") {
           TargetedDelete.stageRewrite(
             s, s"$root/toks", s"$staged/toks", Seq("_src", "idb"),
-            mark = df => df.join(bVids(vids), Seq(idCol), "left_semi"),
-            keep = df => df.join(bVids(vids), Seq(idCol), "left_anti"),
+            mark = keys.semi(_, idCol),
+            keep = keys.anti(_, idCol),
             prePrune = col("idb").isin(vIdb: _*))
         }),
         "stage.edges" -> (() => Phases.time("stage_edges") {
-          def keysAs(c: String) =
-            TargetedDelete.maybeBroadcast(vids.select(col(idCol).as(c)), nV)
           TargetedDelete.stageRewrite(
             s, s"$root/edges", s"$staged/edges", Seq("_src", "eb"),
-            mark = df => Seq("u", "v")
-              .map(c => df.join(keysAs(c), Seq(c), "left_semi"))
-              .reduce(_ unionByName _),
-            keep = df => Seq("u", "v").foldLeft(df)((d, c) =>
-              d.join(keysAs(c), Seq(c), "left_anti")))
+            mark = keys.semiAny(_, Seq("u", "v")),
+            keep = Seq("u", "v").foldLeft(_)(keys.anti))
         })))
     })
     FaultInjection.maybeCrash("cluster.stage")
@@ -641,16 +625,16 @@ private[operators] object ClusterRemoval {
           "new generation during the removal — re-run it (same tag + " +
           "victims replays idempotently) after verifying no maintenance " +
           "is racing")
-      if (!planValid(s, conf, root, normDir, stateDir, idCol, vids)) {
+      if (!planValid(s, conf, root, normDir, stateDir, idCol, keys)) {
         // interleaved appends touched the affected components: the plan
         // is stale. Rediscover under the lease — appends are excluded
         // now and no rewrite has run, so the tree is pristine again —
         // and commit in place: correctness first, pre-r15 cost.
         deleteStaged(conf, stateDir)
-        persistPlan(s, root, normDir, stateDir, idCol, vids, nV, vIdb, nBuckets)
+        persistPlan(s, root, normDir, stateDir, idCol, keys, vIdb, nBuckets)
         writeTagFile(conf, s"$stateDir/REWRITE_STARTED",
           Fingerprint.recordedTags(conf, normDir))
-        rewriteFromPlan(s, conf, root, stateDir, idCol, vids, nV, vIdb)
+        rewriteFromPlan(s, conf, root, stateDir, idCol, keys, vIdb)
       } else {
         // the flip is about to mutate tables: from here a replay must
         // never re-validate or rediscover (commitFromPlan's rule)
@@ -666,7 +650,7 @@ private[operators] object ClusterRemoval {
               // an append amended a staged assign partition (digest
               // drift): in-place assign rewrite reads current rows
               val (mark, keep, prePrune) =
-                assignSurgery(s, stateDir, idCol, vids, nV, parts)
+                assignSurgery(s, stateDir, idCol, keys, parts)
               TargetedDelete.rewriteWhere(
                 s, s"$root/assign", Seq("_src", "idb"), mark, keep, prePrune)
               (): Unit
@@ -710,16 +694,15 @@ private[operators] object ClusterRemoval {
     val s = victims.sparkSession
     // the lease-free overlay half's arguments, set when the in-lease
     // commit ran (r16 — see the comment below)
-    var overlayArgs: Option[(String, Int, DataFrame, Long, Seq[Long], String)] = None
+    var overlayArgs: Option[(String, Int, TargetedDelete.Keys, Seq[Long], String)] = None
     var resolvedFp: Option[(Long, Long)] = None
-    IndexMaintenance.removal(IndexMaintenance.Victims(victims, Seq(idCol, textCol)),
-        indexDir, tag, "ClusterIndex.logicalRemove", "cluster.logical") { ctx =>
+    val captured = IndexMaintenance.Victims(victims, Seq(idCol, textCol))
+    val keys = captured.keys
+    IndexMaintenance.removal(captured, indexDir, tag, "ClusterIndex.logicalRemove", "cluster.logical") { ctx =>
       val (conf, normDir, root) = (ctx.conf, ctx.indexDir, ctx.root)
       val thr = ctx.meta.getAs[Double]("threshold")
       val nBuckets = ctx.meta.getAs[Int]("n_buckets")
-      val vids = victims.select(col(idCol)).distinct().localCheckpoint()
-      val nV = vids.count()
-      if (nV == 0L) None
+      if (keys.n == 0L) None
       else {
         // a pre-r11 index has no adjacency log: compact's reclaim
         // re-split reads it, so refusing HERE — nothing mutated yet —
@@ -732,19 +715,17 @@ private[operators] object ClusterRemoval {
             "ClusterIndex.logicalRemove: this index has no adjacency log " +
               "(pre-r11 layout) — rebuild it (ensure()) first; compact's " +
               "reclaim needs the log to re-split the victims' components")
-        val vIdb = IndexMaintenance.distinctRows(vids.select(idb(col(idCol), nBuckets)))
-          .map(_.getLong(0))
+        val vIdb = keys.mapDistinct(idb(_, nBuckets)).map(_.asInstanceOf[Long])
         if (ctx.firstAttempt) {
           // a second logical delete of the same id would double-subtract
-          LogicalDelete.requireNotTombstoned(s, normDir, vids, idCol,
+          LogicalDelete.requireNotTombstoned(s, normDir, keys.frame, idCol,
             "ClusterIndex.logicalRemove")
           validateVictims(s, root, normDir, IndexMaintenance.fingerprintOf(ctx.meta),
-            victims, vids, nV, vIdb, idCol, textCol, "lrm",
-            "ClusterIndex.logicalRemove")
+            victims, keys, vIdb, idCol, textCol, "ClusterIndex.logicalRemove")
         }
-        overlayArgs = Some((root, nBuckets, vids, nV, vIdb, normDir))
+        overlayArgs = Some((root, nBuckets, keys, vIdb, normDir))
         Some(IndexMaintenance.RemovalCommit(
-          rows = () => ctx.tombstone(vids, idCol),
+          rows = () => ctx.tombstone(keys.frame, idCol),
           writeMeta = { fp =>
             resolvedFp = Some(fp)
             ClusterIndex.writeMeta(s, root, thr, nBuckets, fp)
@@ -771,7 +752,7 @@ private[operators] object ClusterRemoval {
     // replay re-runs the overlay idempotently (LogicalDeleteSpec case 2).
     // A concurrent removal cannot start meanwhile (rmstate pends), and a
     // concurrent append merely invalidates the artifact it raced.
-    overlayArgs.foreach { case (root, nBuckets, vids, nV, vIdb, normDir) =>
+    overlayArgs.foreach { case (root, nBuckets, keys, vIdb, normDir) =>
       val conf = s.sparkContext.hadoopConfiguration
       val rmTag = s"rm.$tag"
       // in-flight heartbeat (r17, ADVICE r16): rmstate legitimately
@@ -787,7 +768,7 @@ private[operators] object ClusterRemoval {
         // leave rmstate pending and wedge later removals over an artifact
         // whose absence costs one extra per-read recompute.
         try Phases.time("overlay")(writeOverlay(s, root, normDir, idCol, nBuckets,
-          curBatch = rmTag, curVids = (vids, nV, vIdb), newFp = resolvedFp))
+          curBatch = rmTag, curVids = (keys, vIdb), newFp = resolvedFp))
         catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println("[ClusterIndex.logicalRemove] serve-overlay " +

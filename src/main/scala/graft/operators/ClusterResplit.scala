@@ -65,23 +65,21 @@ private[operators] object ClusterResplit {
   private[operators] def writeOverlay(s: SparkSession, root: String, normDir: String,
                            idCol: String, nBuckets: Int,
                            curBatch: String,
-                           curVids: (DataFrame, Long, Seq[Long]),
+                           curVids: (TargetedDelete.Keys, Seq[Long]),
                            newFp: Option[(Long, Long)]): Unit = {
     import s.implicits._
     val conf = s.sparkContext.hadoopConfiguration
     newFp.orElse(IndexSnapshot.fingerprint(s, normDir, root)).foreach { fp =>
       val batches = LogicalDelete.pendingBatches(conf, normDir)
-      val union: Option[(DataFrame, Long, Seq[Long])] =
+      val union: Option[(TargetedDelete.Keys, Seq[Long])] =
         if (batches == Seq(Fingerprint.sanitizeTag(curBatch))) Some(curVids)
         else LogicalDelete.idsOf(s, normDir, batches).map { t =>
-          val allVids = t.select(col(LogicalDelete.idColOf(t)).as(idCol))
-            .localCheckpoint()
-          val vIdb = allVids.select(idb(col(idCol), nBuckets).as("idb"))
-            .distinct().collect().map(_.getLong(0)).toSeq
-          (allVids, allVids.count(), vIdb)
+          val all = TargetedDelete.Keys.of(
+            t.select(col(LogicalDelete.idColOf(t)).as(idCol)), idCol)
+          (all, all.mapDistinct(idb(_, nBuckets)).map(_.asInstanceOf[Long]))
         }
-      union.foreach { case (allVids, nAll, vIdb) =>
-        val (_, newAssign) = resplitPlan(s, root, idCol, allVids, nAll, vIdb)
+      union.foreach { case (all, vIdb) =>
+        val (_, newAssign) = resplitPlan(s, root, idCol, all, vIdb)
         // the payload EMBEDS its own identity (constant columns — they
         // compress to nothing in parquet): a reader validates them on
         // the PINNED rows after checkpointing, so a concurrent
@@ -164,24 +162,21 @@ private[operators] object ClusterResplit {
     * doc graph retains those paths, because J(S,T) >= t links every
     * member of S to every member of T directly. */
   private[operators] def resplitPlan(s: SparkSession, root: String, idCol: String,
-                          vids: DataFrame, nV: Long,
+                          keys: TargetedDelete.Keys,
                           vIdb: Seq[Long]): (DataFrame, DataFrame) = {
     import s.implicits._
-    def bVids(df: DataFrame) = TargetedDelete.maybeBroadcast(df, nV)
     // ONE assign relation for both reads below (r18 opt: each
     // s.read.parquet resolves the 64-dir file index anew — pure driver
     // overhead when repeated within one call)
     val assign = s.read.parquet(s"$root/assign")
-    val comps = Phases.time("comps")(assign
-      .filter(col("idb").isin(vIdb: _*))
-      .join(bVids(vids), Seq(idCol), "leftsemi")
+    val comps = Phases.time("comps")(keys.semi(assign
+      .filter(col("idb").isin(vIdb: _*)), idCol)
       .select(col("component")).distinct().localCheckpoint(eager = false))
     // one column-pruned scan of the (id, component) map restricted to
     // the affected components (comps is bounded by |victims|)
-    val survivors = Phases.time("survivors")(assign
-      .join(bVids(comps), Seq("component"))
-      .select(col(idCol), col("_src"), col("idb").cast("long").as("idb"))
-      .join(bVids(vids), Seq(idCol), "left_anti")
+    val survivors = Phases.time("survivors")(keys.anti(assign
+      .join(keys.sized(comps), Seq("component"))
+      .select(col(idCol), col("_src"), col("idb").cast("long").as("idb")), idCol)
       .localCheckpoint(eager = false))
     (comps, membersResplit(s, root, idCol, survivors))
   }
@@ -256,15 +251,12 @@ private[operators] object ClusterResplit {
       .join(s.read.parquet(s"$stateDir/newassign").select(col(idCol)),
         Seq(idCol), "left_semi")
       .select(col("component"))
-    val labels = s.read.parquet(s"$stateDir/comps")
+    val labels = TargetedDelete.Keys.of(s.read.parquet(s"$stateDir/comps")
       .unionByName(s.read.parquet(s"$stateDir/newassign")
         .select(col("_newcomp").as("component")))
-      .unionByName(survivorComps)
-      .distinct().localCheckpoint()
-    val nL = labels.count()
-    if (nL == 0L) return
-    val members = s.read.parquet(s"$root/assign")
-      .join(TargetedDelete.maybeBroadcast(labels, nL), Seq("component"), "left_semi")
+      .unionByName(survivorComps), "component")
+    if (labels.n == 0L) return
+    val members = labels.semi(s.read.parquet(s"$root/assign"), "component")
       .select(col(idCol), col("_src"), col("idb").cast("long").as("idb"))
       .localCheckpoint(eager = false)
     val remap = membersResplit(s, root, idCol, members)

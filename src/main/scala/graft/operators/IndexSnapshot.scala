@@ -62,11 +62,6 @@ private[graft] object IndexSnapshot {
 
   private val live = new java.util.concurrent.ConcurrentHashMap[String, Snapshot]()
 
-  /** Commit `meta`, a family's one-row frame, under `root` — every
-    * family's meta write, last in each committing verb. */
-  def writeMeta(meta: DataFrame, root: String): Unit =
-    meta.coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
-
   /** The snapshot currently live under `indexDir`. */
   def apply(s: SparkSession, indexDir: String): Snapshot =
     at(s, indexDir, IndexMaintenance.liveRoot(s.sparkContext.hadoopConfiguration, indexDir))

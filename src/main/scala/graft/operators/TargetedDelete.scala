@@ -31,15 +31,18 @@ object TargetedDelete {
   /** At or below this many distinct victim keys a key set travels as a
     * driver-side SET ([[Keys]]): `isInCollection` predicates, which Spark
     * plans as `InSet` and pushes into the parquet scan — no key frame to
-    * checkpoint, count or join. Above it (a compliance sweep, millions of
-    * ids) a literal list would ship in every task, so the keys stay a
-    * frame matched by shuffle joins. Tunable for tests and deployments
-    * via `-Dgraft.delete.broadcastKeys=N` (the name predates the set
-    * route, which replaced the broadcast joins below the bound); the
-    * decision is made on the driver per call, so the property is read at
-    * call time. */
+    * checkpoint, count or join. Above it (a compliance sweep) the keys
+    * stay a frame matched by shuffle joins: a literal set is planned
+    * element by element and ships in every task, and measured on a
+    * 6M-row lake (`DeleteRouteProfile`, SCALING.md) the set route ties
+    * the join route at 3,000 keys and loses from 10,000 on (1M keys:
+    * 67 s against 2.9 s), hence the default of 1,000. Tunable for tests
+    * and deployments via `-Dgraft.delete.broadcastKeys=N` (the name
+    * predates the set route, which replaced the broadcast joins below
+    * the bound); the decision is made on the driver per call, so the
+    * property is read at call time. */
   private[graft] def broadcastKeyLimit: Long =
-    sys.props.get("graft.delete.broadcastKeys").map(_.toLong).getOrElse(1000000L)
+    sys.props.get("graft.delete.broadcastKeys").map(_.toLong).getOrElse(1000L)
 
   /** A victim key set resolved once. `values` holds the distinct non-null
     * keys on the driver when there are at most [[broadcastKeyLimit]] of
@@ -77,6 +80,10 @@ object TargetedDelete {
       case None => cs.map(semi(df, _)).reduce(_ unionByName _)
     }
 
+    /** `df`, a frame no larger than the key set (the victims'
+      * components), marked for a broadcast join on the set route. */
+    def sized(df: DataFrame): DataFrame = if (values.isDefined) broadcast(df) else df
+
     /** The distinct values of `f(key)`, a bounded bucket list: evaluated
       * on the driver with no Spark job on the set route (a projection of
       * a local relation is folded into a local relation), one job on the
@@ -94,92 +101,119 @@ object TargetedDelete {
 
     /** ONE job over `df`: the fingerprint over `fpCols`
       * ([[Fingerprint.of]]; skipped when empty) and the distinct values
-      * of `keyCol` when there are at most [[broadcastKeyLimit]] of them.
-      * Each task dedupes its own keys and stops collecting past the
-      * bound; the driver merges the task results as they arrive, so it
-      * never holds more than the bound plus the tasks in flight. Above
-      * the bound the keys are checkpointed and counted as a frame. */
+      * of `keyCol` when they fit the bound. Each task dedupes its own
+      * keys and gives up past its share of the bound (the bound over the
+      * task count), so the driver never receives more than the bound's
+      * worth of keys. When a task gave up, the keys are checkpointed and
+      * counted as a frame, and collected after all when the count fits
+      * the bound (a skewed key set): the route depends on the distinct
+      * key count alone. */
     private[operators] def capture(df: DataFrame, keyCol: String,
                                    fpCols: Seq[String]): ((Long, Long), Keys) = {
       val limit = broadcastKeyLimit
       val hash = if (fpCols.isEmpty) lit(0L) else xxhash64(fpCols.map(col): _*)
+      val rdd = df.select(hash, col(keyCol)).rdd
+      val share = math.max(1L, limit / math.max(1, rdd.getNumPartitions))
       type Part = (Long, Long, Option[Set[Any]])
-      val (nRows, h, set) = df.select(hash, col(keyCol)).rdd.mapPartitions { it =>
+      val (nRows, h, set) = rdd.mapPartitions { it =>
         var n = 0L
         var sum = 0L
         val seen = scala.collection.mutable.HashSet.empty[Any]
         it.foreach { r =>
           n += 1; sum += r.getLong(0)
-          if (seen.size <= limit && !r.isNullAt(1)) seen += r.get(1)
+          if (seen.size <= share && !r.isNullAt(1)) seen += r.get(1)
         }
-        Iterator[Part]((n, sum, Some(seen.toSet).filter(_.size <= limit)))
+        Iterator[Part]((n, sum, Some(seen.toSet).filter(_.size <= share)))
       }.fold((0L, 0L, Some(Set.empty[Any]))) { (a, b) =>
         (a._1 + b._1, a._2 + b._2,
           for (x <- a._3; y <- b._3; u = x ++ y if u.size <= limit) yield u)
       }
       val s = df.sparkSession
       val dt = df.schema(keyCol).dataType
+      def local(vs: Seq[Any]): Keys = {
+        val schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField(keyCol, dt)))
+        new Keys(keyCol, dt, Some(vs), vs.size.toLong, () =>
+          s.createDataFrame(java.util.Arrays.asList(
+            vs.map(v => org.apache.spark.sql.Row(v)): _*), schema))
+      }
       val keys = set match {
-        case Some(vs) =>
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(keyCol, dt)))
-          new Keys(keyCol, dt, Some(vs.toSeq), vs.size.toLong, () =>
-            s.createDataFrame(java.util.Arrays.asList(
-              vs.toSeq.map(v => org.apache.spark.sql.Row(v)): _*), schema))
+        case Some(vs) => local(vs.toSeq)
         case None =>
           val frame = df.select(col(keyCol)).filter(col(keyCol).isNotNull)
             .distinct().localCheckpoint()
-          new Keys(keyCol, dt, None, frame.count(), () => frame)
+          val n = frame.count()
+          if (n <= limit) local(frame.collect().map(_.get(0)).toSeq)
+          else new Keys(keyCol, dt, None, n, () => frame)
       }
       ((nRows, h), keys)
     }
   }
 
-  /** The per-(side, id) digest [[digests]] merges: the weight sum, the
-    * weighted hash sum (wrapping) and the set of hashes. */
+  /** The per-(side, id) digest [[checkVictims]] merges: the weight sum,
+    * the weighted hash sum (wrapping) and the set of hashes. */
   final case class Digest(n: Long, sum: Long, hashes: Set[Long])
 
-  /** A removal's victim checks in ONE job, compared on the driver:
-    * `rows` is a union of labeled frames with columns (`side`, the id
-    * column `idCol`, `w` long weight, `h` long hash, `_src` string) —
-    * the victims' own rows and the stored rows of their pruned slice.
-    * Each task folds its rows per (side, id) into a [[Digest]] and
-    * collects the non-null `_src` values; the driver merges the task
-    * results. The caller compares the digests per victim id (a set
-    * compare for families that tolerate replayed duplicate rows, a
-    * multiset compare by (n, sum) otherwise) and passes the sources to
-    * the provenance guard. Driver memory is O(victim ids x tasks). */
-  private[graft] def digests(rows: DataFrame, idCol: String)
-      : (Map[(String, Any), Digest], Set[String]) = {
-    type Acc = (Map[(String, Any), Digest], Set[String])
-    def merge(a: Digest, b: Digest) = Digest(a.n + b.n, a.sum + b.sum, a.hashes ++ b.hashes)
-    rows.select(col("side"), col(idCol), col("w"), col("h"), col("_src")).rdd
-      .mapPartitions { it =>
-        val m = scala.collection.mutable.HashMap.empty[(String, Any), Digest]
-        val srcs = scala.collection.mutable.HashSet.empty[String]
-        it.foreach { r =>
-          val k = (r.getString(0), r.get(1))
-          val (w, h) = (r.getLong(2), r.getLong(3))
-          m(k) = merge(m.getOrElse(k, Digest(0L, 0L, Set.empty)), Digest(w, w * h, Set(h)))
-          if (!r.isNullAt(4)) srcs += r.getString(4)
+  private def merge(a: Digest, b: Digest) = Digest(a.n + b.n, a.sum + b.sum, a.hashes ++ b.hashes)
+
+  private def mergeSides(a: Map[String, Digest], b: Map[String, Digest]): Map[String, Digest] =
+    b.foldLeft(a) { case (m, (k, d)) => m.updated(k, m.get(k).fold(d)(merge(_, d))) }
+
+  /** A removal's victim checks, compared per victim id: `rows` is a
+    * union of labeled frames with columns (`side`, the id column
+    * `idCol`, `w` long weight, `h` long hash, `_src` string) — the
+    * victims' own rows and the stored rows of their pruned slice. Each
+    * id's per-side [[Digest]]s go to `ok` (a set compare for families
+    * that tolerate replayed duplicate rows, a multiset compare by
+    * (n, sum) otherwise); returns the number of ids that pass and the
+    * non-null `_src` values for the provenance guard.
+    *
+    * On the set route ONE job: each task folds its rows per id and the
+    * driver merges the task results, O(victim ids x tasks) within the
+    * key-set bound. On the join route (a mass sweep) the digests merge
+    * in a shuffle and only the count returns, plus one job for the
+    * sources (bounded by the tags). */
+  private[graft] def checkVictims(rows: DataFrame, idCol: String, keys: Keys)
+                                 (ok: Map[String, Digest] => Boolean): (Long, Set[String]) = {
+    val sel = rows.select(col("side"), col(idCol), col("w"), col("h"), col("_src"))
+    def sides(r: org.apache.spark.sql.Row): Map[String, Digest] = {
+      val (w, h) = (r.getLong(2), r.getLong(3))
+      Map(r.getString(0) -> Digest(w, w * h, Set(h)))
+    }
+    keys.values match {
+      case Some(_) =>
+        type Acc = (Map[Any, Map[String, Digest]], Set[String])
+        val (byId, srcs) = sel.rdd.mapPartitions { it =>
+          val m = scala.collection.mutable.HashMap.empty[Any, Map[String, Digest]]
+          val srcs = scala.collection.mutable.HashSet.empty[String]
+          it.foreach { r =>
+            m(r.get(1)) = mergeSides(m.getOrElse(r.get(1), Map.empty), sides(r))
+            if (!r.isNullAt(4)) srcs += r.getString(4)
+          }
+          Iterator[Acc]((m.toMap, srcs.toSet))
+        }.fold((Map.empty, Set.empty)) { (a, b) =>
+          (b._1.foldLeft(a._1) { case (m, (id, ds)) =>
+            m.updated(id, m.get(id).fold(ds)(mergeSides(_, ds))) }, a._2 ++ b._2)
         }
-        Iterator[Acc]((m.toMap, srcs.toSet))
-      }
-      .fold((Map.empty, Set.empty)) { (a, b) =>
-        (b._1.foldLeft(a._1) { case (m, (k, d)) =>
-          m.updated(k, m.get(k).fold(d)(merge(_, d))) }, a._2 ++ b._2)
-      }
+        (byId.values.count(ok).toLong, srcs)
+      case None =>
+        val known = sel.rdd.map(r => (r.get(1), sides(r)))
+          .reduceByKey(mergeSides).filter(kv => ok(kv._2)).count()
+        val srcs = IndexMaintenance.distinctRows(
+          sel.select(col("_src")).filter(col("_src").isNotNull)).map(_.getString(0))
+        (known, srcs.toSet)
+    }
   }
 
-  /** A row of [[digests]]' input: `side`, the id, weight, hash, source. */
+  /** A row of [[checkVictims]]' input: `side`, the id, weight, hash, source. */
   private[graft] def digestRow(df: DataFrame, side: String, idCol: String,
                                w: Column, h: Column,
                                src: Column = lit(null).cast("string")): DataFrame =
     df.select(lit(side).as("side"), col(idCol), w.cast("long").as("w"),
       h.cast("long").as("h"), src.cast("string").as("_src"))
 
-  /** The content known-check every removal runs on [[digests]]' output:
-    * `known` of the `nV` victim ids must pass, else refuse before
+  /** The content known-check every removal runs on [[checkVictims]]'
+    * count: `known` of the `nV` victim ids must pass, else refuse before
     * anything mutates. The stored per-id content must EQUAL the victim
     * rows': the physical delete is id-keyed (every stored version of the
     * id goes) while the fingerprint subtracts exactly the rows the
@@ -196,10 +230,10 @@ object TargetedDelete {
     *    index append refuses loudly (stored side lacks the new version)
     *    instead of silently subtracting a never-merged fingerprint.
     *
-    * The text and vector families compare hash SETS, not multisets: a
-    * crashed-append REPLAY leaves duplicate physical rows while the
-    * fingerprint merged once (IndexRemoveSpec pins that a single victim
-    * row then removes them all and subtracts once). */
+    * The text, vector and cluster families compare hash SETS, not
+    * multisets: a crashed-append REPLAY leaves duplicate physical rows
+    * while the fingerprint merged once (IndexRemoveSpec pins that a
+    * single victim row then removes them all and subtracts once). */
   private[graft] def requireKnown(known: Long, nV: Long, opName: String): Unit =
     if (known != nV) Fingerprint.refuse(
       s"$opName: only $known of $nV victim ids are indexed with matching " +
@@ -207,38 +241,16 @@ object TargetedDelete {
         "id-keyed); the fingerprint subtraction needs exactly the " +
         "ingested rows — pass them as they entered the index")
 
-  /** [[requireKnown]] for the families that compare per-id hash SETS of
-    * side `v` (victims) and `s` (stored). */
-  private[graft] def requireKnownSets(d: Map[(String, Any), Digest], keys: Keys,
-                                      opName: String): Unit = {
-    val ids = d.keySet.collect { case ("v", id) => id }
-    requireKnown(ids.count(id =>
-      d.get(("s", id)).exists(_.hashes == d(("v", id)).hashes)).toLong, keys.n, opName)
+  /** [[checkVictims]] plus [[requireKnown]] for the families that compare
+    * per-id hash SETS of side `v` (victims) and `s` (stored); returns
+    * the sources. */
+  private[graft] def requireKnownSets(rows: DataFrame, idCol: String, keys: Keys,
+                                      opName: String): Set[String] = {
+    val (known, srcs) = checkVictims(rows, idCol, keys)(ds =>
+      ds.get("v").exists(v => ds.get("s").exists(_.hashes == v.hashes)))
+    requireKnown(known, keys.n, opName)
+    srcs
   }
-
-  /** The content known-check of the cluster family: one `count()` job
-    * over Spark joins, every one of the `nV` distinct victim ids stored
-    * (`stored`, the victims' pruned slice) with a per-id content-hash
-    * SET equal to the victims' (see [[requireKnown]]). */
-  private[graft] def requireKnownContent(victims: DataFrame, victimHash: Column,
-                                         stored: DataFrame, storedHash: Column,
-                                         idCol: String, nV: Long,
-                                         opName: String): Unit = {
-    def contentSet(rows: DataFrame, h: Column): DataFrame =
-      rows.select(col(idCol), h.as("_ch")).groupBy(col(idCol))
-        .agg(sort_array(collect_set(col("_ch"))).as("_chs"))
-    val vAgg = contentSet(victims, victimHash).withColumnRenamed("_chs", "_vchs")
-    val known = contentSet(stored, storedHash)
-      .join(maybeBroadcast(vAgg, nV), Seq(idCol))
-      .filter(col("_chs") === col("_vchs"))
-      .count()
-    requireKnown(known, nV, opName)
-  }
-
-  /** Broadcast only below the key-count threshold — the cluster
-    * family's victim-keyed joins. */
-  private[graft] def maybeBroadcast(df: DataFrame, nKeys: Long): DataFrame =
-    if (nKeys <= broadcastKeyLimit) broadcast(df) else df
 
   /** Delete every row whose `keyCol` appears in `keys` from the
     * partitioned table at `tableDir`. Returns the number of partitions
@@ -273,12 +285,17 @@ object TargetedDelete {
   def deleteAnyKey(spark: SparkSession, tableDir: String,
                    partitionCols: Seq[String], keyCols: Seq[String],
                    keyName: String, keys: DataFrame,
-                   prePrune: org.apache.spark.sql.Column = lit(true)): Long = {
+                   prePrune: org.apache.spark.sql.Column = lit(true)): Long =
+    deleteAnyKeys(spark, tableDir, partitionCols, keyCols, Keys.of(keys, keyName), prePrune)
+
+  /** [[deleteAnyKey]] with a resolved key set. */
+  private[graft] def deleteAnyKeys(spark: SparkSession, tableDir: String,
+                                   partitionCols: Seq[String], keyCols: Seq[String],
+                                   keys: Keys, prePrune: Column = lit(true)): Long = {
     require(keyCols.nonEmpty, "deleteAnyKey needs at least one key column")
-    val k = Keys.of(keys, keyName)
     deleteImpl(spark, tableDir, partitionCols, prePrune,
-      mark = k.semiAny(_, keyCols),
-      keep = df => keyCols.foldLeft(df)(k.anti))
+      mark = keys.semiAny(_, keyCols),
+      keep = df => keyCols.foldLeft(df)(keys.anti))
   }
 
   /** General partition-surgery variant: `mark` selects the rows whose
@@ -555,24 +572,20 @@ object TargetedDelete {
     def dirs: Seq[String] = rows.map(r => r.getString(r.length - 1))
 
     /** The touched partitions' rows of `table`: a null-safe filter on
-      * the partition values (pruned by the file index, no join) and on
-      * the touched dirs themselves — a dir whose name is not the
-      * canonical form of its value (`day=01`, read back as 1) shares
-      * that value with the canonical dir, and only the touched one may
-      * be read and rewritten. */
+      * the partition values, pruned by the file index (no join). Every
+      * dir holding a touched value is read, a non-canonical one
+      * (`day=01`, read back as 1) beside the canonical one included:
+      * the dynamic overwrite replaces the canonical dir whole, so its
+      * rows must be in the written slice. */
     def slice(table: DataFrame, partitionCols: Seq[String]): DataFrame = {
       val vals = rows.map(r => partitionCols.indices.map(r.get)).distinct
       def any(cs: Seq[Column]): Column =
         if (cs.size == 1) cs.head
         else { val (a, b) = cs.splitAt(cs.size / 2); any(a) || any(b) }
-      val byValue = any(vals.map(vs => partitionCols.zip(vs)
-        .map { case (c, v) => col(c) <=> lit(v) }.reduce(_ && _)))
-      table.filter(byValue)
-        .filter(dirOf(input_file_name()).isInCollection(dirs.distinct))
+      table.filter(any(vals.map(vs => partitionCols.zip(vs)
+        .map { case (c, v) => col(c) <=> lit(v) }.reduce(_ && _))))
     }
   }
-
-  private def dirOf(file: Column): Column = regexp_replace(file, "/[^/]*$", "")
 
   /** Pass 1, ONE scan collected: which partitions hold marked rows, their
     * ON-DISK dirs and the marked files, each task deduping its own rows

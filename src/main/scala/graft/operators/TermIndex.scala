@@ -109,7 +109,8 @@ object TermIndex {
     import s.implicits._
     val base = Seq((nBuckets, fp._1, fp._2))
       .toDF("n_buckets", "n_rows", "content_hash")
-    IndexSnapshot.writeMeta(sumDl.fold(base)(sd => base.withColumn("sum_dl", lit(sd))), root)
+    sumDl.fold(base)(sd => base.withColumn("sum_dl", lit(sd)))
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
   }
 
   /** Token total of a dl slice — one column-pruned aggregate. The write
@@ -347,7 +348,7 @@ object TermIndex {
     if (v.keys.n == 0L) None else Some(new Victims(v, textCol, nBuckets))
 
   /** First-attempt victim validation shared by both removal verbs, in
-    * ONE job compared on the driver ([[TargetedDelete.digests]]): the
+    * ONE job ([[TargetedDelete.checkVictims]]): the
     * content known-check and the mid-append-crash provenance guard
     * (every victim dl row's `_src` must have recorded its merge).
     * Content is compared per id as the token MULTISET: the victims'
@@ -369,13 +370,12 @@ object TermIndex {
         .filter(col("tb").isin(v.vTb: _*)), idCol), "s", idCol, col("tf"), xxhash64(col("term"))),
       TargetedDelete.digestRow(keys.semi(ctx.snapshot.table("dl")
         .filter(col("idb").isin(v.vIdb: _*)), idCol), "d", idCol, col("dl"), lit(0L), col("_src")))
-    val (d, srcs) = TargetedDelete.digests(rows.reduce(_ unionByName _), idCol)
-    val none = TargetedDelete.Digest(0L, 0L, Set.empty)
-    val known = d.collect { case (("d", id), dl) =>
-      val (vd, sd) = (d.getOrElse(("v", id), none), d.getOrElse(("s", id), none))
-      vd.n == sd.n && vd.sum == sd.sum && dl.n == vd.n
-    }.count(identity)
-    TargetedDelete.requireKnown(known.toLong, keys.n, opName)
+    val (known, srcs) = TargetedDelete.checkVictims(rows.reduce(_ unionByName _), idCol, keys) { ds =>
+      val none = TargetedDelete.Digest(0L, 0L, Set.empty)
+      val (vd, sd) = (ds.getOrElse("v", none), ds.getOrElse("s", none))
+      ds.get("d").exists(_.n == vd.n) && vd.n == sd.n && vd.sum == sd.sum
+    }
+    TargetedDelete.requireKnown(known, keys.n, opName)
     Fingerprint.requireRecordedProvenance(ctx.conf, ctx.indexDir, srcs, opName)
   }
 

@@ -97,8 +97,9 @@ object TextIndex {
   private def writeMeta(s: SparkSession, root: String, p: Params,
                         fp: (Long, Long)): Unit = {
     import s.implicits._
-    IndexSnapshot.writeMeta(Seq((p.numHashes, p.bands, p.nBuckets, p.seed, fp._1, fp._2))
-        .toDF("num_hashes", "bands", "n_buckets", "seed", "n_rows", "content_hash"), root)
+    Seq((p.numHashes, p.bands, p.nBuckets, p.seed, fp._1, fp._2))
+      .toDF("num_hashes", "bands", "n_buckets", "seed", "n_rows", "content_hash")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
   }
 
   /** Does the persisted index still describe THIS corpus? False when meta
@@ -167,7 +168,7 @@ object TextIndex {
 
   /** The one victim check of both removal verbs, run on a first attempt
     * only ([[IndexMaintenance.RemovalCtx.firstAttempt]]), in ONE job
-    * compared on the driver ([[TargetedDelete.digests]]) over the
+    * ([[TargetedDelete.checkVictims]]) over the
     * victims' rows and their pruned slices of `toks` and `bands`:
     *  - per victim id, the stored token-set hashes must EQUAL the victim
     *    rows' (r14): the delete is id-keyed, so a partial victim set
@@ -190,8 +191,7 @@ object TextIndex {
       (if (!guard) Nil else Seq(TargetedDelete.digestRow(
         keys.semi(ctx.snapshot.withSrc("bands").filter(col("hb").isin(v.bandBuckets: _*)),
           v.idCol), "b", v.idCol, lit(0L), lit(0L), col("_src"))))
-    val (d, srcs) = TargetedDelete.digests(rows.reduce(_ unionByName _), v.idCol)
-    TargetedDelete.requireKnownSets(d, keys, opName)
+    val srcs = TargetedDelete.requireKnownSets(rows.reduce(_ unionByName _), v.idCol, keys, opName)
     if (guard) Fingerprint.requireRecordedProvenance(ctx.conf, ctx.indexDir, srcs, opName)
   }
 

@@ -77,9 +77,11 @@ object VectorIndex {
   }
 
   // root = resolved data root (IndexMaintenance.liveRoot), not the index dir
-  private def writeMeta(s: SparkSession, root: String, fp: (Long, Long)): Unit = {
+  private def writeMeta(s: SparkSession, root: String,
+                        fp: (Long, Long)): Unit = {
     import s.implicits._
-    IndexSnapshot.writeMeta(Seq(fp).toDF("n_rows", "content_hash"), root)
+    Seq(fp).toDF("n_rows", "content_hash")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
   }
 
   /** Does the persisted index still describe THIS corpus? False when the
@@ -348,8 +350,8 @@ object VectorIndex {
 
   /** The one victim check of both removal verbs, run on a first attempt
     * only ([[IndexMaintenance.RemovalCtx.firstAttempt]]), in ONE job over
-    * the victims' rows and their pruned slice of `cells`, compared on the
-    * driver ([[TargetedDelete.digests]]):
+    * the victims' rows and their pruned slice of `cells`
+    * ([[TargetedDelete.checkVictims]]):
     *  - this family stores the ingested embedding itself, so the content
     *    equality is over EXACT float arrays, not token sets;
     *  - mid-append crash guard (see [[TextIndex.remove]]): a victim row
@@ -359,11 +361,10 @@ object VectorIndex {
     val keys = v.v.keys
     val cells = keys.semi(ctx.snapshot.withSrc("cells")
       .filter(col("cell").isInCollection(v.vCells)), v.corpusId)
-    val (d, srcs) = TargetedDelete.digests(
+    val srcs = TargetedDelete.requireKnownSets(
       TargetedDelete.digestRow(v.v.rows, "v", v.corpusId, lit(1L), xxhash64(col(corpusVec)))
         .unionByName(TargetedDelete.digestRow(cells, "s", v.corpusId, lit(1L),
-          xxhash64(col(corpusVec)), col("_src"))), v.corpusId)
-    TargetedDelete.requireKnownSets(d, keys, opName)
+          xxhash64(col(corpusVec)), col("_src"))), v.corpusId, keys, opName)
     if (IndexMaintenance.fingerprintOf(ctx.meta).isDefined)
       Fingerprint.requireRecordedProvenance(ctx.conf, ctx.indexDir, srcs, opName)
   }

@@ -1261,8 +1261,7 @@ object S4Stream {
         runPurge(s, t, tag, vic = None, vecVic = None)
       }
     } else if (!batch.isEmpty) {
-      val ids = batch.select(col(t.idCol)).distinct().localCheckpoint()
-      val n = ids.count()
+      val ids = graft.operators.TargetedDelete.Keys.of(batch, t.idCol)
       def resolve(dir: String, idC: String, valC: String): Option[DataFrame] =
         // takedown before any ingest batch landed a subtree: nothing resolves
         if (!graft.operators.Rtbf.hasData(conf, dir)) None
@@ -1275,10 +1274,7 @@ object S4Stream {
               "it (a cluster feed written before the feed carried text is " +
               "one such lake) — re-ingest it, or purge its victims with " +
               "Rtbf.purge and their exact rows as ingested")
-          Some(lake.select(col(idC), col(valC))
-            .join(graft.operators.TargetedDelete.maybeBroadcast(
-              ids.withColumnRenamed(t.idCol, idC), n), Seq(idC), "leftsemi")
-            .localCheckpoint())
+          Some(ids.semi(lake.select(col(idC), col(valC)), idC).localCheckpoint())
         }
       val vic = resolve(t.lakeDir, t.idCol, t.textCol)
       val vecVic = t.vecLakeDir.flatMap(resolve(_, t.vecIdCol, t.vecCol))

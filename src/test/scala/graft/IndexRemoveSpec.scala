@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{ClusterIndex, Fingerprint, TextIndex, VectorIndex}
+import graft.operators.{ClusterIndex, Fingerprint, TermIndex, TextIndex, VectorIndex}
 
 /** Index-side targeted delete (VERDICT r10 item 1): removing docs from
   * the persisted indexes must equal a fresh build over the surviving
@@ -557,6 +557,50 @@ class IndexRemoveSpec extends SparkSpec with RemovalCrashMatrix {
       .filter(col("u").isin(vSet.toSeq: _*) || col("v").isin(vSet.toSeq: _*))
       .count()
     assert(edgeLeak == 0L, s"edge log still holds $edgeLeak victim rows")
+  }
+
+  test("MASS-victim text, term and vector remove (join path): victims gone, wrong content refused") {
+    // above the key-set bound the victim checks merge their digests in a
+    // shuffle, not on the driver: the same refusals and the same result
+    val docs = (0 until 60)
+      .map(i => (i.toLong, s"document number $i about topic ${i % 7} and more words"))
+      .toDF("doc_id", "text").localCheckpoint()
+    val victims = docs.filter(col("doc_id") % 3 === 0L).localCheckpoint()
+    val survivors = docs.filter(col("doc_id") % 3 =!= 0L)
+    val corpus = Tables.embeddings(spark, sf0001).localCheckpoint()
+    val vVictims = corpus.filter(col("vec_id") % 4 === 0L).localCheckpoint()
+    def tmp(n: String) = java.nio.file.Files.createTempDirectory(n).toString + "/idx"
+    val (txt, term, vec) = (tmp("rm_mass_tx"), tmp("rm_mass_tm"), tmp("rm_mass_vec"))
+    TextIndex.build(docs, "doc_id", "text", txt)
+    TermIndex.build(docs, "doc_id", "text", term)
+    VectorIndex.build(corpus, vec, nlist = 8)
+    val wrong = victims.withColumn("text", concat(col("text"), lit(" edited")))
+    val wrongVec = vVictims.withColumn("embedding", expr("transform(embedding, x -> x + 1.0)"))
+    System.setProperty("graft.delete.broadcastKeys", "5")
+    try {
+      assert(intercept[IllegalArgumentException](
+        TextIndex.remove(wrong, "doc_id", "text", txt, tag = "bad")).getMessage.contains("indexed"))
+      assert(intercept[IllegalArgumentException](
+        TermIndex.remove(wrong, "doc_id", "text", term, tag = "bad")).getMessage.contains("indexed"))
+      assert(intercept[IllegalArgumentException](
+        VectorIndex.remove(wrongVec, vec, tag = "bad")).getMessage.contains("indexed"))
+      TextIndex.remove(victims, "doc_id", "text", txt, tag = "mass")
+      TermIndex.remove(victims, "doc_id", "text", term, tag = "mass")
+      VectorIndex.remove(vVictims, vec, tag = "mass")
+    } finally System.clearProperty("graft.delete.broadcastKeys")
+    assert(TextIndex.isFresh(spark, txt, survivors, "doc_id", "text"))
+    assert(TermIndex.isFresh(spark, term, survivors, "doc_id", "text"))
+    assert(VectorIndex.isFresh(spark, vec, corpus.filter(col("vec_id") % 4 =!= 0L)))
+    val conf = spark.sparkContext.hadoopConfiguration
+    def leak(dir: String, table: String, c: String, ids: Set[Long]) =
+      spark.read.parquet(s"${graft.operators.IndexMaintenance.liveRoot(conf, dir)}/$table")
+        .filter(col(c).isin(ids.toSeq: _*)).count()
+    val vIds = victims.select("doc_id").as[Long].collect().toSet
+    val vecIds = vVictims.select("vec_id").as[Long].collect().toSet
+    assert(vIds.size == 20 && vecIds.size > 5)
+    assert(leak(txt, "toks", "doc_id", vIds) == 0L && leak(txt, "bands", "doc_id", vIds) == 0L)
+    assert(leak(term, "postings", "doc_id", vIds) == 0L && leak(term, "dl", "doc_id", vIds) == 0L)
+    assert(leak(vec, "cells", "vec_id", vecIds) == 0L)
   }
 
   test("text index remove: probes go blind, fingerprint tracks survivors, replay-safe") {

@@ -141,6 +141,27 @@ class TargetedDeleteSpec extends SparkSpec {
     assert(left == Set(3L))
   }
 
+  test("a victim only in a non-canonical dir ('01') keeps the canonical dir's rows ('1')") {
+    // both dirs read back as value 1; the overwrite replaces day=1 whole,
+    // so the slice must carry its rows too — on both key routes
+    Seq(1L, 0L).foreach { bound =>
+      val dir = Files.createTempDirectory("tdel8").resolve("lake")
+      Seq((1L, "a", "01"), (2L, "c", "01")).toDF("event_id", "user", "day")
+        .write.partitionBy("day").parquet(dir.toString)
+      Seq((3L, "d", "1"), (4L, "e", "1")).toDF("event_id", "user", "day")
+        .write.mode("append").partitionBy("day").parquet(dir.toString)
+      assert(Files.exists(dir.resolve("day=01")) && Files.exists(dir.resolve("day=1")),
+        "precondition: value 1 lives in two dirs")
+      val n = withBound(bound)(TargetedDelete.delete(spark, dir.toString, Seq("day"),
+        "user", Seq("a").toDF("user")))
+      assert(n == 1L)
+      assert(!Files.exists(dir.resolve("day=01")), s"bound $bound: the touched dir goes")
+      val left = spark.read.parquet(dir.toString).select("event_id").as[Long].collect()
+      assert(left.sorted.toSeq == Seq(2L, 3L, 4L),
+        s"bound $bound: the canonical dir's rows must survive, each once: ${left.sorted.toSeq}")
+    }
+  }
+
   test("no victims present -> zero partitions rewritten, files identical") {
     val dir = Files.createTempDirectory("tdel4").resolve("lake")
     (1L to 40L).map(i => (i, s"u$i", s"d${i % 2}")).toDF("event_id", "user", "day")
