@@ -613,6 +613,30 @@ object TargetedDelete {
 
   private def dirOfUri(file: String): String = file.replaceAll("/[^/]*$", "")
 
+  /** One file of each on-disk dir of `table` that holds one of the
+    * partition values `vals` — from the file index the read already
+    * listed, no Spark job. A value can live in more than one dir
+    * (`day=01` and `day=1` both read back as 1), and the slice reads
+    * them all; pass 1 only names the dirs holding marked rows. */
+  private def filesHolding(table: DataFrame, partitionCols: Seq[String],
+                           vals: Set[Seq[Any]]): Seq[org.apache.hadoop.fs.Path] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    table.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation].location
+    }.toSeq.flatMap { index =>
+      val schema = index.partitionSchema
+      val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(schema)
+      index.listFiles(Nil, Nil).flatMap { part =>
+        val r = toRow(part.values).asInstanceOf[org.apache.spark.sql.Row]
+        if (vals(partitionCols.map(c => r.get(schema.fieldIndex(c)))))
+          part.files.headOption.map(_.getPath)
+        else None
+      }
+    }
+  }
+
   /** Driver-side null-safe partition-value key: Seq equality handles
     * null (and boxed-NaN, which java equals treats as equal) correctly,
     * and both sides of every comparison carry the SAME Spark-read types
@@ -632,6 +656,9 @@ object TargetedDelete {
     val table = read.parquet(tableDir).filter(prePrune)
     val t = discoverTouched(table, partitionCols, mark)
     if (t.rows.nonEmpty) {
+      // the files of every dir the slice reads, listed BEFORE the write
+      val read = t.files.map(pathOfUri) ++ filesHolding(table, partitionCols,
+        t.rows.map(valKey(_, partitionCols.size)).toSet)
       // pass 2: re-read ONLY those partitions, transform, overwrite
       keep(t.slice(table, partitionCols))
         .select(table.columns.map(col): _*)
@@ -640,19 +667,19 @@ object TargetedDelete {
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").parquet(tableDir)
       // dynamic overwrite only replaces partitions PRESENT in the
-      // written frame, deleting their old files. A touched dir whose
-      // marked files survive the write was not replaced: every row was
+      // written frame, deleting their old files. A dir the slice read
+      // whose files survive the write was not replaced: every row was
       // a victim, or its name is not the canonical form of its value
-      // and the survivors landed in the canonical dir. Either way it
-      // holds only pre-write rows — remove it through the Hadoop FS API
-      // (works on any scheme, never java.io.File). input_file_name
-      // returns the URI-ENCODED form (on-disk %2F prints as %252F);
-      // going through java.net.URI decodes once, back to the on-disk
-      // name (verified against escaped fixtures).
+      // (`day=01` read as 1) and its survivors landed in the canonical
+      // dir. Either way its rows are gone or written again — remove it
+      // through the Hadoop FS API (works on any scheme, never
+      // java.io.File). input_file_name returns the URI-ENCODED form
+      // (on-disk %2F prints as %252F); going through java.net.URI
+      // decodes once, back to the on-disk name (verified against
+      // escaped fixtures).
       val fs = new org.apache.hadoop.fs.Path(tableDir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      t.files.filter(f => fs.exists(pathOfUri(f))).map(dirOfUri).distinct.foreach { uri =>
-        val dir = pathOfUri(uri)
+      read.filter(fs.exists).map(_.getParent).distinct.foreach { dir =>
         if (!fs.delete(dir, true) && fs.exists(dir))
           throw new java.io.IOException(
             s"targeted delete could not remove emptied partition $dir")

@@ -141,10 +141,12 @@ class TargetedDeleteSpec extends SparkSpec {
     assert(left == Set(3L))
   }
 
-  test("a victim only in a non-canonical dir ('01') keeps the canonical dir's rows ('1')") {
-    // both dirs read back as value 1; the overwrite replaces day=1 whole,
-    // so the slice must carry its rows too — on both key routes
-    Seq(1L, 0L).foreach { bound =>
+  test("a value in two dirs ('01' and '1'): a victim in either keeps every other row once") {
+    // both dirs read back as value 1 and the overwrite replaces day=1
+    // whole: the slice must carry the rows of both dirs, and the dir the
+    // write did not replace must go — on both key routes
+    for ((victim, kept) <- Seq("a" -> Seq(2L, 3L, 4L), "d" -> Seq(1L, 2L, 4L));
+         bound <- Seq(1L, 0L)) {
       val dir = Files.createTempDirectory("tdel8").resolve("lake")
       Seq((1L, "a", "01"), (2L, "c", "01")).toDF("event_id", "user", "day")
         .write.partitionBy("day").parquet(dir.toString)
@@ -153,12 +155,12 @@ class TargetedDeleteSpec extends SparkSpec {
       assert(Files.exists(dir.resolve("day=01")) && Files.exists(dir.resolve("day=1")),
         "precondition: value 1 lives in two dirs")
       val n = withBound(bound)(TargetedDelete.delete(spark, dir.toString, Seq("day"),
-        "user", Seq("a").toDF("user")))
+        "user", Seq(victim).toDF("user")))
       assert(n == 1L)
-      assert(!Files.exists(dir.resolve("day=01")), s"bound $bound: the touched dir goes")
+      assert(!Files.exists(dir.resolve("day=01")), s"$victim, bound $bound: day=01 goes")
       val left = spark.read.parquet(dir.toString).select("event_id").as[Long].collect()
-      assert(left.sorted.toSeq == Seq(2L, 3L, 4L),
-        s"bound $bound: the canonical dir's rows must survive, each once: ${left.sorted.toSeq}")
+      assert(left.sorted.toSeq == kept,
+        s"$victim, bound $bound: every other row survives once: ${left.sorted.toSeq}")
     }
   }
 
