@@ -50,7 +50,6 @@ object TargetedDelete {
     * one-column frame of the distinct keys (the shuffle-join route). A
     * null key matches nothing on either route. */
   final class Keys private[operators] (val name: String,
-                                       val dataType: org.apache.spark.sql.types.DataType,
                                        val values: Option[Seq[Any]],
                                        val n: Long, frame0: () => DataFrame) {
     /** The distinct keys as a one-column frame named `name`: a local
@@ -133,7 +132,7 @@ object TargetedDelete {
       def local(vs: Seq[Any]): Keys = {
         val schema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField(keyCol, dt)))
-        new Keys(keyCol, dt, Some(vs), vs.size.toLong, () =>
+        new Keys(keyCol, Some(vs), vs.size.toLong, () =>
           s.createDataFrame(java.util.Arrays.asList(
             vs.map(v => org.apache.spark.sql.Row(v)): _*), schema))
       }
@@ -144,7 +143,7 @@ object TargetedDelete {
             .distinct().localCheckpoint()
           val n = frame.count()
           if (n <= limit) local(frame.collect().map(_.get(0)).toSeq)
-          else new Keys(keyCol, dt, None, n, () => frame)
+          else new Keys(keyCol, None, n, () => frame)
       }
       ((nRows, h), keys)
     }
@@ -656,7 +655,9 @@ object TargetedDelete {
     val table = read.parquet(tableDir).filter(prePrune)
     val t = discoverTouched(table, partitionCols, mark)
     if (t.rows.nonEmpty) {
-      // the files of every dir the slice reads, listed BEFORE the write
+      // the files of every dir the slice reads, listed BEFORE the write;
+      // pass 1's marked files too, so an emptied dir goes even if the
+      // file index rendered its value differently
       val read = t.files.map(pathOfUri) ++ filesHolding(table, partitionCols,
         t.rows.map(valKey(_, partitionCols.size)).toSet)
       // pass 2: re-read ONLY those partitions, transform, overwrite
