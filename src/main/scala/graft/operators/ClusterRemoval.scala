@@ -718,8 +718,7 @@ private[operators] object ClusterRemoval {
         val vIdb = keys.mapDistinct(idb(_, nBuckets)).map(_.asInstanceOf[Long])
         if (ctx.firstAttempt) {
           // a second logical delete of the same id would double-subtract
-          LogicalDelete.requireNotTombstoned(s, normDir, keys.frame, idCol,
-            "ClusterIndex.logicalRemove")
+          LogicalDelete.requireNotTombstoned(normDir, keys, "ClusterIndex.logicalRemove")
           validateVictims(s, root, normDir, IndexMaintenance.fingerprintOf(ctx.meta),
             victims, keys, vIdb, idCol, textCol, "ClusterIndex.logicalRemove")
         }

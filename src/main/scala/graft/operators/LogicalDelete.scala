@@ -201,14 +201,8 @@ private[graft] object LogicalDelete {
     * For appends, re-ingesting a dead id would be hidden by the
     * id-scoped anti-join and then wrongly dropped by the reclaim
     * filter; for a second logical remove it would double-subtract the
-    * fingerprint. */
-  def requireNotTombstoned(s: SparkSession, indexDir: String,
-                           keys: DataFrame, idCol: String,
-                           opName: String): Unit =
-    requireNotTombstoned(s, indexDir, keys, idCol, opName, ids(s, indexDir))
-
-  /** The removal verbs' form over a resolved victim key set: one job
-    * collects the tombstoned victim ids. */
+    * fingerprint. This is the removal verbs' form over a resolved
+    * victim key set: one job collects the tombstoned victim ids. */
   def requireNotTombstoned(indexDir: String, keys: TargetedDelete.Keys,
                            opName: String): Unit =
     ids(keys.frame.sparkSession, indexDir).foreach { t =>
